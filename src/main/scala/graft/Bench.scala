@@ -65,11 +65,8 @@ object Bench {
     val loadStart = loadAvg()
     val spark = GraftSession.build(cpus, "graft-bench")
     BenchSampler.install(spark)
-    // experiment knob: measure AQE's per-query replan overhead on tiny data
-    sys.env.get("SPARK_GRAFT_AQE").foreach(v =>
-      spark.conf.set("spark.sql.adaptive.enabled", v))
-    // A/B experiments without recompiling (BenchOne's knob, same syntax):
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" — dev-only, the driver never sets it.
+    // A/B experiments without recompiling: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"
+    // (e.g. spark.sql.adaptive.enabled=false) — dev-only, the driver never sets it.
     // The applied string is stamped into the artifact (extra_conf below) so
     // an A/B run stays distinguishable from a clean run when re-adjudicated
     // offline.

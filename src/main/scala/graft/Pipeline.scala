@@ -1,6 +1,5 @@
 package graft
 
-import graft.dsl.DefaultMapping
 import graft.queries.DslQueries
 import graft.sinks.{AvroFileSink, TopicSinks}
 import graft.state.DuplicateMemory

@@ -260,7 +260,7 @@ object ScaleProbe {
     // apples-to-apples across scales: semDedup's label-cell→k-means size
     // gate would otherwise switch algorithms between x1 and x16, making
     // the ratio compare two different approximations
-    spark.conf.set("spark.graft.dedup.maxLabelCellVecs", "0")
+    spark.conf.set(GraftConf.DedupMaxLabelCellVecs.key, "0")
     spark.range(1000).selectExpr("sum(id)").collect()
     val dirs = Factors.map(k => k -> writeScaled(spark, sfDir, outDir, k)).toMap
     // The fixture-write phase (first run only) leaves shuffle files,

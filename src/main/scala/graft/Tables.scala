@@ -57,11 +57,9 @@ object Tables {
     * the fix is a fixture-shape rebalance, strictly gated: local files
     * only, total size ≤ 256MB, fewer files than the would-be split count,
     * and ≥ 4 target splits. Outside the gate the DataFrame is returned
-    * untouched, so warehouse-scale plans never carry the extra exchange.
-    * Disable explicitly with `spark.graft.rebalanceInput=false`. */
+    * untouched, so warehouse-scale plans never carry the extra exchange. */
   private def rebalanced(spark: SparkSession, df: DataFrame,
                          key: String): DataFrame = {
-    if (spark.conf.getOption("spark.graft.rebalanceInput").contains("false")) return df
     val files = df.inputFiles
     val sizes = files.flatMap { f =>
       try {

@@ -1,5 +1,6 @@
 package graft.dsl
 
+import graft.GraftConf
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -67,7 +68,7 @@ object DefaultMapping {
     // refining the built-in UA heuristics — the reference's pluggable
     // uadetector database slot (`user_agent_parser` config). Resolved at
     // plan time so the path travels with the serialized plan.
-    val uaDb = events.sparkSession.conf.getOption("spark.graft.ua.database")
+    val uaDb = GraftConf.UaDatabase.get(events.sparkSession)
     val withUa = events.withColumn("__ua",
       uaParse(optCol("userAgentString", StringType), uaDb))
 

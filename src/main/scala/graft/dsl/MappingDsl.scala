@@ -103,7 +103,7 @@ object MappingDsl {
         val fieldAssigns = byField.getOrElse(f.name, Nil)
         val default = defaults.get(f.name).flatten
         val folded = fieldAssigns match {
-          case Seq((_, value, guard))
+          case Seq((_, value, _))
               if trivialGuards && (default.isEmpty || default.contains(null)) =>
             value.cast(f.dataType)
           case _ =>

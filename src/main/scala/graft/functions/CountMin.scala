@@ -1,7 +1,7 @@
 package graft.functions
 
 import java.security.MessageDigest
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Mergeable count-min sketch as a typed [[Aggregator]] — the frequency

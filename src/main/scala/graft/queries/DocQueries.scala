@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.GraftConf
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -480,17 +481,16 @@ object DocQueries {
     * broadcast multi-GB, the exact hazard fuzzyDedup's text gate closed.
     * One agg action over the memo-cached shingle scan. */
   private def shingleBroadcastable(spark: SparkSession, docs: DataFrame): Boolean = {
-    val maxDocs = spark.conf
-      .getOption("spark.graft.dedup.maxBroadcastDocs").map(_.toLong)
-      .getOrElse(1L << 20)
-    val maxBytes = spark.conf
-      .getOption("spark.graft.dedup.maxBroadcastBytes").map(_.toLong)
-      .getOrElse(128L << 20)
     val st = docs
       .agg(count(lit(1)), coalesce(sum(size(col("sh")).cast("long")), lit(0L)))
       .head()
-    st.getLong(0) <= maxDocs && 8L * st.getLong(1) <= maxBytes
+    st.getLong(0) <= GraftConf.DedupMaxBroadcastDocs.get(spark) &&
+      8L * st.getLong(1) <= DedupMaxBroadcastBytes
   }
+
+  /** Byte budget of the dedup-family broadcast gates (with the doc-count
+    * bound [[GraftConf.DedupMaxBroadcastDocs]]). */
+  private val DedupMaxBroadcastBytes = 128L << 20
 
   /** (d1, d2, n1, n2, inter) for every candidate pair — the verify core
     * SHARED by the Jaccard and containment operators (one implementation,
@@ -583,11 +583,8 @@ object DocQueries {
   private def resolveClusters(
       spark: SparkSession, d: String, pairsDf: DataFrame): DataFrame = {
     import spark.implicits._
-    val maxDriverPairs = spark.conf
-      .getOption("spark.graft.dedup.maxDriverPairs").map(_.toLong)
-      .getOrElse(4L << 20)
     val (labelDf, smallGraph) =
-      if (pairsDf.count() <= maxDriverPairs) {
+      if (pairsDf.count() <= GraftConf.DedupMaxDriverPairs.get(spark)) {
         val pairs = pairsDf.as[(Long, Long)].collect()
         val parent = scala.collection.mutable.Map.empty[Long, Long]
         // ITERATIVE find + path compression: the recursive form built an
@@ -893,8 +890,7 @@ object DocQueries {
     // driver if the hint were unconditional — above the threshold the same
     // equi-join plans as a shuffle on (band, bucket). The count is free-ish:
     // it populates the cache the rest of the pipeline reuses.
-    val maxBroadcastDelta = spark.conf.getOption(
-      "spark.graft.dedup.maxBroadcastDeltaDocs").map(_.toLong).getOrElse(2000000L)
+    val maxBroadcastDelta = 2000000L
     val nIncoming = docs.filter(col("incoming")).count()
     val probeSide =
       if (nIncoming <= maxBroadcastDelta) broadcast(inBands.as("a"))
@@ -1992,7 +1988,7 @@ object DocQueries {
     * floor (count 1 — the rarest a token can be). 2^20 entries ≈ tens of MB
     * broadcast, independent of corpus size. The fixture vocabulary is far
     * below the cap, so the (uncapped) DuckDB oracle stays exact. */
-  private val VocabCap = 1 << 20
+  private val VocabCap = GraftConf.LmVocabCap.default
 
   // Trained models (unigram/bigram/CMS LM, DSIR) memoize in the bounded
   // [[MemoCache]] so repeated invocations (bench cold+warm, plan
@@ -2044,10 +2040,8 @@ object DocQueries {
 
   def unigramLm(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    if (spark.conf.getOption("spark.graft.lm.cmsModel").contains("true"))
-      return unigramLmCms(spark, d)
-    val cap = spark.conf.getOption("spark.graft.lm.vocabCap")
-      .map(_.toInt).getOrElse(VocabCap)
+    if (GraftConf.LmCmsModel.get(spark)) return unigramLmCms(spark, d)
+    val cap = GraftConf.LmVocabCap.get(spark)
     val (bc, lnTotal) = MemoCache.getOrElseUpdate(spark, ("unigram-lm", d, cap))({
       val counts = documents(spark, d)
         .select(explode(toks(col("text"))).as("token"))
@@ -2145,8 +2139,7 @@ object DocQueries {
       topCounts(spark, bigramInstances(spark, d), cap))(_ => ())
 
   def bigramLm(spark: SparkSession, d: String): DataFrame = {
-    val cap = spark.conf.getOption("spark.graft.lm.vocabCap")
-      .map(_.toInt).getOrElse(VocabCap)
+    val cap = GraftConf.LmVocabCap.get(spark)
     val tk = toks(col("text"))
     // the two model builds memoize once per (session, dataset, cap);
     // repeated invocations only pay the fold
@@ -2210,8 +2203,7 @@ object DocQueries {
     * narrow in-order per-row fold. The DuckDB oracle replays the same
     * arithmetic expression-for-expression, so doubles agree bit-for-bit. */
   def knBigram(spark: SparkSession, d: String): DataFrame = {
-    val cap = spark.conf.getOption("spark.graft.lm.vocabCap")
-      .map(_.toInt).getOrElse(VocabCap)
+    val cap = GraftConf.LmVocabCap.get(spark)
     val tk = toks(col("text"))
     val model = MemoCache.getOrElseUpdate(spark, ("kn-bigram", d, cap))({
       // the SAME capped bigram count table [[bigramLm]] scores against —
@@ -2623,9 +2615,9 @@ object DocQueries {
        |FROM k""".stripMargin
 
   // ------------------------------------------------- BPE tokenizer
-  /** Merge count for the corpus-trained BPE model ([[bpeTrain]]);
-    * overridable for tests via `spark.graft.bpe.merges`. */
-  private val BpeMerges = 16
+  /** Merge count for the corpus-trained BPE model ([[bpeTrain]]) that the
+    * oracles replay; tests override it via [[GraftConf.BpeMerges]]. */
+  private val BpeMerges = GraftConf.BpeMerges.default
 
 
   /** Distributed BPE training (Sennrich et al. 2016), the real merge loop —
@@ -2671,11 +2663,9 @@ object DocQueries {
     // merges memoize per (session, dataset, merges) — the trainer is
     // iterative, so repeated calls (train + encode + bench warm passes)
     // must not re-run M jobs each; plain driver data, so release is a no-op
-    val m = spark.conf.getOption("spark.graft.bpe.merges")
-      .map(_.toInt).getOrElse(BpeMerges)
+    val m = GraftConf.BpeMerges.get(spark)
     MemoCache.getOrElseUpdate(spark, ("bpe-merges", d, m))({
-      val gate = spark.conf.getOption("spark.graft.bpe.maxDriverVocab")
-        .map(_.toLong).getOrElse(1L << 20)
+      val gate = GraftConf.BpeMaxDriverVocab.get(spark)
       var vocab = documents(spark, d)
         .select(explode(toks(col("text"))).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
@@ -3373,8 +3363,7 @@ object DocQueries {
     // normalizer) aggregates BEFORE the cap, so only what ships to
     // executors is bounded; off-model tokens fall back to count 1 exactly
     // as OOV does. The cap is overridable for tests that make it bind.
-    val cap = spark.conf.getOption("spark.graft.lm.vocabCap")
-      .map(_.toInt).getOrElse(VocabCap)
+    val cap = GraftConf.LmVocabCap.get(spark)
     val docs = documents(spark, d)
     val (bcT, bcS, lnTgtTotal, lnSrcTotal) =
       MemoCache.getOrElseUpdate(spark, ("dsir", d, cap))({
@@ -3793,30 +3782,24 @@ object DocQueries {
     // (≤ probes × TfidfTopK rows — model-sized), and the recall row joins
     // BOTH rank tails, so without this it re-runs the full corpus×probe
     // scoring join its two siblings already paid for.
-    MemoCache.getOrElseUpdate(spark, ("tfidf-knn", d, tfidfCapCfg(spark)))({
+    MemoCache.getOrElseUpdate(spark, ("tfidf-knn", d, GraftConf.TfidfDfCapFrac.get(spark)))({
       val (weights, norms) = tfidfIndex(spark, d)
       val probes = weights.filter(col("doc_id") % TfidfProbeMod === 0)
         .select(col("doc_id").as("probe_id"), col("term"), col("w").as("pw"))
       tfidfRank(weights, norms, probes).cache()
     })(_.unpersist(blocking = false))
 
-  /** The df-cap configuration that keys every tfidf memo entry. */
-  private def tfidfCapCfg(spark: SparkSession): Any = (
-    spark.conf.getOption("spark.graft.tfidf.dfCapFrac").map(_.toDouble),
-    spark.conf.getOption("spark.graft.tfidf.capMaxDropFrac")
-      .map(_.toDouble).getOrElse(TfidfCapMaxDropFrac))
-
   /** The shared memoized (weights, norms) index build — see the Scaladoc
     * above; factored out so the impact-pruned variant reads the SAME
     * index. */
   private def tfidfIndex(spark: SparkSession, d: String): (DataFrame, DataFrame) = {
-    // Impact pruning (`spark.graft.tfidf.dfCapFrac`, DEFAULT 0.5): drop
+    // Impact pruning ([[GraftConf.TfidfDfCapFrac]], DEFAULT 0.5): drop
     // terms whose df exceeds the given fraction of the corpus. On a web
     // corpus stopword postings dominate the term-keyed exchange while
     // ranking nothing (bottom-of-scale idf) — 0.5 is the classic stopword
     // cap, and at warehouse scale it is the default path, not an opt-in.
     // Degeneracy gate: when the cap is NOT set explicitly, it auto-applies
-    // only if the terms it would drop are <= `capMaxDropFrac` (default 0.2)
+    // only if the terms it would drop are <= `TfidfCapMaxDropFrac` (0.2)
     // of the vocabulary — on a Zipf corpus the >0.5-df terms are a handful
     // of stopwords, while on a degenerate tiny-vocab corpus (the synthetic
     // fixture's 31 terms, nearly all corpus-dense) capping would empty the
@@ -3824,24 +3807,18 @@ object DocQueries {
     // same gate + cap, so both regimes stay hash-exact; an explicit conf
     // value applies unconditionally (pinned by PipelineSpec's planted
     // hot-term test).
-    val capConf = spark.conf.getOption("spark.graft.tfidf.dfCapFrac")
-      .map(_.toDouble)
+    val capConf = GraftConf.TfidfDfCapFrac.get(spark)
     val capFrac = capConf.getOrElse(TfidfDfCapFrac)
-    val dropMax = spark.conf.getOption("spark.graft.tfidf.capMaxDropFrac")
-      .map(_.toDouble).getOrElse(TfidfCapMaxDropFrac)
     // evict superseded cap settings for this (session, dataset) eagerly
     // (ahead of LRU pressure): each entry pins two corpus-sized cached
     // frames — sweeping dfCapFrac must not accumulate abandoned index
-    // copies in executor memory
+    // copies in executor memory; the rank tails derived from the index go
+    // with it
     MemoCache.evict(spark, {
-      case ("tfidf-index", `d`, cfg) => cfg != ((capConf, dropMax))
-      // the memoized rank tails are derived from the index — stale cap
-      // variants go with it
-      case ("tfidf-knn", `d`, cfg) => cfg != ((capConf, dropMax))
-      case ("tfidf-capped", `d`, cfg, _) => cfg != ((capConf, dropMax))
+      case ("tfidf-index" | "tfidf-knn" | "tfidf-capped", `d`, cfg) => cfg != capConf
       case _ => false
     })
-    MemoCache.getOrElseUpdate(spark, ("tfidf-index", d, (capConf, dropMax)))({
+    MemoCache.getOrElseUpdate(spark, ("tfidf-index", d, capConf))({
       val docs = documents(spark, d)
       // Terms enter the index as 52-bit md5-prefix HASHES (longs), not
       // strings: no tfidf output carries a term, so every term-keyed
@@ -3871,7 +3848,7 @@ object DocQueries {
           .agg(count(lit(1)).as("nv"),
             sum(when(col("df") > col("n_docs") * capFrac, 1L).otherwise(0L))
               .as("ncap")).head()
-        g.getLong(0) > 0 && g.getLong(1).toDouble <= g.getLong(0) * dropMax
+        g.getLong(0) > 0 && g.getLong(1).toDouble <= g.getLong(0) * TfidfCapMaxDropFrac
       })
       val capped =
         if (applyCap) joined.filter(col("df") <= col("n_docs") * capFrac)
@@ -3915,7 +3892,7 @@ object DocQueries {
     * linearly and the candidate join's output grows with posting² (the
     * honest x64 probe read the x16→x64 segment at ~1.25x over linear —
     * exactly this tail). Standard impact ordering (Anh & Moffat): each
-    * term keeps only its `spark.graft.tfidf.postingCap` (default 1024)
+    * term keeps only its posting-cap (≥ 1024, see [[TfidfPostingCapMin]])
     * highest-WEIGHT postings as candidate generators, via the
     * partial-aggregating [[graft.functions.TopK]] (the shuffle carries
     * ≤ cap rows per (term, split) — a term-partitioned rank window would
@@ -3927,23 +3904,11 @@ object DocQueries {
     * corpus-fraction cap exists for the scale where posting lists outgrow
     * it — see [[TfidfPostingCapDiv]] for the x256 lesson). */
   def tfidfKnnCapped(spark: SparkSession, d: String): DataFrame = {
-    // `spark.graft.tfidf.postingCap` is a DEV-ONLY override (cap sweeps,
-    // scale probes): the SQL oracle always replays the default
-    // GREATEST(floor, n_docs/div) formula, so an explicit value makes the
-    // two sides diverge by design — never set it on an oracle-gated run.
-    val cap = spark.conf.getOption("spark.graft.tfidf.postingCap")
-      .map(_.toInt).getOrElse {
-        val nDocs = docCount(spark, d)
-        math.max(TfidfPostingCapMin.toLong, nDocs / TfidfPostingCapDiv).toInt
-      }
-    // eager eviction of superseded posting-cap variants (cap sweeps must
-    // not accumulate abandoned cached tails — same policy as the index)
-    MemoCache.evict(spark, {
-      case ("tfidf-capped", `d`, _, c) => c != cap
-      case _ => false
-    })
+    // the SQL oracle replays the same GREATEST(floor, n_docs/div) formula
+    val cap = math.max(TfidfPostingCapMin.toLong,
+      docCount(spark, d) / TfidfPostingCapDiv).toInt
     MemoCache.getOrElseUpdate(spark,
-      ("tfidf-capped", d, tfidfCapCfg(spark), cap))(
+      ("tfidf-capped", d, GraftConf.TfidfDfCapFrac.get(spark)))(
       tfidfKnnCappedBuild(spark, d, cap).cache())(
       _.unpersist(blocking = false))
   }
@@ -4320,7 +4285,7 @@ object DocQueries {
     * Scale: the word graph is vocabulary-sized — tiny next to the corpus at
     * any scale (Heaps' law) — so after one map-side-combinable adjacency
     * aggregation the rank loop runs on model-sized tables; below
-    * `spark.graft.textrank.maxDriverEdges` it iterates on the driver (10
+    * [[GraftConf.TextrankMaxDriverEdges]] it iterates on the driver (10
     * distributed rounds of per-job overhead dwarf arithmetic on a vocab
     * graph), above it the identical updates run as joins, checkpointed per
     * round to keep lineage flat. */
@@ -4368,10 +4333,7 @@ object DocQueries {
           "word STRING, rank_scaled BIGINT, rank DOUBLE"))
     }
     val base = 15L * TrScale / (100L * n)
-    val maxDriverEdges = spark.conf
-      .getOption("spark.graft.textrank.maxDriverEdges").map(_.toLong)
-      .getOrElse(4L << 20)
-    val ranks: DataFrame = if (nEdges <= maxDriverEdges) {
+    val ranks: DataFrame = if (nEdges <= GraftConf.TextrankMaxDriverEdges.get(spark)) {
       val es = edges.as[(String, String, Long)].collect()
       val ow = es.groupBy(_._1).map { case (s, g) => s -> g.map(_._3).sum }
       val ns = nodes.as[String].collect()
@@ -4568,7 +4530,7 @@ object DocQueries {
     * asserts). ceil(t*n) is computed in integer arithmetic
     * ((p*n + q - 1) DIV q) so both engines agree exactly; the Jaccard
     * test cross-multiplies (q*inter >= p*union) — no floats end to end.
-    * Threshold override: `spark.graft.setsim.p/q` (default 3/5). */
+    * Threshold: Jaccard >= [[SetsimP]]/[[SetsimQ]] (3/5). */
   /** AllPairs candidate pairs for `docs(doc_id, s: array)` at Jaccard
     * threshold p/q: rarest-first prefix posting-list join (see
     * [[setsimJoin]] for the completeness argument). Element-type agnostic
@@ -4667,28 +4629,36 @@ object DocQueries {
     * family members previously each built their own explode + df count +
     * rank window, and the exact join's copy moved ~20-byte shingle STRINGS
     * through all three exchanges; the hashed index moves 8-byte longs —
-    * guide §2.3). Sound for the exact join because candidate generation
-    * only needs COMPLETENESS: a collision merges shingles, which can only
-    * RAISE a pair's hashed Jaccard above its string Jaccard (intersections
-    * grow, unions shrink), so every pair passing the string-set threshold
-    * is found on the hashed index too — and any total order over the
-    * hashed elements satisfies the AllPairs prefix theorem. The verify
-    * stays exact on the STRING sets, so false candidates are dropped and
-    * the output is byte-identical to the string-indexed build. */
+    * guide §2.3). Candidate generation only needs COMPLETENESS, and any
+    * total order over the hashed elements satisfies the AllPairs prefix
+    * theorem. Without a 52-bit collision the hashed sets are the string
+    * sets relabeled, so every pair passing the string-set threshold is
+    * found, and the exact verify on the STRING sets drops the rest: the
+    * output is byte-identical to the string-indexed build. A collision
+    * does NOT only raise hashed Jaccard: two shingles of one document
+    * merging shrinks that set, and if both were shared with the partner
+    * the intersection shrinks too, so a pair can fall below p/q and be
+    * missed. The odds of any collision among n distinct shingles are
+    * about n²/2^53 (~0.03 at the x64 corpus's 16.7M), and a miss also
+    * needs the collision to land in a pair that sits within one element
+    * of the threshold. [[setsimJoinCapped]] is not affected: it defines
+    * its sets as the hashed ones, and its oracle replays the same hash. */
   private def setsimRankedHashed(spark: SparkSession, d: String): DataFrame =
     MemoCache.getOrElseUpdate(spark, ("setsim-ranked", d))(
       rankedIndex(setsimDocsHashed(spark, d)).cache())(
       _.unpersist(blocking = false))
 
-  def setsimJoin(spark: SparkSession, d: String): DataFrame = {
-    val p = spark.conf.getOption("spark.graft.setsim.p").map(_.toInt).getOrElse(3)
-    val q = spark.conf.getOption("spark.graft.setsim.q").map(_.toInt).getOrElse(5)
-    MemoCache.getOrElseUpdate(spark, ("setsim-pairs", d, p, q))({
+  /** Jaccard threshold p/q of the set-similarity joins, which the oracles
+    * replay. */
+  private val SetsimP = 3
+  private val SetsimQ = 5
+
+  def setsimJoin(spark: SparkSession, d: String): DataFrame =
+    MemoCache.getOrElseUpdate(spark, ("setsim-pairs", d))({
       val docs = setsimDocs(spark, d)
-      setsimVerified(docs,
-        prefixCandidates(setsimRankedHashed(spark, d), p, q), p, q).cache()
+      setsimVerified(docs, prefixCandidates(setsimRankedHashed(spark, d),
+        SetsimP, SetsimQ), SetsimP, SetsimQ).cache()
     })(_.unpersist(blocking = false))
-  }
 
   /** The 100-TB scale path of [[setsimJoin]] — two deltas from the exact
     * join, both oracle-replayed:
@@ -4703,24 +4673,19 @@ object DocQueries {
     *    (expected colliding pairs at 2^52 over a 16.7M-shingle corpus:
     *    ~0.02), so parity is exact and the semantic drift is measured by
     *    [[setsimRecall]], not assumed away.
-    *  - POSTING CAP on candidate generation (`spark.graft.setsim.dfcap`,
-    *    default 32): a guardrail, not an optimization — the AllPairs
-    *    rarest-first prefix already keeps prefix-token df small on Zipf
+    *  - POSTING CAP on candidate generation (df <= 32): a guardrail,
+    *    not an optimization — the AllPairs rarest-first prefix already keeps prefix-token df small on Zipf
     *    corpora (measured max 7 at sf0.01, 14 at x64 — corpus-dense
     *    shingles never enter prefixes by construction), but an
     *    adversarial/boilerplate corpus whose RAREST tokens are still
     *    dense would blow O(df²) per posting; the cap bounds that, and on
     *    the fixtures it never binds (recall row reads 1.0). */
-  def setsimJoinCapped(spark: SparkSession, d: String): DataFrame = {
-    val p = spark.conf.getOption("spark.graft.setsim.p").map(_.toInt).getOrElse(3)
-    val q = spark.conf.getOption("spark.graft.setsim.q").map(_.toInt).getOrElse(5)
-    val cap = spark.conf.getOption("spark.graft.setsim.dfcap").map(_.toLong).getOrElse(32L)
-    MemoCache.getOrElseUpdate(spark, ("setsim-pairs-capped", d, p, q, cap))({
+  def setsimJoinCapped(spark: SparkSession, d: String): DataFrame =
+    MemoCache.getOrElseUpdate(spark, ("setsim-pairs-capped", d))({
       val docs = setsimDocsHashed(spark, d)
-      setsimVerified(docs,
-        prefixCandidates(setsimRankedHashed(spark, d), p, q, cap), p, q).cache()
+      setsimVerified(docs, prefixCandidates(setsimRankedHashed(spark, d),
+        SetsimP, SetsimQ, dfCap = 32L), SetsimP, SetsimQ).cache()
     })(_.unpersist(blocking = false))
-  }
 
   /** 52-bit md5-prefix hashes of the 3-token shingles, distinct — the
     * DuckDB-replayable `('0x' || substr(md5(g), 20, 13))::UBIGINT`: hex
@@ -5075,7 +5040,7 @@ object DocQueries {
     * swapping it out cut the verify-dominated query ~3x at sf0.1).
     * Contract-identical to the built-in: -1 above the threshold, so
     * `dist >= 0` is exactly `dist <= K`.
-    * K override: `spark.graft.fuzzy.maxDist` (default 40). */
+    * K = [[FuzzyK]]. */
   private def fuzzyDocs(spark: SparkSession, d: String): DataFrame =
     MemoCache.getOrElseUpdate(spark, ("fuzzy-docs", d))(
       documents(spark, d).select(col("doc_id"), col("text"), col("n_chars"))
@@ -5085,15 +5050,14 @@ object DocQueries {
     * the shared intermediate of the fuzzy family ([[fuzzyRecall]] re-runs
     * it as the recall denominator right after this operator produced it) —
     * a production pipeline materializes the verified pair table once and
-    * every consumer reads it. Keyed on (dataset, K, prune toggle); the
-    * scale probes evict before every sample, so A/B and planted runs still
-    * pay the full compute. */
-  def fuzzyDedup(spark: SparkSession, d: String): DataFrame = {
-    val k = spark.conf.getOption("spark.graft.fuzzy.maxDist").map(_.toInt).getOrElse(40)
-    MemoCache.getOrElseUpdate(spark,
-      ("fuzzy-exact-pairs", d, k, histPruneOn(spark)))(
-      fuzzyDedupCompute(spark, d, k).cache())(_.unpersist(blocking = false))
-  }
+    * every consumer reads it. The scale probes evict before every sample,
+    * so planted runs still pay the full compute. */
+  def fuzzyDedup(spark: SparkSession, d: String): DataFrame =
+    MemoCache.getOrElseUpdate(spark, ("fuzzy-exact-pairs", d))(
+      fuzzyDedupCompute(spark, d, FuzzyK).cache())(_.unpersist(blocking = false))
+
+  /** Edit-distance threshold K of the fuzzy family (the oracles replay 40). */
+  private val FuzzyK = 40
 
   private def fuzzyDedupCompute(spark: SparkSession, d: String, k: Int): DataFrame = {
     // One MEMOIZED scan feeds the gate probe and BOTH join sides, shared
@@ -5133,19 +5097,13 @@ object DocQueries {
     // fanned out 3x, so a doc-count gate alone would let a long-document
     // corpus broadcast multi-GB. Estimate = 3 * sum(n_chars); one agg
     // action yields both count and bytes and warms the cache.
-    val maxBroadcastDocs = spark.conf
-      .getOption("spark.graft.dedup.maxBroadcastDocs").map(_.toLong)
-      .getOrElse(1L << 20)
-    val maxBroadcastBytes = spark.conf
-      .getOption("spark.graft.dedup.maxBroadcastBytes").map(_.toLong)
-      .getOrElse(128L << 20)
     val stats = docs.agg(count(lit(1)), coalesce(sum(col("n_chars")), lit(0L)))
       .head()
     val (nDocs, textBytes) = (stats.getLong(0), stats.getLong(1))
     val joined =
       // the +64/doc term charges the histogram column the build side now carries
-      if (nDocs <= maxBroadcastDocs &&
-          3L * (textBytes + 64L * nDocs) <= maxBroadcastBytes)
+      if (nDocs <= GraftConf.DedupMaxBroadcastDocs.get(spark) &&
+          3L * (textBytes + 64L * nDocs) <= DedupMaxBroadcastBytes)
         left.as("a").join(broadcast(right.as("b")), cond)
       else {
         val sl = left.withColumn("salt", pmod(hash(col("doc_id")), lit(par)))
@@ -5154,13 +5112,10 @@ object DocQueries {
         sl.as("a").join(sr.as("b"), cond && col("a.salt") === col("b.salt"))
       }
     val banded = joined.filter(abs(col("a.n_chars") - col("b.n_chars")) <= k)
-    // sound prune before the DP: L1 > 2k pairs can never verify. The
-    // toggle exists for A/B measurement only — both settings produce
-    // identical rows (CharHistSpec pins the bound), measured at x16:
-    // see README's fuzzy section.
-    (if (histPruneOn(spark)) banded.filter(graft.functions.GraftFunctions
-       .histL1(col("a.h"), col("b.h")) <= 2 * k)
-     else banded)
+    // sound prune before the DP: L1 > 2k pairs can never verify
+    // (CharHistSpec pins the bound; measured at x16: README's fuzzy section)
+    banded.filter(graft.functions.GraftFunctions
+        .histL1(col("a.h"), col("b.h")) <= 2 * k)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         graft.functions.GraftFunctions
           .levenshteinBounded(col("a.text"), col("b.text"), k)
@@ -5237,12 +5192,6 @@ object DocQueries {
     * planted probe measures what the cap costs at the scale it binds. */
   private def cdcBlockCap(nDocs: Long): Long = math.max(64L, nDocs / 1024L)
 
-  /** The CharHist L1 prune is result-neutral (sound necessary condition,
-    * [[graft.functions.CharHist]]); this toggle exists so its cost/benefit
-    * stays A/B-measurable, not because any setting changes answers. */
-  private def histPruneOn(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.fuzzy.histPrune").forall(_.toBoolean)
-
   /** (doc_id, n_chars, chunk key) rows of the two-pass gear BLOCKING walk
     * ([[graft.functions.GearChunker.blockKeys]]) — keys are distinct per
     * document by construction. */
@@ -5286,12 +5235,9 @@ object DocQueries {
   /** Blocked pair table, memoized for the same reason as [[fuzzyDedup]]'s:
     * [[fuzzyRecall]] is a direct consumer (the recall numerator), so the
     * family materializes the verified pair table once per residency. */
-  def fuzzyDedupBlocked(spark: SparkSession, d: String): DataFrame = {
-    val k = spark.conf.getOption("spark.graft.fuzzy.maxDist").map(_.toInt).getOrElse(40)
-    MemoCache.getOrElseUpdate(spark,
-      ("fuzzy-blocked-pairs", d, k, histPruneOn(spark)))(
-      fuzzyDedupBlockedCompute(spark, d, k).cache())(_.unpersist(blocking = false))
-  }
+  def fuzzyDedupBlocked(spark: SparkSession, d: String): DataFrame =
+    MemoCache.getOrElseUpdate(spark, ("fuzzy-blocked-pairs", d))(
+      fuzzyDedupBlockedCompute(spark, d, FuzzyK).cache())(_.unpersist(blocking = false))
 
   private def fuzzyDedupBlockedCompute(spark: SparkSession, d: String, k: Int): DataFrame = {
     val base = fuzzyDocs(spark, d)
@@ -5310,14 +5256,11 @@ object DocQueries {
     // candidate set and the DP only.
     val hists = base.select(col("doc_id"),
       graft.functions.GraftFunctions.charHist64(col("text")).as("h"))
-    val pruned =
-      if (!histPruneOn(spark)) cand
-      else cand
-        .join(hists.select(col("doc_id").as("doc_a"), col("h").as("ha")), "doc_a")
-        .join(hists.select(col("doc_id").as("doc_b"), col("h").as("hb")), "doc_b")
-        .filter(graft.functions.GraftFunctions.histL1(col("ha"), col("hb")) <= 2 * k)
-        .select(col("doc_a"), col("doc_b"))
-    pruned
+    cand
+      .join(hists.select(col("doc_id").as("doc_a"), col("h").as("ha")), "doc_a")
+      .join(hists.select(col("doc_id").as("doc_b"), col("h").as("hb")), "doc_b")
+      .filter(graft.functions.GraftFunctions.histL1(col("ha"), col("hb")) <= 2 * k)
+      .select(col("doc_a"), col("doc_b"))
       .join(base.select(col("doc_id").as("doc_a"), col("text").as("ta")), "doc_a")
       .join(base.select(col("doc_id").as("doc_b"), col("text").as("tb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
@@ -5333,7 +5276,7 @@ object DocQueries {
     * logged" half of the scattered-recall fix. Probe-only (not in the
     * gate's query map). */
   private[graft] def fuzzyBlockedDiag(spark: SparkSession, d: String): DataFrame = {
-    val k = spark.conf.getOption("spark.graft.fuzzy.maxDist").map(_.toInt).getOrElse(40)
+    val k = FuzzyK
     val cap = cdcBlockCap(docCount(spark, d))
     val lsh = fuzzyCandLsh(spark, d, k).distinct()
       .agg(count(lit(1)).cast("long").as("lsh_pairs"))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.GraftConf
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -557,8 +558,7 @@ object EmbeddingQueries {
       // distributed loop: broadcast weights, map-side partial gradients.
       // IDENTICAL Long arithmetic either way, so the gate never changes
       // results (DedupScaleSpec pins bit-parity on the oracled entry).
-      val gate = spark.conf.getOption("spark.graft.probe.maxDriverRows")
-        .map(_.toLong).getOrElse(1L << 20)
+      val gate = GraftConf.ProbeMaxDriverRows.get(spark)
       var w = Array.fill(Dim)(0L)
       def step(w0: Array[Long], grad: Array[Long]): Array[Long] =
         // dw_real = grad_real / maxnorm2_real collapses to this all-integer
@@ -991,9 +991,7 @@ object EmbeddingQueries {
     // block fits the same budget). Identical per-pair arithmetic either way,
     // so the gate never changes results (DedupScaleSpec pins bit-parity on
     // the oracled entry itself).
-    val maxBroadcastDocs = spark.conf
-      .getOption("spark.graft.dedup.maxBroadcastDocs").map(_.toLong)
-      .getOrElse(1L << 20)
+    val maxBroadcastDocs = GraftConf.DedupMaxBroadcastDocs.get(spark)
     val e = embeddings(spark, d)
       .select(col("vec_id"), scaled(col("embedding")).as("emb"))
       .as[(Long, Array[Long])]
@@ -1787,10 +1785,8 @@ object EmbeddingQueries {
     // approximation, like annIvf's NProbe — changes to k-means; that
     // regime is pinned by DedupScaleSpec (gate-forced routing must equal
     // the direct k-means call bit-for-bit), not by the SQL oracle.
-    val maxLabelCellVecs = spark.conf
-      .getOption("spark.graft.dedup.maxLabelCellVecs").map(_.toLong)
-      .getOrElse(1L << 12) // n²/(2·10) pairs ≈ 840k at the boundary
-    if (embeddingCount(spark, d) > maxLabelCellVecs)
+    // default 2^12: n²/(2·10) pairs ≈ 840k at the boundary
+    if (embeddingCount(spark, d) > GraftConf.DedupMaxLabelCellVecs.get(spark))
       return semDedupKmeans(spark, d)
     val eRaw = embeddings(spark, d)
       .select(col("vec_id"), col("label"), scaled(col("embedding")).as("emb"))
@@ -1810,9 +1806,7 @@ object EmbeddingQueries {
       .withColumn("norm2", dotScaled(col("emb"), col("emb")))
     val kk =
       if (k > 0) k
-      else spark.conf.getOption("spark.graft.dedup.semdedupK").map(_.toInt)
-        .getOrElse(math.max(KmK, math.ceil(math.sqrt(
-          embeddingCount(spark, d).toDouble)).toInt))
+      else math.max(KmK, math.ceil(math.sqrt(embeddingCount(spark, d).toDouble)).toInt)
     val cents = trainedCentroids(spark, d, kk, KmIters)
       .select(col("cluster").cast("long").as("cell"), col("cemb"))
       .withColumn("cnorm2", dotScaled(col("cemb"), col("cemb")))
@@ -2283,13 +2277,11 @@ object EmbeddingQueries {
     // Driver gate (the pagerank/cluster-resolver pattern): the greedy walk
     // is k sequential argmax ROUNDS — distributed, that is k full jobs of
     // per-round overhead for ~1e6 multiplies of actual arithmetic. A
-    // candidate set under `spark.graft.mmr.maxDriverVectors` collects once
+    // candidate set of at most `maxDriverVecs` collects once
     // and runs the identical integer greedy (same score, same
     // (score desc, vec_id) tie-break) on the driver; above the gate the
     // distributed loop below is unchanged.
-    val maxDriverVecs = spark.conf
-      .getOption("spark.graft.mmr.maxDriverVectors").map(_.toLong)
-      .getOrElse(1L << 17)
+    val maxDriverVecs = 1L << 17
     if (embeddingCount(spark, d) <= maxDriverVecs) {
       val rows = e.filter(col("vec_id") >= NQueries)
         .select(col("vec_id"), col("emb"))
@@ -2450,19 +2442,17 @@ object EmbeddingQueries {
     // More shards = smaller graphs = faster (insert cost grows with graph
     // size) AND higher recall (the exact rerank sees each shard's top-k);
     // the cost is gather rows, |queries| x shards x k — trivial. At
-    // warehouse scale this is one graph per partition; the fixed default
+    // warehouse scale this is one graph per partition; the fixed count
     // keeps shard membership (and thus emitted candidates) deterministic
     // across hosts, which a defaultParallelism-derived count would not.
-    val shards = spark.conf.getOption("spark.graft.hnsw.shards").map(_.toInt).getOrElse(16)
-    // Recall-first defaults, measured on the x16 scaled fixture (80k
+    val shards = 16
+    // Recall-first parameters, measured on the x16 scaled fixture (80k
     // 64-dim near-random vectors, 16 shards — distance concentration makes
     // this the HARD regime for graph ANN): (m=8, ef=64) read recall 0.62;
-    // (8, 256) 0.90; (16, 256) 1.00. The knobs trade exactly as the paper
-    // says, so the defaults buy recall and the confs buy back speed.
-    val m = spark.conf.getOption("spark.graft.hnsw.m").map(_.toInt).getOrElse(16)
-    val efC = spark.conf.getOption("spark.graft.hnsw.efConstruction").map(_.toInt).getOrElse(128)
-    val efS = spark.conf.getOption("spark.graft.hnsw.efSearch").map(_.toInt).getOrElse(256)
-    MemoCache.getOrElseUpdate(spark, ("hnsw-cands", d, shards, m, efC, efS))({
+    // (8, 256) 0.90; (16, 256) 1.00. They trade exactly as the paper says;
+    // these buy recall.
+    val (m, efC, efS) = (16, 128, 256)
+    MemoCache.getOrElseUpdate(spark, ("hnsw-cands", d))({
       val e = embeddings(spark, d)
       // NQueries probe rows to the driver — the broadcast-only-probes
       // pattern every index query here uses (gate: fixture contract).

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.GraftConf
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -468,7 +469,6 @@ object EventQueries {
     val tot = Window.partitionBy(lit(1))
     val p = col("a").cast("double") / sum(col("a")).over(tot)
     val q = col("b").cast("double") / sum(col("b")).over(tot)
-    val m = (col("p") + col("q")) / 2.0
     val term = (c: Column) =>
       when(c > 0, c * log(c / ((col("p") + col("q")) / 2.0))).otherwise(0.0)
     counts
@@ -1805,9 +1805,7 @@ object EventQueries {
     // arithmetic on graphs of type/page cardinality — measured 2.6s → 0.3s
     // at sf0.1); past `spark.graft.pagerank.maxDriverEdges` the identical
     // integer updates run distributed. Bit-parity is spec-pinned.
-    val maxDriverEdges = spark.conf
-      .getOption("spark.graft.pagerank.maxDriverEdges").map(_.toLong)
-      .getOrElse(4L << 20)
+    val maxDriverEdges = GraftConf.PagerankMaxDriverEdges.get(spark)
     val ranks: DataFrame = if (es.length <= maxDriverEdges) {
       val ow = es.groupBy(_._1).map { case (s, g) => s -> g.map(_._3).sum }
       var rank = ns.map(_ -> PrScale / n).toMap
@@ -2923,30 +2921,15 @@ object EventQueries {
       grid.groupBy(col("user_id"), col("seg"))
         .agg(sum(col("v0")).as("sv"), first(col("L")).as("L"))
         .cache())(_.unpersist(blocking = false))
-    // Empty-events guard: min() over an empty grid is NULL and getLong
-    // would NPE (the old join-based probe resolution degraded gracefully);
-    // an empty corpus has no probe user, so the result is simply no rows.
+    // Empty events: min() over an empty grid is NULL (getLong would NPE).
     // Long.MinValue marks "no user" (ids are parquet longs; the fixture
-    // generator never emits it) so the CountMemo slot stays a plain long.
+    // generator never emits it) so the CountMemo slot stays a plain long;
+    // it matches no grid row, so the pipeline below yields no rows.
     val qu = CountMemo.getOrCompute(spark, ("ts-qu", d))(
       grid.agg(min(col("user_id"))).head() match {
         case r if r.isNullAt(0) => Long.MinValue
         case r => r.getLong(0)
       })
-    if (qu == Long.MinValue)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("rank",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("user_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("sqdist",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("lb_scaled",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("lb_ok",
-            org.apache.spark.sql.types.BooleanType))))
     val qPaa = paa.filter(col("user_id") === qu)
       .select(col("seg"), col("sv").as("qsv"))
     val lb = paa.filter(col("user_id") =!= qu)
@@ -3041,7 +3024,7 @@ object EventQueries {
     // RAW scans (no fixture rebalance): each branch is one reductive
     // aggregation whose partial-agg collapses the stream before any
     // exchange, so the keyed rebalance was a pure extra full-table shuffle
-    // per branch — five of them. BenchOne A/B at sf0.1: 2.6 -> 1.3 s warm,
+    // per branch — five of them. Single-query A/B at sf0.1: 2.6 -> 1.3 s warm,
     // self-CPU 10.4 -> 4.8 s.
     one(eventsRaw(spark, d), "events", "user_id")
       .unionByName(one(eventsRaw(spark, d), "events", "event_type"))
@@ -4406,9 +4389,8 @@ object EventQueries {
     * OOM the driver (the un-gated `broadcast(...)` forced exactly that). */
   private def maybeBroadcastItemDim(spark: SparkSession, d: String,
                                     dim: DataFrame): DataFrame = {
-    val maxItems = spark.conf.getOption("spark.graft.evt.maxBroadcastItems")
-      .map(_.toLong).getOrElse(1L << 22)
-    if (cappedItemCount(spark, d) <= maxItems) broadcast(dim) else dim
+    if (cappedItemCount(spark, d) <= GraftConf.EvtMaxBroadcastItems.get(spark)) broadcast(dim)
+    else dim
   }
 
   /** Matching SQL: `ui0`/`ui` CTEs, shared by both oracles. */

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.GraftConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The ONE bounded memo store behind every query-layer memoization
@@ -40,10 +41,6 @@ private[graft] object MemoCache {
   private val missCount = new java.util.concurrent.atomic.AtomicLong
   private[graft] def lookupCounts: (Long, Long) = (hitCount.get, missCount.get)
 
-  private def maxEntries(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.memo.maxEntries")
-      .map(_.toInt).getOrElse(8)
-
   private def releaseQuietly(e: Entry): Unit =
     try e.release() catch { case _: Throwable => }
 
@@ -72,7 +69,7 @@ private[graft] object MemoCache {
       // frame's cache, leaving the memoized value uncached for its whole
       // residency. Reentrant computes (nested getOrElseUpdate) each make
       // their own room under the same lock.
-      val max = math.max(1, maxEntries(spark))
+      val max = math.max(1, GraftConf.MemoMaxEntries.get(spark))
       while (entries.size() >= max) {
         val it = entries.entrySet().iterator()
         val eldest = it.next()

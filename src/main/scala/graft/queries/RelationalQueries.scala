@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.GraftConf
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -813,9 +814,7 @@ object RelationalQueries {
     // partsupp is SF-sized — the shuffled hash join is the scale plan.
     val psRows = 4L * CountMemo.getOrCompute(spark, ("part-count", d))(
       part(spark, d).count())
-    val maxPsBroadcastRows = spark.conf
-      .getOption("spark.graft.relational.maxBroadcastRows").map(_.toLong)
-      .getOrElse(4L << 20)
+    val maxPsBroadcastRows = GraftConf.RelationalMaxBroadcastRows.get(spark)
     val psBase = partsupp(spark, d)
       .join(broadcast(p), col("ps_partkey") === col("p_partkey"))
       .select("ps_partkey", "ps_suppkey", "ps_supplycost_cents")

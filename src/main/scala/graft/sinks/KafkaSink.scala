@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.GraftConf
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -37,7 +38,7 @@ object KafkaSink {
     * `key`/`value` columns). Returns None when no bootstrap servers are
     * configured. */
   def start(frames: DataFrame, topic: String, checkpointDir: String): Option[StreamingQuery] =
-    frames.sparkSession.conf.getOption("spark.graft.kafka.bootstrap").map { servers =>
+    GraftConf.KafkaBootstrap.get(frames.sparkSession).map { servers =>
       frames
         .selectExpr("key", "value")
         .writeStream

@@ -1,9 +1,10 @@
 package graft.sinks
 
+import graft.GraftConf
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import KafkaSink.{Completed, Fatal, Retriable, RetryingPublisher, SendOutcome}
+import KafkaSink.{Completed, RetryingPublisher, SendOutcome}
 
 /** Live Google Pub/Sub-style publisher transport for
   * [[TopicSinks.pubsubFrame]] frames — the half the reference implements in
@@ -117,7 +118,7 @@ object PubSubSink {
     * checkpoint dir makes batch replay deterministic (at-least-once). */
   def start(frames: DataFrame, topic: String,
       checkpointDir: String): Option[StreamingQuery] =
-    frames.sparkSession.conf.getOption("spark.graft.pubsub.transport").map { t =>
+    GraftConf.PubsubTransport.get(frames.sparkSession).map { t =>
       frames.writeStream
         .outputMode("append")
         .option("checkpointLocation", checkpointDir)

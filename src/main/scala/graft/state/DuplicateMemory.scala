@@ -1,7 +1,7 @@
 package graft.state
 
 import graft.functions.Murmur3
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 

@@ -542,7 +542,7 @@ class PlanSpec extends SparkSpec {
     // explode (GenerateExec) — must NEVER ride a BroadcastExchange (that
     // OOMs the driver at ~8B rows); the join degrades to the shuffled hash
     // join, and both physical forms produce identical rows.
-    spark.conf.set("spark.graft.relational.maxBroadcastRows", "0")
+    spark.conf.set(GraftConf.RelationalMaxBroadcastRows.key, "0")
     try {
       val closed = RelationalQueries.q9(spark, sf)
       val cn = planNodes(closed)
@@ -560,7 +560,7 @@ class PlanSpec extends SparkSpec {
       val clos = closed.collect().map(_.toString).sorted
       assert(open.sameElements(clos),
         "gate setting must not change q9's rows")
-    } finally spark.conf.unset("spark.graft.relational.maxBroadcastRows")
+    } finally spark.conf.unset(GraftConf.RelationalMaxBroadcastRows.key)
   }
 
   test("q20: qualification ends in a semi-join; no cartesian") {
@@ -1068,7 +1068,7 @@ class PlanSpec extends SparkSpec {
     // memory). AQE may still locally convert a tiny side at runtime, so the
     // assertion targets the STATIC plan (pre-execution), where only our
     // explicit hint could have forced a broadcast.
-    spark.conf.set("spark.graft.evt.maxBroadcastItems", "0")
+    spark.conf.set(GraftConf.EvtMaxBroadcastItems.key, "0")
     try {
       for (q <- Seq("evt_item_sim", "evt_triangles")) {
         val df = graft.queries.EventQueries.queries(q)(spark, sf)
@@ -1083,13 +1083,13 @@ class PlanSpec extends SparkSpec {
         // memoized interaction set)
         val gated = df.collect().map(_.toString).sorted
         assert(gated.nonEmpty, s"$q under the closed gate must still compute")
-        spark.conf.unset("spark.graft.evt.maxBroadcastItems")
+        spark.conf.unset(GraftConf.EvtMaxBroadcastItems.key)
         val open = graft.queries.EventQueries.queries(q)(spark, sf)
           .collect().map(_.toString).sorted
-        spark.conf.set("spark.graft.evt.maxBroadcastItems", "0")
+        spark.conf.set(GraftConf.EvtMaxBroadcastItems.key, "0")
         assert(gated.toSeq === open.toSeq,
           s"$q: gate-open and gate-closed plans must produce identical rows")
       }
-    } finally spark.conf.unset("spark.graft.evt.maxBroadcastItems")
+    } finally spark.conf.unset(GraftConf.EvtMaxBroadcastItems.key)
   }
 }

@@ -26,12 +26,4 @@ class TablesSpec extends SparkSpec {
     val p = parts(Tables.events(spark, "/root/testdata/sf0.001"))
     assert(p === 1)
   }
-
-  test("spark.graft.rebalanceInput=false disables the rebalance") {
-    spark.conf.set("spark.graft.rebalanceInput", "false")
-    try {
-      val p = parts(Tables.events(spark, "/root/testdata/sf0.1"))
-      assert(p === 1)
-    } finally spark.conf.unset("spark.graft.rebalanceInput")
-  }
 }

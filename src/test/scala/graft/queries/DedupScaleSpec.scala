@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{GraftConf, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** The scale gates of the dedup/LM family: each driver-collect small-data
@@ -20,7 +20,7 @@ class DedupScaleSpec extends SparkSpec {
     import spark.implicits._
     val viaBroadcast = DocQueries.neardupJaccard(spark, sf)
       .as[(Long, Long, Long, Double)].collect().toSet
-    val viaJoin = withConf("spark.graft.dedup.maxBroadcastDocs", "0") {
+    val viaJoin = withConf(GraftConf.DedupMaxBroadcastDocs.key, "0") {
       DocQueries.neardupJaccardCompute(spark, sf)
         .as[(Long, Long, Long, Double)].collect().toSet
     }
@@ -32,7 +32,7 @@ class DedupScaleSpec extends SparkSpec {
     import spark.implicits._
     val viaDriver = DocQueries.dedupClusters(spark, sf)
       .as[(Long, Long, Boolean)].collect().toSet
-    val viaComponents = withConf("spark.graft.dedup.maxDriverPairs", "0") {
+    val viaComponents = withConf(GraftConf.DedupMaxDriverPairs.key, "0") {
       DocQueries.dedupClusters(spark, sf)
         .as[(Long, Long, Boolean)].collect().toSet
     }
@@ -44,7 +44,7 @@ class DedupScaleSpec extends SparkSpec {
     import spark.implicits._
     val full = DocQueries.unigramLm(spark, sfSmall)
       .as[(Long, Int, Option[Double])].collect().toMap2
-    val capped = withConf("spark.graft.lm.vocabCap", "2") {
+    val capped = withConf(GraftConf.LmVocabCap.key, "2") {
       DocQueries.unigramLm(spark, sfSmall)
         .as[(Long, Int, Option[Double])].collect().toMap2
     }
@@ -74,11 +74,11 @@ class DedupScaleSpec extends SparkSpec {
     import spark.implicits._
     val full = DocQueries.importance(spark, sfSmall)
       .as[(Long, Int, Option[Double])].collect().toSet
-    val capped = withConf("spark.graft.lm.vocabCap", "2") {
+    val capped = withConf(GraftConf.LmVocabCap.key, "2") {
       DocQueries.importance(spark, sfSmall)
         .as[(Long, Int, Option[Double])].collect().toSet
     }
-    val big = withConf("spark.graft.lm.vocabCap", Int.MaxValue.toString) {
+    val big = withConf(GraftConf.LmVocabCap.key, Int.MaxValue.toString) {
       DocQueries.importance(spark, sfSmall)
         .as[(Long, Int, Option[Double])].collect().toSet
     }
@@ -103,7 +103,7 @@ class DedupScaleSpec extends SparkSpec {
       .as[(Long, Long, Double)].collect().toSet
     // a 100-doc budget forces nBlocks = ceil(corpus/100) > 1 on the SAME
     // public entry point the oracle runs — not just the private blocked fn
-    val gated = withConf("spark.graft.dedup.maxBroadcastDocs", "100") {
+    val gated = withConf(GraftConf.DedupMaxBroadcastDocs.key, "100") {
       EmbeddingQueries.neardupCosine(spark, sfSmall)
         .as[(Long, Long, Double)].collect().toSet
     }
@@ -115,7 +115,7 @@ class DedupScaleSpec extends SparkSpec {
     import spark.implicits._
     val viaDriver = EmbeddingQueries.linearProbe(spark, sfSmall)
       .as[(Long, Int, Double, Boolean)].collect().toSet
-    val viaDistributed = withConf("spark.graft.probe.maxDriverRows", "0") {
+    val viaDistributed = withConf(GraftConf.ProbeMaxDriverRows.key, "0") {
       EmbeddingQueries.linearProbe(spark, sfSmall)
         .as[(Long, Int, Double, Boolean)].collect().toSet
     }
@@ -188,7 +188,7 @@ class DedupScaleSpec extends SparkSpec {
     import spark.implicits._
     // forcing the gate on the oracled entry itself must reproduce the
     // direct k-means-cell call exactly (same cells, same flags)
-    val gated = withConf("spark.graft.dedup.maxLabelCellVecs", "0") {
+    val gated = withConf(GraftConf.DedupMaxLabelCellVecs.key, "0") {
       EmbeddingQueries.semDedup(spark, sfSmall)
         .as[(Long, Long, Boolean, Option[Long])].collect().toSet
     }

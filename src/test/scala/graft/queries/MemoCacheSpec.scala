@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{GraftConf, SparkSpec}
 import org.apache.spark.storage.StorageLevel
 
 /** The bounded memo store: sweeping more (dataset, config) keys than the
@@ -30,12 +30,12 @@ class MemoCacheSpec extends SparkSpec {
     // sweep more model keys than the cap (default 8) — each distinct
     // vocabCap is a fresh (dataset, cap) entry, pushing the pair table
     // (oldest, never re-accessed) out of the LRU
-    val lmBaseline = withConf("spark.graft.lm.vocabCap", "1") {
+    val lmBaseline = withConf(GraftConf.LmVocabCap.key, "1") {
       DocQueries.unigramLm(spark, sfSmall)
         .as[(Long, Int, Option[Double])].collect().toSet
     }
     (2 to 10).foreach { cap =>
-      withConf("spark.graft.lm.vocabCap", cap.toString) {
+      withConf(GraftConf.LmVocabCap.key, cap.toString) {
         DocQueries.unigramLm(spark, sfSmall).queryExecution.toRdd.count()
       }
     }
@@ -49,7 +49,7 @@ class MemoCacheSpec extends SparkSpec {
     // an evicted BROADCAST entry's old handle also still works (eviction
     // unpersists executor copies; the driver copy re-ships on demand) —
     // the race-safety contract that lets eviction run under live queries
-    val lmAgain = withConf("spark.graft.lm.vocabCap", "1") {
+    val lmAgain = withConf(GraftConf.LmVocabCap.key, "1") {
       DocQueries.unigramLm(spark, sfSmall)
         .as[(Long, Int, Option[Double])].collect().toSet
     }
@@ -81,7 +81,7 @@ class MemoCacheSpec extends SparkSpec {
     // NO storage beyond session-lifetime cluster memory (nothing on disk,
     // nothing across sessions — this is the guardrail against result
     // caching that would survive a fresh run).
-    val offline = withConf("spark.graft.memo.maxEntries", "0") {
+    val offline = withConf(GraftConf.MemoMaxEntries.key, "0") {
       DocQueries.fuzzyRecall(spark, sf)
         .as[(Long, Long, Option[Double])].collect().toSet
     }

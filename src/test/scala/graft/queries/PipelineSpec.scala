@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{GraftConf, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Validation of the non-SQL-expressible pipeline ops against exact
@@ -119,13 +119,13 @@ class PipelineSpec extends SparkSpec {
     assert(pr.values.sum <= 1000000000000L)
     assert(pr.values.sum > 300000000000L, "most mass should survive 10 rounds")
     // driver-loop vs distributed path bit-parity: force the gate shut
-    spark.conf.set("spark.graft.pagerank.maxDriverEdges", "0")
+    spark.conf.set(GraftConf.PagerankMaxDriverEdges.key, "0")
     try {
       val dist = EventQueries.pagerank(spark, tmp)
         .select("event_type", "rank_scaled")
         .as[(String, Long)].collect().toMap
       assert(dist === pr, "distributed updates must reproduce the driver loop exactly")
-    } finally spark.conf.unset("spark.graft.pagerank.maxDriverEdges")
+    } finally spark.conf.unset(GraftConf.PagerankMaxDriverEdges.key)
   }
 
   test("textrank: hub word of a planted lexical star outranks leaves; " +
@@ -146,12 +146,12 @@ class PipelineSpec extends SparkSpec {
     assert((0 until 8).map(i => tr(s"l$i")).toSet.size === 1,
       "symmetric leaves must tie exactly")
     assert(tr.values.sum <= 1000000000000L, "damped update never grows mass")
-    spark.conf.set("spark.graft.textrank.maxDriverEdges", "0")
+    spark.conf.set(GraftConf.TextrankMaxDriverEdges.key, "0")
     try {
       val dist = DocQueries.queries("doc_textrank")(spark, tmp)
         .select("word", "rank_scaled").as[(String, Long)].collect().toMap
       assert(dist === tr, "distributed updates must reproduce the driver loop")
-    } finally spark.conf.unset("spark.graft.textrank.maxDriverEdges")
+    } finally spark.conf.unset(GraftConf.TextrankMaxDriverEdges.key)
   }
 
   test("incremental sessionization equals the full recompute at every cutoff") {
@@ -1206,12 +1206,12 @@ class PipelineSpec extends SparkSpec {
     // apple/banana idf 2000, cherry/mango 4000: dot 8e6 over norms
     // sqrt(24e6) each -> exactly 1/3
     assert(capped.head._3 === 0.333333)
-    spark.conf.set("spark.graft.tfidf.dfCapFrac", "0")
+    spark.conf.set(GraftConf.TfidfDfCapFrac.key, "0")
     try {
       val uncapped = DocQueries.tfidfKnn(spark, tmp)
         .select("doc_id").as[Long].collect().toSet
       assert(uncapped === Set(7L, 11L, 12L))
-    } finally spark.conf.unset("spark.graft.tfidf.dfCapFrac")
+    } finally spark.conf.unset(GraftConf.TfidfDfCapFrac.key)
   }
 
   test("tfidf df cap degeneracy gate: a tiny-vocab corpus where capping " +
@@ -1466,7 +1466,7 @@ class PipelineSpec extends SparkSpec {
       }
     }
 
-    spark.conf.set("spark.graft.bpe.merges", "10")
+    spark.conf.set(GraftConf.BpeMerges.key, "10")
     try {
       val got = DocQueries.bpeTrain(spark, tmp)
         .orderBy("rank").select("left", "right", "pair_count")
@@ -1478,13 +1478,13 @@ class PipelineSpec extends SparkSpec {
       Seq((1L, text, "en", "web", text.length.toLong))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$tmp2/documents.parquet")
-      spark.conf.set("spark.graft.bpe.maxDriverVocab", "0")
+      spark.conf.set(GraftConf.BpeMaxDriverVocab.key, "0")
       try {
         val dist = DocQueries.bpeTrain(spark, tmp2)
           .orderBy("rank").select("left", "right", "pair_count")
           .as[(String, String, Long)].collect().toSeq
         assert(dist === expected.toSeq, "distributed path diverged from driver path")
-      } finally spark.conf.unset("spark.graft.bpe.maxDriverVocab")
+      } finally spark.conf.unset(GraftConf.BpeMaxDriverVocab.key)
       // encode round-trip on the same model: symbols reconstruct each word
       val rank = got.zipWithIndex.map { case ((l, r, _), i) => (l, r) -> i }.toMap
       words.foreach { case (w, _) =>
@@ -1493,7 +1493,7 @@ class PipelineSpec extends SparkSpec {
       }
       // the most frequent pair merged first: "es" from newest (6) + widest (3)
       assert(got.head._3 === 9L)
-    } finally spark.conf.unset("spark.graft.bpe.merges")
+    } finally spark.conf.unset(GraftConf.BpeMerges.key)
   }
 
   test("BPE encoding merges by rank priority, not text order") {
@@ -2156,13 +2156,13 @@ class PipelineSpec extends SparkSpec {
        "bit-identical to the broadcast path") {
     val viaBroadcast = DocQueries.fuzzyDedup(spark, sf)
       .as[(Long, Long, Long)].collect().toSet
-    spark.conf.set("spark.graft.dedup.maxBroadcastDocs", "1")
+    spark.conf.set(GraftConf.DedupMaxBroadcastDocs.key, "1")
     try {
       val viaSalt = DocQueries.fuzzyDedup(spark, sf)
         .as[(Long, Long, Long)].collect().toSet
       assert(viaSalt === viaBroadcast,
         "hash(doc_id)-salted probe x replicated build must meet every pair exactly once")
-    } finally spark.conf.unset("spark.graft.dedup.maxBroadcastDocs")
+    } finally spark.conf.unset(GraftConf.DedupMaxBroadcastDocs.key)
   }
 
   test("cdc merge: tombstones delete, latest change wins, snapshot survives") {
@@ -2669,6 +2669,17 @@ class PipelineSpec extends SparkSpec {
     val full = graft.queries.EventQueries.queries("evt_ts_search")(spark, sf)
       .collect()
     assert(full.forall(_.getAs[Boolean]("lb_ok")))
+  }
+
+  test("ts search on an empty events table: no rows, the sf0.001 schema") {
+    val empty = java.nio.file.Files.createTempDirectory("graft-ts-empty").toString
+    spark.read.parquet(s"$sf/events.parquet").limit(0)
+      .write.parquet(s"$empty/events.parquet")
+    val got = EventQueries.queries("evt_ts_search")(spark, empty)
+    assert(got.collect().isEmpty)
+    val want = EventQueries.queries("evt_ts_search")(spark, sf)
+    def fields(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    assert(fields(got) === fields(want))
   }
 
   test("scene cuts: golden rows hand-computed OUTSIDE both engines") {

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{GraftConf, SparkSpec}
 import graft.functions.Skew
 import org.apache.spark.sql.functions._
 
@@ -312,14 +312,14 @@ class SketchSpec extends SparkSpec {
   test("unigram LM scored from the CMS model matches the exact model here") {
     val exact = graft.queries.DocQueries.unigramLm(spark, sf)
       .as[(Long, Int, Double)].collect().sortBy(_._1)
-    spark.conf.set("spark.graft.lm.cmsModel", "true")
+    spark.conf.set(GraftConf.LmCmsModel.key, "true")
     try {
       val cms = graft.queries.DocQueries.unigramLm(spark, sf)
         .as[(Long, Int, Double)].collect().sortBy(_._1)
       // sketch counts >= exact counts, so nll_cms <= nll_exact always; on
       // this vocabulary no token collides in all Depth rows, so equality
       assert(cms.toSeq === exact.toSeq)
-    } finally spark.conf.unset("spark.graft.lm.cmsModel")
+    } finally spark.conf.unset(GraftConf.LmCmsModel.key)
   }
 
   test("salted join equals plain join") {

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import graft.SparkSpec
+import graft.{GraftConf, SparkSpec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Scripted Pub/Sub transport for the contract tests: `flaky` events fail
@@ -54,7 +54,7 @@ class StreamingSinkSpec extends SparkSpec {
   test("kafka sink gate: no bootstrap conf -> nothing starts") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Array[Byte], Array[Byte])]
-    spark.conf.unset("spark.graft.kafka.bootstrap")
+    spark.conf.unset(GraftConf.KafkaBootstrap.key)
     assert(KafkaSink.start(input.toDF.toDF("key", "value"), "events",
       java.nio.file.Files.createTempDirectory("kcp").toString).isEmpty)
   }
@@ -62,7 +62,7 @@ class StreamingSinkSpec extends SparkSpec {
   test("kafka sink gate: bootstrap conf routes the frames into the kafka source") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Array[Byte], Array[Byte])]
-    spark.conf.set("spark.graft.kafka.bootstrap", "broker:9092")
+    spark.conf.set(GraftConf.KafkaBootstrap.key, "broker:9092")
     // this sandbox ships no spark-sql-kafka connector jar (and no broker),
     // so the wiring must get exactly as far as Spark's data-source
     // resolution of "kafka" — proving the stream START path is real, not
@@ -77,7 +77,7 @@ class StreamingSinkSpec extends SparkSpec {
         if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
       assert(msgs(err).exists(_.toLowerCase.contains("kafka")),
         s"expected the kafka source resolution in: ${msgs(err)}")
-    } finally spark.conf.unset("spark.graft.kafka.bootstrap")
+    } finally spark.conf.unset(GraftConf.KafkaBootstrap.key)
   }
 
   // ---------------------------------------------- Pub/Sub topic sink
@@ -85,7 +85,7 @@ class StreamingSinkSpec extends SparkSpec {
   test("pubsub sink gate: no transport conf -> nothing starts") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Array[Byte], String)]
-    spark.conf.unset("spark.graft.pubsub.transport")
+    spark.conf.unset(GraftConf.PubsubTransport.key)
     assert(PubSubSink.start(input.toDF.toDF("data", "partyIdentifier"), "t",
       java.nio.file.Files.createTempDirectory("pscp").toString).isEmpty)
   }
@@ -97,7 +97,7 @@ class StreamingSinkSpec extends SparkSpec {
     val frames = TopicSinks.pubsubFrame(
       input.toDF.toDF("partyId", "eventId", "ts", "payload"),
       "partyId", "eventId", "ts")
-    spark.conf.set("spark.graft.pubsub.transport", "memory")
+    spark.conf.set(GraftConf.PubsubTransport.key, "memory")
     try {
       val q = PubSubSink.start(frames, "clicks",
         java.nio.file.Files.createTempDirectory("pscp2").toString).get
@@ -107,7 +107,7 @@ class StreamingSinkSpec extends SparkSpec {
       input.addData(("p3", "e3", 1500000000002L, "again"))
       q.processAllAvailable()
       q.stop()
-    } finally spark.conf.unset("spark.graft.pubsub.transport")
+    } finally spark.conf.unset(GraftConf.PubsubTransport.key)
     val msgs = PubSubSink.InMemory.messages("clicks")
       .sortBy(_.attributes("eventIdentifier"))
     assert(msgs.size === 3)
