@@ -1,6 +1,13 @@
 package graft.topology
 
+import org.apache.spark.{Dependency, OneToOneDependency, Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.graftbridge.FrameBridge
+import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 
 /** The source→mapping→sink wiring layer (reference
   * `config/MappingConfiguration.java:31-42`,
@@ -9,10 +16,19 @@ import org.apache.spark.sql.DataFrame
   * corrupt/duplicate events (`Mapping.java:102-126`); one schema per sink
   * (`config/constraint/OneSchemaPerSink.java`, `SchemaRegistry.java:65-79`).
   *
-  * In Spark terms a topology is a DAG of DataFrames: each source frame is
-  * shared (cache-once, fan-out-many — the reference's queue fan-out
-  * collapses into plan reuse), each (mapping × sink) pair becomes one output
-  * frame the caller writes with its sink of choice.
+  * In Spark terms a topology is a DAG of DataFrames, and each (mapping ×
+  * sink) pair becomes one output frame the caller writes with its sink of
+  * choice. Like the reference, which maps an event once per mapping and
+  * hands the record to every sink of that mapping, an event is mapped once
+  * per batch: mappings whose outputs before the discard filters are
+  * plan-equal, with the same column names and types, share one
+  * evaluation, and each mapping's discard filters apply on top of it. A
+  * shared batch frame read by more than one (mapping, sink) edge is
+  * materialized lazily — by the first action that reads it, at AQE's final
+  * (coalesced) partitioning — and freed when the returned frames are
+  * dropped; so is a source union that mappings with different mappers
+  * read, so each source is decoded once. Streaming frames are never
+  * materialized.
   */
 final case class MappingSpec(
     name: String,
@@ -54,38 +70,100 @@ final class Topology(mappings: Seq[MappingSpec], sinks: Seq[SinkSpec]) {
   }
 
   /** Run the topology over the given source frames. Returns the frame each
-    * sink receives (union of its mappings' outputs). Source frames consumed
-    * by multiple mappings are cached once before fan-out. */
+    * sink receives (union of its mappings' outputs). The routing itself
+    * runs no Spark job: shared frames are materialized by the first action
+    * that reads them. */
   def apply(sources: Map[String, DataFrame]): Map[String, DataFrame] = {
-    import org.apache.spark.sql.functions.col
-    val sourceUses = mappings.flatMap(_.sources).groupBy(identity).view.mapValues(_.size)
-    val shared = sources.map { case (name, df) =>
-      // streaming frames can't cache(); Spark shares the streaming source
-      // across the queries natively, so fan-out just reuses the plan
-      name -> (if (sourceUses.getOrElse(name, 0) > 1 && !df.isStreaming) df.cache() else df)
-    }
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    val mapped: Map[String, DataFrame] = mappings.map { m =>
-      // reference default: a mapping that names no sources reads ALL of
-      // them; heterogeneous source shapes (browser vs JSON frames) union
-      // with allowMissingColumns — the mapping layer itself handles the
-      // missing sub-records (DefaultMapping's optCol)
-      val srcNames = if (m.sources.isEmpty) sources.keys.toSeq.sorted else m.sources
-      val in = srcNames.map(s => shared.getOrElse(s,
+    // reference default: a mapping that names no sources reads ALL of
+    // them; a source listed twice is read once (the list is a set, kept in
+    // the mapping's own order, which fixes the union's column order).
+    // Heterogeneous source shapes (browser vs JSON frames) union with
+    // allowMissingColumns — the mapping layer itself handles the missing
+    // sub-records (DefaultMapping's optCol)
+    def sourceList(m: MappingSpec): Seq[String] =
+      if (m.sources.isEmpty) sources.keys.toSeq.sorted else m.sources.distinct
+    val unions = mutable.Map.empty[Seq[String], DataFrame]
+    mappings.foreach { m =>
+      val names = sourceList(m)
+      unions.getOrElseUpdate(names, names.map(s => sources.getOrElse(s,
         throw new IllegalArgumentException(s"mapping '${m.name}' needs missing source '$s'")))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-      var out = m.mapper(in)
-      // NULL flags (a source without the transport column) must KEEP the
-      // row: the reference's flags are primitive booleans that default
-      // false, and filter(!NULL) = filter(NULL) silently drops the row
-      if (m.discardCorrupted && out.columns.contains("detectedCorruption"))
-        out = out.filter(!coalesce(col("detectedCorruption"), lit(false)))
-      if (m.discardDuplicates && out.columns.contains("detectedDuplicate"))
-        out = out.filter(!coalesce(col("detectedDuplicate"), lit(false)))
-      m.name -> out
+        .reduce(_.unionByName(_, allowMissingColumns = true)))
+    }
+    // mappings of one union whose pre-discard outputs are plan-equal and
+    // carry the same column names and types share one frame (sameResult
+    // alone ignores alias names)
+    final class Group(val names: Seq[String], val planned: DataFrame) {
+      val members = mutable.ArrayBuffer.empty[MappingSpec]
+    }
+    val groups = mutable.ArrayBuffer.empty[Group]
+    mappings.foreach { m =>
+      val names = sourceList(m)
+      val out = m.mapper(unions(names))
+      groups.find(g => g.names == names && g.planned.schema == out.schema &&
+        g.planned.queryExecution.analyzed.sameResult(out.queryExecution.analyzed))
+        .getOrElse { val g = new Group(names, out); groups += g; g }
+        .members += m
+    }
+    val edges = normSinks.flatMap(_.mappings).groupBy(identity).view.mapValues(_.size).toMap
+    def reads(g: Group): Int = g.members.iterator.map(m => edges.getOrElse(m.name, 0)).sum
+    // a batch union read by more than one group is materialized once, and
+    // those groups map from it. Streaming frames stay plans: each streaming
+    // query runs them incrementally, and there is nothing to persist
+    // between batches
+    val readers = groups.filter(reads(_) > 0).groupBy(_.names).view.mapValues(_.size).toMap
+    val inputs = unions.map { case (names, u) =>
+      names -> (if (readers.getOrElse(names, 0) > 1 && !u.isStreaming) Topology.materialized(u) else u)
+    }
+    val mapped: Map[String, DataFrame] = groups.iterator.flatMap { g =>
+      val in = inputs(g.names)
+      val sharedIn = in ne unions(g.names)
+      val out = if (sharedIn) g.members.head.mapper(in) else g.planned
+      val shared =
+        if (reads(g) <= 1 || out.isStreaming) out
+        // a mapper that returns its materialized input needs no second copy
+        else if (sharedIn && out.queryExecution.optimizedPlan.sameResult(in.queryExecution.optimizedPlan)) out
+        else Topology.materialized(out)
+      g.members.map(m => m.name -> Topology.discard(m, shared))
     }.toMap
     normSinks.map { s =>
       s.name -> s.mappings.map(mapped).reduce(_ unionByName _)
     }.toMap
   }
+}
+
+private object Topology {
+
+  /** `df`'s rows, computed once by the first action that reads the result,
+    * at the partitioning AQE settles on for `df`, and kept MEMORY_AND_DISK.
+    * A lost block is recomputed from lineage; ContextCleaner frees the
+    * storage once every frame built on the result is unreachable. */
+  def materialized(df: DataFrame): DataFrame =
+    FrameBridge.ofRows(df, new DeferredRDD(df.sparkSession.sparkContext,
+      () => df.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)))
+
+  /** Apply a mapping's discard flags. NULL flags (a source without the
+    * transport column) must KEEP the row: the reference's flags are
+    * primitive booleans that default false, and filter(!NULL) =
+    * filter(NULL) silently drops the row. */
+  def discard(m: MappingSpec, df: DataFrame): DataFrame = {
+    var out = df
+    if (m.discardCorrupted && out.columns.contains("detectedCorruption"))
+      out = out.filter(!coalesce(col("detectedCorruption"), lit(false)))
+    if (m.discardDuplicates && out.columns.contains("detectedDuplicate"))
+      out = out.filter(!coalesce(col("detectedDuplicate"), lit(false)))
+    out
+  }
+}
+
+/** An RDD whose parent is built on first use, so wrapping a query in it
+  * runs no job. Spark computes every RDD's partitions on the thread that
+  * submits a job (never on the scheduler's event loop), so the parent's
+  * own jobs — a query's shuffle and broadcast stages — run there. */
+private final class DeferredRDD(sc: SparkContext, @transient build: () => RDD[InternalRow])
+    extends RDD[InternalRow](sc, Nil) {
+  @transient private lazy val parent = build()
+  override protected def getDependencies: Seq[Dependency[_]] = Seq(new OneToOneDependency(parent))
+  override protected def getPartitions: Array[Partition] = parent.partitions
+  override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
+    firstParent[InternalRow].iterator(split, context)
 }

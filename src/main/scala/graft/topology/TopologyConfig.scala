@@ -200,10 +200,14 @@ final case class SinkConf(
     jitterDelay: Option[String],
     jitterFactor: Option[String])
 
+/** `parseErrors` holds the values the parser could not read (e.g. a
+  * discard flag that is not a HOCON boolean); they are reported with the
+  * constraint violations. */
 final case class TopologyConfig(
     sources: Seq[SourceConf],
     mappings: Seq[MappingConf],
-    sinks: Seq[SinkConf]) {
+    sinks: Seq[SinkConf],
+    parseErrors: Seq[String] = Nil) {
 
   /** Every constraint violation, in the reference's phrasing (the
     * `config/constraint` package); empty means the config is startable. */
@@ -211,6 +215,7 @@ final case class TopologyConfig(
     val sourceNames = sources.map(_.name).toSet
     val sinkNames = sinks.map(_.name).toSet
     val errs = scala.collection.mutable.ArrayBuffer.empty[String]
+    errs ++= parseErrors
 
     // MappingSourceSinkReferencesMustExist
     mappings.foreach { m =>
@@ -296,15 +301,28 @@ object TopologyConfig {
     val sources = section("sources").map { case (n, o) =>
       SourceConf(n, str(o, "type").getOrElse("browser"))
     }.toSeq.sortBy(_.name)
-    val mappings = section("mappings").map { case (n, o) =>
+    val parseErrors = scala.collection.mutable.ArrayBuffer.empty[String]
+    // HOCON booleans (what the reference's typesafe-config getBoolean
+    // accepts); an absent flag is false, any other value is an error
+    def flag(mapping: String, o: Hocon.Obj, key: String): Boolean =
+      o.fields.get(key) match {
+        case None => false
+        case Some(Hocon.Str("true" | "yes" | "on")) => true
+        case Some(Hocon.Str("false" | "no" | "off")) => false
+        case Some(v) =>
+          val shown = v match { case Hocon.Str(s) => s"'$s'"; case _ => "a non-scalar value" }
+          parseErrors += s"mapping '$mapping': $key must be a boolean (true/yes/on or false/no/off), got $shown"
+          false
+      }
+    val mappings = section("mappings").toSeq.sortBy(_._1).map { case (n, o) =>
       MappingConf(n,
         sources = strs(o, "sources"),
         sinks = strs(o, "sinks"),
         schemaFile = str(o, "schema_file"),
         confluentId = str(o, "confluent_id").flatMap(_.toIntOption),
-        discardCorrupted = str(o, "discard_corrupted").contains("true"),
-        discardDuplicates = str(o, "discard_duplicates").contains("true"))
-    }.toSeq.sortBy(_.name)
+        discardCorrupted = flag(n, o, "discard_corrupted"),
+        discardDuplicates = flag(n, o, "discard_duplicates"))
+    }
     val sinks = section("sinks").map { case (n, o) =>
       val retry = o.fields.get("retry_settings") match {
         case Some(r: Hocon.Obj) => r
@@ -314,7 +332,7 @@ object TopologyConfig {
         jitterDelay = str(retry, "jitter_delay"),
         jitterFactor = str(retry, "jitter_factor"))
     }.toSeq.sortBy(_.name)
-    TopologyConfig(sources, mappings, sinks)
+    TopologyConfig(sources, mappings, sinks, parseErrors.toSeq)
   }
 
   /** Parse + fail-fast validate in one step (the reference's startup path). */

@@ -184,4 +184,36 @@ class TopologyConfigSpec extends SparkSpec {
       Hocon.parse("divolte { mappings.m.sources = [browser }")
     }
   }
+
+  private def flagged(corrupted: String, duplicates: String): String = s"""
+    |divolte {
+    |  sources.browser.type = browser
+    |  mappings.m = {
+    |    sources = [browser], sinks = [hdfs]
+    |    discard_corrupted = $corrupted
+    |    discard_duplicates = $duplicates
+    |  }
+    |  sinks.hdfs.type = hdfs
+    |}""".stripMargin
+
+  test("discard flags accept every HOCON boolean spelling") {
+    for (t <- Seq("true", "yes", "on", "\"on\"")) {
+      val m = TopologyConfig.load(flagged(t, t)).mappings.head
+      assert(m.discardCorrupted && m.discardDuplicates, s"'$t' reads as true")
+    }
+    for (f <- Seq("false", "no", "off")) {
+      val m = TopologyConfig.load(flagged(f, f)).mappings.head
+      assert(!m.discardCorrupted && !m.discardDuplicates, s"'$f' reads as false")
+    }
+  }
+
+  test("a discard flag that is not a boolean fails fast with the other violations") {
+    val conf = flagged("maybe", "[true]").replace("sinks = [hdfs]", "sinks = [hdfs, ghost]")
+    val errs = TopologyConfig.parse(conf).validationErrors
+    assert(errs.exists(e => e.contains("discard_corrupted must be a boolean") && e.contains("'maybe'")))
+    assert(errs.exists(_.contains("discard_duplicates must be a boolean")))
+    assert(errs.exists(_.contains("missing sinks: ghost")))
+    val e = intercept[IllegalArgumentException](TopologyConfig.load(conf))
+    assert(e.getMessage.contains("discard_corrupted") && e.getMessage.contains("ghost"))
+  }
 }

@@ -1,7 +1,9 @@
 package graft.topology
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Wiring permutations from the reference's topology fixtures
@@ -15,6 +17,18 @@ class TopologySpec extends SparkSpec {
   ).toDF("eventId", "detectedCorruption", "detectedDuplicate")
 
   private val passThrough: DataFrame => DataFrame = identity
+
+  private def persistedRddIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** The spine's shape: `all` to one sink, `clean` (both discard flags,
+    * same mapper) to two. */
+  private def allClean(mapper: DataFrame => DataFrame): Topology = new Topology(
+    mappings = Seq(
+      MappingSpec("all", Seq("browser"), mapper, "s"),
+      MappingSpec("clean", Seq("browser"), mapper, "s",
+        discardCorrupted = true, discardDuplicates = true)),
+    sinks = Seq(SinkSpec("avro", Seq("all")), SinkSpec("kafka", Seq("clean")),
+      SinkSpec("pubsub", Seq("clean"))))
 
   test("many-to-many fan-out: one source, two mappings, shared sink") {
     val t = new Topology(
@@ -86,5 +100,133 @@ class TopologySpec extends SparkSpec {
         mappings = Seq(MappingSpec("m1", Seq("browser"), passThrough, "schemaA")),
         sinks = Seq(SinkSpec("hdfs", Seq("m1")), SinkSpec("hdfs", Seq("m1"))))
     }
+  }
+
+  test("plan-equal mappings evaluate their mapper once for all their sinks") {
+    val calls = spark.sparkContext.longAccumulator("mapper-rows")
+    val tag = udf { (id: String) => calls.add(1); id.length }
+    // a shuffled source, so the optimizer cannot fold the mapper into a
+    // local relation on the driver
+    val out = allClean(_.withColumn("idLen", tag(col("eventId"))))(
+      Map("browser" -> events.repartition(2)))
+    assert(out("avro").collect().map(_.getAs[String]("eventId")).sorted === Array("e1", "e2", "e3"))
+    assert(out("kafka").collect().map(_.getAs[String]("eventId")) === Array("e1"))
+    assert(out("pubsub").collect().map(_.getAs[String]("eventId")) === Array("e1"))
+    assert(calls.value === 3L) // one call per input row, not per sink
+  }
+
+  test("a shared frame is persisted lazily, at AQE's coalesced partitioning") {
+    val keyed = events.repartition(col("eventId"))
+    val unrouted = keyed.rdd.getNumPartitions
+    assert(unrouted < 8 * 4, "AQE coalesces the 8 x cores shuffle partitions")
+    val before = persistedRddIds
+    val out = allClean(passThrough)(Map("browser" -> keyed))
+    assert((persistedRddIds -- before).isEmpty, "apply persists nothing")
+    assert(out("avro").rdd.getNumPartitions === unrouted)
+    assert(out("kafka").rdd.getNumPartitions === unrouted)
+    assert(out("avro").count() === 3 && out("kafka").count() === 1)
+    val added = persistedRddIds -- before
+    assert(added.size === 1, "both sinks read one persisted group")
+    assert(spark.sparkContext.getPersistentRDDs(added.head).getNumPartitions === unrouted)
+  }
+
+  /** Route, read every sink, and return the id of the RDD the topology
+    * persisted; nothing else of the routing outlives this call. */
+  private def routeAndDrop(): Int = {
+    val before = persistedRddIds
+    allClean(passThrough)(Map("browser" -> events.repartition(2))).values.foreach(_.collect())
+    val Seq(id) = (persistedRddIds -- before).toSeq
+    id
+  }
+
+  test("a shared frame's storage is freed once the routed frames are dropped") {
+    val freed = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit = { freed.add(e.rddId); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val id = routeAndDrop()
+      // ContextCleaner unpersists an RDD after a GC finds it unreachable
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!freed.contains(id) && System.nanoTime() < deadline) { System.gc(); Thread.sleep(200) }
+      assert(freed.contains(id))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a mapping that lists a source twice reads it once") {
+    val t = new Topology(
+      mappings = Seq(MappingSpec("m", Seq("browser", "browser"), passThrough, "s")),
+      sinks = Seq(SinkSpec("hdfs", Seq("m"))))
+    assert(t(Map("browser" -> events))("hdfs").count() === 3)
+  }
+
+  test("streaming sources route through unmaterialized") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(String, Boolean, Boolean)]
+    val stream = input.toDF().toDF("eventId", "detectedCorruption", "detectedDuplicate")
+    val before = persistedRddIds
+    val out = allClean(passThrough)(Map("browser" -> stream))
+    assert(out.values.forall(_.isStreaming))
+    val q = out("kafka").writeStream.format("memory").queryName("topology_clean")
+      .outputMode("append").start()
+    try {
+      input.addData(("e1", false, false), ("e2", true, false), ("e3", false, true))
+      q.processAllAvailable()
+      assert(spark.table("topology_clean").select("eventId").as[String].collect() === Array("e1"))
+    } finally q.stop()
+    assert((persistedRddIds -- before).isEmpty)
+  }
+
+  test("mappings that differ only by an output name keep their own columns") {
+    val t = new Topology(
+      mappings = Seq(
+        MappingSpec("m1", Seq("browser"), _.select(col("eventId").as("party_id")), "a"),
+        MappingSpec("m2", Seq("browser"), _.select(col("eventId").as("pid")), "b"),
+        MappingSpec("m3", Seq("browser"),
+          _.select(col("eventId").as("x"), upper(col("eventId")).as("y")), "c"),
+        MappingSpec("m4", Seq("browser"),
+          _.select(col("eventId").as("y"), upper(col("eventId")).as("x")), "d")),
+      sinks = Seq(SinkSpec("s1", Seq("m1")), SinkSpec("s2", Seq("m2")),
+        SinkSpec("s3", Seq("m3")), SinkSpec("s4", Seq("m4"))))
+    val out = t(Map("browser" -> events))
+    assert(out("s1").columns === Array("party_id"))
+    assert(out("s2").columns === Array("pid"))
+    assert(out("s2").as[String].collect().sorted === Array("e1", "e2", "e3"))
+    assert(out("s3").columns === Array("x", "y"))
+    assert(out("s4").columns === Array("y", "x"))
+    assert(out("s4").select("x").as[String].collect().sorted === Array("E1", "E2", "E3"))
+  }
+
+  test("mappings with different mappers over one source read it once") {
+    val calls = spark.sparkContext.longAccumulator("source-rows")
+    val tag = udf { (id: String) => calls.add(1); id.length }
+    val source = events.repartition(2).withColumn("idLen", tag(col("eventId")))
+    // the pipeline's shape: `all` to two sinks, `purchases` to one of them
+    val t = new Topology(
+      mappings = Seq(
+        MappingSpec("all", Seq("browser"), passThrough, "s"),
+        MappingSpec("purchases", Seq("browser"), _.filter(col("eventId") === "e1"), "s")),
+      sinks = Seq(SinkSpec("files", Seq("all", "purchases")), SinkSpec("kafka", Seq("all"))))
+    val before = persistedRddIds
+    val out = t(Map("browser" -> source))
+    assert(out("files").count() === 4)
+    assert(out("kafka").count() === 3)
+    assert(out("files").collect().length === 4)
+    assert(calls.value === 3L) // one call per source row
+    assert((persistedRddIds -- before).size === 1, "the identity mapping reuses the persisted source")
+  }
+
+  test("each mapping's union keeps its own source order") {
+    val browser = Seq(("e1", "b")).toDF("eventId", "browserOnly")
+    val json = Seq(("e2", "j")).toDF("eventId", "jsonOnly")
+    val t = new Topology(
+      mappings = Seq(
+        MappingSpec("jb", Seq("json", "browser"), passThrough, "a"),
+        MappingSpec("bj", Seq("browser", "json"), passThrough, "b")),
+      sinks = Seq(SinkSpec("s1", Seq("jb")), SinkSpec("s2", Seq("bj"))))
+    val out = t(Map("browser" -> browser, "json" -> json))
+    assert(out("s1").columns === Array("eventId", "jsonOnly", "browserOnly"))
+    assert(out("s2").columns === Array("eventId", "browserOnly", "jsonOnly"))
   }
 }

@@ -1,8 +1,16 @@
 #!/usr/bin/env python3
-"""Compare two graft.Bench JSON artifacts (dev tool): per-query warm-time
-ratios on the common query set, plus totals and diagnostics, so a round-
-over-round slowdown is attributable to specific queries (or to the host,
-via the embedded loadavg/GC evidence)."""
+"""Compare two benchmark artifacts (dev tool), first (parent) against
+second (change):
+
+  tools/benchdiff.py A.json B.json
+
+- graft.Bench JSON: per-query warm-time ratios on the common query set,
+  plus totals and diagnostics, so a round-over-round slowdown is
+  attributable to specific queries (or to the host, via the embedded
+  loadavg/GC evidence).
+- perfbench result.json (`.bench_build/perfbench/results/*/result.json`):
+  the end-to-end metrics, the per-layer metrics and the spine ladder's
+  per-layer self times side by side, each with its B/A ratio."""
 import sys, json
 
 import re
@@ -23,26 +31,77 @@ def load(path):
     return d, pairs
 
 
-a, qa = load(sys.argv[1])
-b, qb = load(sys.argv[2])
-common = sorted(set(qa) & set(qb))
-print(f"common queries: {len(common)}  "
-      f"only-{sys.argv[1]}: {len(set(qa)-set(qb))}  "
-      f"only-{sys.argv[2]}: {len(set(qb)-set(qa))}")
-sa = sum(qa[q] for q in common)
-sb = sum(qb[q] for q in common)
-print(f"common warm totals: {sa:.1f}s vs {sb:.1f}s  ratio {sb/sa:.2f}x")
-for src, d in ((sys.argv[1], a), (sys.argv[2], b)):
-    diag = d.get("diag", {})
-    if diag:
-        print(f"{src}: wall={diag.get('wall_sec', 0):.0f}s "
-              f"load={diag.get('loadavg_start')}->{diag.get('loadavg_end')} "
-              f"gc={diag.get('gc_total_ms')}ms")
-ratios = sorted(((qb[q] / qa[q] if qa[q] > 0 else float('inf'), q)
-                 for q in common), reverse=True)
-print("\nworst regressions (b/a):")
-for r, q in ratios[:10]:
-    print(f"  {q:30s} {qa[q]:6.2f} -> {qb[q]:6.2f}  {r:5.2f}x")
-print("best improvements (b/a):")
-for r, q in ratios[-5:]:
-    print(f"  {q:30s} {qa[q]:6.2f} -> {qb[q]:6.2f}  {r:5.2f}x")
+def is_perfbench(d):
+    return isinstance(d.get("end_to_end"), dict) and isinstance(d.get("per_layer"), dict)
+
+
+def ratio(a, b):
+    if a is None or b is None:
+        return "     -"
+    return f"{b / a:6.2f}" if a != 0 else "   inf" if b != 0 else "  1.00"
+
+
+def table(title, a, b):
+    """Rows of name, A, B, B/A over the union of keys (missing shows '-')."""
+    print(f"\n{title}")
+    width = max([len(k) for k in set(a) | set(b)] + [4])
+    print(f"  {'name':{width}s} {'A':>14s} {'B':>14s} {'B/A':>6s}")
+    fmt = lambda v: f"{v:14.4g}" if v is not None else f"{'-':>14s}"
+    for k in sorted(set(a) | set(b)):
+        va, vb = a.get(k), b.get(k)
+        print(f"  {k:{width}s} {fmt(va)} {fmt(vb)} {ratio(va, vb)}")
+
+
+def perfbench_diff(pa, a, pb, b):
+    for src, d in ((pa, a), (pb, b)):
+        st = d.get("stamp", {})
+        print(f"{src}: workload={st.get('workload')} seed={st.get('seed')} "
+              f"trace={st.get('trace')} master={st.get('master')} "
+              f"failed={d.get('failed')}/{d.get('attempted')} "
+              f"checks_failed={sum(1 for c in d.get('checks', []) if not c.get('ok'))}")
+    table("end_to_end", a["end_to_end"], b["end_to_end"])
+    table("per_layer", a["per_layer"], b["per_layer"])
+    la, lb = a.get("ladder", {}), b.get("ladder", {})
+    if la or lb:
+        table("ladder self_s", la.get("self_s", {}), lb.get("self_s", {}))
+
+
+def bench_diff(pa, a, qa, pb, b, qb):
+    common = sorted(set(qa) & set(qb))
+    print(f"common queries: {len(common)}  "
+          f"only-{pa}: {len(set(qa)-set(qb))}  "
+          f"only-{pb}: {len(set(qb)-set(qa))}")
+    sa = sum(qa[q] for q in common)
+    sb = sum(qb[q] for q in common)
+    print(f"common warm totals: {sa:.1f}s vs {sb:.1f}s  ratio {sb/sa:.2f}x")
+    for src, d in ((pa, a), (pb, b)):
+        diag = d.get("diag", {})
+        if diag:
+            print(f"{src}: wall={diag.get('wall_sec', 0):.0f}s "
+                  f"load={diag.get('loadavg_start')}->{diag.get('loadavg_end')} "
+                  f"gc={diag.get('gc_total_ms')}ms")
+    ratios = sorted(((qb[q] / qa[q] if qa[q] > 0 else float('inf'), q)
+                     for q in common), reverse=True)
+    print("\nworst regressions (b/a):")
+    for r, q in ratios[:10]:
+        print(f"  {q:30s} {qa[q]:6.2f} -> {qb[q]:6.2f}  {r:5.2f}x")
+    print("best improvements (b/a):")
+    for r, q in ratios[-5:]:
+        print(f"  {q:30s} {qa[q]:6.2f} -> {qb[q]:6.2f}  {r:5.2f}x")
+
+
+def main(pa, pb):
+    da, db = json.load(open(pa)), json.load(open(pb))
+    if is_perfbench(da) and is_perfbench(db):
+        perfbench_diff(pa, da, pb, db)
+    elif is_perfbench(da) or is_perfbench(db):
+        sys.exit("benchdiff: cannot compare a perfbench result with a graft.Bench artifact")
+    else:
+        (a, qa), (b, qb) = load(pa), load(pb)
+        bench_diff(pa, a, qa, pb, b, qb)
+
+
+if __name__ == "__main__":
+    if len(sys.argv) != 3:
+        sys.exit(__doc__)
+    main(sys.argv[1], sys.argv[2])
