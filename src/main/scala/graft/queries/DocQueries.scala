@@ -228,14 +228,13 @@ object DocQueries {
     // the scored-rows scan feeds FOUR consumers (auc, best-threshold, ece,
     // accuracy) — memo-cache it or each re-runs the per-row textStats UDF
     // over the whole corpus (the tfidf-index measured pattern)
-    val s = MemoCache.getOrElseUpdate(spark, ("cls-scores", d))(
+    val s = MemoCache.frame(spark, ("cls-scores", d))(
       documents(spark, d)
         .withColumn("__st", textStatsUdf(col("text")))
         .select(
           floor(col("__st.stopHits").cast("double") / col("__st.nTokens") * 1e6)
             .cast("long").as("s6"),
-          (col("lang") === "en").cast("long").as("y"))
-        .cache())(_.unpersist(blocking = false))
+          (col("lang") === "en").cast("long").as("y")))
     val byScore = s.groupBy(col("s6"))
       .agg(count(lit(1)).as("cnt"), sum(col("y")).as("pos"))
     val w = Window.orderBy(col("s6")).rowsBetween(Window.unboundedPreceding, -1)
@@ -326,11 +325,6 @@ object DocQueries {
       |FROM a, e, c, b""".stripMargin
 
   // ---------------------------------------------------------- exact near-dup
-  /** Exact n-gram Jaccard near-duplicate pairs via inverted-index blocking:
-    * explode distinct shingles, self-join on shingle (map-side combinable),
-    * intersection counts -> Jaccard, threshold 0.3. Join carries only
-    * (shingle, doc_id); Jaccard math is int-exact so the oracle hash-matches
-    * bit-for-bit. */
   /** Common shingles carry no dedup signal but quadratic join cost: a
     * shingle in F docs contributes F² candidate pairs. Capping document
     * frequency keeps candidate generation linear-ish while near-dup pairs
@@ -341,7 +335,13 @@ object DocQueries {
   private val shinglesUdf =
     udf((text: String) => graft.functions.MinHash.shingleHashes(text))
 
-  /** The pair table is the shared intermediate of near-dup detection
+  /** Exact n-gram Jaccard near-duplicate pairs via inverted-index blocking:
+    * explode distinct shingles, self-join on shingle (map-side combinable),
+    * intersection counts -> Jaccard, threshold 0.3. Join carries only
+    * (shingle, doc_id); Jaccard math is int-exact so the oracle hash-matches
+    * bit-for-bit.
+    *
+    * The pair table is the shared intermediate of near-dup detection
     * ([[neardupJaccard]]) and cluster resolution ([[dedupClusters]]): a
     * production dedup pipeline materializes it once and both outputs read
     * it. Memoized per (session, dataset) in the bounded [[MemoCache]] and
@@ -363,10 +363,9 @@ object DocQueries {
     * every repeat invocation ("already cached" — the CacheManager keys by
     * plan). One entry, one release. */
   private def shingleDocs(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("shingle-docs", d))(
+    MemoCache.frame(spark, ("shingle-docs", d))(
       documents(spark, d)
-        .select(col("doc_id"), shinglesUdf(col("text")).as("sh"))
-        .cache())(_.unpersist(blocking = false))
+        .select(col("doc_id"), shinglesUdf(col("text")).as("sh")))
 
   /** The verified (d1, d2, n1, n2, inter) candidate-pair table, memoized:
     * the Jaccard dedup and the containment operator run the IDENTICAL
@@ -375,7 +374,7 @@ object DocQueries {
     * value-neutral), and each previously rebuilt it per family. One build,
     * both consumers project/filter the cached rows. */
   private[queries] def scoredPairs(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("scored-pairs", d))({
+    MemoCache.frame(spark, ("scored-pairs", d)) {
       val docs = shingleDocs(spark, d)
       // NOT repartitioned before the explode: measured 6.2s -> 6.8s cold
       // (the extra exchange's planning/codegen outweighs parallelizing the
@@ -387,8 +386,8 @@ object DocQueries {
       // engines hash identically, so even collisions agree bit-for-bit).
       // The broadcast-merge-walk vs candidate-join physical choice lives
       // in [[scoredCandidatePairs]].
-      scoredCandidatePairs(spark, docs, rareShingleCandidates(ex)).cache()
-    })(_.unpersist(blocking = false))
+      scoredCandidatePairs(spark, docs, rareShingleCandidates(ex))
+    }
 
   private[graft] def neardupJaccardCompute(spark: SparkSession, d: String): DataFrame =
     scoredPairs(spark, d)
@@ -689,40 +688,36 @@ object DocQueries {
     * [[neardupJaccard]]'s pair table: every consumer (lsh, end-to-end
     * dedup, decontaminated split, the sweep) reads ONE materialization. */
   private def lshVerifiedPairs(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("lsh-pairs", d))(
-      lshVerifiedPairsCompute(spark, d).cache())(_.unpersist(blocking = false))
+    MemoCache.frame(spark, ("lsh-pairs", d)) {
+      // Materialize the signatures BEFORE the self-joins: the sig expression
+      // inlines the murmur+min tree 64x, and the band self-join would
+      // otherwise duplicate that whole tree on both sides (codegen blowup —
+      // this was an 800s-vs-8s difference at sf0.1). At cluster scale this is
+      // a persisted signature table, typically written once and reused.
+      val docs = minhashDocs(spark, d)
+      val bands = minhashBands(docs)
+      val candidates = bands.as("a").join(bands.as("b"),
+          col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
+            col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+        .distinct()
+      val withSets = candidates
+        .join(docs.select(col("doc_id").as("d1"), col("sh").as("sh1")), "d1")
+        .join(docs.select(col("doc_id").as("d2"), col("sh").as("sh2")), "d2")
+      withSets.select(col("d1"), col("d2"),
+          (size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
+            size(array_union(col("sh1"), col("sh2")))).as("jaccard"))
+    }
 
   /** (doc_id, shingles, minhash signature), memoized — the persisted
     * signature-table analog; shared by the LSH pair table and cross-corpus
     * dedup (same registry-entry/leak rationale as [[shingleDocs]]). */
   private def minhashDocs(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("minhash-docs", d))(
+    MemoCache.frame(spark, ("minhash-docs", d))(
       documents(spark, d)
         .select(col("doc_id"), shinglesUdf(col("text")).as("sh"),
           minhashSigUdf(col("text")).as("sig"))
-        .filter(size(col("sh")) > 0)
-        .cache())(_.unpersist(blocking = false))
-
-  private def lshVerifiedPairsCompute(spark: SparkSession, d: String): DataFrame = {
-    // Materialize the signatures BEFORE the self-joins: the sig expression
-    // inlines the murmur+min tree 64x, and the band self-join would
-    // otherwise duplicate that whole tree on both sides (codegen blowup —
-    // this was an 800s-vs-8s difference at sf0.1). At cluster scale this is
-    // a persisted signature table, typically written once and reused.
-    val docs = minhashDocs(spark, d)
-    val bands = minhashBands(docs)
-    val candidates = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()
-    val withSets = candidates
-      .join(docs.select(col("doc_id").as("d1"), col("sh").as("sh1")), "d1")
-      .join(docs.select(col("doc_id").as("d2"), col("sh").as("sh2")), "d2")
-    withSets.select(col("d1"), col("d2"),
-        (size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
-          size(array_union(col("sh1"), col("sh2")))).as("jaccard"))
-  }
+        .filter(size(col("sh")) > 0))
 
   /** Dedup threshold-sensitivity sweep: how many verified near-dup pairs
     * (and how many distinct documents) each Jaccard cutoff 0.1…0.9 would
@@ -793,11 +788,6 @@ object DocQueries {
       .filter(col("hamming") <= 3)
   }
 
-  /** Full replication of [[minhashLsh]]: md5-low-32 shingle hash, the same
-    * k=64 affine permutations, 8-row banding with the 8 signature values as
-    * the band key on BOTH sides (Spark joins the slice arrays, the oracle
-    * a canonical string of the same values), band-collision candidates,
-    * exact-Jaccard verification. */
   /** The signatures → bands → band-collision-candidates CTE chain, shared
     * verbatim by [[minhashLshSql]] and the blocked-fuzzy oracles so the
     * candidate set can never diverge between them. */
@@ -819,6 +809,11 @@ object DocQueries {
        |          FROM bands a JOIN bands b
        |            ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id)""".stripMargin
 
+  /** Full replication of [[minhashLsh]]: md5-low-32 shingle hash, the same
+    * k=64 affine permutations, 8-row banding with the 8 signature values as
+    * the band key on BOTH sides (Spark joins the slice arrays, the oracle
+    * a canonical string of the same values), band-collision candidates,
+    * exact-Jaccard verification. */
   val minhashLshSql: String =
     s"""$lshCandCtes,
        | sets AS (SELECT doc_id, list(s) AS sh FROM g GROUP BY 1)
@@ -1525,11 +1520,6 @@ object DocQueries {
        |FROM q""".stripMargin
 
   // ------------------------------------------------- decontamination
-  /** Benchmark decontamination — flag training documents whose normalized
-    * fingerprint collides with a held-out/benchmark set (here: every 97th
-    * doc stands in for the benchmark). The benchmark fingerprint set is
-    * tiny relative to the corpus, so it broadcasts and the corpus streams
-    * through a hash-probe left join — no corpus shuffle at any scale. */
   /** Generic form: flag rows of `train` whose `fpCol` value appears in
     * `bench` (broadcast hash probe; no shuffle of the training corpus).
     * The corpus here has no planted duplicates, so the query's flag column
@@ -1542,6 +1532,11 @@ object DocQueries {
       .withColumn("contaminated", col("bench_fp").isNotNull)
       .drop("bench_fp")
 
+  /** Benchmark decontamination — flag training documents whose normalized
+    * fingerprint collides with a held-out/benchmark set (here: every 97th
+    * doc stands in for the benchmark). The benchmark fingerprint set is
+    * tiny relative to the corpus, so it broadcasts and the corpus streams
+    * through a hash-probe left join — no corpus shuffle at any scale. */
   def decontaminate(spark: SparkSession, d: String): DataFrame = {
     val fp = md5(regexp_replace(lower(trim(col("text"))), graft.functions.MinHash.WsRe, " "))
     val docs = documents(spark, d).select(col("doc_id"), fp.as("fingerprint"))
@@ -1820,13 +1815,12 @@ object DocQueries {
     // Memoized: the per-term tf projection re-runs the tokenizer once per
     // filter lambda (projection collapse inlines `t` into every use), and
     // the frame is consumed twice (corpus stats + the scored scan).
-    val base = MemoCache.getOrElseUpdate(spark, ("bm25-base", d))(
+    val base = MemoCache.frame(spark, ("bm25-base", d))(
       documents(spark, d).select(
         col("doc_id") +: size(t).as("dl") +:
           Bm25Terms.zipWithIndex.map { case (term, i) =>
             size(filter(t, x => x === term)).cast("long").as(s"tf$i")
-          }: _*)
-        .cache())(_.unpersist(blocking = false))
+          }: _*))
     // one-row corpus statistics: broadcast back over the scan
     val statCols =
       (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl") +:
@@ -1971,17 +1965,6 @@ object DocQueries {
   }
 
   // ------------------------------------------------- unigram LM scoring
-  /** CCNet-style language-model quality score: mean negative log-likelihood
-    * of each document under a corpus unigram model (Wenzek et al. 2020 score
-    * low-perplexity ≈ fluent text; here the model is the corpus itself).
-    *
-    * Scale: the model build is ONE map-side-combinable shuffle (token →
-    * count); the trained model then broadcasts and scoring is a narrow
-    * per-row pass. At web-corpus scale the broadcast stays bounded by
-    * capping the vocabulary to the top-K tokens + an OOV floor (here the
-    * synthetic vocabulary is tiny, so no cap fires). The per-row fold runs
-    * in token order, so the double sum is order-deterministic and the
-    * DuckDB oracle (same fold via list_transform/list_sum) hash-matches. */
   /** Vocabulary cap for the broadcast unigram model: web-corpus vocabularies
     * are unbounded (typos, ids, numbers), so only the top `VocabCap` tokens
     * by frequency ship to executors and everything else scores at the OOV
@@ -2038,6 +2021,17 @@ object DocQueries {
         round(nllUdf(col("tk")), 6).as("nll"))
   }
 
+  /** CCNet-style language-model quality score: mean negative log-likelihood
+    * of each document under a corpus unigram model (Wenzek et al. 2020 score
+    * low-perplexity ≈ fluent text; here the model is the corpus itself).
+    *
+    * Scale: the model build is ONE map-side-combinable shuffle (token →
+    * count); the trained model then broadcasts and scoring is a narrow
+    * per-row pass. At web-corpus scale the broadcast stays bounded by
+    * capping the vocabulary to the top-K tokens + an OOV floor (here the
+    * synthetic vocabulary is tiny, so no cap fires). The per-row fold runs
+    * in token order, so the double sum is order-deterministic and the
+    * DuckDB oracle (same fold via list_transform/list_sum) hash-matches. */
   def unigramLm(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     if (GraftConf.LmCmsModel.get(spark)) return unigramLmCms(spark, d)
@@ -2092,17 +2086,6 @@ object DocQueries {
       |FROM t, n, m""".stripMargin
 
   // ------------------------------------------------- bigram LM scoring
-  /** Bigram-LM quality score: mean conditional negative log-likelihood
-    * `-(1/(n-1)) Σ ln P(tᵢ | tᵢ₋₁)` with `P(b|a) = c(a b)/c(a)` trained on
-    * the corpus itself — the next-order refinement of [[unigramLm]]'s
-    * CCNet-style scoring (fluent local word order scores low). Unseen
-    * bigrams/unigrams fall back to count 1 in both engines.
-    *
-    * Scale: identical shape to [[unigramLm]] — two map-side-combinable
-    * count aggregations (bigram + unigram), both capped to the top-K
-    * entries (`spark.graft.lm.vocabCap`) before broadcast, then a narrow
-    * per-row fold in token order (order-deterministic double sum, so the
-    * DuckDB oracle hash-matches). */
   /** Top-`cap` (count DESC, key ASC) counts of `ex`'s exploded `g` column,
     * collected — the shared model-build shape of the bigram-LM family. */
   private def topCounts(spark: SparkSession, ex: DataFrame,
@@ -2138,6 +2121,17 @@ object DocQueries {
     MemoCache.getOrElseUpdate(spark, ("bigram-counts", d, cap))(
       topCounts(spark, bigramInstances(spark, d), cap))(_ => ())
 
+  /** Bigram-LM quality score: mean conditional negative log-likelihood
+    * `-(1/(n-1)) Σ ln P(tᵢ | tᵢ₋₁)` with `P(b|a) = c(a b)/c(a)` trained on
+    * the corpus itself — the next-order refinement of [[unigramLm]]'s
+    * CCNet-style scoring (fluent local word order scores low). Unseen
+    * bigrams/unigrams fall back to count 1 in both engines.
+    *
+    * Scale: identical shape to [[unigramLm]] — two map-side-combinable
+    * count aggregations (bigram + unigram), both capped to the top-K
+    * entries (`spark.graft.lm.vocabCap`) before broadcast, then a narrow
+    * per-row fold in token order (order-deterministic double sum, so the
+    * DuckDB oracle hash-matches). */
   def bigramLm(spark: SparkSession, d: String): DataFrame = {
     val cap = GraftConf.LmVocabCap.get(spark)
     val tk = toks(col("text"))
@@ -2313,25 +2307,6 @@ object DocQueries {
       |FROM per""".stripMargin
 
   // ------------------------------------------------- temperature mixing
-  /** Temperature-smoothed source-mixing weights (the multilingual-training
-    * mix of Conneau & Lample 2019 §3.1 / mC4, at alpha = 0.5): a source's
-    * target share is proportional to sqrt(its token mass), pulling
-    * over-represented sources down and the tail up. Reports, per source:
-    * the raw token share, the smoothed target share, and the acceptance
-    * probability a downsampling-only rebalance would apply
-    * (accept_prob = (target/raw) scaled so the most under-represented
-    * source keeps everything).
-    *
-    * Determinism: alpha is fixed at 0.5 because sqrt is the ONE power IEEE
-    * requires correctly rounded — pow(x, 0.7) may differ between libm and
-    * the JVM in the last ulp, sqrt cannot. Token masses are exact longs,
-    * sqrt(mass) scales to a long (floor x 1e6) BEFORE any cross-row sum, so
-    * both totals are exact integer sums (order-free) and every double op
-    * after that is a single divide/multiply on identical inputs.
-    *
-    * Scale: one map-side-combinable shuffle to (source) — source
-    * cardinality is tiny, so the weight table is a broadcast-sized frame;
-    * the corpus itself is never re-read. */
   /** Per-source weight frame shared by [[mixTemperature]] and
     * [[mixApply]] — ONE definition of (token mass, sqrt_scaled, totals,
     * anchor c), so the reported accept_prob and the applied threshold
@@ -2362,6 +2337,25 @@ object DocQueries {
       col("sqrt_scaled").cast("double") / col("n_tokens").cast("double")
         * col("c"))
 
+  /** Temperature-smoothed source-mixing weights (the multilingual-training
+    * mix of Conneau & Lample 2019 §3.1 / mC4, at alpha = 0.5): a source's
+    * target share is proportional to sqrt(its token mass), pulling
+    * over-represented sources down and the tail up. Reports, per source:
+    * the raw token share, the smoothed target share, and the acceptance
+    * probability a downsampling-only rebalance would apply
+    * (accept_prob = (target/raw) scaled so the most under-represented
+    * source keeps everything).
+    *
+    * Determinism: alpha is fixed at 0.5 because sqrt is the ONE power IEEE
+    * requires correctly rounded — pow(x, 0.7) may differ between libm and
+    * the JVM in the last ulp, sqrt cannot. Token masses are exact longs,
+    * sqrt(mass) scales to a long (floor x 1e6) BEFORE any cross-row sum, so
+    * both totals are exact integer sums (order-free) and every double op
+    * after that is a single divide/multiply on identical inputs.
+    *
+    * Scale: one map-side-combinable shuffle to (source) — source
+    * cardinality is tiny, so the weight table is a broadcast-sized frame;
+    * the corpus itself is never re-read. */
   def mixTemperature(spark: SparkSession, d: String): DataFrame =
     mixWeights(spark, d).select(
       col("source"), col("n_docs"), col("n_tokens"),
@@ -2974,13 +2968,18 @@ object DocQueries {
   private val UniVocabK = 64
   private val UniLpScale = 1000000L
 
-  def unigramTok(spark: SparkSession, d: String): DataFrame = {
-    val words = MemoCache.getOrElseUpdate(spark, ("uni-words", d))(
+  /** (word, freq) word-type table of the corpus tokens, memoized: the
+    * unigram and WordPiece trainers and the WordPiece encoder all start
+    * from it. */
+  private def uniWords(spark: SparkSession, d: String): DataFrame =
+    MemoCache.frame(spark, ("uni-words", d))(
       documents(spark, d)
         .select(explode(toks(col("text"))).as("word"))
         .filter(length(col("word")) > 0)
-        .groupBy(col("word")).agg(count(lit(1)).cast("long").as("freq"))
-        .cache())(_.unpersist(blocking = false))
+        .groupBy(col("word")).agg(count(lit(1)).cast("long").as("freq")))
+
+  def unigramTok(spark: SparkSession, d: String): DataFrame = {
+    val words = uniWords(spark, d)
     // substring counts, frequency-weighted over word TYPES
     val counts = words.select(col("freq"), explode(expr(
         s"""flatten(transform(sequence(1, length(word)), i ->
@@ -3124,12 +3123,7 @@ object DocQueries {
     * ([[graft.streaming.Streams.wordpieceBatch]]) hot-loads via
     * `RefreshableDim` — train here, publish, serve live. */
   def wordpieceVocab(spark: SparkSession, d: String): DataFrame = {
-    val words = MemoCache.getOrElseUpdate(spark, ("uni-words", d))(
-      documents(spark, d)
-        .select(explode(toks(col("text"))).as("word"))
-        .filter(length(col("word")) > 0)
-        .groupBy(col("word")).agg(count(lit(1)).cast("long").as("freq"))
-        .cache())(_.unpersist(blocking = false))
+    val words = uniWords(spark, d)
     val counts = words.select(col("freq"), explode(expr(
         s"""flatten(transform(sequence(1, length(word)), i ->
            |  transform(sequence(1, least($UniMaxPiece, length(word) - i + 1)),
@@ -3147,12 +3141,7 @@ object DocQueries {
   }
 
   def wordpieceTok(spark: SparkSession, d: String): DataFrame = {
-    val words = MemoCache.getOrElseUpdate(spark, ("uni-words", d))(
-      documents(spark, d)
-        .select(explode(toks(col("text"))).as("word"))
-        .filter(length(col("word")) > 0)
-        .groupBy(col("word")).agg(count(lit(1)).cast("long").as("freq"))
-        .cache())(_.unpersist(blocking = false))
+    val words = uniWords(spark, d)
     // model-sized (2 alphabets + 2*WpVocabK): collect + broadcast, the
     // same intended shape as the unigram vocab
     val vocab = wordpieceVocab(spark, d).collect()
@@ -3769,29 +3758,26 @@ object DocQueries {
     * docs (Spark would WRAP silently; DuckDB errors). Past that, drop
     * [[TfidfScale]] toward 1 or swap the norm accumulation to DECIMAL —
     * the plan shape is unchanged either way. */
-  /** The TF-IDF weight/norm tables are the search INDEX — the shared
-    * intermediate every probe batch reads. A production pipeline
-    * materializes them once (a parquet index build); locally they memoize
-    * per (session, dataset) in the bounded [[MemoCache]] and Spark-cache,
-    * mirroring the near-dup pair table — without it the weight subtree
-    * (scan → explode → two keyed stages) re-executes for each of its four
-    * consumers (corpus side, probe broadcast, both norm lookups): measured
-    * 2.5s → 0.9s warm at sf0.1. */
   def tfidfKnn(spark: SparkSession, d: String): DataFrame =
     // Memoized alongside the index: the top-k output is probe-bounded
     // (≤ probes × TfidfTopK rows — model-sized), and the recall row joins
     // BOTH rank tails, so without this it re-runs the full corpus×probe
     // scoring join its two siblings already paid for.
-    MemoCache.getOrElseUpdate(spark, ("tfidf-knn", d, GraftConf.TfidfDfCapFrac.get(spark)))({
+    MemoCache.frame(spark, ("tfidf-knn", d, GraftConf.TfidfDfCapFrac.get(spark))) {
       val (weights, norms) = tfidfIndex(spark, d)
       val probes = weights.filter(col("doc_id") % TfidfProbeMod === 0)
         .select(col("doc_id").as("probe_id"), col("term"), col("w").as("pw"))
-      tfidfRank(weights, norms, probes).cache()
-    })(_.unpersist(blocking = false))
+      tfidfRank(weights, norms, probes)
+    }
 
-  /** The shared memoized (weights, norms) index build — see the Scaladoc
-    * above; factored out so the impact-pruned variant reads the SAME
-    * index. */
+  /** The TF-IDF weight/norm tables are the search INDEX — the shared
+    * intermediate every probe batch reads, and the one both [[tfidfKnn]]
+    * and the impact-pruned [[tfidfKnnCapped]] rank against. A production
+    * pipeline materializes them once (a parquet index build); locally they
+    * memoize per (session, dataset, df cap) — without it the weight subtree
+    * (scan → explode → two keyed stages) re-executes for each of its four
+    * consumers (corpus side, probe broadcast, both norm lookups): measured
+    * 2.5s → 0.9s warm at sf0.1. */
   private def tfidfIndex(spark: SparkSession, d: String): (DataFrame, DataFrame) = {
     // Impact pruning ([[GraftConf.TfidfDfCapFrac]], DEFAULT 0.5): drop
     // terms whose df exceeds the given fraction of the corpus. On a web
@@ -3907,27 +3893,21 @@ object DocQueries {
     // the SQL oracle replays the same GREATEST(floor, n_docs/div) formula
     val cap = math.max(TfidfPostingCapMin.toLong,
       docCount(spark, d) / TfidfPostingCapDiv).toInt
-    MemoCache.getOrElseUpdate(spark,
-      ("tfidf-capped", d, GraftConf.TfidfDfCapFrac.get(spark)))(
-      tfidfKnnCappedBuild(spark, d, cap).cache())(
-      _.unpersist(blocking = false))
-  }
-
-  private def tfidfKnnCappedBuild(spark: SparkSession, d: String,
-                                  cap: Int): DataFrame = {
-    val (weights, norms) = tfidfIndex(spark, d)
-    // w fits a double exactly here (tf·(N·scale DIV df) < 2^53 up to
-    // ~10^15 — far past the long-overflow bound the index already
-    // documents), and (w desc, doc_id asc) is the UDAF's total order
-    val pruned = weights.groupBy(col("term"))
-      .agg(graft.functions.TopK.topKByValue(cap,
-        col("w").cast("double"), col("doc_id")).as("top"))
-      .select(col("term"), explode(col("top")).as("e"))
-      .select(col("term"), col("e._2").as("doc_id"),
-        col("e._1").cast("long").as("w"))
-    val probes = weights.filter(col("doc_id") % TfidfProbeMod === 0)
-      .select(col("doc_id").as("probe_id"), col("term"), col("w").as("pw"))
-    tfidfRank(pruned, norms, probes)
+    MemoCache.frame(spark, ("tfidf-capped", d, GraftConf.TfidfDfCapFrac.get(spark))) {
+      val (weights, norms) = tfidfIndex(spark, d)
+      // w fits a double exactly here (tf·(N·scale DIV df) < 2^53 up to
+      // ~10^15 — far past the long-overflow bound the index already
+      // documents), and (w desc, doc_id asc) is the UDAF's total order
+      val pruned = weights.groupBy(col("term"))
+        .agg(graft.functions.TopK.topKByValue(cap,
+          col("w").cast("double"), col("doc_id")).as("top"))
+        .select(col("term"), explode(col("top")).as("e"))
+        .select(col("term"), col("e._2").as("doc_id"),
+          col("e._1").cast("long").as("w"))
+      val probes = weights.filter(col("doc_id") % TfidfProbeMod === 0)
+        .select(col("doc_id").as("probe_id"), col("term"), col("w").as("pw"))
+      tfidfRank(pruned, norms, probes)
+    }
   }
 
   /** Honesty row: impact-pruned top-k pairs vs the exact ranking. */
@@ -4115,11 +4095,10 @@ object DocQueries {
     // total, vocab size, word counts, the test side) — uncached, each
     // re-ran the tokenize + explode. Memoized like the other shared token
     // projections (uni-words, shingle-docs).
-    val tk = MemoCache.getOrElseUpdate(spark, ("nb-tokens", d))(
+    val tk = MemoCache.frame(spark, ("nb-tokens", d))(
       documents(spark, d)
         .select(col("doc_id"), col("lang"),
-          explode(toks(col("text"))).as("w"))
-        .cache())(_.unpersist(blocking = false))
+          explode(toks(col("text"))).as("w")))
     val train = tk.filter(col("doc_id") % 5 =!= 0)
     val test = tk.filter(col("doc_id") % 5 === 0)
     val cls = train.groupBy(col("lang").as("c"))
@@ -4208,14 +4187,13 @@ object DocQueries {
     // distinct-phrase table below, and the uncached plan re-ran the token
     // explode + per-doc running-sum window + collect_list groupBy — the
     // query's entire data-scale prefix — once per consumer.
-    val inst = MemoCache.getOrElseUpdate(spark, ("rake-inst", d))(
+    val inst = MemoCache.frame(spark, ("rake-inst", d))(
       runs.groupBy(col("doc_id"), col("run"))
         .agg(array_join(transform(
             array_sort(collect_list(struct(col("pos"), col("w")))),
             x => x.getField("w")), " ").as("phrase"),
           count(lit(1)).as("len"))
-        .filter(col("len") <= RakeMaxLen)
-        .cache())(_.unpersist(blocking = false))
+        .filter(col("len") <= RakeMaxLen))
     val ws = inst
       .select(explode(split(col("phrase"), " ")).as("w"), col("len"))
       .groupBy("w")
@@ -4302,11 +4280,11 @@ object DocQueries {
     // sf0.1); zip_with's lambda only touches its own arguments, so the
     // tokenizer runs a constant ~3x per doc (size + two slices).
     //
-    // The trained GRAPH (cached edge/node tables + their counts) is a
-    // model, memoized like the LM/DSIR builds — a repeat invocation was
-    // otherwise re-running the corpus tokenize + adjacency aggregation +
-    // two counts + two collects every time (the rank loop itself is cheap
-    // driver arithmetic).
+    // The trained GRAPH (cached edge/node tables + their counts) is
+    // memoized per dataset: a repeat invocation was otherwise re-running
+    // the corpus tokenize + adjacency aggregation + two counts + two
+    // collects every time (the rank loop itself is cheap driver
+    // arithmetic).
     val (edges, nodes, n, nEdges) = MemoCache.getOrElseUpdate(
       spark, ("textrank-graph", d))({
       val adj = documents(spark, d)
@@ -4326,13 +4304,9 @@ object DocQueries {
     })({ case (e, nd, _, _) =>
       e.unpersist(blocking = false); nd.unpersist(blocking = false); ()
     })
-    if (n == 0) {
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "word STRING, rank_scaled BIGINT, rank DOUBLE"))
-    }
-    val base = 15L * TrScale / (100L * n)
+    // n = 0 (no edges): the driver loop runs over no nodes and yields the
+    // empty result with its usual schema
+    val base = 15L * TrScale / (100L * math.max(n, 1L))
     val ranks: DataFrame = if (nEdges <= GraftConf.TextrankMaxDriverEdges.get(spark)) {
       val es = edges.as[(String, String, Long)].collect()
       val ow = es.groupBy(_._1).map { case (s, g) => s -> g.map(_._3).sum }
@@ -4505,36 +4479,6 @@ object DocQueries {
       |FROM documents d LEFT JOIN per p ON d.doc_id = p.doc_id""".stripMargin
 
   // -------------------------------------- prefix-filtered set-similarity
-  /** All-pairs set-similarity join with prefix filtering (AllPairs/PPJoin,
-    * Bayardo et al., WWW'07): every document pair whose distinct 3-token
-    * shingle sets have Jaccard >= 3/5, found WITHOUT the all-pairs product
-    * and with PROVABLY complete recall — unlike [[neardupJaccard]]'s
-    * df-capped inverted index (which trades recall on corpus-dense
-    * shingles for a bounded candidate count), the prefix filter keeps
-    * every qualifying pair by construction.
-    *
-    * The filter: order each document's shingles by ascending corpus
-    * document-frequency (rarest first, ties on the shingle string — any
-    * TOTAL order works, the df order just minimizes candidates); a pair
-    * with Jaccard >= t = p/q must share a shingle among each side's first
-    * n - ceil(t*n) + 1 (suppose not: all common shingles sit in the
-    * ceil(t*n) - 1 < t*n suffix, but J >= t forces overlap >= t*union >=
-    * t*n — contradiction). Only prefixes join; the exact intersection /
-    * union verify runs on candidates alone.
-    *
-    * Scale shape: the df table and per-doc ranking are keyed
-    * aggregations/windows; the candidate join is an inverted index over
-    * PREFIX shingles only (rare by construction, so posting lists stay
-    * short — the AllPairs candidate bound); the verify is two keyed joins
-    * against the shingle-array table. No cartesian anywhere (PlanSpec
-    * asserts). ceil(t*n) is computed in integer arithmetic
-    * ((p*n + q - 1) DIV q) so both engines agree exactly; the Jaccard
-    * test cross-multiplies (q*inter >= p*union) — no floats end to end.
-    * Threshold: Jaccard >= [[SetsimP]]/[[SetsimQ]] (3/5). */
-  /** AllPairs candidate pairs for `docs(doc_id, s: array)` at Jaccard
-    * threshold p/q: rarest-first prefix posting-list join (see
-    * [[setsimJoin]] for the completeness argument). Element-type agnostic
-    * (works on any array column with distinct elements). */
   /** The df-ranked inverted index (doc_id, g, n, df, rnk) of `docs` — the
     * shared data-scale prefix of candidate generation: the explode, the df
     * aggregation and the per-doc rank window do not depend on the
@@ -4553,6 +4497,10 @@ object DocQueries {
           .orderBy(col("df"), col("g"))).as("rnk"))
   }
 
+  /** AllPairs candidate pairs for `docs(doc_id, s: array)` at Jaccard
+    * threshold p/q: rarest-first prefix posting-list join (see
+    * [[setsimJoin]] for the completeness argument). Element-type agnostic
+    * (works on any array column with distinct elements). */
   private def prefixCandidates(ranked: DataFrame, p: Int, q: Int,
                                dfCap: Long = 0L): DataFrame = {
     // dfCap > 0: corpus-dense tokens stop GENERATING candidates (their
@@ -4603,16 +4551,15 @@ object DocQueries {
     * three queries plus the recall row — without this, Spark re-runs the
     * tokenizer UDF over the corpus once per reference (measured at the
     * x64 probe: the re-shingling dominated the capped join's remaining
-    * cost). MEMORY_AND_DISK, not MEMORY: this is corpus-derived, not
-    * model-sized — at warehouse scale the same role is played by a staged
-    * shingle table, so spilling is the honest local analog. */
+    * cost). It is corpus-derived, not model-sized, so the frame's
+    * MEMORY_AND_DISK level matters here: at warehouse scale the same role
+    * is played by a staged shingle table, and spilling is the honest local
+    * analog. */
   private def setsimDocs(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("setsim-docs", d))(
+    MemoCache.frame(spark, ("setsim-docs", d))(
       documents(spark, d)
         .select(col("doc_id"), shingles3Udf(col("text")).as("s"))
-        .filter(size(col("s")) >= 1)   // >= 1 shingle ≡ the oracle's len(tk) >= 3
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    )(_.unpersist(blocking = false))
+        .filter(size(col("s")) >= 1))  // >= 1 shingle ≡ the oracle's len(tk) >= 3
 
   private def setsimVerified(docs: DataFrame, cands: DataFrame,
                              p: Int, q: Int): DataFrame =
@@ -4644,21 +4591,46 @@ object DocQueries {
     * of the threshold. [[setsimJoinCapped]] is not affected: it defines
     * its sets as the hashed ones, and its oracle replays the same hash. */
   private def setsimRankedHashed(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("setsim-ranked", d))(
-      rankedIndex(setsimDocsHashed(spark, d)).cache())(
-      _.unpersist(blocking = false))
+    MemoCache.frame(spark, ("setsim-ranked", d))(
+      rankedIndex(setsimDocsHashed(spark, d)))
 
   /** Jaccard threshold p/q of the set-similarity joins, which the oracles
     * replay. */
   private val SetsimP = 3
   private val SetsimQ = 5
 
+  /** All-pairs set-similarity join with prefix filtering (AllPairs/PPJoin,
+    * Bayardo et al., WWW'07): every document pair whose distinct 3-token
+    * shingle sets have Jaccard >= 3/5, found WITHOUT the all-pairs product
+    * and with PROVABLY complete recall — unlike [[neardupJaccard]]'s
+    * df-capped inverted index (which trades recall on corpus-dense
+    * shingles for a bounded candidate count), the prefix filter keeps
+    * every qualifying pair by construction.
+    *
+    * The filter: order each document's shingles by ascending corpus
+    * document-frequency (rarest first, ties on the shingle string — any
+    * TOTAL order works, the df order just minimizes candidates); a pair
+    * with Jaccard >= t = p/q must share a shingle among each side's first
+    * n - ceil(t*n) + 1 (suppose not: all common shingles sit in the
+    * ceil(t*n) - 1 < t*n suffix, but J >= t forces overlap >= t*union >=
+    * t*n — contradiction). Only prefixes join; the exact intersection /
+    * union verify runs on candidates alone.
+    *
+    * Scale shape: the df table and per-doc ranking are keyed
+    * aggregations/windows; the candidate join is an inverted index over
+    * PREFIX shingles only (rare by construction, so posting lists stay
+    * short — the AllPairs candidate bound); the verify is two keyed joins
+    * against the shingle-array table. No cartesian anywhere (PlanSpec
+    * asserts). ceil(t*n) is computed in integer arithmetic
+    * ((p*n + q - 1) DIV q) so both engines agree exactly; the Jaccard
+    * test cross-multiplies (q*inter >= p*union) — no floats end to end.
+    * Threshold: Jaccard >= [[SetsimP]]/[[SetsimQ]] (3/5). */
   def setsimJoin(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("setsim-pairs", d))({
+    MemoCache.frame(spark, ("setsim-pairs", d)) {
       val docs = setsimDocs(spark, d)
       setsimVerified(docs, prefixCandidates(setsimRankedHashed(spark, d),
-        SetsimP, SetsimQ), SetsimP, SetsimQ).cache()
-    })(_.unpersist(blocking = false))
+        SetsimP, SetsimQ), SetsimP, SetsimQ)
+    }
 
   /** The 100-TB scale path of [[setsimJoin]] — two deltas from the exact
     * join, both oracle-replayed:
@@ -4681,11 +4653,11 @@ object DocQueries {
     *    dense would blow O(df²) per posting; the cap bounds that, and on
     *    the fixtures it never binds (recall row reads 1.0). */
   def setsimJoinCapped(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("setsim-pairs-capped", d))({
+    MemoCache.frame(spark, ("setsim-pairs-capped", d)) {
       val docs = setsimDocsHashed(spark, d)
       setsimVerified(docs, prefixCandidates(setsimRankedHashed(spark, d),
-        SetsimP, SetsimQ, dfCap = 32L), SetsimP, SetsimQ).cache()
-    })(_.unpersist(blocking = false))
+        SetsimP, SetsimQ, dfCap = 32L), SetsimP, SetsimQ)
+    }
 
   /** 52-bit md5-prefix hashes of the 3-token shingles, distinct — the
     * DuckDB-replayable `('0x' || substr(md5(g), 20, 13))::UBIGINT`: hex
@@ -4712,12 +4684,10 @@ object DocQueries {
     })
 
   private def setsimDocsHashed(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("setsim-docs-hashed", d))(
+    MemoCache.frame(spark, ("setsim-docs-hashed", d))(
       documents(spark, d)
         .select(col("doc_id"), shingles3Hash52Udf(col("text")).as("s"))
-        .filter(size(col("s")) >= 1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    )(_.unpersist(blocking = false))
+        .filter(size(col("s")) >= 1))
 
   /** Full replay of the CAPPED algorithm (df table, rarest-first ranking,
     * prefix bound, posting cap, length + positional filters, exact
@@ -4832,6 +4802,41 @@ object DocQueries {
     out
   })
 
+  /** Deterministic top-1500 ASCII phrase vocabulary (3-token shingles,
+    * doc-frequency order) with per-phrase character-occurrence symbols,
+    * symbol df-ranked for prefix filtering — shared by [[vocabLink]] and
+    * [[typoPairs]]. Columns: w, len, g (symbol), rnk (1 = globally rarest
+    * symbol of the phrase). */
+  private def phraseSymbols(spark: SparkSession, d: String): DataFrame =
+    MemoCache.frame(spark, ("phrase-symbols", d)) {
+      // The vocab build (corpus scan + shingle explode + count + top-1500)
+      // is the only corpus-sized work here, and the UNCACHED plan recomputed
+      // it up to four times per consumer: `ex` and `dfTab` both read
+      // `vocab`, and both consumers self-join the result (Spark reuses
+      // identical Exchanges, not TakeOrdered subtrees). Cache the build
+      // while ranking, materialize the ~|vocab|*len ranked table ONCE, and
+      // hand every consumer (and both sides of their self-joins) the
+      // in-memory relation. The transient vocab cache is dropped as soon as
+      // the ranked table is resident — lineage stays intact, so a lost
+      // cache partition recomputes from parquet.
+      val vocab = documents(spark, d)
+        .select(explode(shingles3Udf(lower(col("text")))).as("w"))
+        .filter(col("w").rlike("^[a-z ]{6,}$"))
+        .groupBy("w").agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("w")).limit(1500)
+        .select(col("w"), length(col("w")).as("len"), charSymsUdf(col("w")).as("s"))
+        .cache()
+      val ex = vocab.select(col("w"), col("len"), explode(col("s")).as("g"))
+      val dfTab = ex.groupBy("g").agg(count(lit(1)).as("df"))
+      val ranked = ex.join(dfTab, "g").select(col("w"), col("g"), col("len"),
+        row_number().over(Window.partitionBy("w")
+          .orderBy(col("df"), col("g"))).as("rnk"))
+        .cache()
+      ranked.count()
+      vocab.unpersist(blocking = false)
+      ranked
+    }
+
   /** Spelling-variant linkage over the corpus vocabulary — the
     * entity-resolution / typo-canonicalization operator: every pair of
     * frequent tokens with Jaro-Winkler similarity >= 0.94, found WITHOUT an
@@ -4875,41 +4880,6 @@ object DocQueries {
     * an inverted index over prefix symbols only. At a 100-TB corpus the
     * vocabulary (~10^7 rows) stays a rounding error next to the token scan,
     * and nothing here touches document text after the vocab build. */
-  /** Deterministic top-1500 ASCII phrase vocabulary (3-token shingles,
-    * doc-frequency order) with per-phrase character-occurrence symbols,
-    * symbol df-ranked for prefix filtering — shared by [[vocabLink]] and
-    * [[typoPairs]]. Columns: w, len, g (symbol), rnk (1 = globally rarest
-    * symbol of the phrase). */
-  private def phraseSymbols(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("phrase-symbols", d)) {
-      // The vocab build (corpus scan + shingle explode + count + top-1500)
-      // is the only corpus-sized work here, and the UNCACHED plan recomputed
-      // it up to four times per consumer: `ex` and `dfTab` both read
-      // `vocab`, and both consumers self-join the result (Spark reuses
-      // identical Exchanges, not TakeOrdered subtrees). Cache the build
-      // while ranking, materialize the ~|vocab|*len ranked table ONCE, and
-      // hand every consumer (and both sides of their self-joins) the
-      // in-memory relation. The transient vocab cache is dropped as soon as
-      // the ranked table is resident — lineage stays intact, so a lost
-      // cache partition recomputes from parquet.
-      val vocab = documents(spark, d)
-        .select(explode(shingles3Udf(lower(col("text")))).as("w"))
-        .filter(col("w").rlike("^[a-z ]{6,}$"))
-        .groupBy("w").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("w")).limit(1500)
-        .select(col("w"), length(col("w")).as("len"), charSymsUdf(col("w")).as("s"))
-        .cache()
-      val ex = vocab.select(col("w"), col("len"), explode(col("s")).as("g"))
-      val dfTab = ex.groupBy("g").agg(count(lit(1)).as("df"))
-      val ranked = ex.join(dfTab, "g").select(col("w"), col("g"), col("len"),
-        row_number().over(Window.partitionBy("w")
-          .orderBy(col("df"), col("g"))).as("rnk"))
-        .cache()
-      ranked.count()
-      vocab.unpersist(blocking = false)
-      ranked
-    }(_.unpersist(blocking = false))
-
   def vocabLink(spark: SparkSession, d: String): DataFrame = {
     val ranked = phraseSymbols(spark, d)
     val pref = ranked.filter(col("rnk") <= col("len") - expr("(7*len + 9) DIV 10") + 1)
@@ -5042,9 +5012,8 @@ object DocQueries {
     * `dist >= 0` is exactly `dist <= K`.
     * K = [[FuzzyK]]. */
   private def fuzzyDocs(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("fuzzy-docs", d))(
-      documents(spark, d).select(col("doc_id"), col("text"), col("n_chars"))
-        .cache())(_.unpersist(blocking = false))
+    MemoCache.frame(spark, ("fuzzy-docs", d))(
+      documents(spark, d).select(col("doc_id"), col("text"), col("n_chars")))
 
   /** Exact in-band pair table, memoized like [[neardupJaccard]]'s: it is
     * the shared intermediate of the fuzzy family ([[fuzzyRecall]] re-runs
@@ -5053,75 +5022,73 @@ object DocQueries {
     * every consumer reads it. The scale probes evict before every sample,
     * so planted runs still pay the full compute. */
   def fuzzyDedup(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("fuzzy-exact-pairs", d))(
-      fuzzyDedupCompute(spark, d, FuzzyK).cache())(_.unpersist(blocking = false))
+    MemoCache.frame(spark, ("fuzzy-exact-pairs", d)) {
+      val k = FuzzyK
+      // One MEMOIZED scan feeds the gate probe and BOTH join sides, shared
+      // across the fuzzy family (dedup/blocked/recall all start here): the
+      // stats action below populates the cache, so the plan reads parquet
+      // exactly once per residency.
+      val docs = fuzzyDocs(spark, d)
+      // The verify runs inside the candidate join, so its parallelism is the
+      // PROBE side's partitioning — which the fixture rebalance sizes by
+      // bytes. Verify cost is candidate-pair volume, not bytes: spread the
+      // probe side to the full core count when the scan under-splits. At
+      // warehouse scale the scan already yields >= parallelism splits and
+      // this branch never fires.
+      val par = spark.sparkContext.defaultParallelism
+      // Per-doc 64-byte histograms ride both join sides so the sound
+      // L1 <= 2*lev prune ([[graft.functions.CharHist]]) can reject in-band
+      // pairs before the banded DP — computed once per doc row, not per
+      // pair, and counted into the broadcast-bytes estimate below.
+      val docsH = docs.withColumn("h",
+        graft.functions.GraftFunctions.charHist64(col("text")))
+      val probe = if (docsH.rdd.getNumPartitions < par) docsH.repartition(par) else docsH
+      val left = probe.withColumn("band", expr(s"n_chars DIV $k"))
+      val right = docsH
+        .withColumn("band", explode(array(expr(s"n_chars DIV $k - 1"),
+          expr(s"n_chars DIV $k"), expr(s"n_chars DIV $k + 1"))))
+      val cond = col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id")
+      // Band keys are FEW and HOT (a 300-char corpus has ~14 bands at K=40),
+      // so a plain shuffled equi-join on band would pile the whole pair space
+      // onto a handful of reducers. Within the broadcast budget, pin the
+      // build side explicitly (the probe-side repartition above hides the
+      // scan-size estimate that would otherwise let the planner pick the
+      // skewed sort-merge join). Beyond it, salt: the probe side keys by
+      // hash(doc_id) % par, the build side replicates across all salts —
+      // every qualifying pair still meets exactly once, and the hot bands
+      // spread over `par` reducers instead of one.
+      // The gate is BYTES-based: the build side is the full corpus TEXT
+      // fanned out 3x, so a doc-count gate alone would let a long-document
+      // corpus broadcast multi-GB. Estimate = 3 * sum(n_chars); one agg
+      // action yields both count and bytes and warms the cache.
+      val stats = docs.agg(count(lit(1)), coalesce(sum(col("n_chars")), lit(0L)))
+        .head()
+      val (nDocs, textBytes) = (stats.getLong(0), stats.getLong(1))
+      val joined =
+        // the +64/doc term charges the histogram column the build side now carries
+        if (nDocs <= GraftConf.DedupMaxBroadcastDocs.get(spark) &&
+            3L * (textBytes + 64L * nDocs) <= DedupMaxBroadcastBytes)
+          left.as("a").join(broadcast(right.as("b")), cond)
+        else {
+          val sl = left.withColumn("salt", pmod(hash(col("doc_id")), lit(par)))
+          val sr = right.withColumn("salt",
+            explode(sequence(lit(0), lit(par - 1))))
+          sl.as("a").join(sr.as("b"), cond && col("a.salt") === col("b.salt"))
+        }
+      val banded = joined.filter(abs(col("a.n_chars") - col("b.n_chars")) <= k)
+      // sound prune before the DP: L1 > 2k pairs can never verify
+      // (CharHistSpec pins the bound; measured at x16: README's fuzzy section)
+      banded.filter(graft.functions.GraftFunctions
+          .histL1(col("a.h"), col("b.h")) <= 2 * k)
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+          graft.functions.GraftFunctions
+            .levenshteinBounded(col("a.text"), col("b.text"), k)
+            .cast("long").as("dist"))
+        .filter(col("dist") >= 0)
+    }
 
   /** Edit-distance threshold K of the fuzzy family (the oracles replay 40). */
   private val FuzzyK = 40
-
-  private def fuzzyDedupCompute(spark: SparkSession, d: String, k: Int): DataFrame = {
-    // One MEMOIZED scan feeds the gate probe and BOTH join sides, shared
-    // across the fuzzy family (dedup/blocked/recall all start here): the
-    // stats action below populates the cache, so the plan reads parquet
-    // exactly once per residency.
-    val docs = fuzzyDocs(spark, d)
-    // The verify runs inside the candidate join, so its parallelism is the
-    // PROBE side's partitioning — which the fixture rebalance sizes by
-    // bytes. Verify cost is candidate-pair volume, not bytes: spread the
-    // probe side to the full core count when the scan under-splits. At
-    // warehouse scale the scan already yields >= parallelism splits and
-    // this branch never fires.
-    val par = spark.sparkContext.defaultParallelism
-    // Per-doc 64-byte histograms ride both join sides so the sound
-    // L1 <= 2*lev prune ([[graft.functions.CharHist]]) can reject in-band
-    // pairs before the banded DP — computed once per doc row, not per
-    // pair, and counted into the broadcast-bytes estimate below.
-    val docsH = docs.withColumn("h",
-      graft.functions.GraftFunctions.charHist64(col("text")))
-    val probe = if (docsH.rdd.getNumPartitions < par) docsH.repartition(par) else docsH
-    val left = probe.withColumn("band", expr(s"n_chars DIV $k"))
-    val right = docsH
-      .withColumn("band", explode(array(expr(s"n_chars DIV $k - 1"),
-        expr(s"n_chars DIV $k"), expr(s"n_chars DIV $k + 1"))))
-    val cond = col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id")
-    // Band keys are FEW and HOT (a 300-char corpus has ~14 bands at K=40),
-    // so a plain shuffled equi-join on band would pile the whole pair space
-    // onto a handful of reducers. Within the broadcast budget, pin the
-    // build side explicitly (the probe-side repartition above hides the
-    // scan-size estimate that would otherwise let the planner pick the
-    // skewed sort-merge join). Beyond it, salt: the probe side keys by
-    // hash(doc_id) % par, the build side replicates across all salts —
-    // every qualifying pair still meets exactly once, and the hot bands
-    // spread over `par` reducers instead of one.
-    // The gate is BYTES-based: the build side is the full corpus TEXT
-    // fanned out 3x, so a doc-count gate alone would let a long-document
-    // corpus broadcast multi-GB. Estimate = 3 * sum(n_chars); one agg
-    // action yields both count and bytes and warms the cache.
-    val stats = docs.agg(count(lit(1)), coalesce(sum(col("n_chars")), lit(0L)))
-      .head()
-    val (nDocs, textBytes) = (stats.getLong(0), stats.getLong(1))
-    val joined =
-      // the +64/doc term charges the histogram column the build side now carries
-      if (nDocs <= GraftConf.DedupMaxBroadcastDocs.get(spark) &&
-          3L * (textBytes + 64L * nDocs) <= DedupMaxBroadcastBytes)
-        left.as("a").join(broadcast(right.as("b")), cond)
-      else {
-        val sl = left.withColumn("salt", pmod(hash(col("doc_id")), lit(par)))
-        val sr = right.withColumn("salt",
-          explode(sequence(lit(0), lit(par - 1))))
-        sl.as("a").join(sr.as("b"), cond && col("a.salt") === col("b.salt"))
-      }
-    val banded = joined.filter(abs(col("a.n_chars") - col("b.n_chars")) <= k)
-    // sound prune before the DP: L1 > 2k pairs can never verify
-    // (CharHistSpec pins the bound; measured at x16: README's fuzzy section)
-    banded.filter(graft.functions.GraftFunctions
-        .histL1(col("a.h"), col("b.h")) <= 2 * k)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        graft.functions.GraftFunctions
-          .levenshteinBounded(col("a.text"), col("b.text"), k)
-          .cast("long").as("dist"))
-      .filter(col("dist") >= 0)
-  }
 
   /** Brute-force oracle (with the |len diff| <= K implication of the
     * metric as a pushdown, not a semantic change) — independently checks
@@ -5133,37 +5100,6 @@ object DocQueries {
       |  ON a.doc_id < b.doc_id AND abs(a.n_chars - b.n_chars) <= 40
       |WHERE levenshtein(a.text, b.text) <= 40""".stripMargin
 
-  /** The PRODUCTION-scale fuzzy dedup: candidates = MinHash-LSH band
-    * collisions ([[minhashBands]], the persisted-signature path) UNIONED
-    * with gear-chunk content-key collisions ([[fuzzyCandCdc]]), both cut
-    * by the length bound, then the shared threshold-levenshtein verify.
-    * Where [[fuzzyDedup]]'s single length key is provably complete but
-    * quadratic-ish on corpora with tight length distributions, this
-    * composite is O(docs x (bands + chunks)) — the same shape that makes
-    * [[minhashLsh]] 100-TB-safe. Precision stays 1 (every emitted pair
-    * passed the exact verify); recall is MEASURED, not assumed:
-    * [[fuzzyRecall]] scores this operator against the exact one with an
-    * oracle that replays both blockers' misses, and at scales where the
-    * exact join is uncomputable the planted-truth probe
-    * ([[graft.PlantedFuzzy]]) measures recall by (edit budget, edit
-    * shape).
-    *
-    * Why two blockers: they fail on OPPOSITE edit shapes. Shingle-LSH
-    * survives clustered/organic edits (a rewritten span touches few
-    * tokens) but collapses under scattered single-character edits — each
-    * edit destroys its own token's ~3 shingles, and the r11 planted probe
-    * measured the consequence at production budgets: e=4 scattered
-    * recall 0.32, e=8 recall 0.07, at both x1 and x256
-    * (`SCALE_PLANT_r11.json`). Content-defined chunk boundaries
-    * re-synchronize within one 18-byte context window of an edit, so a
-    * scattered edit dirties only the chunk it lands in and the remaining
-    * ~14 chunks per pass stay shared blocking keys; two independent gear
-    * tables make a miss require every chunk of both walks to catch an
-    * edit. The r12 re-run of the SAME x256 planted fixture measures the
-    * union (`SCALE_PLANT_r12.json`; per-bucket numbers there), and the
-    * probe logs candidate volume per blocker (lsh/cdc/union pair counts,
-    * hot keys dropped) so the growth the union buys recall with is on
-    * the record, bounded by the df cap ([[cdcBlockCap]]). */
   /** MinHash-LSH band-collision candidates with the length bound riding
     * the candidate join as a residual on the hash join (n_chars travels
     * with the band keys): |len(a)-len(b)| > K pairs can never verify
@@ -5232,43 +5168,73 @@ object DocQueries {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
   }
 
-  /** Blocked pair table, memoized for the same reason as [[fuzzyDedup]]'s:
+  /** The PRODUCTION-scale fuzzy dedup: candidates = MinHash-LSH band
+    * collisions ([[minhashBands]], the persisted-signature path) UNIONED
+    * with gear-chunk content-key collisions ([[fuzzyCandCdc]]), both cut
+    * by the length bound, then the shared threshold-levenshtein verify.
+    * Where [[fuzzyDedup]]'s single length key is provably complete but
+    * quadratic-ish on corpora with tight length distributions, this
+    * composite is O(docs x (bands + chunks)) — the same shape that makes
+    * [[minhashLsh]] 100-TB-safe. Precision stays 1 (every emitted pair
+    * passed the exact verify); recall is MEASURED, not assumed:
+    * [[fuzzyRecall]] scores this operator against the exact one with an
+    * oracle that replays both blockers' misses, and at scales where the
+    * exact join is uncomputable the planted-truth probe
+    * ([[graft.PlantedFuzzy]]) measures recall by (edit budget, edit
+    * shape).
+    *
+    * Why two blockers: they fail on OPPOSITE edit shapes. Shingle-LSH
+    * survives clustered/organic edits (a rewritten span touches few
+    * tokens) but collapses under scattered single-character edits — each
+    * edit destroys its own token's ~3 shingles, and the r11 planted probe
+    * measured the consequence at production budgets: e=4 scattered
+    * recall 0.32, e=8 recall 0.07, at both x1 and x256
+    * (`SCALE_PLANT_r11.json`). Content-defined chunk boundaries
+    * re-synchronize within one 18-byte context window of an edit, so a
+    * scattered edit dirties only the chunk it lands in and the remaining
+    * ~14 chunks per pass stay shared blocking keys; two independent gear
+    * tables make a miss require every chunk of both walks to catch an
+    * edit. The r12 re-run of the SAME x256 planted fixture measures the
+    * union (`SCALE_PLANT_r12.json`; per-bucket numbers there), and the
+    * probe logs candidate volume per blocker (lsh/cdc/union pair counts,
+    * hot keys dropped) so the growth the union buys recall with is on
+    * the record, bounded by the df cap ([[cdcBlockCap]]).
+    *
+    * Blocked pair table, memoized for the same reason as [[fuzzyDedup]]'s:
     * [[fuzzyRecall]] is a direct consumer (the recall numerator), so the
     * family materializes the verified pair table once per residency. */
   def fuzzyDedupBlocked(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("fuzzy-blocked-pairs", d))(
-      fuzzyDedupBlockedCompute(spark, d, FuzzyK).cache())(_.unpersist(blocking = false))
-
-  private def fuzzyDedupBlockedCompute(spark: SparkSession, d: String, k: Int): DataFrame = {
-    val base = fuzzyDocs(spark, d)
-    val cand = fuzzyCandLsh(spark, d, k)
-      .union(fuzzyCandCdc(spark, d, k))
-      .distinct()
-    // Sound pre-verify prune (see [[graft.functions.CharHist]]): L1 of the
-    // 64-byte code-point histograms is <= 2 * lev, so `l1 > 2k` pairs can
-    // never verify and are dropped BEFORE the text fetch — the candidate
-    // join ships 64-byte histograms instead of ~300-byte texts, and only
-    // survivors pay the second join + banded DP. On the replica-dense
-    // scale fixture the CDC blocker's chunk-key collisions are dominated
-    // by cross-replica pairs whose token perturbations sit far above k:
-    // exactly the shape this bound prunes. Results are provably unchanged
-    // (pure necessary-condition filter), so the SQL oracle models the
-    // candidate set and the DP only.
-    val hists = base.select(col("doc_id"),
-      graft.functions.GraftFunctions.charHist64(col("text")).as("h"))
-    cand
-      .join(hists.select(col("doc_id").as("doc_a"), col("h").as("ha")), "doc_a")
-      .join(hists.select(col("doc_id").as("doc_b"), col("h").as("hb")), "doc_b")
-      .filter(graft.functions.GraftFunctions.histL1(col("ha"), col("hb")) <= 2 * k)
-      .select(col("doc_a"), col("doc_b"))
-      .join(base.select(col("doc_id").as("doc_a"), col("text").as("ta")), "doc_a")
-      .join(base.select(col("doc_id").as("doc_b"), col("text").as("tb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        graft.functions.GraftFunctions
-          .levenshteinBounded(col("ta"), col("tb"), k)
-          .cast("long").as("dist"))
-      .filter(col("dist") >= 0)
-  }
+    MemoCache.frame(spark, ("fuzzy-blocked-pairs", d)) {
+      val k = FuzzyK
+      val base = fuzzyDocs(spark, d)
+      val cand = fuzzyCandLsh(spark, d, k)
+        .union(fuzzyCandCdc(spark, d, k))
+        .distinct()
+      // Sound pre-verify prune (see [[graft.functions.CharHist]]): L1 of the
+      // 64-byte code-point histograms is <= 2 * lev, so `l1 > 2k` pairs can
+      // never verify and are dropped BEFORE the text fetch — the candidate
+      // join ships 64-byte histograms instead of ~300-byte texts, and only
+      // survivors pay the second join + banded DP. On the replica-dense
+      // scale fixture the CDC blocker's chunk-key collisions are dominated
+      // by cross-replica pairs whose token perturbations sit far above k:
+      // exactly the shape this bound prunes. Results are provably unchanged
+      // (pure necessary-condition filter), so the SQL oracle models the
+      // candidate set and the DP only.
+      val hists = base.select(col("doc_id"),
+        graft.functions.GraftFunctions.charHist64(col("text")).as("h"))
+      cand
+        .join(hists.select(col("doc_id").as("doc_a"), col("h").as("ha")), "doc_a")
+        .join(hists.select(col("doc_id").as("doc_b"), col("h").as("hb")), "doc_b")
+        .filter(graft.functions.GraftFunctions.histL1(col("ha"), col("hb")) <= 2 * k)
+        .select(col("doc_a"), col("doc_b"))
+        .join(base.select(col("doc_id").as("doc_a"), col("text").as("ta")), "doc_a")
+        .join(base.select(col("doc_id").as("doc_b"), col("text").as("tb")), "doc_b")
+        .select(col("doc_a"), col("doc_b"),
+          graft.functions.GraftFunctions
+            .levenshteinBounded(col("ta"), col("tb"), k)
+            .cast("long").as("dist"))
+        .filter(col("dist") >= 0)
+    }
 
   /** One-row candidate-volume diagnostic for the planted probe: how many
     * pairs each blocker contributes, the union (what the verify actually
@@ -5641,39 +5607,37 @@ object DocQueries {
     * Scale: per-row HOF work bounded by doc length; no explode of
     * positions ever reaches an exchange (boundaries collapse to an array
     * in the same projection); the only wide op downstream is whatever the
-    * caller aggregates on chunk_hash. */
-  /** Memoized: the boundary expression evaluates one md5 per character
+    * caller aggregates on chunk_hash.
+    *
+    * Memoized: the boundary expression evaluates one md5 per character
     * position per document (the oracle-replicable rolling-hash stand-in) —
     * the most expensive per-row expression in the doc family — and
     * [[cdcRatio]] consumes the chunk table twice (total + unique
     * aggregates). The cached table is chunk-grain (hash + offsets, no
     * text). */
   def cdcChunks(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("cdc-chunks", d))(
-      cdcChunksCompute(spark, d).cache())(_.unpersist(blocking = false))
-
-  private def cdcChunksCompute(spark: SparkSession, d: String): DataFrame = {
-    val bounds = expr(
-      s"""concat(array(0L),
-         |  IF(n_chars < ${CdcWin}L, CAST(array() AS ARRAY<BIGINT>),
-         |    filter(sequence(${CdcWin}L, n_chars),
-         |      i -> CAST(conv(substring(md5(substring(text, CAST(i - ${CdcWin - 1} AS INT), $CdcWin)), 1, 2), 16, 10) AS INT) % $CdcMask = 0
-         |        AND i < n_chars)),
-         |  array(n_chars))""".stripMargin)
-    documents(spark, d)
-      .select(col("doc_id"), col("text"), col("n_chars"), bounds.as("bs"))
-      .filter(col("n_chars") > 0)
-      .select(col("doc_id"), col("text"),
-        posexplode(expr(
-          """transform(sequence(1, size(bs) - 1),
-            |  k -> named_struct(
-            |    'start', element_at(bs, k) + 1,
-            |    'len', element_at(bs, k + 1) - element_at(bs, k)))""".stripMargin)))
-      .select(col("doc_id"), (col("pos") + 1).cast("int").as("chunk_idx"),
-        col("col.start").as("start"), col("col.len").as("len"),
-        md5(expr("substring(text, CAST(col.start AS INT), CAST(col.len AS INT))"))
-          .as("chunk_hash"))
-  }
+    MemoCache.frame(spark, ("cdc-chunks", d)) {
+      val bounds = expr(
+        s"""concat(array(0L),
+           |  IF(n_chars < ${CdcWin}L, CAST(array() AS ARRAY<BIGINT>),
+           |    filter(sequence(${CdcWin}L, n_chars),
+           |      i -> CAST(conv(substring(md5(substring(text, CAST(i - ${CdcWin - 1} AS INT), $CdcWin)), 1, 2), 16, 10) AS INT) % $CdcMask = 0
+           |        AND i < n_chars)),
+           |  array(n_chars))""".stripMargin)
+      documents(spark, d)
+        .select(col("doc_id"), col("text"), col("n_chars"), bounds.as("bs"))
+        .filter(col("n_chars") > 0)
+        .select(col("doc_id"), col("text"),
+          posexplode(expr(
+            """transform(sequence(1, size(bs) - 1),
+              |  k -> named_struct(
+              |    'start', element_at(bs, k) + 1,
+              |    'len', element_at(bs, k + 1) - element_at(bs, k)))""".stripMargin)))
+        .select(col("doc_id"), (col("pos") + 1).cast("int").as("chunk_idx"),
+          col("col.start").as("start"), col("col.len").as("len"),
+          md5(expr("substring(text, CAST(col.start AS INT), CAST(col.len AS INT))"))
+            .as("chunk_hash"))
+    }
 
   private val cdcBoundsSqlCtes: String =
     s"""pos AS (SELECT doc_id, unnest(generate_series($CdcWin, n_chars)) AS i

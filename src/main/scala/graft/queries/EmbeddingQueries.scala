@@ -70,31 +70,29 @@ object EmbeddingQueries {
   // ------------------------------------------------------------ brute kNN
   /** Brute-force cosine top-k: decimal-exact dot/norms, cosine rounded to 6
     * decimals (then ranked with a vec_id tie-break) so Spark and DuckDB rank
-    * identically. Queries are broadcast; one pass over the corpus. */
-  /** Exact top-K is the TRUTH side of every recall/rank evaluation in this
+    * identically. Queries are broadcast; one pass over the corpus.
+    *
+    * Exact top-K is the TRUTH side of every recall/rank evaluation in this
     * family — nine consumers re-ran the full brute-force scan per query.
     * Memoized (queries x K rows) like the other shared indexes; cold pays
     * one build, every evaluation reads the in-memory table. */
   def knnBrute(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("knn-brute", d))(
-      knnBruteCompute(spark, d).cache())(_.unpersist(blocking = false))
-
-  private def knnBruteCompute(spark: SparkSession, d: String): DataFrame = {
-    val e = embeddings(spark, d)
-      .select(col("vec_id"), scaled(col("embedding")).as("emb"))
-      .withColumn("norm2", dotScaled(col("emb"), col("emb")))
-    val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"), col("norm2").as("q_norm2"))
-    val corpus = e.filter(col("vec_id") >= NQueries)
-    val scored = corpus.crossJoin(broadcast(q))
-      .withColumn("cosine", round(
-        dotScaled(col("emb"), col("q_emb")).cast("double") /
-          (sqrt(col("norm2").cast("double")) * sqrt(col("q_norm2").cast("double"))), 6))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= TopK)
-      .select(col("q_id"), col("vec_id"), col("cosine"), col("rk"))
-  }
+    MemoCache.frame(spark, ("knn-brute", d)) {
+      val e = embeddings(spark, d)
+        .select(col("vec_id"), scaled(col("embedding")).as("emb"))
+        .withColumn("norm2", dotScaled(col("emb"), col("emb")))
+      val q = e.filter(col("vec_id") < NQueries)
+        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"), col("norm2").as("q_norm2"))
+      val corpus = e.filter(col("vec_id") >= NQueries)
+      val scored = corpus.crossJoin(broadcast(q))
+        .withColumn("cosine", round(
+          dotScaled(col("emb"), col("q_emb")).cast("double") /
+            (sqrt(col("norm2").cast("double")) * sqrt(col("q_norm2").cast("double"))), 6))
+      val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
+      scored.withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= TopK)
+        .select(col("q_id"), col("vec_id"), col("cosine"), col("rk"))
+    }
 
   val knnBruteSql: String =
     s"""WITH idx AS (SELECT unnest(generate_series(1, $Dim)) AS i),
@@ -145,11 +143,10 @@ object EmbeddingQueries {
           (sqrt(col("norm2").cast("double")) * sqrt(col("b_norm2").cast("double"))), 6))
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("cosine").desc, col("b_id"))
-    val top1 = MemoCache.getOrElseUpdate(spark, ("mutual-top1", d))(
+    val top1 = MemoCache.frame(spark, ("mutual-top1", d))(
       scored.withColumn("rk", row_number().over(w))
         .filter(col("rk") === 1)
-        .select(col("vec_id"), col("b_id").as("nn_id"), col("cosine"))
-        .cache())(_.unpersist(blocking = false))
+        .select(col("vec_id"), col("b_id").as("nn_id"), col("cosine")))
     val indeg = top1.groupBy(col("nn_id").as("vec_id"))
       .agg(count(lit(1)).as("in_degree"))
     top1.as("t")
@@ -424,37 +421,34 @@ object EmbeddingQueries {
     // per-query top-K result table (queries x K rows): memoized like
     // [[knnBrute]] — the recall/rank evaluations re-ran the whole search
     // per consumer otherwise
-    MemoCache.getOrElseUpdate(spark, ("ann-lsh", d))(
-      annLshCompute(spark, d).cache())(_.unpersist(blocking = false))
-
-  private def annLshCompute(spark: SparkSession, d: String): DataFrame = {
-    val e = embeddings(spark, d)
-      .select(col("vec_id"), scaled(col("embedding")).as("emb"))
-      .withColumn("bucket", lshKeyInt(col("emb")))
-      .withColumn("norm2", dotScaled(col("emb"), col("emb")))
-    val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        col("norm2").as("q_norm2"), col("bucket").as("q_bucket"))
-    // multi-probe LSH: exact bucket plus all 1-bit and 2-bit flips
-    // (37 of 256 buckets) — trades probe fan-out for recall on corpora with
-    // weak angular structure; at scale the probe join is still
-    // O(queries x probes), independent of corpus size.
-    val masks: Seq[Long] = 0L +:
-      (0 until NPlanes).map(p => 1L << p) ++:
-      (for (p <- 0 until NPlanes; r <- p + 1 until NPlanes)
-        yield (1L << p) | (1L << r))
-    val probes = q.select(col("q_id"), col("q_emb"), col("q_norm2"),
-      explode(array(masks.map(m => col("q_bucket").bitwiseXOR(lit(m))): _*)).as("bucket"))
-    val cands = e.filter(col("vec_id") >= NQueries)
-      .join(broadcast(probes), "bucket")
-    val scored = cands.withColumn("cosine", round(
-      dotScaled(col("emb"), col("q_emb")).cast("double") /
-        (sqrt(col("norm2").cast("double")) * sqrt(col("q_norm2").cast("double"))), 6))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= TopK)
-      .select(col("q_id"), col("vec_id"), col("cosine"), col("rk"))
-  }
+    MemoCache.frame(spark, ("ann-lsh", d)) {
+      val e = embeddings(spark, d)
+        .select(col("vec_id"), scaled(col("embedding")).as("emb"))
+        .withColumn("bucket", lshKeyInt(col("emb")))
+        .withColumn("norm2", dotScaled(col("emb"), col("emb")))
+      val q = e.filter(col("vec_id") < NQueries)
+        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
+          col("norm2").as("q_norm2"), col("bucket").as("q_bucket"))
+      // multi-probe LSH: exact bucket plus all 1-bit and 2-bit flips
+      // (37 of 256 buckets) — trades probe fan-out for recall on corpora with
+      // weak angular structure; at scale the probe join is still
+      // O(queries x probes), independent of corpus size.
+      val masks: Seq[Long] = 0L +:
+        (0 until NPlanes).map(p => 1L << p) ++:
+        (for (p <- 0 until NPlanes; r <- p + 1 until NPlanes)
+          yield (1L << p) | (1L << r))
+      val probes = q.select(col("q_id"), col("q_emb"), col("q_norm2"),
+        explode(array(masks.map(m => col("q_bucket").bitwiseXOR(lit(m))): _*)).as("bucket"))
+      val cands = e.filter(col("vec_id") >= NQueries)
+        .join(broadcast(probes), "bucket")
+      val scored = cands.withColumn("cosine", round(
+        dotScaled(col("emb"), col("q_emb")).cast("double") /
+          (sqrt(col("norm2").cast("double")) * sqrt(col("q_norm2").cast("double"))), 6))
+      val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
+      scored.withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= TopK)
+        .select(col("q_id"), col("vec_id"), col("cosine"), col("rk"))
+    }
 
   val annLshSql: String =
     s"""WITH idx AS (SELECT unnest(generate_series(1, $Dim)) AS i),
@@ -1104,45 +1098,42 @@ object EmbeddingQueries {
     // per-query top-K result table (queries x K rows): memoized like
     // [[knnBrute]] — the recall/rank evaluations re-ran the whole search
     // per consumer otherwise
-    MemoCache.getOrElseUpdate(spark, ("ann-ivf", d))(
-      annIvfCompute(spark, d).cache())(_.unpersist(blocking = false))
-
-  private def annIvfCompute(spark: SparkSession, d: String): DataFrame = {
-    val eRaw = embeddings(spark, d)
-      .select(col("vec_id"), col("label"), scaled(col("embedding")).as("emb"))
-    val e = eRaw.drop("label")
-      .withColumn("norm2", dotScaled(col("emb"), col("emb")))
-    val cents = labelCellCentroids(eRaw)
-    // assign every vector to its nearest cell; queries keep top-NProbe cells
-    val scoredCells = e.crossJoin(broadcast(cents))
-      .withColumn("csim", dotScaled(col("emb"), col("cemb")).cast("double") /
-        (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-    // corpus argmax via max(struct) aggregation — same (csim desc, cell asc)
-    // rule as a rank-1 window (negcell breaks csim ties toward the smaller
-    // cell) but with map-side partial aggregation instead of a full sort
-    // shuffle of every (vector, cell) pair; the window only runs over the
-    // NQueries query vectors.
-    val corpusCells = scoredCells.filter(col("vec_id") >= NQueries)
-      .groupBy(col("vec_id"))
-      .agg(max(struct(col("csim"), (-col("cell")).as("negcell"),
-        col("cell"), col("emb"), col("norm2"))).as("m"))
-      .select(col("vec_id"), col("m.emb").as("emb"),
-        col("m.norm2").as("norm2"), col("m.cell").as("cell"))
-    val wv = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cell"))
-    val queryCells = scoredCells.filter(col("vec_id") < NQueries)
-      .withColumn("crk", row_number().over(wv))
-      .filter(col("crk") <= NProbe)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        col("norm2").as("q_norm2"), col("cell"))
-    val scored = corpusCells.join(broadcast(queryCells), "cell")
-      .withColumn("cosine", round(
-        dotScaled(col("emb"), col("q_emb")).cast("double") /
-          (sqrt(col("norm2").cast("double")) * sqrt(col("q_norm2").cast("double"))), 6))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= TopK)
-      .select(col("q_id"), col("vec_id"), col("cosine"), col("rk"))
-  }
+    MemoCache.frame(spark, ("ann-ivf", d)) {
+      val eRaw = embeddings(spark, d)
+        .select(col("vec_id"), col("label"), scaled(col("embedding")).as("emb"))
+      val e = eRaw.drop("label")
+        .withColumn("norm2", dotScaled(col("emb"), col("emb")))
+      val cents = labelCellCentroids(eRaw)
+      // assign every vector to its nearest cell; queries keep top-NProbe cells
+      val scoredCells = e.crossJoin(broadcast(cents))
+        .withColumn("csim", dotScaled(col("emb"), col("cemb")).cast("double") /
+          (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
+      // corpus argmax via max(struct) aggregation — same (csim desc, cell asc)
+      // rule as a rank-1 window (negcell breaks csim ties toward the smaller
+      // cell) but with map-side partial aggregation instead of a full sort
+      // shuffle of every (vector, cell) pair; the window only runs over the
+      // NQueries query vectors.
+      val corpusCells = scoredCells.filter(col("vec_id") >= NQueries)
+        .groupBy(col("vec_id"))
+        .agg(max(struct(col("csim"), (-col("cell")).as("negcell"),
+          col("cell"), col("emb"), col("norm2"))).as("m"))
+        .select(col("vec_id"), col("m.emb").as("emb"),
+          col("m.norm2").as("norm2"), col("m.cell").as("cell"))
+      val wv = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cell"))
+      val queryCells = scoredCells.filter(col("vec_id") < NQueries)
+        .withColumn("crk", row_number().over(wv))
+        .filter(col("crk") <= NProbe)
+        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
+          col("norm2").as("q_norm2"), col("cell"))
+      val scored = corpusCells.join(broadcast(queryCells), "cell")
+        .withColumn("cosine", round(
+          dotScaled(col("emb"), col("q_emb")).cast("double") /
+            (sqrt(col("norm2").cast("double")) * sqrt(col("q_norm2").cast("double"))), 6))
+      val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
+      scored.withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= TopK)
+        .select(col("q_id"), col("vec_id"), col("cosine"), col("rk"))
+    }
 
   val annIvfSql: String =
     s"""WITH idx AS (SELECT unnest(generate_series(1, $Dim)) AS i),
@@ -1330,63 +1321,60 @@ object EmbeddingQueries {
     // per-query top-K result table (queries x K rows): memoized like
     // [[knnBrute]] — the recall/rank evaluations re-ran the whole search
     // per consumer otherwise
-    MemoCache.getOrElseUpdate(spark, ("ivfpq-search", d))(
-      ivfpqSearchCompute(spark, d).cache())(_.unpersist(blocking = false))
-
-  private def ivfpqSearchCompute(spark: SparkSession, d: String): DataFrame = {
-    val eRaw = embeddings(spark, d)
-      .select(col("vec_id"), col("label"), scaled(col("embedding")).as("emb"))
-    val e = eRaw.drop("label")
-      .withColumn("norm2", dotScaled(col("emb"), col("emb")))
-    val cents = labelCellCentroids(eRaw)
-    val scoredCells = e.crossJoin(broadcast(cents))
-      .withColumn("csim", dotScaled(col("emb"), col("cemb")).cast("double") /
-        (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-    val residual = expr("zip_with(emb, cemb, (a, b) -> a - b)")
-    // corpus: nearest cell (map-side argmax, as annIvf), residual vs it
-    val corpusRes = scoredCells.filter(col("vec_id") >= NQueries)
-      .groupBy(col("vec_id"))
-      .agg(max(struct(col("csim"), (-col("cell")).as("negcell"),
-        col("cell"), col("emb"), col("cemb"))).as("m"))
-      .select(col("vec_id"), col("m.cell").as("cell"),
-        col("m.emb").as("emb"), col("m.cemb").as("cemb"))
-      .select(col("vec_id"), col("cell"), residual.as("remb"))
-    def rsub(df: DataFrame, idCols: Seq[String]) = df
-      .select(idCols.map(col) :+ posexplode(array(
-        (0 until PqM).map(m => slice(col("remb"), m * PqSubDim + 1, PqSubDim)): _*)): _*)
-      .withColumnRenamed("pos", "subspace")
-    // residual codebook: the first PqK corpus vectors' residual subvectors
-    val cb = rsub(corpusRes.filter(col("vec_id") < NQueries + PqK),
-        Seq("vec_id"))
-      .select(col("vec_id").as("k"), col("subspace"), col("col").as("cv"))
-    val codes = rsub(corpusRes, Seq("vec_id", "cell"))
-      .withColumnRenamed("col", "sv")
-      .join(broadcast(cb), "subspace")
-      .withColumn("dist2", l2sq(col("sv"), col("cv")))
-      .groupBy(col("vec_id"), col("cell"), col("subspace"))
-      .agg(min(struct(col("dist2"), col("k"))).as("m"))
-      .select(col("vec_id"), col("cell"), col("subspace"), col("m.k").as("code"))
-    // queries: top-NProbe cells, one residual (and ADC table) per cell
-    val wv = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cell"))
-    val qRes = scoredCells.filter(col("vec_id") < NQueries)
-      .withColumn("crk", row_number().over(wv))
-      .filter(col("crk") <= NProbe)
-      .select(col("vec_id").as("q_id"), col("cell"), residual.as("remb"))
-    val tables = rsub(qRes, Seq("q_id", "cell"))
-      .withColumnRenamed("col", "qv")
-      .join(broadcast(cb), "subspace")
-      .select(col("q_id"), col("cell"), col("subspace"), col("k"),
-        l2sq(col("qv"), col("cv")).as("t"))
-    val scored = codes.join(broadcast(tables), Seq("cell", "subspace"))
-      .filter(col("code") === col("k"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("t")).as("approx_dist2"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_dist2"), col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= TopK)
-      .select(col("q_id"), col("vec_id"), col("approx_dist2"), col("rk"))
-  }
+    MemoCache.frame(spark, ("ivfpq-search", d)) {
+      val eRaw = embeddings(spark, d)
+        .select(col("vec_id"), col("label"), scaled(col("embedding")).as("emb"))
+      val e = eRaw.drop("label")
+        .withColumn("norm2", dotScaled(col("emb"), col("emb")))
+      val cents = labelCellCentroids(eRaw)
+      val scoredCells = e.crossJoin(broadcast(cents))
+        .withColumn("csim", dotScaled(col("emb"), col("cemb")).cast("double") /
+          (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
+      val residual = expr("zip_with(emb, cemb, (a, b) -> a - b)")
+      // corpus: nearest cell (map-side argmax, as annIvf), residual vs it
+      val corpusRes = scoredCells.filter(col("vec_id") >= NQueries)
+        .groupBy(col("vec_id"))
+        .agg(max(struct(col("csim"), (-col("cell")).as("negcell"),
+          col("cell"), col("emb"), col("cemb"))).as("m"))
+        .select(col("vec_id"), col("m.cell").as("cell"),
+          col("m.emb").as("emb"), col("m.cemb").as("cemb"))
+        .select(col("vec_id"), col("cell"), residual.as("remb"))
+      def rsub(df: DataFrame, idCols: Seq[String]) = df
+        .select(idCols.map(col) :+ posexplode(array(
+          (0 until PqM).map(m => slice(col("remb"), m * PqSubDim + 1, PqSubDim)): _*)): _*)
+        .withColumnRenamed("pos", "subspace")
+      // residual codebook: the first PqK corpus vectors' residual subvectors
+      val cb = rsub(corpusRes.filter(col("vec_id") < NQueries + PqK),
+          Seq("vec_id"))
+        .select(col("vec_id").as("k"), col("subspace"), col("col").as("cv"))
+      val codes = rsub(corpusRes, Seq("vec_id", "cell"))
+        .withColumnRenamed("col", "sv")
+        .join(broadcast(cb), "subspace")
+        .withColumn("dist2", l2sq(col("sv"), col("cv")))
+        .groupBy(col("vec_id"), col("cell"), col("subspace"))
+        .agg(min(struct(col("dist2"), col("k"))).as("m"))
+        .select(col("vec_id"), col("cell"), col("subspace"), col("m.k").as("code"))
+      // queries: top-NProbe cells, one residual (and ADC table) per cell
+      val wv = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cell"))
+      val qRes = scoredCells.filter(col("vec_id") < NQueries)
+        .withColumn("crk", row_number().over(wv))
+        .filter(col("crk") <= NProbe)
+        .select(col("vec_id").as("q_id"), col("cell"), residual.as("remb"))
+      val tables = rsub(qRes, Seq("q_id", "cell"))
+        .withColumnRenamed("col", "qv")
+        .join(broadcast(cb), "subspace")
+        .select(col("q_id"), col("cell"), col("subspace"), col("k"),
+          l2sq(col("qv"), col("cv")).as("t"))
+      val scored = codes.join(broadcast(tables), Seq("cell", "subspace"))
+        .filter(col("code") === col("k"))
+        .groupBy(col("q_id"), col("vec_id"))
+        .agg(sum(col("t")).as("approx_dist2"))
+      val w = Window.partitionBy(col("q_id"))
+        .orderBy(col("approx_dist2"), col("vec_id"))
+      scored.withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= TopK)
+        .select(col("q_id"), col("vec_id"), col("approx_dist2"), col("rk"))
+    }
 
   val ivfpqSearchSql: String =
     s"""WITH idx AS (SELECT unnest(generate_series(1, $Dim)) AS i),
@@ -1609,25 +1597,22 @@ object EmbeddingQueries {
     // per-query top-K result table (queries x K rows): memoized like
     // [[knnBrute]] — the recall/rank evaluations re-ran the whole search
     // per consumer otherwise
-    MemoCache.getOrElseUpdate(spark, ("bq-search", d))(
-      bqSearchCompute(spark, d).cache())(_.unpersist(blocking = false))
-
-  private def bqSearchCompute(spark: SparkSession, d: String): DataFrame = {
-    val codes = bqCodes(spark, d)
-    val q = codes.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"),
-        col("code_lo").as("q_lo"), col("code_hi").as("q_hi"))
-    val corpus = codes.filter(col("vec_id") >= NQueries)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("hamming"), col("vec_id"))
-    corpus.crossJoin(broadcast(q))
-      .withColumn("hamming",
-        (bit_count(col("code_lo").bitwiseXOR(col("q_lo"))) +
-          bit_count(col("code_hi").bitwiseXOR(col("q_hi")))).cast("int"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= TopK)
-      .select(col("q_id"), col("vec_id"), col("hamming"), col("rk"))
-  }
+    MemoCache.frame(spark, ("bq-search", d)) {
+      val codes = bqCodes(spark, d)
+      val q = codes.filter(col("vec_id") < NQueries)
+        .select(col("vec_id").as("q_id"),
+          col("code_lo").as("q_lo"), col("code_hi").as("q_hi"))
+      val corpus = codes.filter(col("vec_id") >= NQueries)
+      val w = Window.partitionBy(col("q_id"))
+        .orderBy(col("hamming"), col("vec_id"))
+      corpus.crossJoin(broadcast(q))
+        .withColumn("hamming",
+          (bit_count(col("code_lo").bitwiseXOR(col("q_lo"))) +
+            bit_count(col("code_hi").bitwiseXOR(col("q_hi")))).cast("int"))
+        .withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= TopK)
+        .select(col("q_id"), col("vec_id"), col("hamming"), col("rk"))
+    }
 
   /** Hamming scan + per-query rank, shared by the search and rerank
     * oracles (they differ only in how deep they cut the ranking). */
@@ -1680,41 +1665,38 @@ object EmbeddingQueries {
     // per-query top-K result table (queries x K rows): memoized like
     // [[knnBrute]] — the recall/rank evaluations re-ran the whole search
     // per consumer otherwise
-    MemoCache.getOrElseUpdate(spark, ("bq-rerank", d))(
-      bqRerankCompute(spark, d).cache())(_.unpersist(blocking = false))
-
-  private def bqRerankCompute(spark: SparkSession, d: String): DataFrame = {
-    val codes = bqCodes(spark, d)
-    val q = codes.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"),
-        col("code_lo").as("q_lo"), col("code_hi").as("q_hi"))
-    val wHam = Window.partitionBy(col("q_id"))
-      .orderBy(col("hamming"), col("vec_id"))
-    val short = codes.filter(col("vec_id") >= NQueries)
-      .crossJoin(broadcast(q))
-      .withColumn("hamming",
-        (bit_count(col("code_lo").bitwiseXOR(col("q_lo"))) +
-          bit_count(col("code_hi").bitwiseXOR(col("q_hi")))).cast("int"))
-      .withColumn("hrk", row_number().over(wHam))
-      .filter(col("hrk") <=
-        coarsePoolOf(spark, d, BqShortlist, BqShortlistDiv))
-      .select(col("q_id"), col("vec_id"))
-    val e = embeddings(spark, d)
-      .select(col("vec_id"), scaled(col("embedding")).as("emb"))
-      .withColumn("norm2", dotScaled(col("emb"), col("emb")))
-    val qe = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        col("norm2").as("q_norm2"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    e.join(broadcast(short), Seq("vec_id"))
-      .join(broadcast(qe), Seq("q_id"))
-      .withColumn("cosine", round(
-        dotScaled(col("emb"), col("q_emb")).cast("double") /
-          (sqrt(col("norm2").cast("double")) * sqrt(col("q_norm2").cast("double"))), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= TopK)
-      .select(col("q_id"), col("vec_id"), col("cosine"), col("rk"))
-  }
+    MemoCache.frame(spark, ("bq-rerank", d)) {
+      val codes = bqCodes(spark, d)
+      val q = codes.filter(col("vec_id") < NQueries)
+        .select(col("vec_id").as("q_id"),
+          col("code_lo").as("q_lo"), col("code_hi").as("q_hi"))
+      val wHam = Window.partitionBy(col("q_id"))
+        .orderBy(col("hamming"), col("vec_id"))
+      val short = codes.filter(col("vec_id") >= NQueries)
+        .crossJoin(broadcast(q))
+        .withColumn("hamming",
+          (bit_count(col("code_lo").bitwiseXOR(col("q_lo"))) +
+            bit_count(col("code_hi").bitwiseXOR(col("q_hi")))).cast("int"))
+        .withColumn("hrk", row_number().over(wHam))
+        .filter(col("hrk") <=
+          coarsePoolOf(spark, d, BqShortlist, BqShortlistDiv))
+        .select(col("q_id"), col("vec_id"))
+      val e = embeddings(spark, d)
+        .select(col("vec_id"), scaled(col("embedding")).as("emb"))
+        .withColumn("norm2", dotScaled(col("emb"), col("emb")))
+      val qe = e.filter(col("vec_id") < NQueries)
+        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
+          col("norm2").as("q_norm2"))
+      val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
+      e.join(broadcast(short), Seq("vec_id"))
+        .join(broadcast(qe), Seq("q_id"))
+        .withColumn("cosine", round(
+          dotScaled(col("emb"), col("q_emb")).cast("double") /
+            (sqrt(col("norm2").cast("double")) * sqrt(col("q_norm2").cast("double"))), 6))
+        .withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= TopK)
+        .select(col("q_id"), col("vec_id"), col("cosine"), col("rk"))
+    }
 
   val bqRerankSql: String =
     s"""$bqHammingRankedSql,
@@ -1933,11 +1915,10 @@ object EmbeddingQueries {
     * [[kmeans]] and [[semDedupKmeans]]. */
   private[graft] def trainedCentroids(spark: SparkSession, d: String,
                                       k: Int, iters: Int): DataFrame =
-    // a trained MODEL, like the LM/DSIR/sketch builds: memoized per
-    // (dataset, k, iters) in the bounded LRU so every consumer (kmeans,
-    // inertia, semantic dedup) reuses one training run; eviction frees
-    // the persisted table
-    MemoCache.getOrElseUpdate(spark, ("kmeans-centroids", d, k, iters))({
+    // memoized per (dataset, k, iters) so every consumer (kmeans,
+    // inertia, semantic dedup) reuses one training run; the build
+    // persists and materializes the trained table itself
+    MemoCache.frame(spark, ("kmeans-centroids", d, k, iters)) {
       val e = embeddings(spark, d)
         .select(col("vec_id"), scaled(col("embedding")).as("emb"))
       val seed = e.filter(col("vec_id") < k)
@@ -1946,7 +1927,7 @@ object EmbeddingQueries {
         .persist()
       trained.count()
       trained
-    })(_.unpersist(blocking = false))
+    }
 
   /** Per-cluster inertia (within-cluster sum of squared distances) + sizes
     * — the clustering-quality evaluation loop, the k-means analog of
@@ -2452,7 +2433,7 @@ object EmbeddingQueries {
     // (8, 256) 0.90; (16, 256) 1.00. They trade exactly as the paper says;
     // these buy recall.
     val (m, efC, efS) = (16, 128, 256)
-    MemoCache.getOrElseUpdate(spark, ("hnsw-cands", d))({
+    MemoCache.frame(spark, ("hnsw-cands", d)) {
       val e = embeddings(spark, d)
       // NQueries probe rows to the driver — the broadcast-only-probes
       // pattern every index query here uses (gate: fixture contract).
@@ -2472,8 +2453,8 @@ object EmbeddingQueries {
               g.search(qv, efS, TopK).iterator.map { case (id, _) => (qid, id) }
             }
           }
-        }.toDF("q_id", "vec_id").cache()
-    })(_.unpersist(blocking = false))
+        }.toDF("q_id", "vec_id")
+    }
   }
 
   /** Candidates + integer-exact cosine rerank, ranked over the FULL
@@ -2563,25 +2544,6 @@ object EmbeddingQueries {
        |  CAST($NQueries * $TopK AS BIGINT) AS truth_pairs, true AS ok""".stripMargin
 
   // ----------------------------------------------------------- PCA (top PC)
-  /** Distributed PCA, top principal component — the whitening/compression
-    * preprocessing step quantizers (PQ/SQ) and outlier detectors assume:
-    * the data-scale work is ONE map-side-combinable aggregation of the
-    * exact integer second-moment matrix (4096 cells for d=64; the shuffle
-    * carries cells x partitions, never vectors), the 64x64 eigen-solve then
-    * runs on the driver over a model-sized frame (the k-means-centroid
-    * convention). Covariance stays EXACT integers until the solve:
-    * C'_ij = n·Σ s_i s_j − S_i·S_j over the scaled-long embeddings,
-    * accumulated in DECIMAL(38,0) (long Σ s_i s_j overflows past ~10^5
-    * vectors).
-    *
-    * Engine-parity for an ITERATIVE float algorithm: each power-iteration
-    * step re-quantizes the vector onto a 1e-9 grid (round-half-away, both
-    * engines), so double summation-order noise (~1e-14 relative) can never
-    * escape a step — after 20 steps both engines hold the bit-identical
-    * vector, and the emitted Rayleigh ratio rounds at 1e-6, nine orders
-    * above the noise. The DuckDB oracle replays everything including the
-    * iteration (recursive CTE over a DOUBLE[] state with the identical
-    * grid rounding). */
   /** The data-scale stage of [[pcaTop]], exposed so `PlanSpec` can assert
     * its shape (pcaTop itself returns a driver-solved literal row — its
     * plan is a LocalTableScan; the aggregation runs at construction). */
@@ -2629,6 +2591,25 @@ object EmbeddingQueries {
       (n, S, cp, v)
     })(_ => ())
 
+  /** Distributed PCA, top principal component — the whitening/compression
+    * preprocessing step quantizers (PQ/SQ) and outlier detectors assume:
+    * the data-scale work is ONE map-side-combinable aggregation of the
+    * exact integer second-moment matrix (4096 cells for d=64; the shuffle
+    * carries cells x partitions, never vectors), the 64x64 eigen-solve then
+    * runs on the driver over a model-sized frame (the k-means-centroid
+    * convention). Covariance stays EXACT integers until the solve:
+    * C'_ij = n·Σ s_i s_j − S_i·S_j over the scaled-long embeddings,
+    * accumulated in DECIMAL(38,0) (long Σ s_i s_j overflows past ~10^5
+    * vectors).
+    *
+    * Engine-parity for an ITERATIVE float algorithm: each power-iteration
+    * step re-quantizes the vector onto a 1e-9 grid (round-half-away, both
+    * engines), so double summation-order noise (~1e-14 relative) can never
+    * escape a step — after 20 steps both engines hold the bit-identical
+    * vector, and the emitted Rayleigh ratio rounds at 1e-6, nine orders
+    * above the noise. The DuckDB oracle replays everything including the
+    * iteration (recursive CTE over a DOUBLE[] state with the identical
+    * grid rounding). */
   def pcaTop(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val dim = Dim

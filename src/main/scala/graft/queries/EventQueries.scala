@@ -48,12 +48,13 @@ object EventQueries {
     * funnel). The `gap > SessionGapMs` rule matches `session_window`
     * INCLUDING the exact-boundary case: Spark merges sessions whose ranges
     * touch (an event at exactly prev+gap stays in the session — pinned by
-    * PipelineSpec's boundary test), and `exactly-gap` is not `> gap`. */
-  /** Memoized: the per-user sessionization window is the shared prefix of
+    * PipelineSpec's boundary test), and `exactly-gap` is not `> gap`.
+    *
+    * Memoized: the per-user sessionization window is the shared prefix of
     * the session family, and [[sessionFunnel]] alone reads it three times
     * (stage table + two stage joins). */
   private def sessioned(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("sessioned", d))({
+    MemoCache.frame(spark, ("sessioned", d)) {
       val byUser = Window.partitionBy(col("user_id"))
         .orderBy(col("ts_ms"), col("event_id"))
       ev(spark, d)
@@ -64,8 +65,7 @@ object EventQueries {
             .otherwise(0))
         .withColumn("sid", sum(col("new_s")).over(byUser))
         .drop("new_s")
-        .cache()
-    })(_.unpersist(blocking = false))
+    }
 
   /** The matching SQL CTE chain (`flagged` → `s` with user_id/ts_ms/
     * event_id/event_type/sid) for oracles over [[sessioned]]. */
@@ -1245,6 +1245,18 @@ object EventQueries {
       |FROM t WHERE next_type IS NOT NULL GROUP BY 1, 2""".stripMargin
 
   // -------------------------------------------- absorbing-chain analysis
+  /** The collected transition counts are the shared input of the three
+    * chain solvers ([[absorbingChain]], [[conversionProb]],
+    * [[markovAttribution]]) — a |event types|²-row array. Memoized so the
+    * window + aggregation over the fact table runs once per residency, not
+    * once per solver (the solvers differ only in their driver-side 4x4
+    * fixed points). Driver-memory value, so release is a no-op. */
+  private def transitionsCollected(spark: SparkSession,
+                                   d: String): Array[(String, String, Long)] =
+    MemoCache.getOrElseUpdate(spark, ("transitions-rows", d))(
+      transitions(spark, d).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2))))(_ => ())
+
   /** Expected events until FIRST conversion, per starting state — the
     * absorbing-Markov-chain read of the clickstream ([[transitions]]'
     * counts with `purchase` made absorbing): t = 1 + Q·t where Q is the
@@ -1258,18 +1270,6 @@ object EventQueries {
     * emission rounding, and identical in both engines regardless).
     * Emitted per state: outgoing mass, direct-conversion probability,
     * expected steps. */
-  /** The collected transition counts are the shared input of the three
-    * chain solvers ([[absorbingChain]], [[conversionProb]],
-    * [[markovAttribution]]) — a |event types|²-row array. Memoized so the
-    * window + aggregation over the fact table runs once per residency, not
-    * once per solver (the solvers differ only in their driver-side 4x4
-    * fixed points). Driver-memory value, so release is a no-op. */
-  private def transitionsCollected(spark: SparkSession,
-                                   d: String): Array[(String, String, Long)] =
-    MemoCache.getOrElseUpdate(spark, ("transitions-rows", d))(
-      transitions(spark, d).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2))))(_ => ())
-
   def absorbingChain(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val absorb = "purchase"
@@ -1793,13 +1793,9 @@ object EventQueries {
     val es = transitionsCollected(spark, d)
     val ns = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
     val n = ns.length.toLong
-    if (n == 0) { // no transitions at all: empty result, not a crash
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "event_type STRING, rank_scaled BIGINT, rank DOUBLE"))
-    }
-    val base = 15L * PrScale / (100L * n) // floor; all positive
+    // floor; all positive. No transitions (n = 0): the driver loop below
+    // runs over no nodes and yields the empty result with its usual schema
+    val base = 15L * PrScale / (100L * math.max(n, 1L))
     // Gate like the dedup cluster resolver: an edge list that fits the
     // driver iterates there (10 Spark jobs of per-round overhead dwarf the
     // arithmetic on graphs of type/page cardinality — measured 2.6s → 0.3s
@@ -2315,25 +2311,6 @@ object EventQueries {
     * oracle SQL, so both engines divide identical numbers. */
   private val HllScale = (0.7213 / (1 + 1.079 / HllM)) * HllM * HllM * math.pow(2, 52)
 
-  /** Approximate rollup — the 100 TB form of evt_daily_rollup: HLL distinct
-    * users (mergeable registers, constant memory per group vs exact COUNT
-    * DISTINCT's second shuffle) and sampled value percentiles.
-    *
-    * Unlike `approx_count_distinct`/`approx_percentile` (engine-internal
-    * sketches, unverifiable), these sketches are DETERMINISTIC and
-    * engine-portable, so the whole query hash-checks against a DuckDB
-    * replica:
-    *  - HLL on the md5-low-64 of user_id: register = low 10 bits, and the
-    *    register value is stored as 2^(rho-1) = lowest-set-bit of the
-    *    remaining 54 bits (max of powers of two ≡ max rho). The harmonic
-    *    sum Σ2^-rho is computed in EXACT integer math scaled by 2^52
-    *    (registers beyond rho 52 truncate to 0 identically in both
-    *    engines), leaving one double division — bit-stable everywhere.
-    *    Standard linear-counting small-range correction.
-    *  - percentiles: exact interpolated percentile over a deterministic
-    *    20% Bernoulli sample keyed on md5(event_id) — sampling replaces
-    *    the sketch, determinism replaces the RNG.
-    * Accuracy vs the exact rollup is asserted in SketchSpec. */
   /** The deterministic HLL register table keyed (day, event_type, bucket):
     * the shared base of [[dailyRollupApprox]] and [[rollingDistinct]] —
     * build registers from the data ONCE, then every aggregate (daily, any
@@ -2369,6 +2346,25 @@ object EventQueries {
             lit(HllM.toDouble) * log(lit(HllM.toDouble) / col("zeros").cast("double")))
           .otherwise(lit(HllScale) / col("s")), 3).as("approx_users"): _*)
 
+  /** Approximate rollup — the 100 TB form of evt_daily_rollup: HLL distinct
+    * users (mergeable registers, constant memory per group vs exact COUNT
+    * DISTINCT's second shuffle) and sampled value percentiles.
+    *
+    * Unlike `approx_count_distinct`/`approx_percentile` (engine-internal
+    * sketches, unverifiable), these sketches are DETERMINISTIC and
+    * engine-portable, so the whole query hash-checks against a DuckDB
+    * replica:
+    *  - HLL on the md5-low-64 of user_id: register = low 10 bits, and the
+    *    register value is stored as 2^(rho-1) = lowest-set-bit of the
+    *    remaining 54 bits (max of powers of two ≡ max rho). The harmonic
+    *    sum Σ2^-rho is computed in EXACT integer math scaled by 2^52
+    *    (registers beyond rho 52 truncate to 0 identically in both
+    *    engines), leaving one double division — bit-stable everywhere.
+    *    Standard linear-counting small-range correction.
+    *  - percentiles: exact interpolated percentile over a deterministic
+    *    20% Bernoulli sample keyed on md5(event_id) — sampling replaces
+    *    the sketch, determinism replaces the RNG.
+    * Accuracy vs the exact rollup is asserted in SketchSpec. */
   def dailyRollupApprox(spark: SparkSession, d: String): DataFrame = {
     val base = ev(spark, d).select(
       date_format(col("ts").cast("timestamp"), "yyyy-MM-dd").as("day"),
@@ -2790,16 +2786,16 @@ object EventQueries {
     * (UDF enrichment, sinks) the optimizer will not push past. */
   def bloomSemijoin(spark: SparkSession, d: String): DataFrame = {
     val base = ev(spark, d)
-    val conv = MemoCache.getOrElseUpdate(spark, ("bloom-conv", d))(
+    val conv = MemoCache.frame(spark, ("bloom-conv", d))(
       base.filter(col("event_type") === "purchase")
-        .select(col("user_id")).distinct().cache())(_.unpersist(blocking = false))
+        .select(col("user_id")).distinct())
     // The built-and-broadcast filter is memoized with the set it summarizes:
     // building it is two jobs (count + sketch aggregation) that otherwise
     // re-run on every invocation, and it is deterministic given conv.
     val bc = MemoCache.getOrElseUpdate(spark, ("bloom-filter", d))({
       val bloom = conv.stat.bloomFilter("user_id", math.max(conv.count(), 1L), 0.01)
       spark.sparkContext.broadcast(bloom)
-    })(b => b.unpersist(blocking = false))
+    })(_.unpersist(blocking = false))
     val mightConvert = udf((u: Long) => bc.value.mightContainLong(u))
     base
       .filter(mightConvert(col("user_id"))) // scan-side, no false negatives
@@ -2894,7 +2890,7 @@ object EventQueries {
     // window + two joins that build it — the measured plan carried 70
     // exchanges. Memoize the grid (users x days rows, the series matrix a
     // production system materializes once per index build).
-    val grid = MemoCache.getOrElseUpdate(spark, ("ts-grid", d))({
+    val grid = MemoCache.frame(spark, ("ts-grid", d)) {
       val daily = ev(spark, d)
         .groupBy(col("user_id"),
           date_format(col("ts").cast("timestamp"), "yyyy-MM-dd").as("day"))
@@ -2908,8 +2904,7 @@ object EventQueries {
         .withColumn("v0", coalesce(col("v"), lit(0L)))
         .crossJoin(broadcast(nDays))
         .withColumn("seg", expr(s"(idx - 1) * $TsSegments DIV L"))
-        .cache()
-    })(_.unpersist(blocking = false))
+    }
     // The PAA sketch (users x TsSegments rows) is the index a production
     // deployment materializes once next to the grid; per invocation it was
     // aggregated from the grid TWICE (query-side and corpus-side of the
@@ -2917,10 +2912,9 @@ object EventQueries {
     // one-row min over the cached grid — resolved once (CountMemo) and
     // inlined as a literal, which replaces two crossJoin(broadcast(qUser))
     // subtree builds per invocation with pushed-down filters.
-    val paa = MemoCache.getOrElseUpdate(spark, ("ts-paa", d))(
+    val paa = MemoCache.frame(spark, ("ts-paa", d))(
       grid.groupBy(col("user_id"), col("seg"))
-        .agg(sum(col("v0")).as("sv"), first(col("L")).as("L"))
-        .cache())(_.unpersist(blocking = false))
+        .agg(sum(col("v0")).as("sv"), first(col("L")).as("L")))
     // Empty events: min() over an empty grid is NULL (getLong would NPE).
     // Long.MinValue marks "no user" (ids are parquet longs; the fixture
     // generator never emits it) so the CountMemo slot stays a plain long;
@@ -3143,18 +3137,6 @@ object EventQueries {
   }
 
   // ------------------------------------------------------------ rolling HLL
-  /** 7-day rolling distinct users per event type — the re-aggregation
-    * payoff of a MERGEABLE sketch: the data is scanned ONCE to build the
-    * daily register table ([[hllRegs]]); every sliding window then merges
-    * register rows (register union = per-bucket max), so the window pass
-    * costs O(days x types x 1024) — sketch-sized, independent of event
-    * volume. An exact COUNT DISTINCT would re-shuffle the raw events once
-    * per window.
-    *
-    * The day-range merge is a broadcast join against the (tiny) distinct-
-    * day list rather than a window function: a bucket silent on day d must
-    * still contribute its day d-3 register to d's window, which a window
-    * over the sparse register rows would miss. */
   /** 7-day sliding re-merge of a daily sketch table: checkpoint the
     * (sketch-sized) table once — the day list and the window merge would
     * otherwise each re-run the corpus-scale build — then broadcast-join
@@ -3162,12 +3144,12 @@ object EventQueries {
     * A window function over the sparse sketch rows would NOT work: a key
     * silent on day d must still contribute its day d-3 row to d's window.
     * Shared by [[rollingDistinct]] (register max) and [[rollingP95]]
-    * (bin-count sum). */
-  /** Materialized daily sketch tables, memoized per (session, dataset,
-    * sketch kind) in the bounded [[MemoCache]] like the LM/TF-IDF model
-    * caches: the build is the only corpus-scale work in the rolling
-    * queries, and repeated invocations (bench cold+warm, both queries over
-    * one session) must not re-scan. */
+    * (bin-count sum).
+    *
+    * The checkpointed table is memoized per (dataset, sketch kind): the
+    * build is the only corpus-scale work in the rolling queries, and
+    * repeated invocations (bench cold+warm, both queries over one session)
+    * must not re-scan. */
   private def slidingMerge7(spark: SparkSession, d: String, tag: String,
                             sketch: => DataFrame, keys: Seq[String],
                             mergeAgg: Column): DataFrame = {
@@ -3180,6 +3162,18 @@ object EventQueries {
       .agg(mergeAgg)
   }
 
+  /** 7-day rolling distinct users per event type — the re-aggregation
+    * payoff of a MERGEABLE sketch: the data is scanned ONCE to build the
+    * daily register table ([[hllRegs]]); every sliding window then merges
+    * register rows (register union = per-bucket max), so the window pass
+    * costs O(days x types x 1024) — sketch-sized, independent of event
+    * volume. An exact COUNT DISTINCT would re-shuffle the raw events once
+    * per window.
+    *
+    * The day-range merge is a broadcast join against the (tiny) distinct-
+    * day list rather than a window function: a bucket silent on day d must
+    * still contribute its day d-3 register to d's window, which a window
+    * over the sparse register rows would miss. */
   def rollingDistinct(spark: SparkSession, d: String): DataFrame = {
     val base = ev(spark, d).select(
       date_format(col("ts").cast("timestamp"), "yyyy-MM-dd").as("day"),
@@ -3363,17 +3357,6 @@ object EventQueries {
   }
 
   // ------------------------------------------------------------ Z-order
-  /** Z-order (Morton) layout key over (user_id, day) — the data-layout
-    * primitive behind multi-dimensional data skipping: sorting/packing by
-    * the interleaved key co-locates rows that are close in BOTH dimensions,
-    * so a file (here `zfile`, the key's top tiles) is prunable by min/max
-    * stats on either column. The standard OPTIMIZE ZORDER shape.
-    *
-    * Pure per-row bit math, fully unrolled into 16 shift/mask terms —
-    * stays inside whole-stage codegen, no UDF, exchange-free; the oracle
-    * evaluates the IDENTICAL integer expression. At 100 TB the actual
-    * re-layout is `repartitionByRange(zvalue).sortWithinPartitions` on
-    * write; the key itself is this narrow pass. */
   /** The 16-round bit interleave shared by [[zorder]] and [[layoutSkip]] —
     * ONE definition, or the skip report silently measures a different key
     * than the layout query it claims to compare. */
@@ -3392,6 +3375,17 @@ object EventQueries {
       s"(((day_num & 65535) >> $i) & 1) * ${1L << (2 * i + 1)}"
   }.mkString(" + ")
 
+  /** Z-order (Morton) layout key over (user_id, day) — the data-layout
+    * primitive behind multi-dimensional data skipping: sorting/packing by
+    * the interleaved key co-locates rows that are close in BOTH dimensions,
+    * so a file (here `zfile`, the key's top tiles) is prunable by min/max
+    * stats on either column. The standard OPTIMIZE ZORDER shape.
+    *
+    * Pure per-row bit math, fully unrolled into 16 shift/mask terms —
+    * stays inside whole-stage codegen, no UDF, exchange-free; the oracle
+    * evaluates the IDENTICAL integer expression. At 100 TB the actual
+    * re-layout is `repartitionByRange(zvalue).sortWithinPartitions` on
+    * write; the key itself is this narrow pass. */
   def zorder(spark: SparkSession, d: String): DataFrame =
     ev(spark, d)
       .select(col("event_id"), col("user_id"),
@@ -3488,15 +3482,14 @@ object EventQueries {
     // cached (MemoCache-bounded): three layout sorts + the bounds
     // aggregation all read the same keyed projection — uncached, each
     // would re-scan and re-derive both curve keys
-    val keyed = MemoCache.getOrElseUpdate(spark, ("layout-keyed", d))(
+    val keyed = MemoCache.frame(spark, ("layout-keyed", d))(
       ev(spark, d)
         .select(col("event_id"), col("user_id"),
           datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
             .cast("long").as("day_num"))
         .withColumn("zvalue", zvalueOf(col("user_id"), col("day_num")))
         .withColumn("hvalue", graft.functions.GraftFunctions.hilbertIndex(
-          col("user_id"), col("day_num")))
-        .cache())(_.unpersist(blocking = false))
+          col("user_id"), col("day_num"))))
     // per-term INTEGER floor division, exactly like the oracle's `//`:
     // summing real divisions and truncating once diverges by 1 whenever
     // (max-min) mod 8 ∈ {3, 6, 7} — caught at sf0.1 (range 1499: 562 vs
@@ -4348,7 +4341,7 @@ object EventQueries {
     * (gate count / marginals / both pair-join sides) and the per-user
     * window sort would otherwise rerun per read. */
   private def cappedInteractions(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("capped-ui", d))({
+    MemoCache.frame(spark, ("capped-ui", d)) {
       val ui0 = ev(spark, d)
         .select(col("user_id"),
           get_json_object(col("props"), "$.k").cast("int").as("item"))
@@ -4359,8 +4352,7 @@ object EventQueries {
       ui0.withColumn("rk", row_number().over(byUser))
         .filter(col("rk") <= ItemSimUserCap)
         .select(col("user_id"), col("item"))
-        .cache()
-    })(_.unpersist(blocking = false))
+    }
 
   /** Per-(session, dataset) distinct-item count of the capped interaction
     * set ([[CountMemo]]) — sizes the broadcast gate below without
@@ -4409,15 +4401,14 @@ object EventQueries {
     * — memoized once; itemSim reads it whole, triangles filters it to its
     * edge threshold. Catalog-pair-sized (≤ items²/2 rows). */
   private def coocPairs(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("ui-cooc", d))({
+    MemoCache.frame(spark, ("ui-cooc", d)) {
       val ui = cappedInteractions(spark, d)
       ui.as("a")
         .join(ui.as("b"),
           col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
         .groupBy(col("a.item").as("i"), col("b.item").as("j"))
         .agg(count(lit(1)).cast("long").as("cooc"))
-        .cache()
-    })(_.unpersist(blocking = false))
+    }
 
   def itemSim(spark: SparkSession, d: String): DataFrame = {
     val ui = cappedInteractions(spark, d)
@@ -4491,7 +4482,7 @@ object EventQueries {
     // fan-out below the pair exchange (guide §2.3 aggregate/filter before
     // you shuffle). itemSim's unfiltered [[coocPairs]] memo is untouched;
     // a triangles-only cold no longer pays the full catalog-pair build.
-    val edges = MemoCache.getOrElseUpdate(spark, ("tri-edges", d))({
+    val edges = MemoCache.frame(spark, ("tri-edges", d)) {
       val ui = cappedInteractions(spark, d)
       val hot = ui.groupBy(col("item")).agg(count(lit(1)).as("nv"))
         .filter(col("nv") * 100 >= lit(TriangleMinCoocPct) * lit(nUsers))
@@ -4504,8 +4495,7 @@ object EventQueries {
         .agg(count(lit(1)).cast("long").as("cooc"))
         .filter(col("cooc") * 100 >= lit(TriangleMinCoocPct) * lit(nUsers))
         .select(col("i"), col("j"))
-        .cache()
-    })(_.unpersist(blocking = false))
+    }
     // degree-orientation: rank vertices by (degree, id); orient low → high
     val deg = edges.select(col("i").as("v")).union(edges.select(col("j").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
@@ -4526,7 +4516,7 @@ object EventQueries {
     // per-invocation cost once the edge table is memo-resident — memoize
     // the (item, n_triangles) credit table too (catalog-sized), same
     // policy as the pair tables.
-    val credit = MemoCache.getOrElseUpdate(spark, ("tri-credit", d))({
+    val credit = MemoCache.frame(spark, ("tri-credit", d)) {
       val wedges = oriented.as("e1")
         .join(oriented.as("e2"),
           col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))
@@ -4537,8 +4527,7 @@ object EventQueries {
       // per-item participation: each triangle credits all three corners
       tris.select(explode(array(col("apex"), col("b"), col("c"))).as("item"))
         .groupBy(col("item")).agg(count(lit(1)).cast("long").as("n_triangles"))
-        .cache()
-    })(_.unpersist(blocking = false))
+    }
     deg.select(col("v").as("item"), col("deg").cast("long").as("degree"))
       .join(credit, Seq("item"), "left")
       .select(col("item"), col("degree"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.GraftConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** The ONE bounded memo store behind every query-layer memoization
   * (near-dup pair table, LM/DSIR/CMS models, BPE merge tables, TF-IDF
@@ -9,8 +10,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * frees its cluster-side storage (cached-DataFrame `unpersist`, broadcast
   * executor copies) when the entry leaves the cache, so a long-lived
   * session sweeping many (dataset, config) keys holds at most
-  * `spark.graft.memo.maxEntries` (default 8) materialized intermediates —
-  * previously each cache grew without bound for the session's lifetime.
+  * `spark.graft.memo.maxEntries` (default 8) materialized intermediates.
+  *
+  * Policy — which tool holds what:
+  *  - [[frame]] for a reusable DataFrame that several queries (or several
+  *    reads of one query) share. The frame is `cache()`d, so it keeps its
+  *    lineage: a lost partition recomputes from the source tables.
+  *  - [[getOrElseUpdate]] with an explicit release for everything else
+  *    worth sharing: broadcasts, tuples of frames, driver-side values.
+  *  - `localCheckpoint` to cut per-invocation iterative lineage (trainer
+  *    loops, rank iterations). It drops lineage, so it is memoized only
+  *    where the table is sketch-sized and cheap to rebuild (the rolling
+  *    sketch tables), released with [[unpersistLocalCheckpoint]].
+  *  - [[CountMemo]] for scalars that size operator knobs.
+  *
+  * The contract, after the cross-query reuse of session intermediates in
+  * the incremental top-k work (EDBT 2020): bounded (LRU plus a sweep of
+  * stopped sessions), in-session only (every value lives in the session's
+  * cluster or driver memory, nothing is written for a later run) and
+  * results-neutral (an evicted or disabled memo recomputes the same rows;
+  * MemoCacheSpec pins this with the memo clamped to one slot).
   *
   * Eviction policy: least-recently-USED (access-ordered), plus an eager
   * sweep of entries whose owning session has stopped (their storage died
@@ -44,6 +63,15 @@ private[graft] object MemoCache {
   private def releaseQuietly(e: Entry): Unit =
     try e.release() catch { case _: Throwable => }
 
+  /** Release and drop least-recently-used entries until at most `limit`
+    * remain. */
+  private def evictBeyond(limit: Int): Unit =
+    while (entries.size() > limit) {
+      val it = entries.entrySet().iterator()
+      releaseQuietly(it.next().getValue)
+      it.remove()
+    }
+
   private def sweepStopped(): Unit = {
     val it = entries.entrySet().iterator()
     while (it.hasNext) if (it.next().getKey._1.sparkContext.isStopped) it.remove()
@@ -70,27 +98,30 @@ private[graft] object MemoCache {
       // residency. Reentrant computes (nested getOrElseUpdate) each make
       // their own room under the same lock.
       val max = math.max(1, GraftConf.MemoMaxEntries.get(spark))
-      while (entries.size() >= max) {
-        val it = entries.entrySet().iterator()
-        val eldest = it.next()
-        releaseQuietly(eldest.getValue)
-        it.remove()
-      }
+      evictBeyond(max - 1)
       val v = compute
       entries.put(k, Entry(v, () => release(v)))
       // Backstop for reentrant computes that inserted while this frame's
       // slot was reserved only implicitly: the bound must hold on exit.
       // (Different keys rarely share a plan, so the same-plan hazard the
       // pre-eviction removes does not reappear here.)
-      while (entries.size() > max) {
-        val it = entries.entrySet().iterator()
-        val eldest = it.next()
-        releaseQuietly(eldest.getValue)
-        it.remove()
-      }
+      evictBeyond(max)
       v
     }
   }
+
+  /** Memoize a reusable DataFrame under (session, key), the one storage
+    * and release rule for memoized frames: on a miss, after
+    * [[getOrElseUpdate]] has made room, `build` runs and its result is
+    * `cache()`d at the session's default level (MEMORY_AND_DISK: nothing
+    * sets `spark.sql.defaultCacheStorageLevel`); eviction releases it with
+    * a non-blocking `unpersist`. A build that materializes its result
+    * eagerly (persist + count) is kept as it is, not cached twice. */
+  def frame(spark: SparkSession, key: Any)(build: => DataFrame): DataFrame =
+    getOrElseUpdate(spark, key) {
+      val df = build
+      if (df.storageLevel == StorageLevel.NONE) df.cache() else df
+    }(_.unpersist(blocking = false))
 
   /** Release + drop every entry of `spark` whose key matches — explicit
     * invalidation for superseded config variants of the same dataset. */

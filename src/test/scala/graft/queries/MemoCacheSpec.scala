@@ -56,6 +56,43 @@ class MemoCacheSpec extends SparkSpec {
     assert(lmAgain === lmBaseline)
   }
 
+  test("frame: resident frames are cached MEMORY_AND_DISK; LRU eviction unpersists") {
+    MemoCache.evict(spark, _ => true)
+    withConf(GraftConf.MemoMaxEntries.key, "2") {
+      val a = MemoCache.frame(spark, ("memo-spec-frame", 1))(spark.range(50).toDF("x"))
+      assert(a.storageLevel === StorageLevel.MEMORY_AND_DISK)
+      // a build that persists its own result keeps that level
+      val eager = spark.range(60).toDF("x").persist(StorageLevel.MEMORY_ONLY)
+      val b = MemoCache.frame(spark, ("memo-spec-frame", 2))(eager)
+      assert(b.storageLevel === StorageLevel.MEMORY_ONLY)
+      assert(MemoCache.frame(spark, ("memo-spec-frame", 1))(sys.error("must hit memo")) eq a)
+      // a third key evicts the least-recently-used entry: key 2, since key 1
+      // was just read
+      MemoCache.frame(spark, ("memo-spec-frame", 3))(spark.range(70).toDF("x"))
+      assert(b.storageLevel === StorageLevel.NONE, "evicted frame must be unpersisted")
+      assert(a.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    }
+    MemoCache.evict(spark, _ => true)
+  }
+
+  test("frame: a plan rebuilt under a new key after its twin's eviction stays cached") {
+    // The CacheManager keys cached data by plan. Room must be made BEFORE
+    // the build is cached: caching first would no-op against the twin, and
+    // the twin's release would then uncache the new frame.
+    MemoCache.evict(spark, _ => true)
+    def twin = spark.range(80).toDF("x").selectExpr("x * 3 AS y")
+    withConf(GraftConf.MemoMaxEntries.key, "1") {
+      val first = MemoCache.frame(spark, ("memo-spec-twin", 1))(twin)
+      assert(first.storageLevel === StorageLevel.MEMORY_AND_DISK)
+      val second = MemoCache.frame(spark, ("memo-spec-twin", 2))(twin)
+      assert(MemoCache.size === 1)
+      assert(second.storageLevel === StorageLevel.MEMORY_AND_DISK,
+        "evicting the twin must not uncache the frame built after it")
+      assert(second.count() === 80)
+    }
+    MemoCache.evict(spark, _ => true)
+  }
+
   test("unpersistLocalCheckpoint frees the checkpoint RDD's storage") {
     val df = spark.range(100).toDF("x").localCheckpoint()
     val rdds = df.queryExecution.analyzed.collectLeaves().collect {

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftConf, SparkSpec}
+import graft.{GraftConf, SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Validation of the non-SQL-expressible pipeline ops against exact
@@ -2671,15 +2671,25 @@ class PipelineSpec extends SparkSpec {
     assert(full.forall(_.getAs[Boolean]("lb_ok")))
   }
 
-  test("ts search on an empty events table: no rows, the sf0.001 schema") {
-    val empty = java.nio.file.Files.createTempDirectory("graft-ts-empty").toString
-    spark.read.parquet(s"$sf/events.parquet").limit(0)
-      .write.parquet(s"$empty/events.parquet")
-    val got = EventQueries.queries("evt_ts_search")(spark, empty)
-    assert(got.collect().isEmpty)
-    val want = EventQueries.queries("evt_ts_search")(spark, sf)
-    def fields(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
-    assert(fields(got) === fields(want))
+  // Each query runs its normal pipeline over an empty copy of its input
+  // table: no hand-built empty schema, so the result must still carry the
+  // field names and types of the sf0.001 result.
+  Seq(
+    ("ts search", "evt_ts_search", "events"),
+    ("pagerank", "evt_pagerank", "events"),
+    ("textrank", "doc_textrank", "documents"),
+  ).foreach { case (label, name, table) =>
+    test(s"$label on an empty $table table: no rows, the sf0.001 schema") {
+      val empty = java.nio.file.Files.createTempDirectory("graft-empty").toString
+      spark.read.parquet(s"$sf/$table.parquet").limit(0)
+        .write.parquet(s"$empty/$table.parquet")
+      val query = SparkEntry.queries(name)
+      val got = query(spark, empty)
+      assert(got.collect().isEmpty)
+      val want = query(spark, sf)
+      def fields(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
+      assert(fields(got) === fields(want))
+    }
   }
 
   test("scene cuts: golden rows hand-computed OUTSIDE both engines") {

@@ -10,7 +10,10 @@ second (change):
   loadavg/GC evidence).
 - perfbench result.json (`.bench_build/perfbench/results/*/result.json`):
   the end-to-end metrics, the per-layer metrics and the spine ladder's
-  per-layer self times side by side, each with its B/A ratio."""
+  per-layer self times side by side, each with its B/A ratio. For two
+  traced query_suite runs of one seed it also checks the memo layer: a
+  `memo drift` line means `queries.memo_hits` or `queries.memo_misses`
+  differ, which a results-neutral change must not cause."""
 import sys, json
 
 import re
@@ -64,6 +67,25 @@ def perfbench_diff(pa, a, pb, b):
     la, lb = a.get("ladder", {}), b.get("ladder", {})
     if la or lb:
         table("ladder self_s", la.get("self_s", {}), lb.get("self_s", {}))
+    memo_check(a, b)
+
+
+MEMO_KEYS = ("queries.memo_hits", "queries.memo_misses")
+
+
+def memo_check(a, b):
+    """Same seed, both traced query_suite runs: the memo lookups must match."""
+    sa, sb = a.get("stamp", {}), b.get("stamp", {})
+    if not (sa.get("workload") == sb.get("workload") == "query_suite"
+            and sa.get("trace") and sb.get("trace")
+            and sa.get("seed") == sb.get("seed")):
+        return
+    va = [a["per_layer"].get(k) for k in MEMO_KEYS]
+    vb = [b["per_layer"].get(k) for k in MEMO_KEYS]
+    if va != vb:
+        print(f"\nmemo drift: hits {va[0]} -> {vb[0]}, misses {va[1]} -> {vb[1]}")
+    else:
+        print(f"\nmemo: {va[0]:g} hits, {va[1]:g} misses on both sides")
 
 
 def bench_diff(pa, a, qa, pb, b, qb):
