@@ -1,9 +1,10 @@
 package graft.sinks
 
-import org.apache.avro.Schema
+import graft.schema.AvroSchemas
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 import java.io.File
 import java.nio.file.{Files, Paths}
 
@@ -31,7 +32,8 @@ import java.nio.file.{Files, Paths}
   * Retry safety: the working file carries the task ATTEMPT id (two
   * speculative attempts never write the same partial), and the final name
   * is attempt-independent, so a retry's rename overwrites with identical
-  * content instead of duplicating.
+  * content instead of duplicating. A partition that fails mid-write
+  * deletes its working file.
   */
 object AvroFileSink {
 
@@ -40,14 +42,14 @@ object AvroFileSink {
     * batch id) when replays must overwrite rather than duplicate. */
   def write(df: DataFrame, dir: String, tag: String = "spark",
             syncInterval: Int = 1000, stamp: Option[String] = None): String = {
-    val schemaJson = AvroConversions.toAvroSchema(df.schema).toString
+    val schemaJson = AvroSchemas.toAvroSchema(df.schema).toString
     val stampStr = stamp.getOrElse(new java.text.SimpleDateFormat("yyyyMMddHHmmss")
       .format(new java.util.Date()))
     Files.createDirectories(Paths.get(dir))
     df.rdd.mapPartitionsWithIndex { (pid, rows) =>
       if (!rows.hasNext) Iterator.empty // no empty files
       else {
-        val schema = new Schema.Parser().parse(schemaJson)
+        val schema = AvroSchemas.cachedSchema(schemaJson)
         val attempt = Option(org.apache.spark.TaskContext.get())
           .map(_.taskAttemptId()).getOrElse(0L)
         val file = new File(dir, f"$stampStr-divolte-tracking-$tag-$pid%05d.avro")
@@ -58,10 +60,11 @@ object AvroFileSink {
         writer.create(schema, working)
         var n = 0L
         try {
-          rows.foreach { row => writer.append(AvroConversions.toRecord(row, schema)); n += 1 }
-        } finally writer.close()
-        if (!working.renameTo(file) && !file.exists())
-          throw new java.io.IOException(s"atomic publish failed for $file")
+          try rows.foreach { row => writer.append(AvroSchemas.toRecord(row, schema)); n += 1 }
+          finally writer.close()
+          if (!working.renameTo(file) && !file.exists())
+            throw new java.io.IOException(s"atomic publish failed for $file")
+        } finally working.delete() // a no-op once published; a failed write leaves no partial
         Iterator.single(file.getPath -> n)
       }
     }.collect()
@@ -87,17 +90,24 @@ object AvroFileSink {
   /** Distributed read-back of a container-file dir into a typed DataFrame
     * (the consume side of [[write]]; no spark-avro module on the unmanaged
     * classpath, so the container decode is explicit). One input file per
-    * task — files stream record-by-record through the shared Avro→Row
-    * converter; nothing collects to the driver. */
-  def readBackDf(spark: SparkSession, dir: String,
-                 schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    * task — files stream record-by-record; nothing collects to the driver.
+    *
+    * Each file is read with its header's schema as the writer schema and
+    * `AvroSchemas.toAvroSchema(schema)` as the reader schema, so Avro's
+    * schema resolution hands back records in `schema`'s shape: a nullable
+    * field an older file lacks reads as null, an int written where
+    * `schema` has long (or float/double) is promoted. A file the
+    * resolution cannot reconcile with `schema` (a non-null field it lacks,
+    * an incompatible type) fails the read. */
+  def readBackDf(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
     val files = Option(new File(dir).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".avro")).map(_.getPath).sorted.toSeq
+    val schemaJson = AvroSchemas.toAvroSchema(schema).toString
     val rdd = spark.sparkContext
       .parallelize(files, math.max(1, files.size))
       .flatMap { path =>
-        val reader = new DataFileReader[GenericRecord](
-          new File(path), new GenericDatumReader[GenericRecord]())
+        val reader = new DataFileReader[GenericRecord](new File(path),
+          new GenericDatumReader[GenericRecord](AvroSchemas.cachedSchema(schemaJson)))
         // close on TASK COMPLETION, not just clean exhaustion: a limit()/
         // take() that stops early, or a failure mid-read, would otherwise
         // leak the file handle for the executor's lifetime
@@ -106,8 +116,7 @@ object AvroFileSink {
             try reader.close() catch { case _: Exception => () }))
         new Iterator[Row] {
           def hasNext: Boolean = { val h = reader.hasNext; if (!h) reader.close(); h }
-          def next(): Row =
-            graft.sources.TopicSources.fromRecord(reader.next(), schema)
+          def next(): Row = AvroSchemas.fromRecord(reader.next(), schema)
         }
       }
     spark.createDataFrame(rdd, schema)

@@ -1,12 +1,10 @@
 package graft.sinks
 
+import graft.schema.AvroSchemas
 import org.apache.avro.Schema
 import org.apache.avro.SchemaNormalization
-import org.apache.avro.generic.{GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.EncoderFactory
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import java.io.ByteArrayOutputStream
 import java.util.Base64
 
 /** Topic sink encodings (reference §2E):
@@ -21,32 +19,18 @@ import java.util.Base64
   *    fingerprint, base64url no-padding)
   *    (`GoogleCloudPubSubFlusher.java:43-120`).
   *
-  * The encoded frame is produced as binary columns — the actual transport
-  * (`writeStream.format("kafka")` / a Pub/Sub `foreachBatch`) consumes them
-  * unchanged, so the wire bytes are testable without a broker.
+  * The datum is `AvroSchemas.encode` of the row under
+  * `AvroSchemas.toAvroSchema(df.schema)`. The encoded frame is produced as
+  * binary columns — the actual transport (`writeStream.format("kafka")` / a
+  * Pub/Sub `foreachBatch`) consumes them unchanged, so the wire bytes are
+  * testable without a broker.
   */
 object TopicSinks {
 
-  /** Per-executor datum-writer cache — writer construction is schema
-    * resolution work, too slow for per-row use (same hazard class as
-    * [[AvroConversions.cachedSchema]]). */
-  private val writerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, GenericDatumWriter[GenericRecord]]()
-  private def cachedWriter(json: String): GenericDatumWriter[GenericRecord] =
-    writerCache.computeIfAbsent(json,
-      j => new GenericDatumWriter[GenericRecord](AvroConversions.cachedSchema(j)))
-
   /** Per-row Avro binary encoding of all columns as one datum. */
   def avroBinary(df: DataFrame): DataFrame = {
-    val schemaJson = AvroConversions.toAvroSchema(df.schema).toString
-    val enc = udf { (row: org.apache.spark.sql.Row) =>
-      val schema = AvroConversions.cachedSchema(schemaJson)
-      val out = new ByteArrayOutputStream()
-      val encoder = EncoderFactory.get().binaryEncoder(out, null)
-      cachedWriter(schemaJson).write(AvroConversions.toRecord(row, schema), encoder)
-      encoder.flush()
-      out.toByteArray
-    }
+    val schemaJson = AvroSchemas.toAvroSchema(df.schema).toString
+    val enc = udf((row: Row) => AvroSchemas.encode(row, schemaJson))
     df.withColumn("__avro", enc(struct(df.columns.map(col).toIndexedSeq: _*)))
   }
 
@@ -58,9 +42,7 @@ object TopicSinks {
 
   /** Confluent wire format: 0x00 magic + int32 big-endian schema id + body. */
   def confluentHeader(schemaId: Int): Array[Byte] =
-    Array[Byte](0,
-      ((schemaId >> 24) & 0xff).toByte, ((schemaId >> 16) & 0xff).toByte,
-      ((schemaId >> 8) & 0xff).toByte, (schemaId & 0xff).toByte)
+    java.nio.ByteBuffer.allocate(5).put(0.toByte).putInt(schemaId).array()
 
   def kafkaFrameConfluent(df: DataFrame, partyIdCol: String, schemaId: Int): DataFrame =
     avroBinary(df).select(
@@ -76,7 +58,7 @@ object TopicSinks {
   /** Pub/Sub message shape: data + attribute columns. */
   def pubsubFrame(df: DataFrame, partyIdCol: String, eventIdCol: String,
                   timestampMsCol: String): DataFrame = {
-    val fp = schemaFingerprint(AvroConversions.toAvroSchema(df.schema))
+    val fp = schemaFingerprint(AvroSchemas.toAvroSchema(df.schema))
     avroBinary(df).select(
       col("__avro").as("data"),
       col(partyIdCol).as("partyIdentifier"),

@@ -1,16 +1,13 @@
 package graft.sources
 
-import graft.sinks.AvroConversions
-import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-import org.apache.avro.io.DecoderFactory
+import graft.schema.AvroSchemas
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import scala.jdk.CollectionConverters._
 
-/** Topic SOURCE decoders — the consume side of [[graft.sinks.TopicSinks]]:
-  * a Kafka-shaped frame (`key`/`value` binary columns, as produced by
-  * `spark.readStream.format("kafka")` or the sink tests) back into typed
+/** Topic SOURCE decoders — the consume side of the `graft.sinks.TopicSinks`
+  * frames: a Kafka-shaped frame (`key`/`value` binary columns, as produced
+  * by `spark.readStream.format("kafka")` or the sink tests) back into typed
   * rows. Handles both naked Avro values and Confluent-framed values
   * (0x00 magic + int32-BE schema id + body).
   *
@@ -20,94 +17,41 @@ import scala.jdk.CollectionConverters._
   */
 object TopicSources {
 
-  /** Per-executor datum-reader cache: reader construction sets up schema
-    * resolution, which at per-row frequency dominates the decode itself —
-    * the same hazard [[AvroConversions.cachedSchema]] already solves for
-    * schema parsing. */
-  private val readerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, GenericDatumReader[GenericRecord]]()
-  private def cachedReader(json: String): GenericDatumReader[GenericRecord] =
-    readerCache.computeIfAbsent(json,
-      j => new GenericDatumReader[GenericRecord](AvroConversions.cachedSchema(j)))
-
   /** Decode the `value` binary column as Avro into a struct column
     * `record`, dropping the wire frame. `confluent=true` strips the 5-byte
-    * header first (and exposes the embedded schema id). Null values (Kafka
-    * tombstones on compacted topics), frames too short to carry the
-    * confluent header, AND frames whose body fails the Avro decode (a
-    * corrupt message, a foreign producer) all decode to a null record
+    * header first and exposes the embedded schema id as `schemaId`, a
+    * signed big-endian int32 as Confluent's serializer writes it. Null
+    * values (Kafka tombstones on compacted topics), frames too short to
+    * carry the confluent header, AND frames whose body fails the Avro decode
+    * (a corrupt message, a foreign producer) all decode to a null record
     * instead of killing the job — a poison-pill message must never wedge a
     * checkpointed query on its own offset.
     *
     * Writer-schema caveat: a naked binary frame does not carry its writer
-    * schema, so `recordSchema` is used as BOTH writer and reader schema —
-    * frames published under an OLDER schema version need the container-file
-    * path (whose header carries the real writer schema and exercises the
-    * [[fromRecord]] evolution probe) or a schema-registry lookup by the
-    * confluent id, which this offline module does not model. */
+    * schema, so `AvroSchemas.toAvroSchema(recordSchema)` is used as BOTH
+    * writer and reader schema, and schema resolution has nothing to
+    * reconcile. Frames published under an OLDER schema version need the
+    * container-file path (`AvroFileSink.readBackDf`, whose file header
+    * carries the real writer schema for Avro's resolution) or a
+    * schema-registry lookup by the confluent id, which this offline module
+    * does not model. */
   def decodeKafkaFrame(frames: DataFrame, recordSchema: StructType,
                        confluent: Boolean = false): DataFrame = {
-    val avroSchemaJson = AvroConversions.toAvroSchema(recordSchema).toString
+    val schemaJson = AvroSchemas.toAvroSchema(recordSchema).toString
+    val offset = if (confluent) 5 else 0
     val dec = udf(new org.apache.spark.sql.api.java.UDF1[Array[Byte], Row] {
-      override def call(value: Array[Byte]): Row = {
-        if (value == null || (confluent && value.length < 5)) return null
-        val body = if (confluent) java.util.Arrays.copyOfRange(value, 5, value.length) else value
-        val decoder = DecoderFactory.get().binaryDecoder(body, null)
-        try fromRecord(cachedReader(avroSchemaJson).read(null, decoder), recordSchema)
+      override def call(value: Array[Byte]): Row =
+        if (value == null || value.length < offset) null
+        else try AvroSchemas.decode(value, offset, recordSchema, schemaJson)
         catch { case _: Exception => null } // corrupt frame -> null record
-      }
     }, recordSchema)
+    val schemaId = udf((value: Array[Byte]) =>
+      Option(value).filter(_.length >= 5).map(java.nio.ByteBuffer.wrap(_, 1, 4).getInt))
     val withId =
-      if (confluent)
-        frames.withColumn("schemaId",
-          expr("cast(conv(hex(substring(value, 2, 4)), 16, 10) as int)"))
+      if (confluent) frames.withColumn("schemaId", schemaId(col("value")))
       else frames
     withId
       .withColumn("record", dec(col("value")))
       .withColumn("partyId", col("key").cast("string"))
-  }
-
-  private[graft] def fromRecord(rec: GenericRecord, schema: StructType): Row =
-    Row.fromSeq(schema.fields.map { f =>
-      // schema evolution: a field the READER knows but this (older) record
-      // lacks resolves to null — the reference's [null,T]+default union
-      // convention; GenericRecord.get(name) THROWS on unknown fields, so
-      // probe the writer schema first
-      if (rec.getSchema.getField(f.name) == null) null
-      else fromAvroValue(rec.get(f.name), f.dataType)
-    }.toIndexedSeq)
-
-  /** Recursive Avro→Row value conversion — mirrors the full type surface of
-    * [[AvroConversions.toAvroSchema]] (strings arrive as Utf8, arrays as
-    * GenericData.Array, maps with Utf8 keys — all of which Catalyst's Row
-    * converter rejects raw). */
-  private def fromAvroValue(v: Any, dt: org.apache.spark.sql.types.DataType): Any = v match {
-    case null => null
-    case s: org.apache.avro.util.Utf8 => s.toString
-    case s: CharSequence => s.toString
-    case b: java.nio.ByteBuffer =>
-      val arr = new Array[Byte](b.remaining()); b.duplicate().get(arr); arr
-    case nested: GenericRecord =>
-      fromRecord(nested, dt.asInstanceOf[StructType])
-    case c: java.util.Collection[_] =>
-      val elemType = dt.asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-      c.asScala.toSeq.map(fromAvroValue(_, elemType))
-    case m: java.util.Map[_, _] =>
-      val valueType = dt.asInstanceOf[org.apache.spark.sql.types.MapType].valueType
-      m.asScala.map { case (k, mv) => k.toString -> fromAvroValue(mv, valueType) }.toMap
-    // invert the sink's lossy-but-documented scalar mappings
-    // ([[AvroConversions.toAvroSchema]]: Timestamp -> long epoch-millis,
-    // Short/Byte -> int): without these a round trip of any timestamped
-    // schema fails Catalyst's external-type check
-    case l: java.lang.Long if dt == org.apache.spark.sql.types.TimestampType =>
-      new java.sql.Timestamp(l)
-    case l: java.lang.Long if dt == org.apache.spark.sql.types.TimestampNTZType =>
-      java.time.LocalDateTime.ofInstant(
-        java.time.Instant.ofEpochMilli(l), java.time.ZoneOffset.UTC)
-    case i: java.lang.Integer if dt == org.apache.spark.sql.types.ShortType =>
-      i.shortValue()
-    case i: java.lang.Integer if dt == org.apache.spark.sql.types.ByteType =>
-      i.byteValue()
-    case other => other
   }
 }

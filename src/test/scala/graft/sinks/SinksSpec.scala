@@ -2,6 +2,8 @@ package graft.sinks
 
 import graft.SparkSpec
 import graft.Tables
+import graft.schema.AvroSchemas
+import graft.sources.TopicSources
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.io.DecoderFactory
@@ -32,7 +34,7 @@ class SinksSpec extends SparkSpec {
     // reference filename convention
     assert(files.forall(_._1.matches("""\d{14}-divolte-tracking-spark-\d{5}\.avro""")))
     // no partials left behind; no empty container files
-    assert(!new java.io.File(dir).listFiles().exists(_.getName.endsWith(".partial")))
+    assert(!new java.io.File(dir).listFiles().exists(_.getName.contains(".partial-")))
     assert(files.forall(_._2 > 0))
     // total record count survives the round trip
     val expected = mapped.filter(col("value") > 190).count()
@@ -79,9 +81,87 @@ class SinksSpec extends SparkSpec {
     assert(back.filter(col("newField").startsWith("x-")).count() === 5)
   }
 
+  test("avro file sink: a partition failing mid-write fails the job, leaves no working file") {
+    val dir = java.nio.file.Files.createTempDirectory("avrofail").toString
+    // the third row throws while the partition streams into its working
+    // file, after two records were appended
+    val s = udf((i: Long) => if (i == 2) throw new IllegalStateException("row 2") else s"v$i")
+    val df = spark.range(5).coalesce(1).select(col("id"), s(col("id")).as("s"))
+    intercept[Exception](AvroFileSink.write(df, dir))
+    val left = new java.io.File(dir).listFiles().map(_.getName)
+    assert(left.isEmpty, left.mkString(", "))
+  }
+
+  test("codec: every sink type round-trips through container files and kafka frames") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    // the wire keeps epoch millis: timestamps here are ms-aligned
+    val ts = java.sql.Timestamp.valueOf("2026-08-12 10:00:00.123")
+    val ntz = java.time.LocalDateTime.of(2026, 8, 12, 10, 0, 0, 456000000)
+    val item = StructType(Seq(StructField("z", LongType)))
+    val nested = StructType(Seq(StructField("x", IntegerType, nullable = false),
+      StructField("y", StringType), StructField("items", ArrayType(item))))
+    // one field per row of the table, its values in rows 0..2; nullable
+    // fields are null in row 2
+    val table: Seq[(StructField, Seq[Any])] = Seq(
+      StructField("id", IntegerType, nullable = false) -> Seq(0, 1, 2),
+      StructField("bool", BooleanType) -> Seq(true, false, null),
+      StructField("bool_nn", BooleanType, nullable = false) -> Seq(true, false, true),
+      StructField("byte", ByteType) -> Seq(1.toByte, Byte.MinValue, null),
+      StructField("short", ShortType) -> Seq(1.toShort, Short.MinValue, null),
+      StructField("int", IntegerType) -> Seq(Int.MaxValue, Int.MinValue, null),
+      StructField("long", LongType, nullable = false) -> Seq(Long.MaxValue, Long.MinValue, 0L),
+      StructField("float", FloatType) -> Seq(1.5f, -2.25f, null),
+      StructField("double", DoubleType) -> Seq(math.Pi, -1e300, null),
+      StructField("string", StringType) -> Seq("ascii", "ünïcødé ✓", null),
+      StructField("binary", BinaryType) -> Seq(Array[Byte](0, -1, 127), Array.emptyByteArray, null),
+      StructField("ts", TimestampType) -> Seq(ts, new java.sql.Timestamp(-86400000L), null),
+      StructField("ts_ntz", TimestampNTZType, nullable = false) -> Seq(ntz, ntz.minusYears(60), ntz),
+      StructField("ints", ArrayType(IntegerType, containsNull = false)) ->
+        Seq(Seq(1, 2, 3), Seq.empty, null),
+      StructField("strs", ArrayType(StringType, containsNull = true)) ->
+        Seq(Seq("a", null, "c"), Seq(null), null),
+      StructField("map", MapType(StringType, LongType, valueContainsNull = true)) ->
+        Seq(Map("a" -> 1L, "b" -> null), Map.empty, null),
+      StructField("map_nn", MapType(StringType, DoubleType, valueContainsNull = false),
+        nullable = false) -> Seq(Map("k" -> 0.5), Map.empty, Map("k" -> -1.0)),
+      StructField("nested", nested) ->
+        Seq(Row(1, "a", Seq(Row(2L), Row(null))), Row(2, null, null), null))
+    val schema = StructType(table.map(_._1))
+    val rows = (0 until 3).map(r => Row.fromSeq(table.map(_._2(r))))
+    val df = spark.createDataFrame(rows.asJava, schema).coalesce(1)
+    val dir = java.nio.file.Files.createTempDirectory("avrotypes").toString
+    AvroFileSink.write(df, dir)
+    val fromFile = AvroFileSink.readBackDf(spark, dir, schema).orderBy("id").collect()
+    val fromKafka = TopicSources.decodeKafkaFrame(TopicSinks.kafkaFrame(df, "string"), schema)
+      .select("record.*").orderBy("id").collect()
+    for ((back, path) <- Seq(fromFile -> "container file", fromKafka -> "kafka frame");
+         ((f, _), i) <- table.zipWithIndex)
+      withClue(s"$path, ${f.name}: ") {
+        // one-field rows: Row equality compares binary by content
+        assert(back.map(r => Row(r.get(i))).toSeq === rows.map(r => Row(r.get(i))))
+      }
+    // evolution: a file written with an int field reads into long (Avro
+    // promotes it; getLong on a raw Integer would throw)
+    val evDir = java.nio.file.Files.createTempDirectory("avropromote").toString
+    AvroFileSink.write(df.select("id", "int"), evDir)
+    val widened = StructType(Seq(StructField("id", IntegerType, nullable = false),
+      StructField("int", LongType)))
+    val ev = AvroFileSink.readBackDf(spark, evDir, widened).orderBy("id").collect()
+    assert(ev.take(2).map(_.getLong(1)).toSeq === Seq(Int.MaxValue.toLong, Int.MinValue.toLong))
+    assert(ev(2).isNullAt(1))
+  }
+
+  test("wire schema: the DefaultMapping sink schema keeps its fingerprint") {
+    // a changed schema JSON changes the fingerprint Pub/Sub consumers key on
+    assert(TopicSinks.schemaFingerprint(AvroSchemas.toAvroSchema(graft.dsl.DefaultMapping.schema)) ===
+      "t_8IMJtB5dOBqKqFaUZCbUXJ8OQYnqDWfHI7JPXr76U")
+  }
+
   test("kafka frame: key is partyId bytes, value decodes as the record") {
     val df = mapped.limit(5)
-    val schema = AvroConversions.toAvroSchema(df.schema)
+    val schema = AvroSchemas.toAvroSchema(df.schema)
     val frames = TopicSinks.kafkaFrame(df, "partyId").collect()
     val rows = df.collect()
     frames.zip(rows).foreach { case (frame, row) =>
@@ -95,7 +175,7 @@ class SinksSpec extends SparkSpec {
 
   test("confluent frame: 0x00 + int32-BE schema id + naked body") {
     val df = mapped.limit(2)
-    val schema = AvroConversions.toAvroSchema(df.schema)
+    val schema = AvroSchemas.toAvroSchema(df.schema)
     val schemaId = 0x01020304
     val frames = TopicSinks.kafkaFrameConfluent(df, "partyId", schemaId).collect()
     frames.foreach { frame =>
@@ -109,7 +189,7 @@ class SinksSpec extends SparkSpec {
 
   test("pubsub frame: attributes carry ids, ISO timestamp, schema fingerprint") {
     val df = mapped.limit(3)
-    val fp = TopicSinks.schemaFingerprint(AvroConversions.toAvroSchema(df.schema))
+    val fp = TopicSinks.schemaFingerprint(AvroSchemas.toAvroSchema(df.schema))
     val out = TopicSinks.pubsubFrame(df, "partyId", "eventId", "ts_ms").collect()
     out.foreach { m =>
       assert(m.getAs[String]("schemaFingerprint") === fp)

@@ -1,6 +1,7 @@
 package graft.sinks
 
 import graft.{GraftConf, SparkSpec}
+import graft.schema.AvroSchemas
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Scripted Pub/Sub transport for the contract tests: `flaky` events fail
@@ -116,7 +117,7 @@ class StreamingSinkSpec extends SparkSpec {
     assert(msgs.head.attributes("timestamp").startsWith("2017-07-14T02:40:00.000"))
     assert(msgs.head.attributes.contains("schemaFingerprint"))
     // data is the naked Avro datum: decode it back
-    val schema = AvroConversions.toAvroSchema(
+    val schema = AvroSchemas.toAvroSchema(
       input.toDF.toDF("partyId", "eventId", "ts", "payload").schema)
     val rec = new org.apache.avro.generic.GenericDatumReader[
         org.apache.avro.generic.GenericRecord](schema)

@@ -79,6 +79,16 @@ class TopicSourcesSpec extends SparkSpec {
       .toDF("key", "value")
     val dec = TopicSources.decodeKafkaFrame(poison, withTs.schema)
     assert(dec.count() === 1 && dec.filter(col("record").isNull).count() === 1)
+    // the same pill behind a Confluent header whose schema id has the high
+    // bit set: the id reads as a signed int32 (0xFFFFFFFF = -1), the row
+    // survives with a null record
+    val framed = Seq(("k".getBytes("UTF-8"),
+        Array[Byte](0, -1, -1, -1, -1) ++ "not avro at all".getBytes("UTF-8")))
+      .toDF("key", "value")
+    val cdec = TopicSources.decodeKafkaFrame(framed, withTs.schema, confluent = true)
+      .select("schemaId", "record").collect()
+    assert(cdec.length === 1 && cdec.head.isNullAt(1))
+    assert(cdec.head.getInt(0) === -1)
   }
 
   test("a 304 (etag-suppressed) log line is flagged httpSuppressed") {

@@ -13,7 +13,10 @@ second (change):
   per-layer self times side by side, each with its B/A ratio. For two
   traced query_suite runs of one seed it also checks the memo layer: a
   `memo drift` line means `queries.memo_hits` or `queries.memo_misses`
-  differ, which a results-neutral change must not cause."""
+  differ, which a results-neutral change must not cause. For two traced
+  spine runs of one seed it checks the wire: a `wire drift` line names a
+  sink byte count or pipeline row count (`WIRE_KEYS`) that differs, which
+  a change that keeps the wire format must not cause."""
 import sys, json
 
 import re
@@ -68,17 +71,26 @@ def perfbench_diff(pa, a, pb, b):
     if la or lb:
         table("ladder self_s", la.get("self_s", {}), lb.get("self_s", {}))
     memo_check(a, b)
+    wire_check(a, b)
 
 
 MEMO_KEYS = ("queries.memo_hits", "queries.memo_misses")
+# identical across two spine runs of one seed on one engine (checked on
+# repeated parent runs); the ladder's timings are not
+WIRE_KEYS = ("sinks.avro_bytes", "sinks.kafka_bytes", "sources.corrupt_rows",
+             "state.flagged_rows", "topology.discarded_rows")
+
+
+def same_seed_traced(a, b, workload):
+    sa, sb = a.get("stamp", {}), b.get("stamp", {})
+    return (sa.get("workload") == sb.get("workload") == workload
+            and sa.get("trace") and sb.get("trace")
+            and sa.get("seed") == sb.get("seed"))
 
 
 def memo_check(a, b):
     """Same seed, both traced query_suite runs: the memo lookups must match."""
-    sa, sb = a.get("stamp", {}), b.get("stamp", {})
-    if not (sa.get("workload") == sb.get("workload") == "query_suite"
-            and sa.get("trace") and sb.get("trace")
-            and sa.get("seed") == sb.get("seed")):
+    if not same_seed_traced(a, b, "query_suite"):
         return
     va = [a["per_layer"].get(k) for k in MEMO_KEYS]
     vb = [b["per_layer"].get(k) for k in MEMO_KEYS]
@@ -86,6 +98,19 @@ def memo_check(a, b):
         print(f"\nmemo drift: hits {va[0]} -> {vb[0]}, misses {va[1]} -> {vb[1]}")
     else:
         print(f"\nmemo: {va[0]:g} hits, {va[1]:g} misses on both sides")
+
+
+def wire_check(a, b):
+    """Same seed, both traced spine runs: sink bytes and row counts must match."""
+    if not same_seed_traced(a, b, "spine"):
+        return
+    drift = [(k, a["per_layer"].get(k), b["per_layer"].get(k)) for k in WIRE_KEYS]
+    drift = [(k, va, vb) for k, va, vb in drift if va != vb]
+    print()
+    for k, va, vb in drift:
+        print(f"wire drift: {k} {va} -> {vb}")
+    if not drift:
+        print("wire: identical on both sides")
 
 
 def bench_diff(pa, a, qa, pb, b, qb):
