@@ -12,8 +12,13 @@ import java.nio.file.{Files, Paths}
   * (`filesinks/FileFlusher.java:45-296`, `hdfs/HdfsFileManager.java:44-137`):
   *
   *  - one container file per (partition, roll window) named
-  *    `<yyyyMMddHHmmss>-divolte-tracking-<tag>-<n>.avro`
-  *    (reference filename pattern, `HdfsFileManager.java:62-68`);
+  *    `<stamp>-divolte-tracking-<tag>-<n>.avro` (reference filename
+  *    pattern, `HdfsFileManager.java:62-68`). A stamped write (a batch id)
+  *    numbers its files by partition, so a replay overwrites them. An
+  *    unstamped write stamps the wall-clock second and takes `<n>` from a
+  *    driver-wide file counter (the reference's per-process counter), so
+  *    two writes of one tag in one second never share a name; writers in
+  *    different processes need different tags (the reference's hostname);
   *  - files are written to a working name and atomically renamed into place
   *    on close — on real HDFS/object stores Spark's commit protocol plays
   *    this role; here the semantic is preserved per-file;
@@ -37,22 +42,30 @@ import java.nio.file.{Files, Paths}
   */
 object AvroFileSink {
 
+  /** Files numbered by unstamped writes so far in this driver. */
+  private val fileCounter = new java.util.concurrent.atomic.AtomicLong()
+
   /** Write a DataFrame as Avro container files; returns the target dir.
     * `stamp` defaults to wall-clock; pass a deterministic one (e.g. a
     * batch id) when replays must overwrite rather than duplicate. */
   def write(df: DataFrame, dir: String, tag: String = "spark",
             syncInterval: Int = 1000, stamp: Option[String] = None): String = {
     val schemaJson = AvroSchemas.toAvroSchema(df.schema).toString
-    val stampStr = stamp.getOrElse(new java.text.SimpleDateFormat("yyyyMMddHHmmss")
-      .format(new java.util.Date()))
+    val rdd = df.rdd
+    val (stampStr, firstFile) = stamp match {
+      case Some(s) => (s, 0L)
+      case None =>
+        (new java.text.SimpleDateFormat("yyyyMMddHHmmss").format(new java.util.Date()),
+          fileCounter.getAndAdd(rdd.getNumPartitions))
+    }
     Files.createDirectories(Paths.get(dir))
-    df.rdd.mapPartitionsWithIndex { (pid, rows) =>
+    rdd.mapPartitionsWithIndex { (pid, rows) =>
       if (!rows.hasNext) Iterator.empty // no empty files
       else {
         val schema = AvroSchemas.cachedSchema(schemaJson)
         val attempt = Option(org.apache.spark.TaskContext.get())
           .map(_.taskAttemptId()).getOrElse(0L)
-        val file = new File(dir, f"$stampStr-divolte-tracking-$tag-$pid%05d.avro")
+        val file = new File(dir, f"$stampStr-divolte-tracking-$tag-${firstFile + pid}%05d.avro")
         file.getParentFile.mkdirs() // executor-side: dir may not exist here
         val working = new File(dir, file.getName + s".partial-$attempt")
         val writer = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))

@@ -1,16 +1,62 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming forms of the engine's stateful operators
   * (SURVEY.md §2D). The transforms are the SAME expressions as the batch
   * layer — a streaming DataFrame flows through unchanged decode/mapping
   * stages (the reference's source→mapping→sink spine,
-  * `IncomingRequestProcessor.java:140-164`); only the stateful tail differs:
-  * watermarked session windows and within-watermark dedup.
+  * `IncomingRequestProcessor.java:140-164`); only the stateful tail differs.
+  * Two families of stateful tail:
+  *
+  *  - Spark's own watermarked operators: session windows, window counts,
+  *    within-watermark dedup and the interval joins. Their state expires
+  *    with the watermark.
+  *  - The keyed folds (slot-memory flagging, anomaly, EWMA, CUSUM,
+  *    near-dup, co-occurrence, KMV, top-k, funnel, t-digest, CDC): each
+  *    keeps one bounded state value per key and folds every micro-batch's
+  *    rows into it through [[keyedFold]], the one stateful shell. Their
+  *    keys never expire: a dormant key keeps its state for the life of
+  *    the checkpoint.
   */
 object Streams {
+
+  /** The one stateful shell behind every keyed fold in this object.
+    * Per key and micro-batch: read the state (or `zero` for a new key),
+    * sort the batch's rows by `order`, fold them, store the new state and
+    * emit the fold's rows, with no timeout and in output mode `mode`.
+    *
+    * `order` must be total over the rows of one key (ties broken by the
+    * remaining fields), so the fold sees the same sequence whatever order
+    * the shuffle delivers rows in: a replayed micro-batch rebuilds the same
+    * state and emits the same rows, the deterministic batch that
+    * exactly-once recovery needs. `zero` is evaluated per key, so a fold
+    * may mutate its state in place. */
+  private def keyedFold[T, K: Encoder, S: Encoder, U: Encoder](
+      rows: Dataset[T], mode: OutputMode)(key: T => K, order: Ordering[T], zero: => S)(
+      fold: (K, S, Seq[T]) => (S, Iterator[U])): Dataset[U] =
+    rows.groupByKey(key).flatMapGroupsWithState(mode, GroupStateTimeout.NoTimeout) {
+      (k: K, batch: Iterator[T], state: GroupState[S]) =>
+        val (next, out) = fold(k, state.getOption.getOrElse(zero), batch.toVector.sorted(order))
+        state.update(next)
+        out
+    }
+
+  /** The typed rows a DataFrame twin folds: `cols` projected, and any row
+    * with a null in them dropped. A null would fail the non-nullable typed
+    * decode and stop the query, not just skip the row. */
+  private def nonNullRows[T: Encoder](events: DataFrame, cols: Column*): Dataset[T] = {
+    val projected = events.select(cols: _*)
+    projected.where(projected.columns.map(c => projected(c).isNotNull).reduce(_ && _)).as[T]
+  }
+
+  // Typed tuple fields decode SQL nulls as null, so string order is
+  // null-safe (nulls first); doubles order totally (NaN last, -0.0 < 0.0).
+  private implicit val nullableStrings: Ordering[String] =
+    Ordering.Option(Ordering.String).on[String](Option(_))
+  private implicit val totalDoubles: Ordering[Double] = Ordering.Double.TotalOrdering
 
   /** Sliding-inactivity sessionization (30-min default, reference
     * `BrowserSourceConfiguration.java:40`): `session_window` under a
@@ -47,30 +93,29 @@ object Streams {
     * [[graft.state.DuplicateMemory.flagDuplicates]].
     *
     * Input: (partyId, sessionId, eventId, tsMillis). Output adds
-    * `duplicate`. Flag-not-filter, exactly like the reference. */
+    * `duplicate`. Flag-not-filter, exactly like the reference. Within a
+    * micro-batch a slot's events fold in (tsMillis, eventId) order, the
+    * remaining fields breaking ties. */
   def flagDuplicatesStream(
       events: org.apache.spark.sql.Dataset[(String, String, String, Long)],
       slotCount: Int = 1 << 20): org.apache.spark.sql.Dataset[(String, String, String, Long, Boolean)] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    events
-      .map { case (p, s, e, ts) =>
-        val (slot, sig) = graft.state.DuplicateMemory.slotAndSignature(slotCount, p, s, e)
-        (slot, sig, p, s, e, ts)
+    val slotted = events.map { case (p, s, e, ts) =>
+      // a null id hashes as "null", like the batch flagDuplicates
+      val (slot, sig) = graft.state.DuplicateMemory.slotAndSignature(
+        slotCount, String.valueOf(p), String.valueOf(s), String.valueOf(e))
+      (slot, sig, p, s, e, ts)
+    }
+    keyedFold(slotted, OutputMode.Append)(
+      _._1, Ordering.by(r => (r._6, r._5, r._3, r._4)), 0L) { (_, slotSig, rows) =>
+      var current = slotSig
+      val out = rows.map { case (_, sig, p, s, e, ts) =>
+        val dup = current == sig
+        current = sig
+        (p, s, e, ts, dup)
       }
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: Int, rows: Iterator[(Int, Long, String, String, String, Long)],
-         state: GroupState[Long]) => {
-          var current = state.getOption.getOrElse(0L)
-          val out = rows.toSeq.sortBy(r => (r._6, r._5)).map { case (_, sig, p, s, e, ts) =>
-            val dup = current == sig
-            current = sig
-            (p, s, e, ts, dup)
-          }
-          state.update(current)
-          out.iterator
-        })
+      (current, out.iterator)
+    }
   }
 
   /** Online per-user anomaly flagging — the streaming form of the batch
@@ -82,10 +127,11 @@ object Streams {
     * folded into the state. An event flags iff the user already has >= 2
     * prior observations with positive variance and |z| > 3.
     *
-    * State per user is three longs — bounded, no timeout needed for the
-    * analytics shape (add `GroupStateTimeout.ProcessingTimeTimeout` at the
-    * call site to expire dormant users if the key space is unbounded).
-    * Scales horizontally with the state-store shuffle on userId.
+    * State per user is three longs, bounded whatever the stream length.
+    * Dormant users are never expired: each user ever seen keeps its three
+    * longs for the life of the checkpoint, so the state grows with the
+    * number of distinct users. Scales horizontally with the state-store
+    * shuffle on userId.
     *
     * The moments are EXACT while they fit a long; a hot key in a
     * long-lived stream (~4x10^7 fixture-scale events) would overflow the
@@ -103,48 +149,42 @@ object Streams {
       events: org.apache.spark.sql.Dataset[(Long, Long, Long, Long)])
       : org.apache.spark.sql.Dataset[(Long, Long, Long, Long, Option[Double], Boolean)] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    events
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: Long, rows: Iterator[(Long, Long, Long, Long)],
-         state: GroupState[(Long, Long, Long)]) => {
-          var (n, s, sq) = state.getOption.getOrElse((0L, 0L, 0L))
-          val out = rows.toSeq.sortBy(r => (r._3, r._2)).map {
-            case (user, event, ts, v) =>
-              val z =
-                if (n >= 2) {
-                  val nd = n.toDouble
-                  val variance = (sq.toDouble - s.toDouble * s.toDouble / nd) / (nd - 1)
-                  if (variance > 0)
-                    Some((v.toDouble - s.toDouble / nd) / math.sqrt(variance))
-                  else None
-                } else None
-              // 3037000499 = floor(sqrt(Long.MaxValue)): beyond it v*v is
-              // unrepresentable. CLAMP the value folded into the MOMENTS
-              // (the emitted value stays raw) so (n, s, sq) are always a
-              // coherent triple — the old saturate-then-zero restart left
-              // sq inconsistent with s and variance pinned negative for
-              // that user ~forever. Long.MinValue needs its own arm
-              // (math.abs wraps negative on it).
-              val vm =
-                if (v == Long.MinValue || v < -3037000499L) -3037000499L
-                else if (v > 3037000499L) 3037000499L
-                else v
-              val vsq = vm * vm
-              if (vsq > Long.MaxValue - sq ||
-                  math.abs(s) > Long.MaxValue - math.abs(vm)) {
-                // accumulator (not value) overflow: restart the history
-                // from this event with CONSISTENT moments
-                n = 1; s = vm; sq = vsq
-              } else {
-                n += 1; s += vm; sq += vsq
-              }
-              (user, event, ts, v, z, z.exists(math.abs(_) > 3.0))
-          }
-          state.update((n, s, sq))
-          out.iterator
-        })
+    keyedFold(events, OutputMode.Append)(
+      _._1, Ordering.by(r => (r._3, r._2, r._4)), (0L, 0L, 0L)) { (_, moments, rows) =>
+      var (n, s, sq) = moments
+      val out = rows.map { case (user, event, ts, v) =>
+        val z =
+          if (n >= 2) {
+            val nd = n.toDouble
+            val variance = (sq.toDouble - s.toDouble * s.toDouble / nd) / (nd - 1)
+            if (variance > 0)
+              Some((v.toDouble - s.toDouble / nd) / math.sqrt(variance))
+            else None
+          } else None
+        // 3037000499 = floor(sqrt(Long.MaxValue)): beyond it v*v is
+        // unrepresentable. CLAMP the value folded into the MOMENTS
+        // (the emitted value stays raw) so (n, s, sq) are always a
+        // coherent triple — the old saturate-then-zero restart left
+        // sq inconsistent with s and variance pinned negative for
+        // that user ~forever. Long.MinValue needs its own arm
+        // (math.abs wraps negative on it).
+        val vm =
+          if (v == Long.MinValue || v < -3037000499L) -3037000499L
+          else if (v > 3037000499L) 3037000499L
+          else v
+        val vsq = vm * vm
+        if (vsq > Long.MaxValue - sq ||
+            math.abs(s) > Long.MaxValue - math.abs(vm)) {
+          // accumulator (not value) overflow: restart the history
+          // from this event with CONSISTENT moments
+          n = 1; s = vm; sq = vsq
+        } else {
+          n += 1; s += vm; sq += vsq
+        }
+        (user, event, ts, v, z, z.exists(math.abs(_) > 3.0))
+      }
+      ((n, s, sq), out.iterator)
+    }
   }
 
   /** Online per-user EWMA — the streaming form of the batch
@@ -161,24 +201,18 @@ object Streams {
       events: org.apache.spark.sql.Dataset[(Long, Long, Long, Long)])
       : org.apache.spark.sql.Dataset[(Long, Long, Long, Long, Double)] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val win = graft.functions.Ewma.WindowSize
-    events
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: Long, rows: Iterator[(Long, Long, Long, Long)],
-         state: GroupState[List[Long]]) => {
-          var hist = state.getOption.getOrElse(Nil)
-          val out = rows.toSeq.sortBy(r => (r._3, r._2)).map {
-            case (user, event, ts, v) =>
-              hist = (hist :+ v).takeRight(win)
-              val e = BigDecimal(graft.functions.Ewma.fold(hist))
-                .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-              (user, event, ts, v, e)
-          }
-          state.update(hist)
-          out.iterator
-        })
+    keyedFold(events, OutputMode.Append)(
+      _._1, Ordering.by(r => (r._3, r._2, r._4)), List.empty[Long]) { (_, last, rows) =>
+      var hist = last
+      val out = rows.map { case (user, event, ts, v) =>
+        hist = (hist :+ v).takeRight(win)
+        val e = BigDecimal(graft.functions.Ewma.fold(hist))
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        (user, event, ts, v, e)
+      }
+      (hist, out.iterator)
+    }
   }
 
   /** Streaming one-sided CUSUM drift detector — the live-monitoring form
@@ -193,8 +227,8 @@ object Streams {
     *   S := max(0, S + (x - ref) - slack),   alarm when S > h
     *
     * State per key is ONE long — bounded regardless of stream length,
-    * the same state-bounds story as the other flatMapGroupsWithState
-    * operators (pinned in StateSpec).
+    * the same state-bounds story as the other keyed folds (pinned in
+    * StateSpec).
     *
     * Input: (key, periodId, x) with periodId ordering ties within a
     * micro-batch. Output: (key, periodId, x, s, isAlarm). */
@@ -202,20 +236,15 @@ object Streams {
                   ref: Long, slack: Long, h: Long)
       : org.apache.spark.sql.Dataset[(String, Long, Long, Long, Boolean)] = {
     import counts.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    counts
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: String, rows: Iterator[(String, Long, Long)],
-         state: GroupState[Long]) => {
-          var s = state.getOption.getOrElse(0L)
-          val out = rows.toSeq.sortBy(_._2).map { case (key, period, x) =>
-            s = math.max(0L, s + (x - ref) - slack)
-            (key, period, x, s, s > h)
-          }
-          state.update(s)
-          out.iterator
-        })
+    keyedFold(counts, OutputMode.Append)(
+      _._1, Ordering.by(r => (r._2, r._3)), 0L) { (_, s0, rows) =>
+      var s = s0
+      val out = rows.map { case (key, period, x) =>
+        s = math.max(0L, s + (x - ref) - slack)
+        (key, period, x, s, s > h)
+      }
+      (s, out.iterator)
+    }
   }
 
   /** Windowed event-rate rollup (the monitoring aggregate the reference
@@ -269,6 +298,9 @@ object Streams {
     * signature positions / k — the unbiased Jaccard estimator), computed
     * against the state-resident signature with no second lookup.
     *
+    * A document with a null text is skipped: it joins no bucket and
+    * emits nothing.
+    *
     * Output is the CANDIDATE stream, at most `bands` rows per document;
     * the per-document verdict (any candidate with est >= threshold) is one
     * ordinary batch `groupBy(doc_id)` away in the consumer — kept out of
@@ -277,17 +309,20 @@ object Streams {
     * matches the batch operators, so a document near-dups here iff it
     * would band-collide in `minhashLsh`'s candidate stage.
     *
-    * Ordering: within a micro-batch, bucket occupants process in doc_id
-    * order (deterministic replay); across batches, arrival order rules —
-    * exactly the incremental-ingest semantics of crossDedup. */
+    * Ordering: within a micro-batch, bucket occupants process in
+    * (doc_id, signature) order (deterministic replay); across batches,
+    * arrival order rules — exactly the incremental-ingest semantics of
+    * crossDedup. */
   def nearDupStream(docs: org.apache.spark.sql.Dataset[(Long, String)],
                     k: Int = 64, bandRows: Int = 8)
       : org.apache.spark.sql.Dataset[(Long, Long, Double)] = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import scala.collection.immutable.ArraySeq
+    import scala.math.Ordering.Implicits.seqOrdering
     val bands = k / bandRows
-    docs
-      .flatMap { case (docId, text) =>
+    val banded = docs.flatMap { case (docId, text) =>
+      if (text == null) Nil // no shingles: the document never enters a bucket
+      else {
         val sig = graft.functions.MinHash.signatureFromText(text, k)
         (0 until bands).map { b =>
           val key = new StringBuilder().append(b)
@@ -296,25 +331,23 @@ object Streams {
           (key.toString, docId, sig)
         }
       }
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: String, rows: Iterator[(String, Long, Array[Long])],
-         state: GroupState[(Long, Array[Long])]) => {
-          val arrivals = rows.toSeq.sortBy(_._2)
-          var canon = state.getOption.orNull
-          val out = Seq.newBuilder[(Long, Long, Double)]
-          arrivals.foreach { case (_, docId, sig) =>
-            if (canon == null) canon = (docId, sig)
-            else if (docId != canon._1) {
-              var matches = 0
-              var i = 0
-              while (i < k) { if (sig(i) == canon._2(i)) matches += 1; i += 1 }
-              out += ((docId, canon._1, matches.toDouble / k))
-            }
-          }
-          state.update(canon)
-          out.result().iterator
-        })
+    }
+    keyedFold(banded, OutputMode.Append)(
+      _._1, Ordering.by(r => (r._2, ArraySeq.unsafeWrapArray(r._3))),
+      null: (Long, Array[Long])) { (_, first, rows) =>
+      var canon = first
+      val out = Seq.newBuilder[(Long, Long, Double)]
+      rows.foreach { case (_, docId, sig) =>
+        if (canon == null) canon = (docId, sig)
+        else if (docId != canon._1) {
+          var matches = 0
+          var i = 0
+          while (i < k) { if (sig(i) == canon._2(i)) matches += 1; i += 1 }
+          out += ((docId, canon._1, matches.toDouble / k))
+        }
+      }
+      (canon, out.result().iterator)
+    }
   }
 
   /** Streaming item co-occurrence maintenance — the incremental form of the
@@ -335,24 +368,20 @@ object Streams {
                  cap: Int = 32)
       : org.apache.spark.sql.Dataset[(Int, Int)] = {
     import interactions.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    interactions
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: Long, rows: Iterator[(Long, Int)], state: GroupState[Seq[Int]]) => {
-          var held = state.getOption.getOrElse(Seq.empty[Int])
-          val out = Seq.newBuilder[(Int, Int)]
-          rows.map(_._2).toSeq.sorted.foreach { item =>
-            if (!held.contains(item) && held.size < cap) {
-              held.foreach { e =>
-                out += ((math.min(item, e), math.max(item, e)))
-              }
-              held = held :+ item
-            }
+    keyedFold(interactions, OutputMode.Append)(
+      _._1, Ordering.by(_._2), Seq.empty[Int]) { (_, seen, rows) =>
+      var held = seen
+      val out = Seq.newBuilder[(Int, Int)]
+      rows.foreach { case (_, item) =>
+        if (!held.contains(item) && held.size < cap) {
+          held.foreach { e =>
+            out += ((math.min(item, e), math.max(item, e)))
           }
-          state.update(held)
-          out.result().iterator
-        })
+          held = held :+ item
+        }
+      }
+      (held, out.result().iterator)
+    }
   }
 
   /** Stream-stream attribution join: every (view, purchase) pair for the
@@ -389,29 +418,20 @@ object Streams {
     * (k-1)/kth-fraction above. State is k longs per group regardless of
     * stream length; the same hash as the batch operator, so a streaming
     * estimate equals the batch estimate over the union of all batches
-    * (StateSpec pins this). Update output mode. */
+    * (StateSpec pins this). Update output mode: one row per group touched
+    * by the batch. */
   def kmvDistinctStream(events: DataFrame, typeCol: String = "event_type",
                         keyCol: String = "key", k: Int = 256): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    events
-      .select(col(typeCol).cast("string").as("t"),
-        graft.functions.Kmv.hash(col(keyCol)).as("h"))
-      // a null key (or type) row would NPE the non-nullable typed decode
-      // and kill the QUERY; the batch kmvOverlap drops null hashes via
-      // collect_set, so dropping here keeps stream/batch parity
-      .where(col("t").isNotNull && col("h").isNotNull)
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout)(
-        (t: String, rows: Iterator[(String, Long)], state: GroupState[Array[Long]]) => {
-          val prev = state.getOption.getOrElse(Array.empty[Long])
-          val merged = (prev ++ rows.map(_._2)).distinct.sorted.take(k)
-          state.update(merged)
-          (t, merged.length, graft.functions.Kmv.estimateArr(k, merged))
-        })
-      .toDF("event_type", "sketch_size", "distinct_est")
+    import events.sparkSession.implicits._
+    // the batch kmvOverlap drops null hashes via collect_set, so dropping
+    // null rows keeps stream/batch parity
+    val hashed = nonNullRows[(String, Long)](events,
+      col(typeCol).cast("string"), graft.functions.Kmv.hash(col(keyCol)))
+    keyedFold(hashed, OutputMode.Update)(
+      _._1, Ordering.by(_._2), Array.empty[Long]) { (t, prev, rows) =>
+      val merged = (prev ++ rows.map(_._2)).distinct.sorted.take(k)
+      (merged, Iterator.single((t, merged.length, graft.functions.Kmv.estimateArr(k, merged))))
+    }.toDF("event_type", "sketch_size", "distinct_est")
   }
 
   /** Streaming cross-batch top-k per group — the stream form of the batch
@@ -426,28 +446,15 @@ object Streams {
   def topKStream(events: DataFrame, typeCol: String = "event_type",
                  idCol: String = "event_id", valueCol: String = "value",
                  k: Int = 5): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import events.sparkSession.implicits._
     val agg = new graft.functions.TopK.TopKByValue(k)
-    events
-      .select(col(typeCol).cast("string").as("t"),
-        col(valueCol).cast("double").as("v"), col(idCol).cast("long").as("id"))
-      // null id/type would NPE the typed decode and kill the query, not
-      // just skip the row — guard all three like the value
-      .where(col("v").isNotNull && col("id").isNotNull && col("t").isNotNull)
-      .as[(String, Double, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (t: String, rows: Iterator[(String, Double, Long)],
-         state: GroupState[Array[(Double, Long)]]) => {
-          val buf = rows.foldLeft(state.getOption.getOrElse(agg.zero)) {
-            case (b, (_, v, id)) => agg.reduce(b, (v, id))
-          }
-          state.update(buf)
-          buf.iterator.zipWithIndex.map { case ((v, id), i) => (t, i + 1, id, v) }
-        })
-      .toDF("event_type", "rank", "event_id", "value")
+    val valued = nonNullRows[(String, Double, Long)](events,
+      col(typeCol).cast("string"), col(valueCol).cast("double"), col(idCol).cast("long"))
+    keyedFold(valued, OutputMode.Update)(
+      _._1, Ordering.by(r => (r._2, r._3)), agg.zero) { (t, prev, rows) =>
+      val buf = rows.foldLeft(prev) { case (b, (_, v, id)) => agg.reduce(b, (v, id)) }
+      (buf, buf.iterator.zipWithIndex.map { case ((v, id), i) => (t, i + 1, id, v) })
+    }.toDF("event_type", "rank", "event_id", "value")
   }
 
   /** Streaming funnel tracker — the real-time form of the batch funnel
@@ -466,34 +473,23 @@ object Streams {
                    stages: Seq[String] = Seq("view", "click", "purchase"),
                    userCol: String = "user_id", typeCol: String = "event_type",
                    tsCol: String = "ts_ms", idCol: String = "event_id"): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import events.sparkSession.implicits._
     val stageArr = stages.toArray
-    events
-      .select(col(userCol).cast("long").as("u"), col(typeCol).cast("string").as("t"),
-        col(tsCol).cast("long").as("ts"), col(idCol).cast("long").as("id"))
-      // a null user/ts/id row would NPE the non-nullable typed decode and
-      // terminate the stream; a stage match on a null type is meaningless
-      .where(col("u").isNotNull && col("t").isNotNull &&
-        col("ts").isNotNull && col("id").isNotNull)
-      .as[(Long, String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (u: Long, rows: Iterator[(Long, String, Long, Long)],
-         state: GroupState[(Int, Long)]) => {
-          var (stage, lastTs) = state.getOption.getOrElse((0, Long.MinValue))
-          rows.toArray.sortBy(r => (r._3, r._4)).foreach { case (_, t, ts, _) =>
-            if (stage < stageArr.length && t == stageArr(stage) && ts >= lastTs) {
-              stage += 1
-              lastTs = ts
-            }
-          }
-          state.update((stage, lastTs))
-          Iterator.single((u, stage,
-            if (stage == 0) None else Some(lastTs)))
-        })
-      .toDF("user_id", "stage_reached", "stage_ts")
+    // a stage match on a null type is meaningless, so those rows drop too
+    val typed = nonNullRows[(Long, String, Long, Long)](events,
+      col(userCol).cast("long"), col(typeCol).cast("string"),
+      col(tsCol).cast("long"), col(idCol).cast("long"))
+    keyedFold(typed, OutputMode.Update)(
+      _._1, Ordering.by(r => (r._3, r._4, r._2)), (0, Long.MinValue)) { (u, prev, rows) =>
+      var (stage, lastTs) = prev
+      rows.foreach { case (_, t, ts, _) =>
+        if (stage < stageArr.length && t == stageArr(stage) && ts >= lastTs) {
+          stage += 1
+          lastTs = ts
+        }
+      }
+      ((stage, lastTs), Iterator.single((u, stage, if (stage == 0) None else Some(lastTs))))
+    }.toDF("user_id", "stage_reached", "stage_ts")
   }
 
   /** Streaming cross-batch quantile monitor — the stream form of the batch
@@ -507,35 +503,25 @@ object Streams {
     * contract; the right one — weight (count) conserved exactly, every
     * emitted quantile's rank error within the batch gate's bound against
     * the exact CDF of everything seen so far — is what `TDigestStreamSpec`
-    * measures after each batch. Update mode; state never grows with the
-    * stream. */
+    * measures after each batch. Within a batch, values fold in ascending
+    * order, so a replayed batch rebuilds the same buffer. Rows with a null
+    * type or value are dropped (the batch operator's event_type join drops
+    * null types too). Update mode; state never grows with the stream. */
   def tdigestStream(events: DataFrame, typeCol: String = "event_type",
                     valueCol: String = "value",
                     qs: Seq[Double] = Seq(0.5, 0.95)): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import events.sparkSession.implicits._
+    import graft.functions.TDigest
     val quantiles = qs.toArray
-    events
-      .select(col(typeCol).cast("string").as("t"),
-        col(valueCol).cast("double").as("v"))
-      .where(col("v").isNotNull)
-      .as[(String, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (t: String, rows: Iterator[(String, Double)],
-         state: GroupState[Array[Double]]) => {
-          val buf = rows.foldLeft(
-            state.getOption.getOrElse(graft.functions.TDigest.emptyBuffer)) {
-            case (b, (_, v)) => graft.functions.TDigest.fold(b, v)
-          }
-          state.update(buf)
-          val dig = graft.functions.TDigest.snapshot(buf)
-          val n = math.round(graft.functions.TDigest.weight(dig))
-          quantiles.iterator.map(q =>
-            (t, n, q, graft.functions.TDigest.quantile(dig, q)))
-        })
-      .toDF("event_type", "n", "q", "est")
+    val valued = nonNullRows[(String, Double)](events,
+      col(typeCol).cast("string"), col(valueCol).cast("double"))
+    keyedFold(valued, OutputMode.Update)(
+      _._1, Ordering.by(_._2), TDigest.emptyBuffer) { (t, prev, rows) =>
+      val buf = rows.foldLeft(prev) { case (b, (_, v)) => TDigest.fold(b, v) }
+      val dig = TDigest.snapshot(buf)
+      val n = math.round(TDigest.weight(dig))
+      (buf, quantiles.iterator.map(q => (t, n, q, TDigest.quantile(dig, q))))
+    }.toDF("event_type", "n", "q", "est")
   }
 
   /** Streaming linear multi-touch attribution — the stream-stream form of
@@ -582,7 +568,9 @@ object Streams {
     * keep their sequence in state — a late change older than the tombstone
     * must lose — and surface with `deleted = true` so a sink can issue the
     * delete downstream (emission is Update-mode: each key's post-batch
-    * state, every batch the key is touched).
+    * state, every batch the key is touched). Changes sharing a
+    * (tsMillis, eventId) sequence resolve by (changeType, valueScaled)
+    * order, the first one winning, so a replayed batch picks the same one.
     *
     * State per key is ONE compacted row (seq + state), independent of
     * history length — the invariant that lets the stream run forever.
@@ -595,21 +583,16 @@ object Streams {
       isTombstone: String => Boolean = _ == "error")
       : org.apache.spark.sql.Dataset[(Long, String, Option[Long], Long, Boolean)] = {
     import changes.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    changes
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (key: Long, rows: Iterator[(Long, Long, Long, String, Option[Long])],
-         state: GroupState[(Long, Long, String, Option[Long], Boolean)]) => {
-          var cur = state.getOption
-            .getOrElse((Long.MinValue, Long.MinValue, "", None: Option[Long], true))
-          rows.foreach { case (_, ts, eid, typ, v) =>
-            if (ts > cur._1 || (ts == cur._1 && eid > cur._2))
-              cur = (ts, eid, typ, v, isTombstone(typ))
-          }
-          state.update(cur)
-          Iterator.single((key, cur._3, cur._4, cur._1, cur._5))
-        })
+    keyedFold(changes, OutputMode.Update)(
+      _._1, Ordering.by(r => (r._2, r._3, r._4, r._5)),
+      (Long.MinValue, Long.MinValue, "", None: Option[Long], true)) { (key, prev, rows) =>
+      var cur = prev
+      rows.foreach { case (_, ts, eid, typ, v) =>
+        if (ts > cur._1 || (ts == cur._1 && eid > cur._2))
+          cur = (ts, eid, typ, v, isTombstone(typ))
+      }
+      (cur, Iterator.single((key, cur._3, cur._4, cur._1, cur._5)))
+    }
   }
 
   /** Streaming decontamination — the live-ingest form of

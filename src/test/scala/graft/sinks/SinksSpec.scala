@@ -41,6 +41,29 @@ class SinksSpec extends SparkSpec {
     assert(files.map(_._2).sum === expected)
   }
 
+  test("avro file sink: back-to-back unstamped writes of one tag keep every row") {
+    val dir = java.nio.file.Files.createTempDirectory("avroburst").toString
+    val sizes = Seq(3, 5, 7, 11)
+    // well inside one second once the session is warm: the wall-clock
+    // stamp alone would give the writes the same file names
+    sizes.foreach(n => AvroFileSink.write(spark.range(n).toDF("id").coalesce(1), dir))
+    val files = AvroFileSink.readBack(spark, dir)
+    assert(files.size === sizes.size)
+    assert(files.map(_._2).sum === sizes.sum)
+  }
+
+  test("avro file sink: writing one stamp twice leaves one set of files") {
+    val dir = java.nio.file.Files.createTempDirectory("avroreplay").toString
+    val df = spark.range(10).toDF("id").repartition(3)
+    AvroFileSink.write(df, dir, stamp = Some("b000000000007"))
+    val first = AvroFileSink.readBack(spark, dir)
+    AvroFileSink.write(df, dir, stamp = Some("b000000000007"))
+    val again = AvroFileSink.readBack(spark, dir)
+    assert(again === first)
+    assert(again.map(_._2).sum === 10)
+    assert(again.forall(_._1.matches("""b000000000007-divolte-tracking-spark-\d{5}\.avro""")))
+  }
+
   test("avro file sink: field values survive the round trip") {
     val dir = java.nio.file.Files.createTempDirectory("avrosink2").toString
     val one = mapped.orderBy("eventId").limit(3).coalesce(1)
