@@ -94,21 +94,23 @@ object Bench {
     // codegen compile (janino classloader warm). Measured ~2.5s charged to
     // whichever query happened to run first without this.
     spark.range(1000).selectExpr("sum(id)").collect()
-    val warmup = spark.read.parquet(s"$sfDir/region.parquet")
+    val warmup = Tables.open(spark, s"$sfDir/region.parquet")
       .selectExpr("r_regionkey", "r_name")
     warmup.join(warmup.selectExpr("r_regionkey").limit(2), "r_regionkey")
       .groupBy("r_name").count()
       .selectExpr("r_name", "count",
         "row_number() over (partition by r_name order by count) rk")
       .collect()
-    // FileIndex/footer discovery is per TABLE and would otherwise be charged
-    // to whichever query happens to touch each table first (a cluster keeps
-    // these hot in the metastore/FileIndex cache); read one row from each
+    // Nothing per table stays cached across opens: every query's open lists
+    // the table and reads its footer again (Tables.open). What one row from
+    // each table warms is the first scan of that file (OS page cache, the
+    // parquet reader's column decoders), which would otherwise be charged to
+    // whichever query happens to touch each table first
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       // best-effort: a missing table must degrade that table's queries
       // (they report -1 below), not abort the whole bench
-      try spark.read.parquet(s"$sfDir/$t.parquet").limit(1).collect()
+      try Tables.open(spark, s"$sfDir/$t.parquet").limit(1).collect()
       catch { case _: Throwable => }
     }
     // Each query is timed twice: run1 (cold — includes that query's one-time

@@ -63,7 +63,7 @@ object CorpusPipeline {
       "s2_deduped" -> docs(s2).count(),
       "s3_decontaminated" -> docs(s3).count(),
       "s4_sampled" -> docs(s4).count(),
-      "s5_chunks" -> spark.read.parquet(s"$outDir/s5_chunks.parquet").count())
+      "s5_chunks" -> Tables.open(spark, s"$outDir/s5_chunks.parquet").count())
   }
 
   def main(args: Array[String]): Unit = {

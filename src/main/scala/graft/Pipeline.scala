@@ -77,7 +77,7 @@ object Pipeline {
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       srcDir.resolve("events.parquet"),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val rawSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val rawSchema = Tables.open(spark, s"$sfDir/events.parquet").schema
     val streamIn0 = spark.readStream
       .schema(rawSchema)
       .parquet(srcDir.toString)

@@ -143,7 +143,7 @@ object PlantedFuzzy {
     // stale fixture under a fresh label (ScaleProbe's marker policy)
     val done = new java.io.File(s"$outDir/_planted_v${PlantVersion}_n$everyN")
     if (done.exists()) return
-    val docs = spark.read.parquet(s"$srcDir/documents.parquet")
+    val docs = Tables.open(spark, s"$srcDir/documents.parquet")
     val twinOffset = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
     val perturbUdf = udf((text: String, id: Long, e: Int, clustered: Boolean) =>
       perturb(text, e, id, clustered))
@@ -192,7 +192,7 @@ object PlantedFuzzy {
     * n_found, recall, min/max measured distance). The join is
     * plants-keyed — O(plants), broadcast-sized. */
   def measure(spark: SparkSession, plantedDir: String): DataFrame = {
-    val plants = spark.read.parquet(s"$plantedDir/plants.parquet")
+    val plants = Tables.open(spark, s"$plantedDir/plants.parquet")
     // inner broadcast join (plants as build side — a right-outer would
     // reject the hint on the preserved side), then re-attach the buckets
     // with zero hits from the plant-side aggregate
@@ -237,7 +237,7 @@ object PlantedFuzzy {
     val (s, retries, reasons) = BenchSampler.steady(hostCores,
       extThreshold = 0.15, minWall = 0.3, maxRetries = 3, budget)(once())
     val buckets = measure(spark, outDir).collect()
-    val nDocs = spark.read.parquet(s"$outDir/documents.parquet").count()
+    val nDocs = Tables.open(spark, s"$outDir/documents.parquet").count()
     // candidate-volume log: what each blocker contributes and what the
     // union costs the verify — the "growth bounded and logged" record
     // for the LSH ∪ CDC candidate set

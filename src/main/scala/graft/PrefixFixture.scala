@@ -45,7 +45,7 @@ object PrefixFixture {
       s"outDir must differ from srcDir (both are $srcDir)")
     val done = new java.io.File(s"$outDir/_mat_v$MarkerVersion")
     if (done.exists()) return
-    spark.read.parquet(s"$srcDir/embeddings.parquet")
+    Tables.open(spark, s"$srcDir/embeddings.parquet")
       .withColumn("__e", expr(
         "transform(embedding, (x, j) -> cast(x * exp(-j / 16.0d) as float))"))
       .withColumn("__n", expr(
@@ -71,7 +71,7 @@ object PrefixFixture {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-prefix-fixture")
     spark.range(1000).selectExpr("sum(id)").collect()
     writeConcentrated(spark, srcDir, outDir)
-    val nVecs = spark.read.parquet(s"$outDir/embeddings.parquet").count()
+    val nVecs = Tables.open(spark, s"$outDir/embeddings.parquet").count()
     def meanRecall(name: String, dir: String): Double = {
       val rows = SparkEntry.queries(name)(spark, dir)
         .select(avg(col("recall_at_k"))).head()

@@ -48,7 +48,7 @@ object ScaleProbe {
     // static dims: copied untouched (they're broadcast-destined; a bigger
     // fact side is exactly the asymmetry a warehouse grows with)
     Seq("region", "nation", "customer", "supplier", "part").foreach { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet")
+      Tables.open(spark, s"$sfDir/$t.parquet")
         .write.mode("overwrite").parquet(s"$dir/$t.parquet")
     }
     // Fact tables land range-clustered on their natural key across many
@@ -58,8 +58,8 @@ object ScaleProbe {
     // degenerates: a replica written as 3 unclustered files made q18's
     // partial agg emit ~1 row per input row (9.6M instead of 2.4M).
     val parts = 32
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val ord0 = spark.read.parquet(s"$sfDir/orders.parquet")
+    val li = Tables.open(spark, s"$sfDir/lineitem.parquet")
+    val ord0 = Tables.open(spark, s"$sfDir/orders.parquet")
     // offset over BOTH tables' max key: an order with no lineitems would
     // otherwise push max(o_orderkey) past a lineitem-only offset and make
     // replica o_orderkeys collide across reps, silently corrupting the
@@ -77,7 +77,7 @@ object ScaleProbe {
       .drop("rep")
       .repartitionByRange(parts, col("o_orderkey"))
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    val ev = Tables.open(spark, s"$sfDir/events.parquet")
     val maxEv = ev.agg(max(col("event_id"))).head().getLong(0) + 1
     replicate(ev, k)
       // same users generate k-fold traffic (denser sessions — the
@@ -87,7 +87,7 @@ object ScaleProbe {
       .drop("rep")
       .repartitionByRange(parts, col("ts"), col("event_id"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Tables.open(spark, s"$sfDir/documents.parquet")
     val maxDoc = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
     replicate(docs, k)
       .withColumn("doc_id", col("doc_id") + lit(maxDoc) * col("rep"))
@@ -116,7 +116,7 @@ object ScaleProbe {
       .drop("rep")
       .repartitionByRange(parts, col("doc_id"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Tables.open(spark, s"$sfDir/embeddings.parquet")
     val maxVec = emb.agg(max(col("vec_id"))).head().getLong(0) + 1
     replicate(emb, k)
       .filter(col("rep") === 0 ||

@@ -1,7 +1,14 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.types.LongType
 
 /** Loaders for the driver-provided parquet tables (see TESTDATA.md).
@@ -10,6 +17,11 @@ import org.apache.spark.sql.types.LongType
   * plan runs at sf0.001 (smoke), sf0.01 (correctness) and sf0.1 (bench) —
   * and, unchanged, against a 100 TB warehouse path on a real cluster:
   * nothing here hard-codes partition counts or collects to the driver.
+  *
+  * Every parquet read in the engine goes through [[open]], which costs one
+  * footer read on the driver and starts no Spark job. Schemas are not
+  * merged across files, as with Spark's default (`mergeSchema` is off and
+  * nothing here sets it): one file's footer speaks for the table.
   */
 object Tables {
 
@@ -77,8 +89,50 @@ object Tables {
     else df
   }
 
+  /** `spark.read.parquet(path)` without its schema-inference job. Spark's
+    * non-merging inference reads ONE footer, but through a one-task job per
+    * open; here the same footer is read on the driver and converted with
+    * Spark's own converter under the session's `SQLConf` (so `nanosAsLong`
+    * and the other parquet flags apply unchanged), and the scan is opened
+    * with that schema. The footer comes from the file Spark would pick:
+    * `_common_metadata`, else `_metadata`, else the first data file by path,
+    * skipping names that start with `_` or `.` (partition directories are
+    * walked). A path with no data file fails naming the path. */
+  private[graft] def open(spark: SparkSession, path: String): DataFrame = {
+    val conf = SessionBridge.hadoopConf(spark)
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val st = fs.getFileStatus(root)
+    val file = if (!st.isDirectory) root else {
+      val leaves = leafFiles(fs, root).sortBy(_.toString)
+      def named(n: String) = leaves.find(_.getName == n)
+      named(PARQUET_COMMON_METADATA_FILE).orElse(named(PARQUET_METADATA_FILE))
+        .orElse(leaves.find(p => !SummaryFiles(p.getName)))
+        .getOrElse(throw new java.io.FileNotFoundException(
+          s"no parquet data file under $path"))
+    }
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(file, conf), SKIP_ROW_GROUPS)
+    val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      new ParquetToSparkSchemaConverter(SessionBridge.sqlConf(spark)))
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private val SummaryFiles = Set(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
+
+  /** Leaf files under `dir`, hidden names dropped as Spark's file index
+    * drops them (a `_` name holding `=` is a partition directory). */
+  private def leafFiles(fs: FileSystem, dir: Path): Seq[Path] =
+    fs.listStatus(dir).toSeq.flatMap { s =>
+      val n = s.getPath.getName
+      if ((n.startsWith("_") && !n.contains("=") || n.startsWith(".")) &&
+          !SummaryFiles(n)) Nil
+      else if (s.isDirectory) leafFiles(fs, s.getPath)
+      else Seq(s.getPath)
+    }
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = open(spark, s"$sfDir/$name.parquet")
     FactTables.get(name).map(rebalanced(spark, df, _)).getOrElse(df)
   }
 
@@ -93,7 +147,7 @@ object Tables {
     * before the scan where it also parallelizes decode. A/B per query at
     * sf0.1 backs each call site (OPTIMIZATION_r12.md). */
   def tableRaw(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    open(spark, s"$sfDir/$name.parquet")
 
   def lineitem(s: SparkSession, d: String): DataFrame   = table(s, d, "lineitem")
   def lineitemRaw(s: SparkSession, d: String): DataFrame = tableRaw(s, d, "lineitem")
@@ -104,10 +158,11 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame       = table(s, d, "part")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
-  /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark 4 reads only as a
-    * raw nanos long (`spark.sql.legacy.parquet.nanosAsLong` — set by
-    * [[graft.GraftSession]]). Normalize here: `ts` becomes a us-precision
-    * TIMESTAMP_NTZ, and the raw nanos stay available as `ts_ns`. */
+  /** `events.ts` is parquet TIMESTAMP(MICROS) in the shipped fixtures, but a
+    * TIMESTAMP(NANOS) file is read by Spark 4 only as a raw nanos long
+    * (`spark.sql.legacy.parquet.nanosAsLong` — set by [[graft.GraftSession]]).
+    * Normalize either here: `ts` becomes a us-precision TIMESTAMP_NTZ, and
+    * the nanos are available as `ts_ns`. */
   def events(s: SparkSession, d: String): DataFrame =
     eventsFrom(table(s, d, "events"))
 

@@ -28,7 +28,6 @@ object GraftFunctions {
 
   /** Reference tryParse base-36 semantics: null on malformed/overflow. */
   def base36ToLong(c: Column): Column = column(Base36ToLong(expression(c)))
-  def base36ToInt(c: Column): Column = column(Base36ToInt(expression(c)))
 
   /** Parse-once URI component struct (reference parseUri memoization) —
     * scheme/host/port/path/rawPath/query/rawQuery/fragment/rawFragment. */
@@ -150,9 +149,6 @@ object GraftFunctions {
   /** Real decode + audio content fingerprint → struct(sig, energy, n_frames). */
   def wavFingerprint(blob: Column): Column = column(WavFingerprint(expression(blob)))
 
-  /** Embedded epoch-millis of a DivolteIdentifier (`0:<base36 ms>:<random>`). */
-  def divolteIdTimestamp(c: Column): Column = column(DivolteIdTimestamp(expression(c)))
-
   /** Query string → map<string, array<string>> (multi-value, url-decoded). */
   def parseQueryString(c: Column): Column = column(ParseQueryString(expression(c)))
 
@@ -174,10 +170,6 @@ object GraftFunctions {
     * reference `Digester.java:61-78`. */
   def digest(algorithm: String, pieces: Column*): Column =
     column(DigestPieces(algorithm, None, pieces.map(expression)))
-
-  /** Seeded HMAC digest (PBKDF2-derived key) — reference `Digester.java:145-192`. */
-  def digestSeeded(algorithm: String, seed: String, pieces: Column*): Column =
-    column(DigestPieces(algorithm, Some(seed), pieces.map(expression)))
 
   // ------------------------------------------------------------ checksum
   /** The reference's canonical checksum string over sorted query parameters

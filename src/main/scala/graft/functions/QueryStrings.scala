@@ -35,12 +35,4 @@ object QueryStrings {
       case _: IllegalArgumentException => Map.empty // malformed percent-escape
     }
   }
-
-  /** Java-friendly entry point used by the Spark layer: returns a
-    * `Map[String, Array[String]]`-shaped value or null for null input. */
-  def parseToMap(qs: String): Map[String, Seq[String]] = parse(qs)
-
-  /** First value for a key, or null — `query().value(k)` semantics. */
-  def firstValue(qs: String, key: String): String =
-    parse(qs).get(key).flatMap(_.headOption).orNull
 }

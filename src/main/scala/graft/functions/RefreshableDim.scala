@@ -74,7 +74,7 @@ object RefreshableDim {
         // reader during the gap recomputes from the files — correct, just
         // uncached for that one read.
             stale.foreach(_.df.unpersist(blocking = false))
-            val df = spark.read.parquet(path).cache()
+            val df = graft.Tables.open(spark, path).cache()
             df.count() // materialize BEFORE the swap: lookups never wait on a cold cache
             cache.put(key, Entry(stamp, df))
             df

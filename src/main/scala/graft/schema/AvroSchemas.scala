@@ -43,11 +43,6 @@ object AvroSchemas {
 
   def parse(avsc: String): Schema = new Schema.Parser().parse(avsc)
 
-  def toStructType(schema: Schema): StructType = {
-    require(schema.getType == Schema.Type.RECORD, s"top-level schema must be a record, got ${schema.getType}")
-    StructType(fields(schema).map(f => StructField(f.name, f.dataType, f.nullable)))
-  }
-
   def fields(record: Schema): Seq[Field] = fields(record, Set.empty)
 
   private def fields(record: Schema, seen: Set[String]): Seq[Field] = {

@@ -64,9 +64,6 @@ object AccessLogSource {
     BrowserSource.decode(parsed, "qs")
   }
 
-  def readBatch(spark: SparkSession, path: String): DataFrame =
-    decode(spark.read.text(path))
-
   def readStream(spark: SparkSession, path: String): DataFrame =
     decode(spark.readStream.text(path))
 }

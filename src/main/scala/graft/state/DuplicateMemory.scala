@@ -3,7 +3,7 @@ package graft.state
 import graft.functions.Murmur3
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
+import org.apache.spark.sql.types._
 
 /** Probabilistic duplicate flagging with the reference's slot-memory
   * semantics (`ShortTermDuplicateMemory.java:108-178`): murmur3_128 over the
@@ -37,14 +37,24 @@ object DuplicateMemory {
     *                  `IncomingRequestProcessor.java:150-151`)
     * @param orderCol  processing order within a party (arrival time)
     * @param slotCount slots per partition (reference default 1M/thread)
+    *
+    * The order within a party is total up to rows equal in every atomic
+    * column: `orderCol` ties break on the key columns, then on the remaining
+    * atomic columns in schema order, so which of two same-instant repeats
+    * carries the flag does not depend on shuffle arrival order.
     */
   def flagDuplicates(df: DataFrame, keyCols: Seq[String], partitionCol: String,
                      orderCol: String, slotCount: Int = 1 << 20): DataFrame = {
     val outSchema = StructType(df.schema.fields :+ StructField("duplicate", BooleanType, nullable = false))
     val keyIdx = keyCols.map(df.schema.fieldIndex)
+    val sortCols = (partitionCol +: orderCol +: keyCols).distinct
+    val tieBreaks = df.schema.fields.collect {
+      case StructField(n, _: NumericType | _: StringType | BinaryType | BooleanType |
+          DateType | TimestampType | TimestampNTZType, _, _) if !sortCols.contains(n) => n
+    }
     val partitioned = df
       .repartition(col(partitionCol))
-      .sortWithinPartitions(col(partitionCol), col(orderCol))
+      .sortWithinPartitions((sortCols ++ tieBreaks).map(n => col(s"`${n.replace("`", "``")}`")): _*)
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
     partitioned.mapPartitions { rows =>
       val memory = new Array[Long](slotCount) // one slot array per partition

@@ -56,7 +56,7 @@ object Bucketing {
   def compact(spark: SparkSession, path: String,
               targetBytes: Long = 128L << 20): (Int, Int) = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val df = spark.read.parquet(path)
+    val df = graft.Tables.open(spark, path)
     val files = df.inputFiles
     val bytes = files.map(f => new java.io.File(new java.net.URI(f)).length()).sum
     val parts = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
@@ -66,7 +66,7 @@ object Bucketing {
     Files.move(Paths.get(path), Paths.get(old), StandardCopyOption.ATOMIC_MOVE)
     Files.move(Paths.get(tmp), Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(old))
-    val after = spark.read.parquet(path).inputFiles.length
+    val after = graft.Tables.open(spark, path).inputFiles.length
     (files.length, after)
   }
 }

@@ -37,6 +37,18 @@ class DuplicateMemorySpec extends SparkSpec {
     assert(flagged === Array(("e1", false), ("e2", false), ("e1", true), ("e1", false)))
   }
 
+  test("a same-instant repeat flags the same row in either arrival order") {
+    // one input partition, so the rows reach the sort in the order given
+    def flagged(rows: Seq[(String, String, String, Long, String)]): Seq[String] =
+      DuplicateMemory
+        .flagDuplicates(rows.toDF("partyId", "sessionId", "eventId", "ts", "payload")
+          .coalesce(1), Seq("partyId", "sessionId", "eventId"), "partyId", "ts")
+        .filter(col("duplicate")).select("payload").as[String].collect().toSeq
+    val tie = Seq(("p1", "s1", "e1", 5L, "b"), ("p1", "s1", "e1", 5L, "a"))
+    assert(flagged(tie) === Seq("b"))
+    assert(flagged(tie.reverse) === Seq("b"))
+  }
+
   test("distinct keys stay unflagged at realistic fill rates") {
     val df = (1 to 5000).map(i => (s"p${i % 50}", s"s$i", s"e$i", i.toLong))
       .toDF("partyId", "sessionId", "eventId", "ts")

@@ -13,8 +13,9 @@ second (change):
   per-layer self times side by side, each with its B/A ratio. For two
   traced query_suite runs of one seed it also checks the memo layer: a
   `memo drift` line means `queries.memo_hits` or `queries.memo_misses`
-  differ, which a results-neutral change must not cause. For two traced
-  spine runs of one seed it checks the wire: a `wire drift` line names a
+  differ, which a results-neutral change must not cause, and it attributes
+  Spark jobs per query: a `jobs drift` line names a query whose jobs, summed
+  over its runs (`suite.runs[].jobs`), differ. For two traced spine runs of one seed it checks the wire: a `wire drift` line names a
   sink byte count or pipeline row count (`WIRE_KEYS`) that differs, which
   a change that keeps the wire format must not cause."""
 import sys, json
@@ -71,6 +72,7 @@ def perfbench_diff(pa, a, pb, b):
     if la or lb:
         table("ladder self_s", la.get("self_s", {}), lb.get("self_s", {}))
     memo_check(a, b)
+    jobs_check(a, b)
     wire_check(a, b)
 
 
@@ -98,6 +100,29 @@ def memo_check(a, b):
         print(f"\nmemo drift: hits {va[0]} -> {vb[0]}, misses {va[1]} -> {vb[1]}")
     else:
         print(f"\nmemo: {va[0]:g} hits, {va[1]:g} misses on both sides")
+
+
+def query_jobs(d):
+    """Spark jobs per query, summed over its traced runs."""
+    jobs = {}
+    for r in d.get("suite", {}).get("runs", []):
+        if r.get("jobs") is not None:
+            jobs[r["query"]] = jobs.get(r["query"], 0) + r["jobs"]
+    return jobs
+
+
+def jobs_check(a, b):
+    """Same seed, both traced query_suite runs: jobs per query, side by side."""
+    if not same_seed_traced(a, b, "query_suite"):
+        return
+    ja, jb = query_jobs(a), query_jobs(b)
+    drift = [(q, ja.get(q), jb.get(q)) for q in sorted(set(ja) | set(jb))
+             if ja.get(q) != jb.get(q)]
+    print()
+    for q, va, vb in drift:
+        print(f"jobs drift: {q} {va} -> {vb}")
+    if not drift:
+        print("jobs: identical on both sides")
 
 
 def wire_check(a, b):
