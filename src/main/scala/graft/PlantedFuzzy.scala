@@ -78,9 +78,7 @@ object PlantedFuzzy {
     val eligible = chars.indices.filter(i => !Character.isWhitespace(chars(i))).toArray
     if (eligible.isEmpty) return text
     val n = math.min(e, eligible.length)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def digest(round: Int): Array[Byte] =
-      md.digest(s"plant:$docId:$round".getBytes("UTF-8"))
+    def digest(round: Int): Array[Byte] = graft.functions.Digests.md5Utf8(s"plant:$docId:$round")
     def substitute(idx: Int, d: Array[Byte]): Unit = {
       val letter = ('a' + ((d(8) & 0xff) % 26)).toChar
       chars(idx) =

@@ -1,6 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
@@ -28,15 +27,9 @@ object CountMin {
   final val Depth = 4
   final val Width = 1 << 12 // 4096 counters/row: eps = e/4096 ~ 0.07% of N
 
-  private val md5tl = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-
   /** Counter index of `value` in hash row `row`. */
   private[functions] def bucket(value: String, row: Int): Int = {
-    val d = md5tl.get()
-    d.reset()
-    val bytes = d.digest(s"cm$row:$value".getBytes("UTF-8"))
+    val bytes = Digests.md5Utf8(s"cm$row:$value")
     var h = 0L
     var i = 0
     while (i < 8) { h = (h << 8) | (bytes(i) & 0xffL); i += 1 }

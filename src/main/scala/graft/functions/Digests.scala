@@ -43,6 +43,16 @@ object Digests {
     })
   }
 
+  private val md5PerThread =
+    ThreadLocal.withInitial[MessageDigest](() => MessageDigest.getInstance("MD5"))
+
+  /** md5 of the UTF-8 bytes of `s` on this thread's one MD5 digest — the
+    * sketch and shingle hashes call it per token, where a fresh
+    * `getInstance` (or Guava's `Hashing.md5()`, which clones one) per call
+    * would cost more than the hash. */
+  def md5Utf8(s: String): Array[Byte] =
+    md5PerThread.get().digest(s.getBytes(StandardCharsets.UTF_8))
+
   /** Plain digest of the non-null pieces, in order. Never null. */
   def digest(algorithm: String, pieces: Array[String]): Array[Byte] = {
     val md = MessageDigest.getInstance(algorithm)

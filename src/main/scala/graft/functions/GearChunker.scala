@@ -32,10 +32,8 @@ object GearChunker {
   final val MaxLen = 128
 
   private def tableFrom(prefix: String): Array[Long] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
     Array.tabulate(256) { i =>
-      md.reset()
-      val d = md.digest(s"$prefix:$i".getBytes("UTF-8"))
+      val d = Digests.md5Utf8(s"$prefix:$i")
       var h = 0L
       var j = 0
       while (j < 8) { h = (h << 8) | (d(j) & 0xffL); j += 1 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
@@ -23,15 +22,9 @@ import org.apache.spark.sql.expressions.Aggregator
 object Hll {
   final val M = 1024 // 2^10 registers
 
-  private val md5tl = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-
   /** (bucket, register value 2^(rho-1)) for one element. */
   private[functions] def registerOf(value: String): (Int, Long) = {
-    val d = md5tl.get()
-    d.reset()
-    val bytes = d.digest(value.getBytes("UTF-8"))
+    val bytes = Digests.md5Utf8(value)
     var h = 0L
     var i = 8
     while (i < 16) { h = (h << 8) | (bytes(i) & 0xffL); i += 1 }

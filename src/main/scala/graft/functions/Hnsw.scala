@@ -28,8 +28,7 @@ object Hnsw {
   /** md5-derived uniform in (0,1) for node levels — reproducible from the
     * source alone (no RNG; same derivation family as [[GearChunker]]). */
   private def uniform(id: Long): Double = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val d = md.digest(s"hnsw:$id".getBytes("UTF-8"))
+    val d = Digests.md5Utf8(s"hnsw:$id")
     var bits = 0L
     var j = 0
     while (j < 7) { bits = (bits << 8) | (d(j) & 0xffL); j += 1 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 /** MinHash signature computation in tight JVM code. The equivalent nested
   * `transform(...array_min(transform(...)))` column expression is
   * semantically identical but runs interpreted per element (Spark
@@ -30,10 +28,6 @@ object MinHash {
   final val Ws = " \t\n\f\r"
   final val WsRe: String = s"[$Ws]+"
 
-  private val md5 = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-
   /** SQL-parity tokenizer: trims SPACES only (SQL/DuckDB `trim`) then
     * splits on \s+ KEEPING edge empties (split limit -1, like Spark's
     * `split` and DuckDB's `string_split_regex` — both emit a leading
@@ -59,9 +53,7 @@ object MinHash {
   /** First 4 bytes of md5(s) as an unsigned 32-bit value in a long —
     * ≡ DuckDB `('0x'||substr(md5(s),1,8))::UBIGINT`. */
   def md5High32(s: String): Long = {
-    val d = md5.get()
-    d.reset()
-    val bytes = d.digest(s.getBytes("UTF-8"))
+    val bytes = Digests.md5Utf8(s)
     ((bytes(0) & 0xffL) << 24) | ((bytes(1) & 0xffL) << 16) |
       ((bytes(2) & 0xffL) << 8) | (bytes(3) & 0xffL)
   }
@@ -69,9 +61,7 @@ object MinHash {
   /** Low 32 bits of md5(shingle), as an unsigned value in a long —
     * ≡ DuckDB `('0x'||substr(md5(s),25,8))::UBIGINT`. */
   private def shingleHash32(s: String): Long = {
-    val d = md5.get()
-    d.reset()
-    val bytes = d.digest(s.getBytes("UTF-8"))
+    val bytes = Digests.md5Utf8(s)
     var h = 0L
     var i = 12
     while (i < 16) { h = (h << 8) | (bytes(i) & 0xffL); i += 1 }
@@ -84,9 +74,7 @@ object MinHash {
     * set-similarity shingles use; factored here so token-level users (the
     * tfidf index) share one definition. */
   def md5Mid52(s: String): Long = {
-    val d = md5.get()
-    d.reset()
-    val bytes = d.digest(s.getBytes("UTF-8"))
+    val bytes = Digests.md5Utf8(s)
     var v = bytes(9) & 0xFL
     var i = 10
     while (i < 16) { v = (v << 8) | (bytes(i) & 0xFFL); i += 1 }

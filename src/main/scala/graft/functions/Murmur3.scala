@@ -1,142 +1,25 @@
 package graft.functions
 
+import com.google.common.hash.Hashing
 import java.nio.charset.StandardCharsets
 
-/** MurmurHash3 x86_32 (Austin Appleby's public-domain algorithm), matching
-  * Guava's `Hashing.murmur3_32().hashString(s, UTF_8).asInt()` — the function
-  * the reference uses for the request checksum
-  * (`ClientSideCookieEventHandler.java:206-216`) and, in 128-bit form, for
-  * duplicate-memory signatures (`ShortTermDuplicateMemory.java:108-139`).
-  *
-  * Implemented from the published algorithm (seed 0, little-endian tail,
-  * standard fmix finalizer) — not copied from any library source.
+/** MurmurHash3 through Guava, the library the reference calls for the
+  * request checksum (`ClientSideCookieEventHandler.java:206-216`, x86_32 of
+  * the UTF-8 canonical string). `murmur3_32_fixed` is the x86_32 function
+  * the reference's deprecated `Hashing.murmur3_32` meant: the two agree on
+  * bytes, but the deprecated `hashString` mis-encodes supplementary-plane
+  * text.
   */
 object Murmur3 {
-  private final val C1 = 0xcc9e2d51
-  private final val C2 = 0x1b873593
 
-  def hash32(data: Array[Byte]): Int = hash32(data, 0, data.length, 0)
-
-  def hash32(data: Array[Byte], offset: Int, len: Int, seed: Int): Int = {
-    var h1 = seed
-    val nblocks = len / 4
-    var i = 0
-    while (i < nblocks) {
-      val base = offset + i * 4
-      var k1 = (data(base) & 0xff) |
-        ((data(base + 1) & 0xff) << 8) |
-        ((data(base + 2) & 0xff) << 16) |
-        ((data(base + 3) & 0xff) << 24)
-      k1 *= C1; k1 = Integer.rotateLeft(k1, 15); k1 *= C2
-      h1 ^= k1; h1 = Integer.rotateLeft(h1, 13); h1 = h1 * 5 + 0xe6546b64
-      i += 1
-    }
-    // tail
-    var k1 = 0
-    val tailStart = offset + nblocks * 4
-    (len & 3) match {
-      case 3 =>
-        k1 ^= (data(tailStart + 2) & 0xff) << 16
-        k1 ^= (data(tailStart + 1) & 0xff) << 8
-        k1 ^= data(tailStart) & 0xff
-      case 2 =>
-        k1 ^= (data(tailStart + 1) & 0xff) << 8
-        k1 ^= data(tailStart) & 0xff
-      case 1 =>
-        k1 ^= data(tailStart) & 0xff
-      case _ =>
-    }
-    if ((len & 3) != 0) {
-      k1 *= C1; k1 = Integer.rotateLeft(k1, 15); k1 *= C2; h1 ^= k1
-    }
-    fmix32(h1 ^ len)
-  }
-
-  private def fmix32(in: Int): Int = {
-    var h = in
-    h ^= h >>> 16; h *= 0x85ebca6b
-    h ^= h >>> 13; h *= 0xc2b2ae35
-    h ^= h >>> 16
-    h
-  }
+  def hash32(data: Array[Byte]): Int = Hashing.murmur3_32_fixed().hashBytes(data).asInt()
 
   /** UTF-8 string hash — `null`-tolerant for StaticInvoke call sites. */
   def hashStringUtf8(s: String): java.lang.Integer =
     if (s == null) null
-    else java.lang.Integer.valueOf(hash32(s.getBytes(StandardCharsets.UTF_8)))
+    else java.lang.Integer.valueOf(
+      Hashing.murmur3_32_fixed().hashString(s, StandardCharsets.UTF_8).asInt())
 
-  // ---------------------------------------------------------------- x64_128
   /** MurmurHash3 x64_128, low 64 bits (Guava `asLong()`). */
-  def hash128x64Low(data: Array[Byte]): Long = hash128x64(data)._1
-
-  /** Full MurmurHash3 x64_128: the finalized (h1, h2) words — the pair Guava
-    * serializes little-endian as `asBytes()`. Needed for the duplicate-memory
-    * slot/signature split (`ShortTermDuplicateMemory.java:139-178`: slot =
-    * byte-swapped low int of h1, signature = byte-swapped h2). */
-  def hash128x64(data: Array[Byte]): (Long, Long) = {
-    val len = data.length
-    var h1 = 0L
-    var h2 = 0L
-    val c1 = 0x87c37b91114253d5L
-    val c2 = 0x4cf5ad432745937fL
-    val nblocks = len / 16
-    var i = 0
-    def getLong(idx: Int): Long = {
-      var v = 0L
-      var j = 7
-      while (j >= 0) { v = (v << 8) | (data(idx + j) & 0xffL); j -= 1 }
-      v
-    }
-    while (i < nblocks) {
-      var k1 = getLong(i * 16)
-      var k2 = getLong(i * 16 + 8)
-      k1 *= c1; k1 = java.lang.Long.rotateLeft(k1, 31); k1 *= c2; h1 ^= k1
-      h1 = java.lang.Long.rotateLeft(h1, 27); h1 += h2; h1 = h1 * 5 + 0x52dce729
-      k2 *= c2; k2 = java.lang.Long.rotateLeft(k2, 33); k2 *= c1; h2 ^= k2
-      h2 = java.lang.Long.rotateLeft(h2, 31); h2 += h1; h2 = h2 * 5 + 0x38495ab5
-      i += 1
-    }
-    var k1 = 0L
-    var k2 = 0L
-    val tail = nblocks * 16
-    val rem = len & 15
-    var j = rem
-    while (j > 8) { k2 ^= (data(tail + j - 1) & 0xffL) << ((j - 9) * 8); j -= 1 }
-    if (rem > 8) { k2 *= c2; k2 = java.lang.Long.rotateLeft(k2, 33); k2 *= c1; h2 ^= k2 }
-    j = math.min(rem, 8)
-    while (j > 0) { k1 ^= (data(tail + j - 1) & 0xffL) << ((j - 1) * 8); j -= 1 }
-    if (rem > 0) { k1 *= c1; k1 = java.lang.Long.rotateLeft(k1, 31); k1 *= c2; h1 ^= k1 }
-    h1 ^= len; h2 ^= len
-    h1 += h2; h2 += h1
-    h1 = fmix64(h1); h2 = fmix64(h2)
-    h1 += h2; h2 += h1
-    (h1, h2)
-  }
-
-  /** Guava `putUnencodedChars` parity: strings contribute UTF-16LE bytes
-    * (`ShortTermDuplicateMemory.java:131-137` hashes event properties this
-    * way — NOT UTF-8). */
-  def hash128x64Utf16(properties: Seq[String]): (Long, Long) = {
-    val totalChars = properties.iterator.map(_.length).sum
-    val bytes = new Array[Byte](totalChars * 2)
-    var o = 0
-    properties.foreach { s =>
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        bytes(o) = (c & 0xff).toByte
-        bytes(o + 1) = ((c >> 8) & 0xff).toByte
-        o += 2; i += 1
-      }
-    }
-    hash128x64(bytes)
-  }
-
-  private def fmix64(in: Long): Long = {
-    var k = in
-    k ^= k >>> 33; k *= 0xff51afd7ed558ccdL
-    k ^= k >>> 33; k *= 0xc4ceb9fe1a85ec53L
-    k ^= k >>> 33
-    k
-  }
+  def hash128x64Low(data: Array[Byte]): Long = Hashing.murmur3_128().hashBytes(data).asLong()
 }

@@ -1,5 +1,8 @@
 package graft.functions
 
+import com.google.common.net.InetAddresses
+import java.net.InetAddress
+
 /** X-Forwarded-For peer-address resolution — the reference's
   * `ProxyAdjacentPeerAddressHandler.java:40-59`, which runs BEFORE any
   * mapping: the proxy-adjacent hop (the entry after the LAST comma of the
@@ -16,11 +19,15 @@ package graft.functions
   * per request); a data engine cannot do per-row DNS, so only IP literals
   * resolve and hostnames fall through to the transport address — the
   * standard behavior for every XFF entry a real proxy writes.
-  * Normalization parity is exact for literals: parsed bytes are formatted
-  * by `InetAddress.getByAddress(...).getHostAddress` (no lookup), so
-  * `::FFFF:1.2.3.4` → `1.2.3.4` and `2001:db8::1` →
-  * `2001:db8:0:0:0:0:0:1` exactly as the reference's
-  * `InetSocketAddress(getByName(v), 0).getHostString` would.
+  * Literals parse with Guava's `InetAddresses.forString`, which never
+  * touches DNS, and format with `getHostAddress`, so `::FFFF:1.2.3.4` →
+  * `1.2.3.4` and `2001:db8::1` → `2001:db8:0:0:0:0:0:1` exactly as the
+  * reference's `InetSocketAddress(getByName(v), 0).getHostString` would.
+  *
+  * IPv6 zone ids (`fe80::1%eth0`) are rejected before Guava sees them:
+  * `forString` resolves a zone through the host's `NetworkInterface`, so
+  * the result would depend on the executor's network devices, and a proxy
+  * never writes a zone into the header.
   */
 object PeerAddresses {
 
@@ -28,108 +35,26 @@ object PeerAddresses {
     * is null/blank or the entry is not a valid IP literal. */
   def resolveXff(s: String): String = {
     if (s == null) return null
-    val idx = s.lastIndexOf(',')
-    val v = (if (idx == -1) s else s.substring(idx + 1)).trim
-    val bytes = parseIpLiteral(v)
-    if (bytes == null) null
-    else java.net.InetAddress.getByAddress(bytes).getHostAddress
+    val a = literal(s.substring(s.lastIndexOf(',') + 1).trim)
+    if (a == null) null else a.getHostAddress
   }
 
-  /** Strict IP-literal parser: dotted-quad IPv4 (decimal, 0-255, leading
-    * zeros rejected — the octal ambiguity trap) or RFC-4291 IPv6 with `::`
-    * compression, optional v4 tail, optional brackets (getByName accepts
-    * `[::1]`). Returns 4 or 16 bytes, or null. Never touches the network. */
-  def parseIpLiteral(s0: String): Array[Byte] = {
-    if (s0 == null || s0.isEmpty) return null
-    var s = s0
-    if (s.length >= 2 && s.charAt(0) == '[' && s.charAt(s.length - 1) == ']')
-      s = s.substring(1, s.length - 1)
-    if (s.indexOf(':') >= 0) parseIpv6(s) else parseIpv4(s)
+  /** IP literal → 4 or 16 address bytes, or null. One optional pair of
+    * brackets is stripped (getByName accepts `[::1]`). */
+  def parseIpLiteral(s: String): Array[Byte] = {
+    val a = literal(s)
+    if (a == null) null else a.getAddress
   }
 
-  private def parseIpv4(s: String): Array[Byte] = {
-    val parts = s.split("\\.", -1)
-    if (parts.length != 4) return null
-    val out = new Array[Byte](4)
-    var i = 0
-    while (i < 4) {
-      val p = parts(i)
-      if (p.isEmpty || p.length > 3) return null
-      if (p.length > 1 && p.charAt(0) == '0') return null
-      var v = 0
-      var j = 0
-      while (j < p.length) {
-        val c = p.charAt(j)
-        if (c < '0' || c > '9') return null
-        v = v * 10 + (c - '0')
-        j += 1
-      }
-      if (v > 255) return null
-      out(i) = v.toByte
-      i += 1
-    }
-    out
-  }
-
-  private def parseIpv6(s: String): Array[Byte] = {
-    if (s.isEmpty || s.indexOf('%') >= 0) return null
-    val dcol = s.indexOf("::")
-    if (dcol >= 0 && s.indexOf("::", dcol + 1) >= 0) return null
-    // group values as 16-bit ints; a v4 tail expands to two groups and is
-    // only legal as the FINAL token of the whole address (atEnd)
-    def groups(part: String, atEnd: Boolean): Array[Int] = {
-      if (part.isEmpty) return Array.empty
-      val toks = part.split(":", -1)
-      val buf = new Array[Int](toks.length + 1)
-      var n = 0
-      var i = 0
-      while (i < toks.length) {
-        val t = toks(i)
-        if (t.isEmpty) return null // a stray ':' — only '::' may elide
-        if (t.indexOf('.') >= 0) {
-          if (!atEnd || i != toks.length - 1) return null
-          val v4 = parseIpv4(t)
-          if (v4 == null) return null
-          buf(n) = ((v4(0) & 0xff) << 8) | (v4(1) & 0xff); n += 1
-          buf(n) = ((v4(2) & 0xff) << 8) | (v4(3) & 0xff); n += 1
-        } else {
-          if (t.length > 4) return null
-          var v = 0
-          var j = 0
-          while (j < t.length) {
-            val d = Character.digit(t.charAt(j), 16)
-            if (d < 0) return null
-            v = (v << 4) | d
-            j += 1
-          }
-          buf(n) = v; n += 1
-        }
-        i += 1
-      }
-      java.util.Arrays.copyOf(buf, n)
-    }
-    val head = groups(if (dcol < 0) s else s.substring(0, dcol), atEnd = dcol < 0)
-    if (head == null) return null
-    val tail = if (dcol < 0) null else groups(s.substring(dcol + 2), atEnd = true)
-    if (dcol >= 0 && tail == null) return null
-    val total = head.length + (if (tail == null) 0 else tail.length)
-    val out = new Array[Byte](16)
-    def put(g: Array[Int], at: Int): Unit = {
-      var i = 0
-      while (i < g.length) {
-        out(2 * (at + i)) = (g(i) >> 8).toByte
-        out(2 * (at + i) + 1) = g(i).toByte
-        i += 1
-      }
-    }
-    if (dcol < 0) {
-      if (total != 8) return null
-      put(head, 0)
-    } else {
-      if (total > 7) return null // '::' must elide at least one group
-      put(head, 0)
-      if (tail != null) put(tail, 8 - tail.length)
-    }
-    out
+  private def literal(s0: String): InetAddress = {
+    if (s0 == null) return null
+    val s =
+      if (s0.length >= 2 && s0.charAt(0) == '[' && s0.charAt(s0.length - 1) == ']')
+        s0.substring(1, s0.length - 1)
+      else s0
+    // a zone id is resolved through NetworkInterface (see above); Guava
+    // also reads non-ASCII Unicode digits, which java.net does not
+    if (s.indexOf('%') >= 0 || s.exists(_ > '\u007f')) null
+    else try InetAddresses.forString(s) catch { case _: IllegalArgumentException => null }
   }
 }

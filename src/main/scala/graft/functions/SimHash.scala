@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 /** 64-bit SimHash in tight JVM code — one pass per document instead of the
   * explode→groupBy(doc,tok)→64-sum-aggregate→groupBy(doc) column pipeline
   * (two shuffles and a 64-wide aggregate whose codegen alone cost seconds;
@@ -16,16 +14,10 @@ import java.security.MessageDigest
   */
 object SimHash {
 
-  private val md5 = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-
   /** Low 64 bits of md5(token) as a (sign-carrying) long — the same value
     * DuckDB reaches via ('0x'||substr(md5(tok),17,16))::UBIGINT. */
   private def tokenHash64(tok: String): Long = {
-    val d = md5.get()
-    d.reset()
-    val bytes = d.digest(tok.getBytes("UTF-8"))
+    val bytes = Digests.md5Utf8(tok)
     // md5 hex chars 17..32 = bytes 8..15, big-endian
     var h = 0L
     var i = 8

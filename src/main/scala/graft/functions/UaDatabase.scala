@@ -2,7 +2,11 @@ package graft.functions
 
 import java.util.concurrent.atomic.AtomicLong
 import java.util.regex.{Matcher, Pattern}
+import org.yaml.snakeyaml.Yaml
+import org.yaml.snakeyaml.error.YAMLException
+import org.yaml.snakeyaml.nodes.{MappingNode, Node, ScalarNode, SequenceNode}
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 /** Loadable user-agent classification database.
   *
@@ -27,11 +31,9 @@ import scala.collection.concurrent.TrieMap
   * once per refresh interval and the compiled rule set swaps atomically;
   * rows mid-flight keep the rules they started with.
   *
-  * The YAML reader is a purpose-built subset parser (same dependency-free
-  * stance as the HOCON-subset topology config): top-level `section:` keys,
-  * `- key: value` list items with indented continuation keys, single/double
-  * quoted or bare scalars, and comment lines. That is the entire grammar
-  * uap-core's file uses.
+  * The file is read with snakeyaml, which ships with Spark: a map of
+  * sections, each a list of flat string maps, which is the shape of
+  * uap-core's file.
   */
 object UaDatabase {
 
@@ -58,68 +60,34 @@ object UaDatabase {
 
   // ---------------------------------------------------------------- YAML
 
-  /** `section -> ordered list of flat string maps`. */
+  /** `section -> ordered list of flat string maps`, read from the composed
+    * snakeyaml node tree. Nothing is constructed, so no implicit typing
+    * applies: every scalar stays the string as written (`010`, `yes`, an
+    * empty value → `""`). A YAML error or any other shape is rejected with
+    * an [[IllegalArgumentException]]. */
   private[functions] def parseYamlSections(text: String): Map[String, Vector[Map[String, String]]] = {
-    val sections = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Map[String, String]]]
-    var section: String = null
-    var item: Map[String, String] = null
-    def flush(): Unit = if (section != null && item != null) {
-      sections(section) = sections.getOrElse(section, Vector.empty) :+ item
-      item = null
+    def reject(what: String, n: Node): Nothing = throw new IllegalArgumentException(
+      s"ua-database yaml: expected $what at line ${n.getStartMark.getLine + 1}")
+    def str(n: Node): String = n match {
+      case s: ScalarNode => s.getValue
+      case other => reject("a scalar", other)
     }
-    val KeyVal = """([A-Za-z_][A-Za-z0-9_]*)\s*:\s*(.*)""".r
-    for (raw <- text.linesIterator) {
-      val t = raw.trim
-      if (t.isEmpty || t.startsWith("#")) ()                // comment/blank
-      else if (!raw.head.isWhitespace && t.endsWith(":") && !t.startsWith("-")) {
-        flush(); section = t.dropRight(1).trim              // section start
-      } else if (t.startsWith("- ")) {                      // new list item
-        flush()
-        t.drop(2).trim match {
-          case KeyVal(k, v) => item = Map(k -> scalar(v))
-          case other => throw new IllegalArgumentException(
-            s"ua-database yaml: unparseable list item '$other'")
-        }
-      } else t match {                                      // continuation key
-        case KeyVal(k, v) if item != null => item += (k -> scalar(v))
-        case other => throw new IllegalArgumentException(
-          s"ua-database yaml: unexpected line '$other'")
-      }
+    def flat(n: Node): Map[String, String] = n match {
+      case m: MappingNode => m.getValue.asScala.map(t => str(t.getKeyNode) -> str(t.getValueNode)).toMap
+      case other => reject("a map of scalars", other)
     }
-    flush()
-    sections.toMap
-  }
-
-  /** Scalar value: single-quoted ('' escapes a quote), double-quoted
-    * (backslash escapes), or bare (trailing ` #comment` stripped). */
-  private[functions] def scalar(s: String): String = {
-    val v = s.trim
-    if (v.startsWith("'")) {
-      val out = new StringBuilder; var i = 1
-      while (i < v.length) {
-        if (v.charAt(i) == '\'') {
-          if (i + 1 < v.length && v.charAt(i + 1) == '\'') { out += '\''; i += 2 }
-          else i = v.length                                  // closing quote
-        } else { out += v.charAt(i); i += 1 }
-      }
-      out.toString
-    } else if (v.startsWith("\"")) {
-      val out = new StringBuilder; var i = 1; var open = true
-      while (i < v.length && open) {
-        v.charAt(i) match {
-          case '\\' if i + 1 < v.length =>
-            out += (v.charAt(i + 1) match {
-              case 'n' => '\n'; case 't' => '\t'; case 'r' => '\r'
-              case c => c
-            }); i += 2
-          case '"' => open = false; i += 1
-          case c => out += c; i += 1
-        }
-      }
-      out.toString
-    } else {
-      val cut = v.indexOf(" #")
-      (if (cut >= 0) v.substring(0, cut) else v).trim
+    val root =
+      try new Yaml().compose(new java.io.StringReader(text))
+      catch { case e: YAMLException => throw new IllegalArgumentException(s"ua-database yaml: $e", e) }
+    root match {
+      case null => Map.empty
+      case m: MappingNode => m.getValue.asScala.map { t =>
+        str(t.getKeyNode) -> (t.getValueNode match {
+          case items: SequenceNode => items.getValue.asScala.toVector.map(flat)
+          case other => reject("a list of rules", other)
+        })
+      }.toMap
+      case other => reject("a map of sections", other)
     }
   }
 

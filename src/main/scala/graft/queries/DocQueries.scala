@@ -4659,23 +4659,14 @@ object DocQueries {
         SetsimP, SetsimQ, dfCap = 32L), SetsimP, SetsimQ)
     }
 
-  /** 52-bit md5-prefix hashes of the 3-token shingles, distinct — the
-    * DuckDB-replayable `('0x' || substr(md5(g), 20, 13))::UBIGINT`: hex
-    * chars 20..32 (1-based) are the low nibble of digest byte 9 followed
-    * by bytes 10..15. */
+  /** 52-bit md5-prefix hashes ([[graft.functions.MinHash.md5Mid52]]) of
+    * the 3-token shingles, distinct — the DuckDB-replayable
+    * `('0x' || substr(md5(g), 20, 13))::UBIGINT`. */
   private val shingles3Hash52Udf = udf((text: String) =>
     if (text == null) Array.empty[Long]
     else {
-      val md = java.security.MessageDigest.getInstance("MD5")
       val seen = new java.util.LinkedHashSet[java.lang.Long]()
-      graft.functions.MinHash.ngrams(text, 3).foreach { g =>
-        md.reset()
-        val dg = md.digest(g.getBytes("UTF-8"))
-        var v = (dg(9) & 0xFL)
-        var i = 10
-        while (i < 16) { v = (v << 8) | (dg(i) & 0xFFL); i += 1 }
-        seen.add(v)
-      }
+      graft.functions.MinHash.ngrams(text, 3).foreach(g => seen.add(graft.functions.MinHash.md5Mid52(g)))
       val out = new Array[Long](seen.size)
       val it = seen.iterator()
       var i = 0

@@ -2155,8 +2155,7 @@ object EmbeddingQueries {
     val ProjDim = 32
     val CandK = 4 * TopK
     val signs: Array[Array[Long]] = Array.tabulate(Dim, ProjDim) { (i, j) =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(s"$i,$j".getBytes("UTF-8")).map("%02x".format(_)).mkString
+      val hex = graft.functions.Digests.md5Utf8(s"$i,$j").map("%02x".format(_)).mkString
       if (java.lang.Long.parseLong(hex.take(13), 16) % 2 == 0) 1L else -1L
     }
     val bc = spark.sparkContext.broadcast(signs)

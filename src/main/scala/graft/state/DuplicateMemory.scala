@@ -1,6 +1,6 @@
 package graft.state
 
-import graft.functions.Murmur3
+import com.google.common.hash.Hashing
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,12 +22,16 @@ import org.apache.spark.sql.types._
   */
 object DuplicateMemory {
 
-  /** Slot/signature derivation (bit-parity with the reference). */
+  /** Slot/signature derivation, the reference's own chain
+    * (`ShortTermDuplicateMemory.java:131-178`): the hash bytes are h1 then
+    * h2, each little-endian, and the reference reads them big-endian, so
+    * the slot selector is the byte-swapped low int of h1 and the signature
+    * the byte-swapped h2. */
   def slotAndSignature(slotCount: Int, properties: String*): (Int, Long) = {
-    val (h1, h2) = Murmur3.hash128x64Utf16(properties)
-    val slotSelector = Integer.reverseBytes((h1 & 0xffffffffL).toInt)
-    val signature = java.lang.Long.reverseBytes(h2)
-    ((slotSelector & Int.MaxValue) % slotCount, signature)
+    val hasher = Hashing.murmur3_128().newHasher()
+    properties.foreach(p => hasher.putUnencodedChars(p))
+    val hash = java.nio.ByteBuffer.wrap(hasher.hash().asBytes())
+    ((hash.getInt(0) & Int.MaxValue) % slotCount, hash.getLong(8))
   }
 
   /** Flag probable duplicates. Appends a `duplicate` boolean column.

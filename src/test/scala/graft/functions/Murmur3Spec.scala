@@ -1,6 +1,7 @@
 package graft.functions
 
 import com.google.common.hash.Hashing
+import graft.state.DuplicateMemory
 import java.nio.charset.StandardCharsets
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
@@ -49,5 +50,25 @@ class Murmur3Spec extends AnyFunSuite {
       val expected = Hashing.murmur3_128().hashBytes(bytes).asLong()
       assert(Murmur3.hash128x64Low(bytes) === expected, s"for string: $s")
     }
+  }
+
+  test("non-BMP text hashes its UTF-8 bytes, as divolte.js sends them") {
+    // the deprecated murmur3_32().hashString differs on supplementary chars
+    Seq("emoji \uD83D\uDE00 x", "lone \uD83D surrogate", "\uDE00").foreach { s =>
+      assert(Murmur3.hashStringUtf8(s) === Murmur3.hash32(s.getBytes(StandardCharsets.UTF_8)),
+        s"for string: $s")
+    }
+    assert(Murmur3.hashStringUtf8("emoji \uD83D\uDE00 x") === -67675412)
+  }
+
+  test("dedup slot and signature hash the ids' UTF-16LE code units") {
+    val ids = Seq("party-\uD83D\uDE00", "session-1", "event-\uD83D\uDE00-2")
+    val hash = java.nio.ByteBuffer.wrap(Hashing.murmur3_128()
+      .hashBytes(ids.mkString.getBytes(StandardCharsets.UTF_16LE)).asBytes())
+    val slotCount = 1 << 20
+    val expected = ((hash.getInt(0) & Int.MaxValue) % slotCount, hash.getLong(8))
+    assert(DuplicateMemory.slotAndSignature(slotCount, ids: _*) === expected)
+    // pinned from the hand-written x64_128 this replaced
+    assert(expected === ((176406, -3585577080108821084L)))
   }
 }

@@ -48,6 +48,22 @@ class UaDatabaseSpec extends AnyFunSuite {
     assert(secs("other").length === 1)
   }
 
+  test("yaml: plain scalars stay verbatim strings; other shapes are rejected") {
+    val secs = UaDatabase.parseYamlSections(
+      """sec:
+        |  - regex: 010
+        |    a: 1.10
+        |    b: yes
+        |    c:
+        |""".stripMargin)
+    assert(secs === Map("sec" -> Vector(
+      Map("regex" -> "010", "a" -> "1.10", "b" -> "yes", "c" -> ""))))
+    intercept[IllegalArgumentException](UaDatabase.parseYamlSections("sec: scalar\n"))
+    intercept[IllegalArgumentException](UaDatabase.parseYamlSections(
+      "sec:\n  - regex: a\n    nested:\n      k: v\n"))
+    intercept[IllegalArgumentException](UaDatabase.parseYamlSections("sec:\n  - regex: 'open\n"))
+  }
+
   test("classify: first match wins; templates and group defaults") {
     // Edge rule precedes Chrome and renames via family_replacement
     val edge = UaDatabase.classify(db,

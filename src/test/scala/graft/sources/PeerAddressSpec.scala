@@ -61,6 +61,16 @@ class PeerAddressSpec extends SparkSpec {
     assert(r("1.2.3.4::5") == null)           // v4 must be the tail
   }
 
+  test("zone ids, unclosed brackets and non-ASCII digits are rejected; " +
+       "IPv4-compatible literals stay IPv6") {
+    assert(r("fe80::1%1") == null)            // numeric zone
+    assert(r("[fe80::1%eth0]") == null)       // named zone inside brackets
+    assert(r("[::1") == null)
+    assert(r("\u0661.\u0662.\u0663.\u0664") == null) // Arabic-Indic 1.2.3.4
+    assert(r("::1.2.3.4") == "0:0:0:0:0:0:102:304")
+    assert(r("::1.2.3.4") == java.net.InetAddress.getByName("::1.2.3.4").getHostAddress)
+  }
+
   test("parser agrees with java.net on every literal it accepts") {
     val cases = Seq("203.0.113.7", "0.0.0.0", "255.255.255.255",
       "2001:db8::1", "::1", "fe80::", "::ffff:10.1.2.3",
