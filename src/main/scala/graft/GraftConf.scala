@@ -52,9 +52,9 @@ object GraftConf {
     "unset: cap terms with df > 0.5 of the corpus unless that drops > 20% of " +
       "the vocabulary; set: cap at this fraction unconditionally (0 = off)")(s => Some(s.toDouble))
   val KafkaBootstrap = entry[Option[String]]("spark.graft.kafka.bootstrap", None,
-    "Kafka bootstrap servers; unset = no Kafka stream")(Some(_))
+    "Kafka bootstrap servers; unset = KafkaSink.write writes nothing")(Some(_))
   val PubsubTransport = entry[Option[String]]("spark.graft.pubsub.transport", None,
-    "registered Pub/Sub transport name; unset = no Pub/Sub stream")(Some(_))
+    "registered Pub/Sub transport name; unset = PubSubSink.publish sends nothing")(Some(_))
   val UaDatabase = entry[Option[String]]("spark.graft.ua.database", None,
     "uap-core regexes.yaml refining the built-in user-agent heuristics")(Some(_))
 

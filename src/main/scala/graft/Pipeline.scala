@@ -1,10 +1,12 @@
 package graft
 
 import graft.queries.DslQueries
-import graft.sinks.{AvroFileSink, TopicSinks}
+import graft.sinks.{AvroFileSink, KafkaSink, TopicSinks}
 import graft.state.DuplicateMemory
 import graft.topology.TopologyConfig
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 /** End-to-end demonstration of the full reference spine on real test data:
   * wire-format decode → duplicate flagging → default mapping → topology
@@ -34,7 +36,7 @@ object Pipeline {
       |  }
       |  sinks { files.type = hdfs, kafka.type = kafka }
       |}""".stripMargin
-    val mappers = Map[String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+    val mappers = Map[String, DataFrame => DataFrame](
       "all" -> identity,
       "purchases" -> (_.filter(col("event_type") === "purchase")))
     val topo = TopologyConfig.load(topoConf).toTopology(mappers)
@@ -67,57 +69,36 @@ object Pipeline {
       .filter(col("duplicate")).count()
     println(s"[pipeline] duplicate-flagged=$dupes")
 
-    // 6. streaming leg: file-stream the raw events table -> windowed rollup
-    //    -> Avro file sink, one roll per micro-batch (AvailableNow drains
-    //    the backlog then stops — the batch-parity mode).
-    //    (file-stream sources watch a directory; stage the table into one)
-    val srcDir = java.nio.file.Paths.get(s"$outDir/stream-src")
-    java.nio.file.Files.createDirectories(srcDir)
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      srcDir.resolve("events.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val rawSchema = Tables.open(spark, s"$sfDir/events.parquet").schema
-    val streamIn0 = spark.readStream
-      .schema(rawSchema)
-      .parquet(srcDir.toString)
-    // ts arrives as raw nanos (LongType under nanosAsLong) OR as a real
-    // timestamp, depending on the fixture's parquet precision — branch
-    // exactly like Tables.events does for the batch path
-    val streamIn = rawSchema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        streamIn0.withColumn("ts",
-          timestamp_micros(expr("ts DIV 1000")).cast("timestamp"))
-      case _ => streamIn0.withColumn("ts", col("ts").cast("timestamp"))
-    }
-    val streamOut = graft.streaming.Streams.windowedCounts(streamIn, "ts", "event_type", "1 hour")
-    val sq = streamOut.writeStream
-      .option("checkpointLocation", s"$outDir/stream-cp")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        if (!b.isEmpty) graft.sinks.AvroFileSink.write(
-          b.withColumn("window_start", unix_millis(col("window_start"))),
-          s"$outDir/stream-avro", s"roll-b$id"); ()
-      }.start()
+    // 6. streaming leg: the same config topology as ONE streaming query
+    //    (Topology.start) over a file stream of the batch run's source
+    //    frame, staged as parquet. AvailableNow drains the backlog then
+    //    stops — the batch-parity mode: the Avro sink gets the batch run's
+    //    rows; the Kafka writer writes nothing unless a bootstrap is set.
+    val staged = s"$outDir/stream-src"
+    mappedInput.write.mode("overwrite").parquet(staged)
+    val stagedStream = spark.readStream.schema(mappedInput.schema).parquet(staged)
+    val sq = topo.start(Map("browser" -> stagedStream),
+      Map("files" -> ((b: DataFrame, stamp: String) =>
+          AvroFileSink.write(b, s"$outDir/stream-avro", "pipeline", stamp = Some(stamp))),
+        "kafka" -> ((b: DataFrame, _: String) =>
+          KafkaSink.write(TopicSinks.kafkaFrameConfluent(b, "party_id", 42), "pipeline"))),
+      s"$outDir/stream-cp", Trigger.AvailableNow())
     sq.awaitTermination()
-    val rolled = graft.sinks.AvroFileSink.readBack(spark, s"$outDir/stream-avro")
-    println(s"[pipeline] stream-avro files=${rolled.size} rows=${rolled.map(_._2).sum}")
+    val rolled = AvroFileSink.readBack(spark, s"$outDir/stream-avro")
+    println(s"[pipeline] stream-avro files=${rolled.size} rows=${rolled.map(_._2).sum} " +
+      s"batch=$written")
 
-    // 7. streaming slot-memory duplicate flagging over the same feed
-    //    (every event is distinct here, so flagged must be 0 — parity with
-    //    the batch slot memory)
+    // 7. streaming slot-memory duplicate flagging over the same staged
+    //    feed (every event is distinct here, so flagged must be 0 — parity
+    //    with the batch slot memory)
     import spark.implicits._
-    val keyed = streamIn.select(
-        concat(lit("p"), col("user_id")).as("partyId"),
-        lit("s0").as("sessionId"),
-        concat(lit("e"), col("event_id")).as("eventId"),
-        unix_millis(col("ts").cast("timestamp")).as("ts"))
+    val keyed = stagedStream.select("party_id", "session_id", "page_view_id", "ts_ms")
       .as[(String, String, String, Long)]
     val dupq = graft.streaming.Streams.flagDuplicatesStream(keyed)
       .toDF("partyId", "sessionId", "eventId", "ts", "duplicate")
       .writeStream.format("memory").queryName("pipe_dups")
       .option("checkpointLocation", s"$outDir/dup-cp")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      .trigger(Trigger.AvailableNow()).start()
     dupq.awaitTermination()
     val streamed = spark.table("pipe_dups")
     println(s"[pipeline] stream-dedup rows=${streamed.count()} " +

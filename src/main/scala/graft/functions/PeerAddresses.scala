@@ -14,15 +14,24 @@ import java.net.InetAddress
   * `coalesce(resolveXff(xff), remoteHost)` so the fallback stays in
   * whole-stage codegen.
   *
-  * One deliberate divergence from `InetAddress.getByName`: the reference
-  * would DNS-resolve a HOSTNAME in the header (blocking the accept thread
-  * per request); a data engine cannot do per-row DNS, so only IP literals
-  * resolve and hostnames fall through to the transport address — the
-  * standard behavior for every XFF entry a real proxy writes.
   * Literals parse with Guava's `InetAddresses.forString`, which never
   * touches DNS, and format with `getHostAddress`, so `::FFFF:1.2.3.4` →
-  * `1.2.3.4` and `2001:db8::1` → `2001:db8:0:0:0:0:0:1` exactly as the
-  * reference's `InetSocketAddress(getByName(v), 0).getHostString` would.
+  * `1.2.3.4` and `2001:db8::1` → `2001:db8:0:0:0:0:0:1`. For the
+  * dotted-quad and IPv6 forms `PeerAddressSpec` checks against
+  * `InetAddress.getByName`, that is the reference's
+  * `InetSocketAddress(getByName(v), 0).getHostString`.
+  *
+  * Two divergences from `InetAddress.getByName`:
+  *  - the reference would DNS-resolve a HOSTNAME in the header (blocking
+  *    the accept thread per request); a data engine cannot do per-row DNS,
+  *    so only IP literals resolve and hostnames fall through to the
+  *    transport address — the standard behavior for every XFF entry a real
+  *    proxy writes;
+  *  - the JDK's literal parser also takes short and zero-padded IPv4
+  *    forms (`4`, `6.00`, `00.1.1.1`, `1.2.3.04`; JDK 17 reads them as
+  *    0.0.0.4, 6.0.0.0, 0.1.1.1, 1.2.3.4). Guava rejects them, so such an
+  *    entry keeps the transport address. Whether the reference's
+  *    `getByName` resolves them the same way was not checked against it.
   *
   * IPv6 zone ids (`fe80::1%eth0`) are rejected before Guava sees them:
   * `forString` resolves a zone through the host's `NetworkInterface`, so

@@ -1,6 +1,8 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.ClassTag
 
 /** Hot-reloadable enrichment dimension (reference
   * `ip2geo/ExternalDatabaseLookupService.java:41-154`: a filesystem watcher
@@ -35,7 +37,7 @@ object RefreshableDim {
   // Serializes swaps (stamp-change refreshes only — the stamp-match fast
   // path stays lock-free): two concurrent refreshes of the same key would
   // otherwise both derive (leaking whichever value loses the put) and both
-  // dispose the same stale value (double destroy throws).
+  // release the same stale value.
   private val swapLock = new Object
 
   /** Content stamp of a parquet dir (or single file). */
@@ -83,36 +85,40 @@ object RefreshableDim {
     }
   }
 
-  private final case class DerivedEntry(stamp: String, value: Any,
-                                        dispose: Any => Unit)
+  private final case class DerivedEntry(stamp: String, value: Broadcast[_])
   private val derivedCache =
     scala.collection.concurrent.TrieMap.empty[(org.apache.spark.SparkContext, String, String), DerivedEntry]
 
-  /** A value DERIVED from the current dimension (a broadcast Bloom filter,
-    * a hash index, …), recomputed only when the underlying files change —
-    * the per-batch refresh check costs one directory stat walk, not a
-    * rebuild. `dispose` releases the STALE value after a swap (e.g.
-    * `Broadcast.destroy`); in-flight consumers of the old value keep it
-    * alive JVM-side exactly like the reference's in-flight requests keep
-    * the old MaxMind reader. */
-  def derived[T](spark: SparkSession, path: String, tag: String)
-                (derive: DataFrame => T)
-                (dispose: T => Unit = (_: T) => ()): T = {
+  /** Unpersist, never destroy, a superseded broadcast: that frees the
+    * executor copies but keeps the driver value re-broadcastable, so an
+    * in-flight batch whose closure captured the old broadcast can still
+    * lazily read `.value` — `destroy()` would fail those tasks with
+    * "Attempted to use Broadcast after it was destroyed". */
+  private def release(e: DerivedEntry): Unit =
+    try e.value.unpersist(blocking = false) catch { case _: Exception => () }
+
+  /** A broadcast value DERIVED from the current dimension (a Bloom filter,
+    * a hash index, …), re-derived and re-broadcast only when the
+    * underlying files change — the per-batch refresh check costs one
+    * directory stat walk, not a rebuild. On a swap the stale broadcast is
+    * unpersisted, never destroyed; in-flight consumers of the old value keep
+    * it alive exactly like the reference's in-flight requests keep the old
+    * MaxMind reader. */
+  def derived[T: ClassTag](spark: SparkSession, path: String, tag: String)
+                          (derive: DataFrame => T): Broadcast[T] = {
     val stamp = stampOf(path)
     val key = (spark.sparkContext, path, tag)
     derivedCache.get(key) match {
-      case Some(e) if e.stamp == stamp => e.value.asInstanceOf[T]
+      case Some(e) if e.stamp == stamp => e.value.asInstanceOf[Broadcast[T]]
       case _ => swapLock.synchronized {
         // re-check under the lock: a racing refresh may have swapped already
         derivedCache.get(key) match {
-          case Some(e) if e.stamp == stamp => e.value.asInstanceOf[T]
+          case Some(e) if e.stamp == stamp => e.value.asInstanceOf[Broadcast[T]]
           case stale =>
-            val v = derive(current(spark, path))
-            derivedCache.put(key, DerivedEntry(stamp, v,
-              dispose.asInstanceOf[Any => Unit]))
-            stale.foreach(e =>
-              try e.dispose(e.value) catch { case _: Exception => () })
-            v
+            val bc = spark.sparkContext.broadcast(derive(current(spark, path)))
+            derivedCache.put(key, DerivedEntry(stamp, bc))
+            stale.foreach(release)
+            bc
         }
       }
     }
@@ -123,9 +129,7 @@ object RefreshableDim {
     cache.remove((spark.sparkContext, path)).foreach(_.df.unpersist())
     derivedCache.filterInPlace { case ((c, p, _), e) =>
       val drop = (c eq spark.sparkContext) && p == path
-      // a dispose that throws (e.g. an already-destroyed broadcast) must
-      // not abort the teardown loop and strand the remaining entries
-      if (drop) try e.dispose(e.value) catch { case _: Exception => () }
+      if (drop) release(e)
       !drop
     }
   }

@@ -24,8 +24,10 @@ import java.nio.file.{Files, Paths}
   *    this role; here the semantic is preserved per-file;
   *  - EMPTY partitions produce no file (reference discards empty files,
   *    `FileFlusher.java:183-208`);
-  *  - the stream variant appends batches via `foreachBatch`, giving the
-  *    roll-per-interval behavior (trigger interval ≡ roll window).
+  *  - on a stream, [[graft.topology.Topology.start]] calls [[write]] once
+  *    per micro-batch with the batch's stamp, giving the roll-per-interval
+  *    behavior (trigger interval ≡ roll window); a replayed batch
+  *    overwrites its own files.
   *
   * Distribution: each executor partition writes its own file — no driver
   * collect. The file API here is java.io, i.e. a shared POSIX filesystem
@@ -134,18 +136,4 @@ object AvroFileSink {
       }
     spark.createDataFrame(rdd, schema)
   }
-
-  /** Streaming variant: roll one batch of files per micro-batch (trigger
-    * interval = roll window; `query.trigger(ProcessingTime(...))`). The
-    * file stamp is the batch id, not wall-clock: foreachBatch is
-    * at-least-once, and a deterministic name makes a replayed batch
-    * overwrite its own files instead of duplicating them. */
-  def writeStreamTo(df: DataFrame, dir: String, checkpoint: String,
-                    tag: String = "stream"): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        write(batch, dir, tag, stamp = Some(f"b$batchId%012d")); ()
-      }
-      .start()
 }

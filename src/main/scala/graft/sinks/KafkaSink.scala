@@ -2,7 +2,6 @@ package graft.sinks
 
 import graft.GraftConf
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Live topic-sink transport for the [[TopicSinks]] frames.
   *
@@ -11,17 +10,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (`topicsinks/TopicFlusher.java:38-105`,
   * `topicsinks/kafka/KafkaFlusher.java:58-101`):
   *
-  *  - [[start]]: the Structured Streaming wiring — frames (key, value
-    *   binary columns from [[TopicSinks.kafkaFrame]]/`kafkaFrameConfluent`)
-  *   → `writeStream.format("kafka")`. Gated on
-  *   `spark.graft.kafka.bootstrap`: unset (the default, and the only
-  *   possibility in this zero-egress sandbox, whose Spark distribution
-  *   also omits the `spark-sql-kafka-0-10` connector jar) returns None and
-  *   nothing starts. In production, set the conf to the bootstrap servers
-  *   and put the connector jar on the classpath; partitioning by the
-  *   frame's partyId key then reproduces the reference's per-party
-  *   ordering, and the checkpoint dir gives at-least-once delivery — the
-  *   same guarantee the reference's ack-then-retry loop provides.
+  *  - [[write]]: the batch writer — frames (key, value binary columns
+  *   from [[TopicSinks.kafkaFrame]]/`kafkaFrameConfluent`) →
+  *   `write.format("kafka")`; on a stream, [[graft.topology.Topology.start]]
+  *   calls it once per micro-batch. Gated on `spark.graft.kafka.bootstrap`:
+  *   unset (the default; the Spark distribution this is built against
+  *   also omits the `spark-sql-kafka-0-10` connector jar) writes nothing
+  *   and returns false. In production, set the conf to the bootstrap
+  *   servers and put the connector jar on the classpath; partitioning by
+  *   the frame's partyId key then reproduces the reference's per-party
+  *   ordering, and a replayed micro-batch re-sends its records — the
+  *   at-least-once guarantee the reference's ack-then-retry loop provides.
   *
   *  - [[RetryingPublisher]]: the reference's outcome partitioning —
   *   completed / transient-retriable (kept pending, re-sent on the next
@@ -34,19 +33,19 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object KafkaSink {
 
-  /** Start the flag-gated Kafka stream for `frames` (must expose binary
-    * `key`/`value` columns). Returns None when no bootstrap servers are
+  /** Write `frames` (binary `key`/`value` columns) to `topic`. Returns
+    * false, having written nothing, when no bootstrap servers are
     * configured. */
-  def start(frames: DataFrame, topic: String, checkpointDir: String): Option[StreamingQuery] =
-    GraftConf.KafkaBootstrap.get(frames.sparkSession).map { servers =>
+  def write(frames: DataFrame, topic: String): Boolean =
+    GraftConf.KafkaBootstrap.get(frames.sparkSession).exists { servers =>
       frames
         .selectExpr("key", "value")
-        .writeStream
+        .write
         .format("kafka")
         .option("kafka.bootstrap.servers", servers)
         .option("topic", topic)
-        .option("checkpointLocation", checkpointDir)
-        .start()
+        .save()
+      true
     }
 
   /** One record's send result, the three-way split of

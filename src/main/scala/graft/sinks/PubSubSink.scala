@@ -2,7 +2,6 @@ package graft.sinks
 
 import graft.GraftConf
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import KafkaSink.{Completed, RetryingPublisher, SendOutcome}
 
@@ -12,7 +11,8 @@ import KafkaSink.{Completed, RetryingPublisher, SendOutcome}
   * futures → completed / transient-retry / fatal-abandon) and
   * `GoogleCloudPubSubSinkFactory` (publisher construction).
   *
-  * Spark-native shape: a flag-gated `foreachBatch` sink. Each micro-batch
+  * Spark-native shape: a flag-gated batch writer, [[publish]], that
+  * [[graft.topology.Topology.start]] calls once per micro-batch. Each batch
   * publishes PER PARTITION — the executor-side loop builds messages from
   * the frame columns, sends them in chunks through a [[RetryingPublisher]]
   * (the reference's outcome-partitioning policy, shared with the Kafka
@@ -111,20 +111,13 @@ object PubSubSink {
       }
     }
 
-  /** Start the flag-gated live stream: `frames` (a streaming
-    * [[TopicSinks.pubsubFrame]]) → `foreachBatch` → [[publishBatch]].
-    * Returns None unless `spark.graft.pubsub.transport` names a registered
-    * transport — same gating pattern as [[KafkaSink.start]]. The
-    * checkpoint dir makes batch replay deterministic (at-least-once). */
-  def start(frames: DataFrame, topic: String,
-      checkpointDir: String): Option[StreamingQuery] =
-    GraftConf.PubsubTransport.get(frames.sparkSession).map { t =>
-      frames.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          publishBatch(batch, topic, t)
-        }
-        .start()
+  /** Publish `frames` (a [[TopicSinks.pubsubFrame]]) to `topic` through
+    * the transport `spark.graft.pubsub.transport` names. Returns false,
+    * having published nothing, when that conf is unset — the gate of
+    * [[KafkaSink.write]]. */
+  def publish(frames: DataFrame, topic: String): Boolean =
+    GraftConf.PubsubTransport.get(frames.sparkSession).exists { t =>
+      publishBatch(frames, topic, t)
+      true
     }
 }

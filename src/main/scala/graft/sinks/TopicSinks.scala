@@ -21,8 +21,8 @@ import java.util.Base64
   *
   * The datum is `AvroSchemas.encode` of the row under
   * `AvroSchemas.toAvroSchema(df.schema)`. The encoded frame is produced as
-  * binary columns — the actual transport (`writeStream.format("kafka")` / a
-  * Pub/Sub `foreachBatch`) consumes them unchanged, so the wire bytes are
+  * binary columns — the actual transport ([[KafkaSink.write]] /
+  * [[PubSubSink.publish]]) consumes them unchanged, so the wire bytes are
   * testable without a broker.
   */
 object TopicSinks {

@@ -13,16 +13,20 @@ import org.apache.spark.sql.types._
 object JsonSource {
 
   /** EventContainer wire schema (`JsonEventHandler.java:104-127`). The
-    * free-form `parameters` object stays a raw JSON string for downstream
+    * free-form `parameters` value stays raw JSON text for downstream
     * `get_json_object` — the reference also defers parameter decoding
-    * (`DivolteEvent.java:55` lazy supplier). */
+    * (`DivolteEvent.java:55` lazy supplier). Spark's JSON reader copies a
+    * non-string value into a string field as compact JSON text, so the one
+    * parse of the body yields it; a repeated key keeps its last value, as
+    * for every other field. */
   val containerSchema: StructType = StructType(Seq(
     StructField("event_type", StringType),
     StructField("session_id", StringType, nullable = false),
     StructField("event_id", StringType, nullable = false),
     StructField("is_new_party", BooleanType, nullable = false),
     StructField("is_new_session", BooleanType, nullable = false),
-    StructField("client_timestamp_iso", StringType, nullable = false)))
+    StructField("client_timestamp_iso", StringType, nullable = false),
+    StructField("parameters", StringType)))
 
   /** Default `maximum_body_size`
     * (`config/JsonSourceConfiguration.java:35`) and the receive-buffer
@@ -62,8 +66,7 @@ object JsonSource {
       .withColumn("firstInSession", col("__c.is_new_session"))
       .withColumn("clientTime",
         unix_millis(to_timestamp(col("__c.client_timestamp_iso"))))
-      .withColumn("eventParameters",
-        when(!col("bodyOversized"), get_json_object(col(bodyCol), "$.parameters")))
+      .withColumn("eventParameters", col("__c.parameters"))
       .drop("__c")
   }
 }

@@ -616,15 +616,7 @@ object Streams {
     val spark = batch.sparkSession
     val bloomBc = graft.functions.RefreshableDim.derived(
       spark, benchPath, s"bloom:$fpCol:$fpp") { dim =>
-      val n = math.max(dim.count(), 1L)
-      spark.sparkContext.broadcast(dim.stat.bloomFilter(fpCol, n, fpp))
-    } { stale =>
-      // unpersist (NOT destroy) the superseded filter: it frees executor
-      // copies but keeps the driver value re-broadcastable, so an
-      // in-flight batch whose closure captured the old broadcast can still
-      // lazily read .value — destroy() would fail those tasks with
-      // "Attempted to use Broadcast after it was destroyed"
-      try stale.unpersist(blocking = false) catch { case _: Exception => () }
+      dim.stat.bloomFilter(fpCol, math.max(dim.count(), 1L), fpp)
     }
     val probe = udf((s: String) => s != null && bloomBc.value.mightContainString(s))
     batch.withColumn("maybe_contaminated", probe(col(fpCol)))
@@ -653,13 +645,8 @@ object Streams {
       spark, vocabPath, s"wp-vocab:$maxPiece") { dim =>
       val vocab = dim.select(col("p"), col("cont")).collect()
         .map(r => (r.getString(0), r.getInt(1)))
-      spark.sparkContext.broadcast(
-        (vocab.collect { case (p, 0) => p }.toSet,
-         vocab.collect { case (p, 1) => p }.toSet))
-    } { stale =>
-      // unpersist (NOT destroy): see decontaminateBatch — an in-flight
-      // batch may still lazily read the superseded broadcast's value
-      try stale.unpersist(blocking = false) catch { case _: Exception => () }
+      (vocab.collect { case (p, 0) => p }.toSet,
+       vocab.collect { case (p, 1) => p }.toSet)
     }
     val passThrough = batch.columns.map(col).toIndexedSeq
     batch
@@ -686,11 +673,8 @@ object Streams {
     val spark = batch.sparkSession
     val bc = graft.functions.RefreshableDim.derived(
       spark, mergesPath, "bpe-merges") { dim =>
-      val rank = dim.select(col("left"), col("right"), col("rank")).collect()
+      dim.select(col("left"), col("right"), col("rank")).collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getInt(2)).toMap
-      spark.sparkContext.broadcast(rank)
-    } { stale =>
-      try stale.unpersist(blocking = false) catch { case _: Exception => () }
     }
     graft.queries.DocQueries.bpeEncodeOn(batch, bc)
   }

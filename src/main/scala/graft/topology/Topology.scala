@@ -4,8 +4,9 @@ import org.apache.spark.{Dependency, OneToOneDependency, Partition, SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.functions.{coalesce, col, lit, struct}
 import org.apache.spark.sql.graftbridge.FrameBridge
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
 
@@ -27,8 +28,13 @@ import scala.collection.mutable
   * materialized lazily — by the first action that reads it, at AQE's final
   * (coalesced) partitioning — and freed when the returned frames are
   * dropped; so is a source union that mappings with different mappers
-  * read, so each source is decoded once. Streaming frames are never
-  * materialized.
+  * read, so each source is decoded once.
+  *
+  * [[Topology.apply]] routes batch frames only. A stream runs as ONE
+  * query per topology, [[Topology.start]]: its `foreachBatch` routes each
+  * micro-batch through `apply` and hands every sink its frame, so the
+  * upstream plan and any state run once per batch whatever the number of
+  * sinks, and all sinks commit under one checkpoint.
   */
 final case class MappingSpec(
     name: String,
@@ -69,11 +75,54 @@ final class Topology(mappings: Seq[MappingSpec], sinks: Seq[SinkSpec]) {
     }
   }
 
-  /** Run the topology over the given source frames. Returns the frame each
-    * sink receives (union of its mappings' outputs). The routing itself
-    * runs no Spark job: shared frames are materialized by the first action
-    * that reads them. */
+  /** Run the topology over the given batch source frames. Returns the
+    * frame each sink receives (union of its mappings' outputs). The
+    * routing itself runs no Spark job: shared frames are materialized by
+    * the first action that reads them. */
   def apply(sources: Map[String, DataFrame]): Map[String, DataFrame] = {
+    sources.foreach { case (n, df) => require(!df.isStreaming, s"source '$n' is a streaming " +
+      "frame: apply routes batch frames; run a stream with Topology.start") }
+    route(sources, Topology.materialized(_))
+  }
+
+  /** Run the topology as one streaming query over all of `sources`, with
+    * one checkpoint. `sinks` maps every sink name to its batch writer,
+    * called once per micro-batch with the sink's frame and the batch's
+    * stamp (`b` + the zero-padded batch id); a file writer that names its
+    * output by the stamp makes a replayed batch overwrite its own files
+    * (exactly-once files over a replayable source), a topic writer stays
+    * at-least-once, like the reference. Each source rides the union as one
+    * struct column named after it, so sources of any shape share the
+    * query. Each micro-batch is computed and persisted once, whole — a
+    * writer that reads nothing (a gated topic sink) or part of its frame
+    * must not leave source rows unread or upstream state uncommitted —
+    * then split back into its sources and routed by [[apply]]'s routing.
+    * Everything the batch and its routing persisted is released when the
+    * writers return, not left to ContextCleaner. */
+  def start(sources: Map[String, DataFrame], sinks: Map[String, (DataFrame, String) => Any],
+            checkpointDir: String, trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {
+    require(sinks.keySet == normSinks.map(_.name).toSet,
+      s"writers for ${sinks.keySet.toSeq.sorted}, sinks ${normSinks.map(_.name).sorted}")
+    val names = sources.keys.toSeq.sorted
+    names.map(n => sources(n).select(struct(col("*")).as(n)))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+      .writeStream.option("checkpointLocation", checkpointDir).trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val held = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
+        def persist(df: DataFrame) = Topology.materialized(df, held.add(_))
+        try {
+          val all = persist(batch)
+          all.queryExecution.toRdd.count()
+          val routed = route(names.map(n => n -> all.filter(col(s"`$n`").isNotNull)
+            .select(s"`$n`.*")).toMap, persist)
+          sinks.foreach { case (s, write) => write(routed(s), f"b$batchId%012d") }
+        } finally held.forEach(_.unpersist(blocking = false))
+      }.start()
+  }
+
+  /** The batch routing: `persist` materializes a frame several edges read. */
+  private def route(sources: Map[String, DataFrame],
+                    persist: DataFrame => DataFrame): Map[String, DataFrame] = {
     // reference default: a mapping that names no sources reads ALL of
     // them; a source listed twice is read once (the list is a set, kept in
     // the mapping's own order, which fixes the union's column order).
@@ -106,23 +155,21 @@ final class Topology(mappings: Seq[MappingSpec], sinks: Seq[SinkSpec]) {
     }
     val edges = normSinks.flatMap(_.mappings).groupBy(identity).view.mapValues(_.size).toMap
     def reads(g: Group): Int = g.members.iterator.map(m => edges.getOrElse(m.name, 0)).sum
-    // a batch union read by more than one group is materialized once, and
-    // those groups map from it. Streaming frames stay plans: each streaming
-    // query runs them incrementally, and there is nothing to persist
-    // between batches
+    // a union read by more than one group is materialized once, and those
+    // groups map from it
     val readers = groups.filter(reads(_) > 0).groupBy(_.names).view.mapValues(_.size).toMap
     val inputs = unions.map { case (names, u) =>
-      names -> (if (readers.getOrElse(names, 0) > 1 && !u.isStreaming) Topology.materialized(u) else u)
+      names -> (if (readers.getOrElse(names, 0) > 1) persist(u) else u)
     }
     val mapped: Map[String, DataFrame] = groups.iterator.flatMap { g =>
       val in = inputs(g.names)
       val sharedIn = in ne unions(g.names)
       val out = if (sharedIn) g.members.head.mapper(in) else g.planned
       val shared =
-        if (reads(g) <= 1 || out.isStreaming) out
+        if (reads(g) <= 1) out
         // a mapper that returns its materialized input needs no second copy
         else if (sharedIn && out.queryExecution.optimizedPlan.sameResult(in.queryExecution.optimizedPlan)) out
-        else Topology.materialized(out)
+        else persist(out)
       g.members.map(m => m.name -> Topology.discard(m, shared))
     }.toMap
     normSinks.map { s =>
@@ -135,11 +182,16 @@ private object Topology {
 
   /** `df`'s rows, computed once by the first action that reads the result,
     * at the partitioning AQE settles on for `df`, and kept MEMORY_AND_DISK.
-    * A lost block is recomputed from lineage; ContextCleaner frees the
-    * storage once every frame built on the result is unreachable. */
-  def materialized(df: DataFrame): DataFrame =
-    FrameBridge.ofRows(df, new DeferredRDD(df.sparkSession.sparkContext,
-      () => df.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)))
+    * `persisted` sees the persisted RDD when that action builds it. A lost
+    * block is recomputed from lineage; ContextCleaner frees the storage
+    * once every frame built on the result is unreachable, unless the
+    * caller unpersists it first. */
+  def materialized(df: DataFrame, persisted: RDD[InternalRow] => Unit = _ => ()): DataFrame =
+    FrameBridge.ofRows(df, new DeferredRDD(df.sparkSession.sparkContext, { () =>
+      val rdd = df.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+      persisted(rdd)
+      rdd
+    }))
 
   /** Apply a mapping's discard flags. NULL flags (a source without the
     * transport column) must KEEP the row: the reference's flags are

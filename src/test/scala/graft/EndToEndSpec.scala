@@ -4,6 +4,7 @@ import graft.dsl.DefaultMapping
 import graft.queries.DslQueries
 import graft.sinks.AvroFileSink
 import graft.sources.BrowserSource
+import graft.topology.{MappingSpec, SinkSpec, Topology}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -128,10 +129,14 @@ class EndToEndSpec extends SparkSpec {
         .select(col("partyId"), col("sessionId"), col("eventType"),
           col("clientTimestamp"))
 
-    def start() = AvroFileSink.writeStreamTo(
-      spine(spark.readStream.schema(wireSchema)
+    val topo = new Topology(Seq(MappingSpec("spine", Seq("wire"), spine, "spine")),
+      Seq(SinkSpec("avro", Seq("spine"))))
+    def start() = topo.start(
+      Map("wire" -> spark.readStream.schema(wireSchema)
         .option("maxFilesPerTrigger", "1").parquet(in)),
-      out, cp, tag = "spine")
+      Map("avro" -> ((df: DataFrame, stamp: String) =>
+        AvroFileSink.write(df, out, tag = "spine", stamp = Some(stamp)))),
+      cp)
 
     // phase 1: two input files, one batch each; then the query dies
     addInput(0L until 10L); addInput(10L until 20L)

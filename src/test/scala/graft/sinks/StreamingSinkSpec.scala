@@ -2,7 +2,11 @@ package graft.sinks
 
 import graft.{GraftConf, SparkSpec}
 import graft.schema.AvroSchemas
+import graft.topology.{MappingSpec, SinkSpec, Topology}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
+import scala.jdk.CollectionConverters._
 
 /** Scripted Pub/Sub transport for the contract tests: `flaky` events fail
   * transiently twice, `fatal` events fail permanently, everything else
@@ -29,13 +33,20 @@ object PubSubScripted extends PubSubSink.Transport {
 class StreamingSinkSpec extends SparkSpec {
   import spark.implicits._
 
+  /** `source` streamed through a one-mapping, one-sink topology whose sink
+    * is `writer`. */
+  private def oneSink(source: DataFrame, writer: (DataFrame, String) => Any,
+                      cpPrefix: String): StreamingQuery =
+    new Topology(Seq(MappingSpec("m", Seq("in"), identity, "s")), Seq(SinkSpec("out", Seq("m"))))
+      .start(Map("in" -> source), Map("out" -> writer),
+        java.nio.file.Files.createTempDirectory(cpPrefix).toString)
+
   test("streaming events roll into avro container files per batch") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Long)]
     val dir = java.nio.file.Files.createTempDirectory("avrostream").toString
-    val cp = java.nio.file.Files.createTempDirectory("avrostream-cp").toString
-    val q = AvroFileSink.writeStreamTo(
-      input.toDF.toDF("partyId", "ts"), dir, cp)
+    val q = oneSink(input.toDF.toDF("partyId", "ts"),
+      (df, stamp) => AvroFileSink.write(df, dir, "stream", stamp = Some(stamp)), "avrostream-cp")
     input.addData(("p1", 1L), ("p2", 2L))
     q.processAllAvailable()
     input.addData(("p3", 3L))
@@ -56,8 +67,16 @@ class StreamingSinkSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Array[Byte], Array[Byte])]
     spark.conf.unset(GraftConf.KafkaBootstrap.key)
-    assert(KafkaSink.start(input.toDF.toDF("key", "value"), "events",
-      java.nio.file.Files.createTempDirectory("kcp").toString).isEmpty)
+    val wrote = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    val q = oneSink(input.toDF.toDF("key", "value"),
+      (df, _) => wrote.add(KafkaSink.write(df, "events")), "kcp")
+    try {
+      input.addData(("k".getBytes, "v".getBytes))
+      q.processAllAvailable()
+      assert(wrote.asScala.toSeq === Seq(false))
+    } finally q.stop()
+    // the batch read the event; the writer delivered nothing
+    assert(q.recentProgress.map(_.numInputRows).sum === 1)
   }
 
   test("kafka sink gate: bootstrap conf routes the frames into the kafka source") {
@@ -69,9 +88,12 @@ class StreamingSinkSpec extends SparkSpec {
     // resolution of "kafka" — proving the stream START path is real, not
     // short-circuited by the gate
     val err = intercept[Exception] {
-      KafkaSink.start(input.toDF.toDF("key", "value"), "events",
-        java.nio.file.Files.createTempDirectory("kcp").toString)
-        .get.processAllAvailable()
+      val q = oneSink(input.toDF.toDF("key", "value"),
+        (df, _) => KafkaSink.write(df, "events"), "kcp")
+      try {
+        input.addData(("k".getBytes, "v".getBytes))
+        q.processAllAvailable()
+      } finally q.stop()
     }
     try {
       def msgs(t: Throwable): Seq[String] =
@@ -87,8 +109,18 @@ class StreamingSinkSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Array[Byte], String)]
     spark.conf.unset(GraftConf.PubsubTransport.key)
-    assert(PubSubSink.start(input.toDF.toDF("data", "partyIdentifier"), "t",
-      java.nio.file.Files.createTempDirectory("pscp").toString).isEmpty)
+    PubSubSink.InMemory.clear()
+    val published = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    val q = oneSink(input.toDF.toDF("data", "partyIdentifier"),
+      (df, _) => published.add(PubSubSink.publish(df, "t")), "pscp")
+    try {
+      input.addData(("m".getBytes, "p1"))
+      q.processAllAvailable()
+      assert(published.asScala.toSeq === Seq(false))
+    } finally q.stop()
+    // the batch read the event; the writer delivered nothing
+    assert(q.recentProgress.map(_.numInputRows).sum === 1)
+    assert(PubSubSink.InMemory.messages("t").isEmpty)
   }
 
   test("pubsub stream publishes pubsubFrame messages end-to-end (memory transport)") {
@@ -100,8 +132,7 @@ class StreamingSinkSpec extends SparkSpec {
       "partyId", "eventId", "ts")
     spark.conf.set(GraftConf.PubsubTransport.key, "memory")
     try {
-      val q = PubSubSink.start(frames, "clicks",
-        java.nio.file.Files.createTempDirectory("pscp2").toString).get
+      val q = oneSink(frames, (df, _) => PubSubSink.publish(df, "clicks"), "pscp2")
       input.addData(("p1", "e1", 1500000000000L, "hello"),
         ("p2", "e2", 1500000000001L, "world"))
       q.processAllAvailable()

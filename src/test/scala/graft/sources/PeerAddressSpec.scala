@@ -71,6 +71,17 @@ class PeerAddressSpec extends SparkSpec {
     assert(r("::1.2.3.4") == java.net.InetAddress.getByName("::1.2.3.4").getHostAddress)
   }
 
+  test("short and zero-padded IPv4 forms keep the transport address") {
+    // the JDK's literal parser accepts these; Guava does not (a documented
+    // divergence in PeerAddresses)
+    val forms = Seq("4", "00.1.1.1", "1.2.3.04", "6.00")
+    forms.foreach(f => assert(r(f) == null, f))
+    val raw = forms.map(f => ("10.9.9.9", f, "e=1"))
+      .toDF("remoteHost", "xForwardedFor", "qs")
+    assert(BrowserSource.decode(raw, "qs").select("remoteHost").as[String].collect()
+      .toSeq === Seq.fill(forms.size)("10.9.9.9"))
+  }
+
   test("parser agrees with java.net on every literal it accepts") {
     val cases = Seq("203.0.113.7", "0.0.0.0", "255.255.255.255",
       "2001:db8::1", "::1", "fe80::", "::ffff:10.1.2.3",

@@ -108,6 +108,18 @@ class SourcesSpec extends SparkSpec {
     assert(row.getAs[String]("eventParameters") === """{"a":[1,2],"b":"x"}""")
   }
 
+  test("json container: a repeated key keeps its last value in every field") {
+    val body =
+      """{"event_type":"first","session_id":"s","event_id":"e",
+        |"is_new_party":true,"is_new_session":false,
+        |"client_timestamp_iso":"2026-08-12T10:00:00.000+02:00",
+        |"parameters":{"a":1},"event_type":"last","parameters":{"b":2}}""".stripMargin
+        .replace("\n", "")
+    val row = JsonSource.decode(Seq(("p", body)).toDF("pid", "body"), "body", "pid")
+      .select("eventType", "eventParameters").collect()(0)
+    assert((row.getString(0), row.getString(1)) === (("last", """{"b":2}""")))
+  }
+
   test("json body-size limit: 4096-byte boundary, octet semantics") {
     // cutoff = maximum_body_size rounded up to the 4096-byte receive chunk
     // (AsyncRequestBodyReceiver.java:69,100-104): 4096 accepted, 4097 not

@@ -1,10 +1,12 @@
 package graft.topology
 
 import graft.SparkSpec
+import graft.sinks.AvroFileSink
 import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 /** Wiring permutations from the reference's topology fixtures
   * (`ServerSinkSourceConfigurationTest.java`): shared sources, shared sinks,
@@ -19,6 +21,19 @@ class TopologySpec extends SparkSpec {
   private val passThrough: DataFrame => DataFrame = identity
 
   private def persistedRddIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Stream sink writers that keep the `eventId`s each sink received. */
+  private final class Collected {
+    private val ids = new java.util.concurrent.ConcurrentHashMap[String, Vector[String]]()
+    def writer(sink: String): (DataFrame, String) => Any = (df, _) => {
+      val got = df.select("eventId").as[String].collect().toVector
+      ids.merge(sink, got, _ ++ _)
+    }
+    def apply(sink: String): Seq[String] = ids.getOrDefault(sink, Vector.empty)
+  }
 
   /** The spine's shape: `all` to one sink, `clean` (both discard flags,
     * same mapper) to two. */
@@ -166,15 +181,115 @@ class TopologySpec extends SparkSpec {
     val input = MemoryStream[(String, Boolean, Boolean)]
     val stream = input.toDF().toDF("eventId", "detectedCorruption", "detectedDuplicate")
     val before = persistedRddIds
-    val out = allClean(passThrough)(Map("browser" -> stream))
-    assert(out.values.forall(_.isStreaming))
-    val q = out("kafka").writeStream.format("memory").queryName("topology_clean")
-      .outputMode("append").start()
+    val got = new Collected
+    val q = allClean(passThrough).start(Map("browser" -> stream),
+      Seq("avro", "kafka", "pubsub").map(s => s -> got.writer(s)).toMap, tmpDir("topology-cp"))
     try {
       input.addData(("e1", false, false), ("e2", true, false), ("e3", false, true))
       q.processAllAvailable()
-      assert(spark.table("topology_clean").select("eventId").as[String].collect() === Array("e1"))
+      assert(got("kafka") === Seq("e1"))
     } finally q.stop()
+    assert((persistedRddIds -- before).isEmpty)
+  }
+
+  test("apply rejects a streaming source and names start; start wants one writer per sink") {
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[(String, Boolean, Boolean)].toDF()
+      .toDF("eventId", "detectedCorruption", "detectedDuplicate")
+    val e = intercept[IllegalArgumentException](allClean(passThrough)(Map("browser" -> stream)))
+    assert(e.getMessage.contains("Topology.start"))
+    intercept[IllegalArgumentException] {
+      allClean(passThrough).start(Map("browser" -> stream),
+        Map("avro" -> new Collected().writer("avro")), tmpDir("topology-cp"))
+    }
+  }
+
+  test("start: a 2-source, 2-mapping, 3-sink stream is one query that maps each event " +
+       "once per batch and keeps nothing persisted") {
+    implicit val sqlCtx = spark.sqlContext
+    val browser = MemoryStream[(String, Boolean, Boolean)]
+    val json = MemoryStream[(String, Boolean)]
+    val calls = spark.sparkContext.longAccumulator("stream-mapper-rows")
+    val tag = udf { (id: String) => calls.add(1); id.length }
+    val mapper: DataFrame => DataFrame = _.withColumn("idLen", tag(col("eventId")))
+    val t = new Topology(
+      mappings = Seq(
+        MappingSpec("all", Seq("browser", "json"), mapper, "s"),
+        MappingSpec("clean", Seq("browser", "json"), mapper, "s",
+          discardCorrupted = true, discardDuplicates = true)),
+      sinks = Seq(SinkSpec("avro", Seq("all")), SinkSpec("kafka", Seq("clean")),
+        SinkSpec("pubsub", Seq("clean"))))
+    val got = new Collected
+    val active = spark.streams.active.length
+    val before = persistedRddIds
+    val q = t.start(
+      Map("browser" -> browser.toDF().toDF("eventId", "detectedCorruption", "detectedDuplicate"),
+        "json" -> json.toDF().toDF("eventId", "detectedCorruption")),
+      Seq("avro", "kafka", "pubsub").map(s => s -> got.writer(s)).toMap, tmpDir("topology-cp"))
+    try {
+      assert(spark.streams.active.length === active + 1)
+      browser.addData(("b1", false, false), ("b2", true, false), ("b3", false, true))
+      json.addData(("j1", false), ("j2", true))
+      q.processAllAvailable()
+      assert(calls.value === 5L) // one call per event, not one per sink
+      assert((persistedRddIds -- before).isEmpty, "each batch releases what it persisted")
+      browser.addData(("b4", false, false))
+      q.processAllAvailable()
+      assert(calls.value === 6L)
+    } finally q.stop()
+    assert((persistedRddIds -- before).isEmpty)
+    assert(got("avro").sorted === Seq("b1", "b2", "b3", "b4", "j1", "j2"))
+    // the JSON source has no duplicate flag: NULL keeps the row
+    assert(got("kafka").sorted === Seq("b1", "b4", "j1"))
+    assert(got("pubsub").sorted === Seq("b1", "b4", "j1"))
+  }
+
+  test("start: a stream killed after batch k resumes to the uninterrupted and the batch output") {
+    val root = tmpDir("topology-parity")
+    val (browserDir, jsonDir) = (s"$root/browser", s"$root/json")
+    (0 until 3).foreach { i =>
+      Seq((s"b$i-1", false, false), (s"b$i-2", i == 1, false), (s"b$i-3", false, i == 2))
+        .toDF("eventId", "detectedCorruption", "detectedDuplicate")
+        .coalesce(1).write.mode("append").parquet(browserDir)
+      Seq((s"j$i-1", i == 0)).toDF("eventId", "detectedCorruption")
+        .coalesce(1).write.mode("append").parquet(jsonDir)
+    }
+    val t = new Topology(
+      mappings = Seq(
+        MappingSpec("all", Seq("browser", "json"), _.withColumn("idLen", length(col("eventId"))), "s"),
+        MappingSpec("clean", Seq("browser"), _.withColumn("idLen", length(col("eventId"))), "s",
+          discardCorrupted = true, discardDuplicates = true)),
+      sinks = Seq(SinkSpec("avro", Seq("all", "clean"))))
+    val batch = t(Map("browser" -> spark.read.parquet(browserDir), "json" -> spark.read.parquet(jsonDir)))
+    val schema = org.apache.spark.sql.types.StructType(batch("avro").schema.map(_.copy(nullable = true)))
+    def contents(dir: String): Seq[String] =
+      AvroFileSink.readBackDf(spark, dir, schema).collect().map(_.toString).sorted.toSeq
+    /** Stream every file, one per source per batch; the writer throws once
+      * it has written `dieAfter` batches plus one. */
+    def run(out: String, cp: String, dieAfter: Int = Int.MaxValue): Unit = {
+      val written = new java.util.concurrent.atomic.AtomicInteger
+      def stream(dir: String) = spark.readStream.schema(spark.read.parquet(dir).schema)
+        .option("maxFilesPerTrigger", "1").parquet(dir)
+      t.start(Map("browser" -> stream(browserDir), "json" -> stream(jsonDir)),
+        Map("avro" -> ((df: DataFrame, stamp: String) => {
+          AvroFileSink.write(df, out, "parity", stamp = Some(stamp))
+          if (written.incrementAndGet() > dieAfter)
+            throw new IllegalStateException("killed after the sink wrote")
+        })), cp, Trigger.AvailableNow()).awaitTermination()
+    }
+    AvroFileSink.write(batch("avro"), s"$root/batch", "parity")
+    val expected = contents(s"$root/batch")
+    assert(expected.size === 19) // all: 9 browser + 3 json; clean: 7 browser
+    run(s"$root/whole", s"$root/whole-cp")
+    assert(contents(s"$root/whole") === expected)
+    val before = persistedRddIds
+    Seq(1, 2).foreach { k =>
+      val (out, cp) = (s"$root/killed-$k", s"$root/killed-$k-cp")
+      val e = intercept[StreamingQueryException](run(out, cp, dieAfter = k))
+      assert(e.getMessage.contains("killed after the sink wrote"))
+      run(out, cp)
+      assert(contents(out) === expected, s"killed after batch $k")
+    }
     assert((persistedRddIds -- before).isEmpty)
   }
 
