@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 /** End-to-end demonstration of the full reference spine on real test data:
-  * wire-format decode → duplicate flagging → default mapping → topology
+  * wire-format decode → default mapping → duplicate flagging → topology
   * fan-out → Avro file sink + Kafka frame encoding, with read-back
-  * verification. Usage: `runMain graft.Pipeline <sfDir> <outDir>`.
+  * verification, as a batch run and as one streaming query.
+  * Usage: `runMain graft.Pipeline <sfDir> <outDir>`.
   */
 object Pipeline {
   def main(args: Array[String]): Unit = {
@@ -19,9 +20,11 @@ object Pipeline {
     val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-pipeline")
 
     // 1. decode browser wire events (synthesized from the events table) and
-    //    flag duplicates with the slot memory
+    //    flag duplicates with the slot memory, one key set for both legs
     val decoded = DslQueries.defaultMapping(spark, sfDir) // uses BrowserSource + DefaultMapping
-    val mappedInput = decoded // already mapped; topology shows fan-out below
+    def flag(df: DataFrame): DataFrame = DuplicateMemory.flagDuplicates(
+      df, Seq("party_id", "session_id", "page_view_id"), "party_id", "ts_ms")
+    val flagged = flag(decoded)
 
     // 2. topology from a reference-style CONFIG FILE: one source, two
     //    mappings (all events / purchases only), two sinks (avro files
@@ -40,7 +43,7 @@ object Pipeline {
       "all" -> identity,
       "purchases" -> (_.filter(col("event_type") === "purchase")))
     val topo = TopologyConfig.load(topoConf).toTopology(mappers)
-    val routed = topo(Map("browser" -> mappedInput))
+    val routed = topo(Map("browser" -> flagged))
 
     // 3. avro file sink + read-back
     val dir = s"$outDir/avro"
@@ -62,47 +65,29 @@ object Pipeline {
     println(s"[pipeline] kafka consumed=${consumed.count()} " +
       s"schemaId=${consumed.select("schemaId").distinct().collect()(0).getInt(0)}")
 
-    // 5. duplicate memory on the decoded feed
-    val dupes = DuplicateMemory.flagDuplicates(
-      mappedInput.select("party_id", "session_id", "event_type", "ts_ms"),
-      Seq("party_id", "session_id", "ts_ms"), "party_id", "ts_ms")
-      .filter(col("duplicate")).count()
-    println(s"[pipeline] duplicate-flagged=$dupes")
-
-    // 6. streaming leg: the same config topology as ONE streaming query
-    //    (Topology.start) over a file stream of the batch run's source
-    //    frame, staged as parquet. AvailableNow drains the backlog then
-    //    stops — the batch-parity mode: the Avro sink gets the batch run's
-    //    rows; the Kafka writer writes nothing unless a bootstrap is set.
+    // 5. streaming leg: the same config topology as ONE streaming query
+    //    (Topology.start) over a file stream of the decoded feed, staged as
+    //    parquet and flagged inside the query. AvailableNow drains the
+    //    backlog then stops — the batch-parity mode: the Avro sink gets the
+    //    batch run's rows and the slot memory flags the batch run's rows;
+    //    the Kafka writer writes nothing unless a bootstrap is set.
     val staged = s"$outDir/stream-src"
-    mappedInput.write.mode("overwrite").parquet(staged)
-    val stagedStream = spark.readStream.schema(mappedInput.schema).parquet(staged)
-    val sq = topo.start(Map("browser" -> stagedStream),
+    decoded.write.mode("overwrite").parquet(staged)
+    val streamFlagged = new java.util.concurrent.atomic.AtomicLong
+    val sq = topo.start(Map("browser" -> flag(spark.readStream.schema(decoded.schema).parquet(staged))),
       Map("files" -> ((b: DataFrame, stamp: String) =>
           AvroFileSink.write(b, s"$outDir/stream-avro", "pipeline", stamp = Some(stamp))),
-        "kafka" -> ((b: DataFrame, _: String) =>
-          KafkaSink.write(TopicSinks.kafkaFrameConfluent(b, "party_id", 42), "pipeline"))),
+        "kafka" -> { (b: DataFrame, _: String) =>
+          streamFlagged.addAndGet(b.filter(col("duplicate")).count())
+          KafkaSink.write(TopicSinks.kafkaFrameConfluent(b, "party_id", 42), "pipeline")
+        }),
       s"$outDir/stream-cp", Trigger.AvailableNow())
     sq.awaitTermination()
     val rolled = AvroFileSink.readBack(spark, s"$outDir/stream-avro")
     println(s"[pipeline] stream-avro files=${rolled.size} rows=${rolled.map(_._2).sum} " +
       s"batch=$written")
-
-    // 7. streaming slot-memory duplicate flagging over the same staged
-    //    feed (every event is distinct here, so flagged must be 0 — parity
-    //    with the batch slot memory)
-    import spark.implicits._
-    val keyed = stagedStream.select("party_id", "session_id", "page_view_id", "ts_ms")
-      .as[(String, String, String, Long)]
-    val dupq = graft.streaming.Streams.flagDuplicatesStream(keyed)
-      .toDF("partyId", "sessionId", "eventId", "ts", "duplicate")
-      .writeStream.format("memory").queryName("pipe_dups")
-      .option("checkpointLocation", s"$outDir/dup-cp")
-      .trigger(Trigger.AvailableNow()).start()
-    dupq.awaitTermination()
-    val streamed = spark.table("pipe_dups")
-    println(s"[pipeline] stream-dedup rows=${streamed.count()} " +
-      s"flagged=${streamed.filter(col("duplicate")).count()}")
+    println(s"[pipeline] duplicate-flagged batch=${flagged.filter(col("duplicate")).count()} " +
+      s"stream=${streamFlagged.get}")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -14,19 +14,23 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *  - Spark's own watermarked operators: session windows, window counts,
   *    within-watermark dedup and the interval joins. Their state expires
   *    with the watermark.
-  *  - The keyed folds (slot-memory flagging, anomaly, EWMA, CUSUM,
-  *    near-dup, co-occurrence, KMV, top-k, funnel, t-digest, CDC): each
-  *    keeps one bounded state value per key and folds every micro-batch's
-  *    rows into it through [[keyedFold]], the one stateful shell. Their
-  *    keys never expire: a dormant key keeps its state for the life of
-  *    the checkpoint.
+  *  - The keyed folds (anomaly, EWMA, CUSUM, near-dup, co-occurrence,
+  *    KMV, top-k, funnel, t-digest, CDC, and the slot memory of
+  *    [[graft.state.DuplicateMemory.flagDuplicates]], which
+  *    [[flagDuplicatesStream]] views typed): each keeps one bounded state
+  *    value per key and folds every micro-batch's rows into it through
+  *    [[keyedFold]], the one stateful shell. Their keys never expire: a
+  *    dormant key keeps its state for the life of the checkpoint.
   */
 object Streams {
 
-  /** The one stateful shell behind every keyed fold in this object.
-    * Per key and micro-batch: read the state (or `zero` for a new key),
-    * sort the batch's rows by `order`, fold them, store the new state and
-    * emit the fold's rows, with no timeout and in output mode `mode`.
+  /** The one stateful shell behind every keyed fold, over typed rows
+    * grouped by a function or DataFrame rows grouped by a column
+    * (`groupBy(..).as[K, Row]`, `U`'s encoder `Encoders.row`); on a batch
+    * frame it is a plain grouped map. Per key and micro-batch: read the
+    * state (or `zero` for a new key), sort the batch's rows by `order`,
+    * fold them, store the new state and emit the fold's rows, with no
+    * timeout and in output mode `mode`.
     *
     * `order` must be total over the rows of one key (ties broken by the
     * remaining fields), so the fold sees the same sequence whatever order
@@ -34,10 +38,10 @@ object Streams {
     * state and emits the same rows, the deterministic batch that
     * exactly-once recovery needs. `zero` is evaluated per key, so a fold
     * may mutate its state in place. */
-  private def keyedFold[T, K: Encoder, S: Encoder, U: Encoder](
-      rows: Dataset[T], mode: OutputMode)(key: T => K, order: Ordering[T], zero: => S)(
+  private[graft] def keyedFold[K, T, S: Encoder, U: Encoder](
+      groups: KeyValueGroupedDataset[K, T], mode: OutputMode)(order: Ordering[T], zero: => S)(
       fold: (K, S, Seq[T]) => (S, Iterator[U])): Dataset[U] =
-    rows.groupByKey(key).flatMapGroupsWithState(mode, GroupStateTimeout.NoTimeout) {
+    groups.flatMapGroupsWithState(mode, GroupStateTimeout.NoTimeout) {
       (k: K, batch: Iterator[T], state: GroupState[S]) =>
         val (next, out) = fold(k, state.getOption.getOrElse(zero), batch.toVector.sorted(order))
         state.update(next)
@@ -83,39 +87,19 @@ object Streams {
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keyCols)
 
-  /** Streaming duplicate FLAGGING with the reference's slot-memory
-    * semantics (`ShortTermDuplicateMemory.java:139-178`): each event's
-    * murmur3_128 maps to a slot and a 64-bit signature; an event is a
-    * probable duplicate iff its slot currently holds its signature, and it
-    * then overwrites the slot. Keyed state per slot (compare-and-overwrite
-    * of one long) scales horizontally with the state-store shuffle —
-    * the streaming counterpart of the batch
-    * [[graft.state.DuplicateMemory.flagDuplicates]].
+  /** Streaming duplicate FLAGGING on typed events: a typed view of
+    * [[graft.state.DuplicateMemory.flagDuplicates]], the one slot memory
+    * (its scaladoc states when a stream flags what the batch flags).
     *
-    * Input: (partyId, sessionId, eventId, tsMillis). Output adds
-    * `duplicate`. Flag-not-filter, exactly like the reference. Within a
-    * micro-batch a slot's events fold in (tsMillis, eventId) order, the
-    * remaining fields breaking ties. */
+    * Input: (partyId, sessionId, eventId, tsMillis), the ids hashed, the
+    * party first in a slot's order and tsMillis the arrival time. Output
+    * adds `duplicate`. Flag-not-filter, exactly like the reference. */
   def flagDuplicatesStream(
-      events: org.apache.spark.sql.Dataset[(String, String, String, Long)],
-      slotCount: Int = 1 << 20): org.apache.spark.sql.Dataset[(String, String, String, Long, Boolean)] = {
+      events: Dataset[(String, String, String, Long)],
+      slotCount: Int = 1 << 20): Dataset[(String, String, String, Long, Boolean)] = {
     import events.sparkSession.implicits._
-    val slotted = events.map { case (p, s, e, ts) =>
-      // a null id hashes as "null", like the batch flagDuplicates
-      val (slot, sig) = graft.state.DuplicateMemory.slotAndSignature(
-        slotCount, String.valueOf(p), String.valueOf(s), String.valueOf(e))
-      (slot, sig, p, s, e, ts)
-    }
-    keyedFold(slotted, OutputMode.Append)(
-      _._1, Ordering.by(r => (r._6, r._5, r._3, r._4)), 0L) { (_, slotSig, rows) =>
-      var current = slotSig
-      val out = rows.map { case (_, sig, p, s, e, ts) =>
-        val dup = current == sig
-        current = sig
-        (p, s, e, ts, dup)
-      }
-      (current, out.iterator)
-    }
+    graft.state.DuplicateMemory.flagDuplicates(events.toDF(), Seq("_1", "_2", "_3"), "_1", "_4", slotCount)
+      .withColumnRenamed("duplicate", "_5").as[(String, String, String, Long, Boolean)]
   }
 
   /** Online per-user anomaly flagging — the streaming form of the batch
@@ -149,8 +133,8 @@ object Streams {
       events: org.apache.spark.sql.Dataset[(Long, Long, Long, Long)])
       : org.apache.spark.sql.Dataset[(Long, Long, Long, Long, Option[Double], Boolean)] = {
     import events.sparkSession.implicits._
-    keyedFold(events, OutputMode.Append)(
-      _._1, Ordering.by(r => (r._3, r._2, r._4)), (0L, 0L, 0L)) { (_, moments, rows) =>
+    keyedFold(events.groupByKey(_._1), OutputMode.Append)(
+      Ordering.by(r => (r._3, r._2, r._4)), (0L, 0L, 0L)) { (_, moments, rows) =>
       var (n, s, sq) = moments
       val out = rows.map { case (user, event, ts, v) =>
         val z =
@@ -202,8 +186,8 @@ object Streams {
       : org.apache.spark.sql.Dataset[(Long, Long, Long, Long, Double)] = {
     import events.sparkSession.implicits._
     val win = graft.functions.Ewma.WindowSize
-    keyedFold(events, OutputMode.Append)(
-      _._1, Ordering.by(r => (r._3, r._2, r._4)), List.empty[Long]) { (_, last, rows) =>
+    keyedFold(events.groupByKey(_._1), OutputMode.Append)(
+      Ordering.by(r => (r._3, r._2, r._4)), List.empty[Long]) { (_, last, rows) =>
       var hist = last
       val out = rows.map { case (user, event, ts, v) =>
         hist = (hist :+ v).takeRight(win)
@@ -236,8 +220,8 @@ object Streams {
                   ref: Long, slack: Long, h: Long)
       : org.apache.spark.sql.Dataset[(String, Long, Long, Long, Boolean)] = {
     import counts.sparkSession.implicits._
-    keyedFold(counts, OutputMode.Append)(
-      _._1, Ordering.by(r => (r._2, r._3)), 0L) { (_, s0, rows) =>
+    keyedFold(counts.groupByKey(_._1), OutputMode.Append)(
+      Ordering.by(r => (r._2, r._3)), 0L) { (_, s0, rows) =>
       var s = s0
       val out = rows.map { case (key, period, x) =>
         s = math.max(0L, s + (x - ref) - slack)
@@ -332,8 +316,8 @@ object Streams {
         }
       }
     }
-    keyedFold(banded, OutputMode.Append)(
-      _._1, Ordering.by(r => (r._2, ArraySeq.unsafeWrapArray(r._3))),
+    keyedFold(banded.groupByKey(_._1), OutputMode.Append)(
+      Ordering.by(r => (r._2, ArraySeq.unsafeWrapArray(r._3))),
       null: (Long, Array[Long])) { (_, first, rows) =>
       var canon = first
       val out = Seq.newBuilder[(Long, Long, Double)]
@@ -368,8 +352,8 @@ object Streams {
                  cap: Int = 32)
       : org.apache.spark.sql.Dataset[(Int, Int)] = {
     import interactions.sparkSession.implicits._
-    keyedFold(interactions, OutputMode.Append)(
-      _._1, Ordering.by(_._2), Seq.empty[Int]) { (_, seen, rows) =>
+    keyedFold(interactions.groupByKey(_._1), OutputMode.Append)(
+      Ordering.by(_._2), Seq.empty[Int]) { (_, seen, rows) =>
       var held = seen
       val out = Seq.newBuilder[(Int, Int)]
       rows.foreach { case (_, item) =>
@@ -427,8 +411,8 @@ object Streams {
     // null rows keeps stream/batch parity
     val hashed = nonNullRows[(String, Long)](events,
       col(typeCol).cast("string"), graft.functions.Kmv.hash(col(keyCol)))
-    keyedFold(hashed, OutputMode.Update)(
-      _._1, Ordering.by(_._2), Array.empty[Long]) { (t, prev, rows) =>
+    keyedFold(hashed.groupByKey(_._1), OutputMode.Update)(
+      Ordering.by(_._2), Array.empty[Long]) { (t, prev, rows) =>
       val merged = (prev ++ rows.map(_._2)).distinct.sorted.take(k)
       (merged, Iterator.single((t, merged.length, graft.functions.Kmv.estimateArr(k, merged))))
     }.toDF("event_type", "sketch_size", "distinct_est")
@@ -450,8 +434,8 @@ object Streams {
     val agg = new graft.functions.TopK.TopKByValue(k)
     val valued = nonNullRows[(String, Double, Long)](events,
       col(typeCol).cast("string"), col(valueCol).cast("double"), col(idCol).cast("long"))
-    keyedFold(valued, OutputMode.Update)(
-      _._1, Ordering.by(r => (r._2, r._3)), agg.zero) { (t, prev, rows) =>
+    keyedFold(valued.groupByKey(_._1), OutputMode.Update)(
+      Ordering.by(r => (r._2, r._3)), agg.zero) { (t, prev, rows) =>
       val buf = rows.foldLeft(prev) { case (b, (_, v, id)) => agg.reduce(b, (v, id)) }
       (buf, buf.iterator.zipWithIndex.map { case ((v, id), i) => (t, i + 1, id, v) })
     }.toDF("event_type", "rank", "event_id", "value")
@@ -479,8 +463,8 @@ object Streams {
     val typed = nonNullRows[(Long, String, Long, Long)](events,
       col(userCol).cast("long"), col(typeCol).cast("string"),
       col(tsCol).cast("long"), col(idCol).cast("long"))
-    keyedFold(typed, OutputMode.Update)(
-      _._1, Ordering.by(r => (r._3, r._4, r._2)), (0, Long.MinValue)) { (u, prev, rows) =>
+    keyedFold(typed.groupByKey(_._1), OutputMode.Update)(
+      Ordering.by(r => (r._3, r._4, r._2)), (0, Long.MinValue)) { (u, prev, rows) =>
       var (stage, lastTs) = prev
       rows.foreach { case (_, t, ts, _) =>
         if (stage < stageArr.length && t == stageArr(stage) && ts >= lastTs) {
@@ -515,8 +499,8 @@ object Streams {
     val quantiles = qs.toArray
     val valued = nonNullRows[(String, Double)](events,
       col(typeCol).cast("string"), col(valueCol).cast("double"))
-    keyedFold(valued, OutputMode.Update)(
-      _._1, Ordering.by(_._2), TDigest.emptyBuffer) { (t, prev, rows) =>
+    keyedFold(valued.groupByKey(_._1), OutputMode.Update)(
+      Ordering.by(_._2), TDigest.emptyBuffer) { (t, prev, rows) =>
       val buf = rows.foldLeft(prev) { case (b, (_, v)) => TDigest.fold(b, v) }
       val dig = TDigest.snapshot(buf)
       val n = math.round(TDigest.weight(dig))
@@ -583,8 +567,8 @@ object Streams {
       isTombstone: String => Boolean = _ == "error")
       : org.apache.spark.sql.Dataset[(Long, String, Option[Long], Long, Boolean)] = {
     import changes.sparkSession.implicits._
-    keyedFold(changes, OutputMode.Update)(
-      _._1, Ordering.by(r => (r._2, r._3, r._4, r._5)),
+    keyedFold(changes.groupByKey(_._1), OutputMode.Update)(
+      Ordering.by(r => (r._2, r._3, r._4, r._5)),
       (Long.MinValue, Long.MinValue, "", None: Option[Long], true)) { (key, prev, rows) =>
       var cur = prev
       rows.foreach { case (_, ts, eid, typ, v) =>

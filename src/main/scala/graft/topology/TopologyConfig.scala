@@ -200,9 +200,9 @@ final case class SinkConf(
     jitterDelay: Option[String],
     jitterFactor: Option[String])
 
-/** `parseErrors` holds the values the parser could not read (e.g. a
-  * discard flag that is not a HOCON boolean); they are reported with the
-  * constraint violations. */
+/** `parseErrors` holds the values the parser could not read (a discard
+  * flag that is not a HOCON boolean, a `confluent_id` that is not an
+  * integer); they are reported with the constraint violations. */
 final case class TopologyConfig(
     sources: Seq[SourceConf],
     mappings: Seq[MappingConf],
@@ -302,6 +302,10 @@ object TopologyConfig {
       SourceConf(n, str(o, "type").getOrElse("browser"))
     }.toSeq.sortBy(_.name)
     val parseErrors = scala.collection.mutable.ArrayBuffer.empty[String]
+    def invalid(mapping: String, key: String, expected: String, v: Hocon.Value): Unit = {
+      val shown = v match { case Hocon.Str(s) => s"'$s'"; case _ => "a non-scalar value" }
+      parseErrors += s"mapping '$mapping': $key must be $expected, got $shown"
+    }
     // HOCON booleans (what the reference's typesafe-config getBoolean
     // accepts); an absent flag is false, any other value is an error
     def flag(mapping: String, o: Hocon.Obj, key: String): Boolean =
@@ -310,8 +314,7 @@ object TopologyConfig {
         case Some(Hocon.Str("true" | "yes" | "on")) => true
         case Some(Hocon.Str("false" | "no" | "off")) => false
         case Some(v) =>
-          val shown = v match { case Hocon.Str(s) => s"'$s'"; case _ => "a non-scalar value" }
-          parseErrors += s"mapping '$mapping': $key must be a boolean (true/yes/on or false/no/off), got $shown"
+          invalid(mapping, key, "a boolean (true/yes/on or false/no/off)", v)
           false
       }
     val mappings = section("mappings").toSeq.sortBy(_._1).map { case (n, o) =>
@@ -319,7 +322,11 @@ object TopologyConfig {
         sources = strs(o, "sources"),
         sinks = strs(o, "sinks"),
         schemaFile = str(o, "schema_file"),
-        confluentId = str(o, "confluent_id").flatMap(_.toIntOption),
+        // an int, as typesafe-config's getInt reads it; absent is unset
+        confluentId = o.fields.get("confluent_id").flatMap {
+          case Hocon.Str(s) if s.toIntOption.nonEmpty => s.toIntOption
+          case v => invalid(n, "confluent_id", "an integer", v); None
+        },
         discardCorrupted = flag(n, o, "discard_corrupted"),
         discardDuplicates = flag(n, o, "discard_duplicates"))
     }

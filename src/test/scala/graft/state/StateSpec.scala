@@ -2,8 +2,13 @@ package graft.state
 
 import com.google.common.hash.Hashing
 import graft.SparkSpec
+import graft.sinks.AvroFileSink
+import graft.topology.TopologyConfig
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+import org.apache.spark.sql.types.StructType
 import graft.streaming.Streams
 
 class DuplicateMemorySpec extends SparkSpec {
@@ -56,6 +61,169 @@ class DuplicateMemorySpec extends SparkSpec {
       .flagDuplicates(df, Seq("partyId", "sessionId", "eventId"), "partyId", "ts")
       .filter(col("duplicate")).count()
     assert(dupes === 0) // 5k distinct keys in 1M slots: collisions ~0
+  }
+
+  /** One seeded frame with resends across parties, same-instant repeats
+    * that differ only in a tie-break column (strings that UTF-16 and UTF-8
+    * order differently, binary bytes that signed and unsigned order
+    * differently, dates), and null keys. */
+  private def seededEvents(): DataFrame = {
+    val rnd = new scala.util.Random(15)
+    val base = (0 until 300).map { i =>
+      val party = if (i % 37 == 0) null else s"p${rnd.nextInt(12)}"
+      val session = if (i % 41 == 0) null else s"s${rnd.nextInt(3)}"
+      val event = if (i % 43 == 0) null else s"e${rnd.nextInt(40)}"
+      (party, session, event, rnd.nextInt(50).toLong,
+        Array[Byte](rnd.nextInt(256).toByte), java.sql.Date.valueOf(s"2024-01-${1 + rnd.nextInt(28)}"),
+        Seq("a", "\uFF21", "\uD83D\uDE00", "\u00E9")(rnd.nextInt(4)))
+    }
+    val resends = (0 until 60).map { _ =>
+      val e = base(rnd.nextInt(base.size)); e.copy(_4 = e._4 + rnd.nextInt(20))
+    }
+    val repeats = (0 until 40).map { _ =>
+      val e = base(rnd.nextInt(base.size))
+      rnd.nextInt(3) match {
+        case 0 => e.copy(_5 = Array[Byte]((e._5(0) ^ 0x80).toByte))
+        case 1 => e.copy(_6 = java.sql.Date.valueOf("2023-12-31"))
+        case _ => e.copy(_7 = if (e._7 == "\uFF21") "\uD83D\uDE00" else "\uFF21")
+      }
+    }
+    rnd.shuffle(base ++ resends ++ repeats)
+      .toDF("partyId", "sessionId", "eventId", "ts", "bin", "day", "note")
+  }
+
+  /** A row as comparable text: binary columns as their bytes. */
+  private def shown(r: Row): String = r.toSeq.map {
+    case b: Array[Byte] => b.mkString("[", ",", "]")
+    case v => String.valueOf(v)
+  }.mkString("|")
+
+  test("flags equal one sequential pass with one slot array over the sorted frame, " +
+      "at any slot count and shuffle width") {
+    val df = seededEvents()
+    // Spark's own sort fixes the visiting order: party, time, ids, tie breaks
+    val sorted = df.coalesce(1)
+      .orderBy(Seq("partyId", "ts", "sessionId", "eventId", "bin", "day", "note").map(col): _*)
+      .collect()
+    // without the party among the keys, two parties' events share signatures
+    for (keys <- Seq(Seq("partyId", "sessionId", "eventId"), Seq("sessionId", "eventId"))) {
+      val flags = for (slotCount <- Seq(1 << 20, 64, 4); partitions <- Seq(1, 8)) yield {
+        val memory = new Array[Long](slotCount)
+        val expected = sorted.map { r =>
+          val (slot, sig) = DuplicateMemory.slotAndSignature(slotCount,
+            keys.map(k => String.valueOf(r.getAs[Any](k))): _*)
+          val dup = memory(slot) == sig
+          memory(slot) = sig
+          shown(Row.fromSeq(r.toSeq :+ dup))
+        }.sorted.toSeq
+        // exactly `partitions` shuffle partitions: AQE must not coalesce them
+        val width = Map("spark.sql.shuffle.partitions" -> partitions.toString,
+          "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> partitions.toString,
+          "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+        val saved = width.keys.map(k => k -> spark.conf.get(k))
+        width.foreach { case (k, v) => spark.conf.set(k, v) }
+        val got = try DuplicateMemory.flagDuplicates(df, keys, "partyId", "ts", slotCount)
+            .collect().map(shown).sorted.toSeq
+          finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+        assert(got === expected, s"keys $keys, slotCount $slotCount, $partitions shuffle partitions")
+        slotCount -> expected.count(_.endsWith("|true"))
+      }
+      // overwrites by other keys in a shared slot hide resends at 4 slots
+      assert(flags.toMap.apply(4) < flags.toMap.apply(1 << 20), s"keys $keys")
+    }
+  }
+
+  // ------------------------------------------------- batch/stream parity
+  private val keyCols = Seq("partyId", "sessionId", "eventId")
+
+  /** Write each batch as one parquet file of `dir`, in order. */
+  private def stage(dir: String, files: Seq[Seq[(String, String, String, Long)]]): Unit =
+    files.foreach(f => f.toDF("partyId", "sessionId", "eventId", "ts")
+      .coalesce(1).write.mode("append").parquet(dir))
+
+  /** Two mappings, `all` and `clean` (which discards duplicates), each to
+    * its own sink; the mapper names the slot memory's flag as the
+    * topology's duplicate flag. */
+  private val topology = TopologyConfig.load("""
+    |divolte {
+    |  sources.browser.type = browser
+    |  mappings {
+    |    all = { sources = [browser], sinks = [everything] }
+    |    clean = { sources = [browser], sinks = [deduped], discard_duplicates = true }
+    |  }
+    |  sinks { everything.type = hdfs, deduped.type = hdfs }
+    |}""".stripMargin).toTopology(_ => _.withColumnRenamed("duplicate", "detectedDuplicate"))
+
+  /** The topology's batch run over `src` (flagDuplicates, then apply,
+    * then AvroFileSink.write) and its stream run (one file per trigger,
+    * flagged inside the Topology.start query), each as its sinks' sorted
+    * Avro read-back. `dieAfter` kills the stream once the `deduped`
+    * writer has written that many batches plus one; the stream then
+    * restarts from its checkpoint. */
+  private final class Runs(src: String, slotCount: Int) {
+    private val root = java.nio.file.Files.createTempDirectory("slot-parity").toString
+    private val sinks = Seq("everything", "deduped")
+    private def flagged(df: DataFrame) = DuplicateMemory.flagDuplicates(df, keyCols, "partyId", "ts", slotCount)
+    private lazy val schema = StructType(topology(Map("browser" -> flagged(spark.read.parquet(src))))
+      .apply("everything").schema.map(_.copy(nullable = true)))
+    private def contents(out: String): Map[String, Seq[String]] = sinks.map(s =>
+      s -> AvroFileSink.readBackDf(spark, s"$out/$s", schema).collect().map(_.toString).sorted.toSeq).toMap
+
+    lazy val batch: Map[String, Seq[String]] = {
+      val routed = topology(Map("browser" -> flagged(spark.read.parquet(src))))
+      sinks.foreach(s => AvroFileSink.write(routed(s), s"$root/batch/$s", "parity"))
+      contents(s"$root/batch")
+    }
+
+    def stream(name: String, dieAfter: Int = Int.MaxValue): Map[String, Seq[String]] = {
+      val (out, cp) = (s"$root/$name", s"$root/$name-cp")
+      def run(dieAfter: Int): Unit = {
+        val written = new java.util.concurrent.atomic.AtomicInteger
+        val source = spark.readStream.schema(spark.read.parquet(src).schema)
+          .option("maxFilesPerTrigger", "1").parquet(src)
+        topology.start(Map("browser" -> flagged(source)), sinks.map(s => s -> ((df: DataFrame, stamp: String) => {
+          AvroFileSink.write(df, s"$out/$s", "parity", stamp = Some(stamp))
+          if (s == "deduped" && written.incrementAndGet() > dieAfter)
+            throw new IllegalStateException("killed after the sink wrote")
+        })).toMap, cp, Trigger.AvailableNow()).awaitTermination()
+      }
+      if (dieAfter < Int.MaxValue) {
+        val e = intercept[StreamingQueryException](run(dieAfter))
+        assert(e.getMessage.contains("killed after the sink wrote"))
+      }
+      run(Int.MaxValue)
+      contents(out)
+    }
+  }
+
+  test("a stream of event-time-ordered files flags and discards what the batch run does, " +
+      "also when killed after batch k and restarted") {
+    val src = java.nio.file.Files.createTempDirectory("slot-parity-src").toString
+    stage(src, Seq(
+      Seq(("p1", "s1", "e1", 1L), ("p2", "s2", "e1", 2L), ("p1", "s1", "e2", 3L)),
+      Seq(("p1", "s1", "e1", 4L), ("p3", "s3", "e7", 5L), ("p2", "s2", "e3", 6L)), // resend of p1 e1
+      Seq(("p2", "s2", "e1", 7L), ("p3", "s3", "e7", 8L), ("p3", "s3", "e7", 8L)))) // resends, a same-instant pair
+    val runs = new Runs(src, slotCount = 1 << 20)
+    val dupOf = (r: String) => r.split(',').last.stripSuffix("]")
+    assert(runs.batch("everything").size === 9)
+    assert(runs.batch("everything").count(dupOf(_) == "true") === 4)
+    assert(runs.batch("deduped").size === 5)
+    assert(runs.stream("whole") === runs.batch)
+    Seq(1, 2).foreach(k => assert(runs.stream(s"killed-$k", dieAfter = k) === runs.batch, s"killed after batch $k"))
+  }
+
+  test("at one slot, a party's resend behind another party's event across a batch " +
+      "boundary is flagged by the batch run only") {
+    val src = java.nio.file.Files.createTempDirectory("slot-divergence-src").toString
+    // batch order folds p1's e9 before p2's events; the stream folds p2's e1 first
+    stage(src, Seq(Seq(("p2", "s2", "e1", 1L)), Seq(("p1", "s1", "e9", 2L), ("p2", "s2", "e1", 3L))))
+    val runs = new Runs(src, slotCount = 1)
+    val resend = (rows: Seq[String]) => rows.filter(_.contains(",3,"))
+    assert(resend(runs.batch("everything")).map(_.endsWith(",true]")) === Seq(true))
+    assert(runs.batch("deduped").size === 2)
+    val streamed = runs.stream("whole")
+    assert(resend(streamed("everything")).map(_.endsWith(",true]")) === Seq(false))
+    assert(streamed("deduped").size === 3)
   }
 }
 

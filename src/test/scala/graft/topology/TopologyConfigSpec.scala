@@ -216,4 +216,19 @@ class TopologyConfigSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](TopologyConfig.load(conf))
     assert(e.getMessage.contains("discard_corrupted") && e.getMessage.contains("ghost"))
   }
+
+  test("a confluent_id that is not an integer fails fast with the other violations") {
+    for (bad <- Seq("abc", "[1]", "1.5")) {
+      val conf = flagged("true", "true")
+        .replace("discard_corrupted", s"confluent_id = $bad\n    discard_corrupted")
+        .replace("sinks = [hdfs]", "sinks = [hdfs, ghost]")
+      val errs = TopologyConfig.parse(conf).validationErrors
+      assert(errs.exists(_.contains("mapping 'm': confluent_id must be an integer")), bad)
+      assert(errs.exists(_.contains("missing sinks: ghost")), bad)
+      val e = intercept[IllegalArgumentException](TopologyConfig.load(conf))
+      assert(e.getMessage.contains("confluent_id") && e.getMessage.contains("ghost"), bad)
+    }
+    val ok = flagged("true", "true").replace("discard_corrupted", "confluent_id = 7\n    discard_corrupted")
+    assert(TopologyConfig.load(ok).mappings.head.confluentId === Some(7))
+  }
 }

@@ -3,7 +3,7 @@
 of the library): runs Verify's oracle_sql.json in DuckDB against the same
 sf dir and compares with the Spark parquet dumps, normalizing column order
 and row order like the driver does."""
-import sys, json, glob, math
+import sys, json, glob, math, time
 import duckdb
 import pyarrow.parquet as pq
 
@@ -15,19 +15,19 @@ for t in ["region","nation","customer","supplier","part","orders",
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-fails = 0
-for name, sql in sorted(oracle.items()):
+def check(name, sql):
+    """One oracle's verdict: ("OK", detail) or ("FAIL", detail)."""
     try:
         odf = con.execute(sql).fetchdf()
     except Exception as e:
-        print(f"FAIL {name}: oracle error {e}"); fails += 1; continue
+        return "FAIL", f"oracle error {e}"
     files = glob.glob(f"{outdir}/{name}/*.parquet")
     if not files:
-        print(f"FAIL {name}: no spark output"); fails += 1; continue
+        return "FAIL", f"no spark output"
     sdf = pq.read_table(files[0]).to_pandas()
     oc, sc = sorted(odf.columns), sorted(sdf.columns)
     if oc != sc:
-        print(f"FAIL {name}: cols oracle={oc} spark={sc}"); fails += 1; continue
+        return "FAIL", f"cols oracle={oc} spark={sc}"
     # Dtype-strict, like the driver: an int64 Spark column vs a float64
     # oracle column (e.g. DuckDB HUGEINT -> pandas float) must FAIL even
     # when the values are numerically equal — the driver's hash is over
@@ -40,7 +40,7 @@ for name, sql in sorted(oracle.items()):
                  and not (odf[c].isna().all() or sdf[c].isna().all())]
     if dtype_bad:
         msg = {c: (str(odf[c].dtype), str(sdf[c].dtype)) for c in dtype_bad}
-        print(f"FAIL {name}: dtype mismatch (oracle,spark) {msg}"); fails += 1; continue
+        return "FAIL", f"dtype mismatch (oracle,spark) {msg}"
     o = odf[oc].values.tolist(); s = sdf[sc].values.tolist()
     def norm(v):
         if v is None: return "NULL"
@@ -51,9 +51,19 @@ for name, sql in sorted(oracle.items()):
     o = sorted([tuple(norm(x) for x in r) for r in o])
     s = sorted([tuple(norm(x) for x in r) for r in s])
     if len(o) != len(s):
-        print(f"FAIL {name}: rows oracle={len(o)} spark={len(s)}"); fails += 1; continue
+        return "FAIL", f"rows oracle={len(o)} spark={len(s)}"
     if o != s:
         bad = [(a, b) for a, b in zip(o, s) if a != b][:3]
-        print(f"FAIL {name}: value mismatch e.g. {bad}"); fails += 1; continue
-    print(f"OK   {name}: {len(s)} rows")
+        return "FAIL", f"value mismatch e.g. {bad}"
+    return "OK  ", f"{len(s)} rows"
+
+fails, took = 0, []
+for name, sql in sorted(oracle.items()):
+    t0 = time.perf_counter()
+    verdict, detail = check(name, sql)
+    secs = time.perf_counter() - t0
+    took.append((secs, name))
+    fails += verdict == "FAIL"
+    print(f"{verdict} {name}: {detail} ({secs:.2f}s)")
+print("slowest: " + ", ".join(f"{n} {s:.2f}s" for s, n in sorted(took, reverse=True)[:5]))
 sys.exit(1 if fails else 0)
