@@ -62,10 +62,9 @@ object DuplicateMemory {
     * A slot's rows fold in ascending (`partitionCol`, `orderCol`, key
     * columns, remaining atomic columns in schema order), nulls first, each
     * column compared as a Spark sort compares it (strings by UTF-8 bytes,
-    * not `String.compareTo`), so which of two
-    * same-instant repeats carries the flag does not depend on arrival
-    * order. The class scaladoc states when a stream flags what the batch
-    * flags.
+    * not `String.compareTo`), so which of two same-instant repeats carries
+    * the flag does not depend on arrival order. The class scaladoc states
+    * when a stream flags what the batch flags.
     */
   def flagDuplicates(df: DataFrame, keyCols: Seq[String], partitionCol: String,
                      orderCol: String, slotCount: Int = 1 << 20): DataFrame = {
